@@ -92,8 +92,9 @@ def main(argv: list[str] | None = None) -> int:
     sync_p.add_argument(
         "--fetch-min-max",
         action="store_true",
-        help="scan new shards for partition-column min/max (slower sync, "
-        "faster pruned queries — the reference's trade-off)",
+        help="record partition-column min/max for new shards, read from "
+        "parquet footers (a Spark scan only for files whose footer cannot "
+        "be trusted); enables pruned queries",
     )
 
     diff_p = sub.add_parser("diff", help="show the pending FS-vs-catalog diff")

@@ -24,11 +24,15 @@ update).  This module is that engine for a Spark world:
   version live and queryable (`README.md:15-19`).
 
 Scale posture: catalog I/O is parquet via pyarrow (columnar, O(#files) rows
-— at 100 TB / 128 MB files that's ~800k rows, megabytes of footprint); the
-min/max scan for new files is ONE distributed Spark job over all new files
-grouped by ``input_file_name()`` — not the reference's shard-at-a-time loop
-(`HdfsSynchronizer.java:438-459`) — so stat collection parallelizes across
-the cluster.
+— at 100 TB / 128 MB files that's ~800k rows, megabytes of footprint).
+Min/max statistics for new files come from the parquet footers (row-group
+statistics merged per file, read driver-side without a Spark job), rendered
+byte-identically to Spark's ``cast('string')``.  Only files whose footer
+cannot be trusted (no statistics, INT96, floating/decimal/text types, ...)
+take the scan fallback: ONE distributed Spark job over those files grouped
+by ``input_file_name()`` — not the reference's shard-at-a-time loop
+(`HdfsSynchronizer.java:438-459`).  Pruning reads the partition column's
+type from one footer schema, so it launches no Spark job either.
 """
 
 from __future__ import annotations
@@ -38,6 +42,8 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta
+from typing import Callable, NamedTuple
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -92,6 +98,170 @@ def _shard_id(path: str) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
+class _ReadConf(NamedTuple):
+    """The session settings that decide how Spark's parquet reader types a
+    column and how ``cast('string')`` renders it."""
+
+    utc: bool  # session time zone is UTC
+    infer_ntz: bool  # naive parquet timestamps read as timestamp_ntz
+    nanos_as_long: bool  # TIMESTAMP(NANOS) reads as bigint
+    corrected: bool  # no read-side calendar rebase for non-Spark files
+
+    @classmethod
+    def of(cls, spark: SparkSession) -> "_ReadConf":
+        get = spark.conf.get
+        return cls(
+            get("spark.sql.session.timeZone") == "UTC",
+            get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true",
+            get("spark.sql.legacy.parquet.nanosAsLong") == "true",
+            get("spark.sql.parquet.datetimeRebaseModeInRead") == "CORRECTED",
+        )
+
+
+_EPOCH = datetime(1970, 1, 1)
+_SIGNED_INT = {8: "tinyint", 16: "smallint", 32: "int", 64: "bigint"}
+_UNSIGNED_INT = {8: "smallint", 16: "int", 32: "bigint", 64: "decimal(20,0)"}
+#: footer keys Spark writes when it rebased values to the legacy hybrid
+#: calendar; such values need Spark's read-side rebase
+_LEGACY_REBASE_KEYS = (
+    b"org.apache.spark.legacyDateTime",
+    b"org.apache.spark.legacyINT96",
+)
+
+
+def _in_range(t: datetime) -> bool:
+    # Spark zero-pads years below 1000 and signs years above 9999;
+    # strftime('%Y') does neither
+    return 1000 <= t.year <= 9999
+
+
+def _fmt_date(days: int) -> str | None:
+    d = _EPOCH + timedelta(days=days)
+    return d.strftime("%Y-%m-%d") if _in_range(d) else None
+
+
+def _fmt_ts(micros_per_unit: int) -> Callable[[int], str | None]:
+    def fmt(v: int) -> str | None:
+        t = _EPOCH + timedelta(microseconds=v * micros_per_unit)
+        if not _in_range(t):
+            return None
+        s = t.strftime("%Y-%m-%d %H:%M:%S")
+        # Spark prints the fraction with its trailing zeros trimmed
+        return f"{s}.{t.microsecond:06d}".rstrip("0") if t.microsecond else s
+
+    return fmt
+
+
+def _spark_type(col, conf: _ReadConf) -> tuple[str | None, Callable | None]:
+    """The Spark SQL type Spark's parquet reader gives a footer column, and
+    the formatter that renders a raw footer statistic of it exactly as
+    ``cast('string')`` does.  The formatter is None where the footer
+    statistic cannot be rendered that way: INT96, unsigned or nanosecond
+    integers, floating, decimal, text and boolean columns, zoned
+    timestamps outside a UTC session, and dates or timestamps under a
+    read-side calendar rebase.  The type is taken from the parquet column,
+    not from pyarrow's arrow schema, because arrow maps INT96 and
+    TIMESTAMP(NANOS) alike to ``timestamp[ns]`` while Spark reads them as
+    ``timestamp`` and ``bigint``.  An unknown type is None; pruning then
+    keeps every file."""
+    phys = col.physical_type
+    lt = json.loads(col.logical_type.to_json())
+    kind = lt["Type"]
+    if phys == "INT96":
+        return "timestamp", None
+    if kind == "Decimal":
+        return f"decimal({lt['precision']},{lt['scale']})", None
+    if phys in ("INT32", "INT64"):
+        if kind == "None":
+            return ("int" if phys == "INT32" else "bigint"), str
+        if kind == "Int":
+            if lt["isSigned"]:
+                return _SIGNED_INT[lt["bitWidth"]], str
+            return _UNSIGNED_INT[lt["bitWidth"]], None
+        if kind == "Date":
+            return "date", _fmt_date if conf.corrected else None
+        if kind == "Timestamp":
+            unit = lt["timeUnit"]
+            if unit == "nanoseconds":
+                return ("bigint" if conf.nanos_as_long else None), None
+            ntz = conf.infer_ntz and not lt["isAdjustedToUTC"]
+            trusted = (ntz or conf.utc) and conf.corrected
+            fmt = _fmt_ts(1000 if unit == "milliseconds" else 1)
+            return ("timestamp_ntz" if ntz else "timestamp"), (
+                fmt if trusted else None
+            )
+        return None, None
+    if phys == "BYTE_ARRAY" and kind in ("String", "Enum", "Json"):
+        return "string", None
+    if phys in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY") and kind == "None":
+        return "binary", None
+    simple = {"BOOLEAN": "boolean", "FLOAT": "float", "DOUBLE": "double"}
+    return (simple.get(phys) if kind == "None" else None), None
+
+
+def _footer_column(md: pq.FileMetaData, name: str) -> int | None:
+    """Index of top-level primitive column ``name`` in a footer, or None."""
+    if "." in name:
+        return None
+    for i in range(md.num_columns):
+        c = md.schema.column(i)
+        if c.path == name and c.max_repetition_level == 0:
+            return i
+    return None
+
+
+def _footer_spark_type(path: str, column: str, conf: _ReadConf) -> str | None:
+    """The Spark type of ``column`` in one file's footer schema."""
+    md = pq.read_metadata(path)
+    i = _footer_column(md, column)
+    return None if i is None else _spark_type(md.schema.column(i), conf)[0]
+
+
+def _footer_min_max(
+    path: str, column: str, conf: _ReadConf
+) -> tuple[str | None, str | None] | None:
+    """One file's min/max of ``column`` from its row-group statistics,
+    rendered as Spark's ``cast('string')`` — (None, None) for a file with
+    no rows or only nulls, like the scan — or None when the footer cannot
+    be trusted and the file must take the scan."""
+    md = pq.read_metadata(path)
+    if md.num_rows == 0:
+        return None, None
+    meta = md.metadata or {}
+    # Spark before 3.0 wrote hybrid-calendar values without a marker
+    if any(k in meta for k in _LEGACY_REBASE_KEYS) or (
+        meta.get(b"org.apache.spark.version", b"3") < b"3"
+    ):
+        return None
+    i = _footer_column(md, column)
+    if i is None:
+        return None
+    fmt = _spark_type(md.schema.column(i), conf)[1]
+    if fmt is None:
+        return None
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(i).statistics
+        if st is None or not st.has_min_max:
+            if st is not None and st.has_null_count and (
+                st.null_count == rg.num_rows
+            ):
+                continue  # an all-null group adds nothing
+            return None
+        lo = st.min_raw if lo is None else min(lo, st.min_raw)
+        hi = st.max_raw if hi is None else max(hi, st.max_raw)
+    if lo is None:
+        return None, None
+    try:
+        mn, mx = fmt(lo), fmt(hi)
+    except OverflowError:  # outside Python's datetime range
+        return None
+    return None if mn is None or mx is None else (mn, mx)
+
+
 def shard_table_name(table: str, shard_id: int) -> str:
     """`table_<unsigned shardId>` — the reference renders signed ids in
     unsigned decimal (`CitusWorkerNode.java:36-37,185-193`)."""
@@ -137,6 +307,9 @@ class SyncResult:
     added: int
     removed: int
     noop: bool
+    #: files whose min/max came from parquet footers / from the Spark scan
+    stats_footer: int = 0
+    stats_scan: int = 0
 
 
 @dataclass
@@ -535,10 +708,32 @@ class Registry:
 
     def _fetch_min_max(
         self, files: list[dict], column: str
-    ) -> dict[str, tuple[str, str]]:
+    ) -> tuple[dict[str, tuple[str, str]], int]:
         """Per-file min/max of the partition column — A17
-        (`CitusWorkerNode.java:140-165`) — as ONE distributed job over all
-        new files (`groupBy(input_file_name())`), not a per-shard loop."""
+        (`CitusWorkerNode.java:140-165`) — and how many files took the
+        scan.  Each file's row-group statistics are merged from its parquet
+        footer, driver-side; files whose footer cannot be trusted (see
+        :func:`_spark_type` and :func:`_footer_min_max`) go to ONE
+        distributed scan (:meth:`_scan_min_max`).  Every file gets an
+        entry; an empty or all-null file gets (None, None)."""
+        if not files:
+            return {}, 0
+        conf = _ReadConf.of(self.spark)
+        out, scan = {}, []
+        for f in files:
+            mm = _footer_min_max(f["path"], column, conf)
+            if mm is None:
+                scan.append(f)
+            else:
+                out[f["path"]] = mm
+        out.update(self._scan_min_max(scan, column))
+        return out, len(scan)
+
+    def _scan_min_max(
+        self, files: list[dict], column: str
+    ) -> dict[str, tuple[str, str]]:
+        """The scan behind :meth:`_fetch_min_max`: ONE Spark job over all
+        given files (`groupBy(input_file_name())`), not a per-shard loop."""
         if not files:
             return {}
         df = self.spark.read.parquet(*[f["path"] for f in files])
@@ -567,14 +762,13 @@ class Registry:
         # footer distinguishes the two driver-side without reading data.
         for f in files:
             if f["path"] not in out:
-                import pyarrow.parquet as pq
-
                 if pq.read_metadata(f["path"]).num_rows:
                     raise ValueError(
                         "min/max aggregation returned no group for "
                         f"non-empty file {f['path']!r} — "
                         "input_file_name URI decode mismatch"
                     )
+                out[f["path"]] = (None, None)
         return out
 
     def sync(self, name: str, fetch_min_max: bool = False) -> SyncResult:
@@ -610,10 +804,10 @@ class Registry:
             }
 
         part_col = tables[name]["partition_column"]
-        stats = (
+        stats, n_scan = (
             self._fetch_min_max(d.new_files, part_col)
             if fetch_min_max and part_col
-            else {}
+            else ({}, 0)
         )
 
         unchanged_keys = {
@@ -627,8 +821,7 @@ class Registry:
         ]
         added = []
         for f in d.new_files:
-            # a zero-row parquet file legitimately produces no stats row
-            # (groupBy over zero rows); it gets (None, None) — pruning
+            # a zero-row or all-null file gets (None, None) — pruning
             # treats missing stats as keep-always, so this stays sound.
             # Genuine scan failures raise inside the Spark job itself
             # (the A18 replica-fallback concern is Spark task retry).
@@ -698,7 +891,13 @@ class Registry:
 
         version = self._publish(tables, new_shards, new_placements)
         return SyncResult(
-            name, version, added=len(added), removed=len(d.old_files), noop=False
+            name,
+            version,
+            added=len(added),
+            removed=len(d.old_files),
+            noop=False,
+            stats_footer=len(stats) - n_scan,
+            stats_scan=n_scan,
         )
 
     # ---------------------------------------------------------- compaction
@@ -746,8 +945,8 @@ class Registry:
         Scale: planning is O(#shards) catalog rows; each bin rewrite is a
         narrow ``coalesce(1)`` read→write of ~target_bytes (no shuffle),
         and bins rewrite independently — on a cluster they parallelize as
-        separate jobs; min/max stats for compacted files are re-fetched in
-        ONE distributed job like sync's."""
+        separate jobs; min/max stats for compacted files are re-fetched
+        like sync's (footers first, one scan job for the rest)."""
         tables = self._load_tables()
         if name not in tables:
             raise KeyError(f"table not registered: {name}")
@@ -951,7 +1150,7 @@ class Registry:
                 {"path": p, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
             )
         stats = (
-            self._fetch_min_max(new_files, tables[name]["partition_column"])
+            self._fetch_min_max(new_files, tables[name]["partition_column"])[0]
             if journal.get("refetch_stats")
             else {}
         )
@@ -1114,15 +1313,19 @@ class Registry:
         min/max sync (`README.md:41-46`): keep files whose [min,max]
         interval intersects [lo,hi]; files without stats always survive
         (sound).  Values compare in the partition column's type (stats are
-        stored stringly and cast back here — `MinMaxValue.java:6-7`)."""
-        tables = self._load_tables()
-        part_col = tables[name]["partition_column"]
-        if part_col is None:
-            return [s["path"] for s in self.shards(name)]
-        sample = self.spark.read.parquet(
-            *[s["path"] for s in self.shards(name)][:1]
-        )
-        dtype = dict(sample.dtypes)[part_col]
+        stored stringly and cast back here — `MinMaxValue.java:6-7`).
+
+        Driver-only: the catalog is loaded once, and the column's Spark
+        type comes from the first shard's footer schema
+        (:func:`_footer_spark_type`), so no Spark job runs.  A table with no
+        synced shards prunes to ``[]``."""
+        version = self._current_version()
+        part_col = self._load_tables(version)[name]["partition_column"]
+        shards = self.shards(name, version)
+        paths = [s["path"] for s in shards]
+        if part_col is None or not paths:
+            return paths
+        dtype = _footer_spark_type(paths[0], part_col, _ReadConf.of(self.spark))
 
         # dtypes whose string form compares correctly as text: ISO
         # timestamps/dates and plain strings ('false' < 'true' for bool)
@@ -1139,17 +1342,18 @@ class Registry:
                 return Decimal(v)
             return v
 
-        if dtype not in ("bigint", "int", "smallint", "tinyint", "double",
-                         "float") and not dtype.startswith("decimal") \
-                and not dtype.startswith(_TEXT_ORDERED):
+        numeric = ("bigint", "int", "smallint", "tinyint", "double", "float")
+        if dtype is None or not (
+            dtype in numeric or dtype.startswith(("decimal",) + _TEXT_ORDERED)
+        ):
             # unknown/unorderable-as-text dtype (binary, array, ...):
             # comparing would be lexicographic nonsense — keep every file
             # (pruning must stay sound before it is effective)
-            return [s["path"] for s in self.shards(name)]
+            return paths
 
         lo_c, hi_c = cast(str(lo)), cast(str(hi))
         keep = []
-        for s in self.shards(name):
+        for s in shards:
             mn, mx = cast(s["min_value"]), cast(s["max_value"])
             if mn is None or mx is None or (mx >= lo_c and mn <= hi_c):
                 keep.append(s["path"])

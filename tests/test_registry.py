@@ -245,7 +245,8 @@ def test_cli_register_sync_diff(spark, tmp_path, capsys):
 
     data = tmp_path / "t"
     data.mkdir()
-    spark.range(0, 10).write.parquet(str(data / "a.parquet"))
+    # one part file whatever the session's parallelism: "1 new" / "+1"
+    spark.range(0, 10).coalesce(1).write.parquet(str(data / "a.parquet"))
     meta = str(tmp_path / "m")
 
     assert main(["register", meta, "t", str(data)]) == 0
@@ -721,3 +722,201 @@ def test_compact_delegates_to_format_native_rewrite(spark, tmp_path):
     assert sorted(x.k for x in log.read(spark, 1).collect()) == [1, 2, 3]
     # and compact is idempotent through the registry too
     assert reg.compact("t").noop
+
+
+# ------------------------------------------------------- footer statistics
+def _write_p(path, arr, **kw) -> str:
+    """One parquet file with partition column ``p``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"p": arr}), path, **kw)
+    return path
+
+
+def _spark_file(spark, sql: str, out: str) -> str:
+    """The single part file Spark writes for ``sql``."""
+    spark.sql(sql).coalesce(1).write.parquet(out)
+    (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    return os.path.join(out, part)
+
+
+def _stat_cases(spark, root):
+    """{label: (files, files expected to take the scan)}, one label per
+    partition-column type; every file of a label shares one schema."""
+    from datetime import date, datetime
+
+    import pyarrow as pa
+
+    cases = {}
+
+    def case(label, files, scanned=()):
+        cases[label] = (files, set(scanned))
+
+    def p(name):
+        return os.path.join(root, name)
+
+    for t in ("int8", "int16", "int32", "int64"):
+        typ = getattr(pa, t)()
+        # nulls, an all-null first row group, several row groups
+        multi = _write_p(p(f"{t}-multi.parquet"), pa.array(
+            [None, None, 3, -4, 5, None, 7], typ), row_group_size=2)
+        allnull = _write_p(p(f"{t}-null.parquet"), pa.array([None] * 3, typ))
+        empty = _write_p(p(f"{t}-empty.parquet"), pa.array([], typ))
+        nostats = _write_p(p(f"{t}-nostats.parquet"), pa.array([9, 1], typ),
+                           write_statistics=False)
+        case(t, [multi, allnull, empty, nostats], [nostats])
+    d = pa.date32()
+    year1 = _write_p(p("d0001.parquet"), pa.array(
+        [date(1, 1, 1), date(1500, 1, 1)], d))
+    case("date", [
+        _write_p(p("d.parquet"), pa.array(
+            [date(2020, 1, 1), None, date(2021, 6, 30)], d), row_group_size=2),
+        _write_p(p("d9999.parquet"), pa.array(
+            [date(9999, 12, 31), date(2000, 1, 1)], d)),
+        year1,
+    ], [year1])
+    us = pa.timestamp("us")
+    year1 = _write_p(p("tsu0001.parquet"), pa.array(
+        [datetime(1, 1, 1, 0, 0, 0, 10)], us))
+    case("timestamp_ntz_us", [
+        _write_p(p("tsu.parquet"), pa.array([
+            datetime(2020, 1, 1, 0, 0, 0, 123400), None,
+            datetime(2019, 12, 31, 23, 59, 59, 999999)], us),
+            row_group_size=1),
+        _write_p(p("tsu9999.parquet"), pa.array(
+            [datetime(9999, 12, 31, 23, 59, 59, 5)], us)),
+        year1,
+    ], [year1])
+    case("timestamp_ntz_ms", [_write_p(p("tsm.parquet"), pa.array([
+        datetime(2020, 1, 1, 0, 0, 0, 100000),
+        datetime(2020, 1, 1, 0, 0, 1)], pa.timestamp("ms")))])
+    case("timestamp_utc", [_write_p(p("tsz.parquet"), pa.array([
+        datetime(2020, 3, 1, 12, 30, 0, 250), None,
+        datetime(2020, 2, 29, 23, 0)], pa.timestamp("us", tz="UTC")))])
+    vals = "VALUES ('2020-01-01 10:00:00'), ('2020-03-01 00:00:00.5') t(x)"
+    int96 = _spark_file(
+        spark, f"SELECT CAST(x AS TIMESTAMP) p FROM {vals}", p("spark-int96"))
+    case("spark_int96", [int96], [int96])
+    case("spark_ntz", [
+        _spark_file(spark, f"SELECT CAST(x AS TIMESTAMP_NTZ) p FROM {vals}",
+                    p("spark-ntz")),
+        _spark_file(spark, "SELECT CAST(NULL AS TIMESTAMP_NTZ) p LIMIT 0",
+                    p("spark-ntz-empty")),
+    ])
+    for label, arr in (
+        ("double", pa.array([1.5, None, -2.25])),
+        ("string", pa.array(["b", "a", None])),
+        ("nanos", pa.array([1, 5, None], pa.timestamp("ns"))),
+    ):
+        f = _write_p(p(f"{label}.parquet"), arr)
+        case(label, [f], [f])
+    return cases
+
+
+def test_footer_min_max_equals_scan(spark, tmp_path):
+    """Footer statistics equal the Spark scan's ``cast('string')`` byte for
+    byte on every partition type; untrusted footers take the scan; and the
+    footer type mapping equals Spark's inferred type for every file."""
+    from hadoop_sync_spark.registry import _footer_spark_type, _ReadConf
+
+    reg = Registry(spark, str(tmp_path / "meta"))
+    conf = _ReadConf.of(spark)
+    cases = _stat_cases(spark, str(tmp_path))
+    for label, (paths, scanned) in cases.items():
+        files = [{"path": f} for f in paths]
+        got, n_scan = reg._fetch_min_max(files, "p")
+        want = reg._scan_min_max(files, "p")
+        assert got == want, label
+        assert n_scan == len(scanned), label
+        for f in paths:
+            assert _footer_spark_type(f, "p", conf) == dict(
+                spark.read.parquet(f).dtypes
+            )["p"], (label, f)
+    # the footer path really produced values, not just (None, None)
+    got, _ = reg._fetch_min_max([{"path": cases["timestamp_ntz_us"][0][0]}], "p")
+    assert list(got.values()) == [
+        ("2019-12-31 23:59:59.999999", "2020-01-01 00:00:00.1234")
+    ]
+    # a zoned timestamp renders in the session zone: off UTC it takes the scan
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        files = [{"path": f} for f in cases["timestamp_utc"][0]]
+        got, n_scan = reg._fetch_min_max(files, "p")
+        assert n_scan == len(files)
+        assert got == reg._scan_min_max(files, "p")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def _count_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = os.urandom(4).hex()
+    sc.setJobGroup(f"guard-{tag}", "registry job guard")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"fence-{tag}", "status fence")
+    # the status store is fed asynchronously but in order: once a fence
+    # job run after fn() is visible, every job fn() launched is too
+    sc.parallelize([0], 1).count()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"fence-{tag}"):
+        assert time.time() < deadline, "status tracker never saw the fence"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(f"guard-{tag}"))
+
+
+def test_footer_sync_and_prune_launch_no_spark_job(spark, tmp_path):
+    """Sync over footer-covered files and pruning stay off Spark; a double
+    partition column still takes the fallback scan job."""
+    from datetime import date
+
+    import pyarrow as pa
+
+    data, dbl = tmp_path / "t", tmp_path / "u"
+    data.mkdir()
+    dbl.mkdir()
+    for k in range(4):
+        _write_p(str(data / f"d{k}.parquet"),
+                 pa.array([date(2020, 1, 1 + k)] * 3, pa.date32()))
+        _write_p(str(dbl / f"u{k}.parquet"), pa.array([k + 0.5, k + 0.75]))
+    reg = Registry(spark, str(tmp_path / "meta"))
+    reg.register("t", str(data), partition_column="p")
+    reg.register("u", str(dbl), partition_column="p")
+
+    r, jobs = _count_jobs(spark, lambda: reg.sync("t", fetch_min_max=True))
+    assert jobs == 0
+    assert (r.added, r.stats_footer, r.stats_scan) == (4, 4, 0)
+    kept, jobs = _count_jobs(
+        spark, lambda: reg.prune_files("t", "2020-01-02", "2020-01-03"))
+    assert jobs == 0
+    assert sorted(os.path.basename(f) for f in kept) == [
+        "d1.parquet", "d2.parquet"]
+
+    r, jobs = _count_jobs(spark, lambda: reg.sync("u", fetch_min_max=True))
+    assert jobs >= 1
+    assert (r.added, r.stats_footer, r.stats_scan) == (4, 0, 4)
+    kept, jobs = _count_jobs(spark, lambda: reg.prune_files("u", 2.0, 2.6))
+    assert jobs == 0
+    assert sorted(os.path.basename(f) for f in kept) == [
+        "u2.parquet"]
+
+
+def test_prune_on_registered_table_without_shards(spark, tmp_path):
+    """A registered table with no shards prunes to nothing, and a pruned
+    read fails like ``read()`` does instead of Spark's schema inference."""
+    data = tmp_path / "empty"
+    data.mkdir()
+    reg = Registry(spark, str(tmp_path / "meta"))
+    reg.register("e", str(data), partition_column="id")
+    assert reg.prune_files("e", 0, 10) == []
+    with pytest.raises(ValueError, match="no synced shards"):
+        reg.read_pruned("e", 0, 10)
