@@ -8,8 +8,9 @@ any file source, so every downstream operator (shuffles, aggregations,
 LSH, ANN) sees real distributed input with zero input I/O.  This module
 is also the repo's coverage of the Spark 4 custom-source surface itself:
 schema declaration, partition planning, per-partition Arrow-batch reads
-(`tools/scale_study.py` materializes replicas instead because the study
-must feed BOTH Spark and the DuckDB oracle the same bytes).
+(a scale study that checks results against the DuckDB oracle
+materializes parquet replicas instead, because both engines must read
+the same bytes).
 
 Every row is a pure function of `doc_id` (splittable counter-based
 generation, the Philox/`SplittableRandom` idea): content never depends

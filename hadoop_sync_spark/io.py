@@ -58,35 +58,26 @@ def table_path(sf_dir: str, name: str) -> str:
 #: ``filesourcePartitionFileCacheSize`` (optimization guide §6) and the
 #: bench protocol's warm-up pass ("file-listing caches").
 #:
-#: Bounded LRU keyed by (id(session), sf_dir, name): a cached DataFrame
-#: strongly references its session, so id() cannot be reused while the
-#: entry lives, and the FIFO bound is what retires a stopped session's
-#: plans (a weak-keyed dict could never evict them — the values pin
-#: their keys).  The fixture dirs are immutable; a caller that
-#: regenerates a table under the same path within one session can opt
-#: out via ``SPARK_GRAFT_NO_TABLE_PLAN_CACHE=1``.
+#: Bounded LRU keyed by (id(session), sf_dir, name, stamp): a cached
+#: DataFrame strongly references its session, so id() cannot be reused
+#: while the entry lives, and the FIFO bound is what retires a stopped
+#: session's plans (a weak-keyed dict could never evict them — the values
+#: pin their keys).  ``stamp`` is the table path's ``(st_size,
+#: st_mtime_ns)``, so a table regenerated in place misses the cache
+#: instead of serving the old file listing.
 from collections import OrderedDict
 
 _PLAN_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _PLAN_CACHE_CAP = 64
 
 
-def _plan_cache_get(spark: SparkSession, sf_dir: str, name: str):
-    if os.environ.get("SPARK_GRAFT_NO_TABLE_PLAN_CACHE") == "1":
-        return None
-    key = (id(spark), sf_dir, name)
-    hit = _PLAN_CACHE.get(key)
-    if hit is not None:
-        _PLAN_CACHE.move_to_end(key)
-    return hit
-
-
-def _plan_cache_put(spark: SparkSession, sf_dir: str, name: str, df) -> None:
-    if os.environ.get("SPARK_GRAFT_NO_TABLE_PLAN_CACHE") == "1":
-        return
-    _PLAN_CACHE[(id(spark), sf_dir, name)] = df
-    while len(_PLAN_CACHE) > _PLAN_CACHE_CAP:
-        _PLAN_CACHE.popitem(last=False)
+def _plan_cache_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    try:
+        st = os.stat(table_path(sf_dir, name))
+        stamp = (st.st_size, st.st_mtime_ns)
+    except OSError:  # not a local path; spark.read reports a missing one
+        stamp = None
+    return (id(spark), sf_dir, name, stamp)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,8 +98,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session-settable legacy conf; required for any table with ns timestamps
     # (set even on a plan-cache hit: execution re-resolves it per scan)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    hit = _plan_cache_get(spark, sf_dir, name)
+    key = _plan_cache_key(spark, sf_dir, name)
+    hit = _PLAN_CACHE.get(key)
     if hit is not None:
+        _PLAN_CACHE.move_to_end(key)
         return hit
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
@@ -131,7 +124,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         col = "l_shipdate" if name == "lineitem" else "o_orderdate"
         if isinstance(df.schema[col].dataType, LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} DIV 1000")))
-    _plan_cache_put(spark, sf_dir, name, df)
+    _PLAN_CACHE[key] = df
+    while len(_PLAN_CACHE) > _PLAN_CACHE_CAP:
+        _PLAN_CACHE.popitem(last=False)
     return df
 
 

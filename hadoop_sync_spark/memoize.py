@@ -27,24 +27,24 @@ Round-14 hardening (VERDICT r13 item 6 + ADVICE):
   returning the other site's expression tree.
 - **SparkContext keying.**  Cached Columns hold py4j references into
   the JVM gateway.  The gateway lives for the process under the repo's
-  one-session-per-process usage (bench, tests, driver), but a stopped
-  and recreated SparkContext would orphan every cached reference — so
-  the cache remembers ``id(SparkContext._active_spark_context)`` and
-  clears itself when the active context changes (mirroring the
-  ``id(spark)`` keying of ``io._PLAN_CACHE``).
+  one-session-per-process usage (benchmark, tests, driver), but a
+  stopped and recreated SparkContext would orphan every cached
+  reference — so the cache holds the active ``SparkContext`` object
+  itself and clears when the active context ``is`` not that object.
+  Holding the object (not its ``id()``) means a new context can never
+  pass for the old one by reusing its freed address.
 """
 
 from __future__ import annotations
 
 _CACHE: dict = {}
-_CTX_ID: int | None = None
+_CTX = None
 
 
-def _active_ctx_id() -> int | None:
+def _active_ctx():
     from pyspark import SparkContext
 
-    ctx = SparkContext._active_spark_context
-    return None if ctx is None else id(ctx)
+    return SparkContext._active_spark_context
 
 
 def expr_memo(namespace: str, key, builder):
@@ -54,11 +54,11 @@ def expr_memo(namespace: str, key, builder):
     — never a DataFrame (module docstring).  The memo is cleared when
     the active SparkContext changes, and a key hit from a different
     builder call site raises (collision tripwire)."""
-    global _CTX_ID
-    ctx = _active_ctx_id()
-    if ctx != _CTX_ID:
+    global _CTX
+    ctx = _active_ctx()
+    if ctx is not _CTX:
         _CACHE.clear()
-        _CTX_ID = ctx
+        _CTX = ctx
     full = (namespace, key)
     code = getattr(builder, "__code__", None)
     got = _CACHE.get(full)

@@ -346,10 +346,7 @@ def q144_delta_registry_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q147 — Iceberg v2 snapshot reader (registered in round 9 — the LAST
-# registration round: the 50-slot driver window supports at most 150
-# queries in steady state and q147/q148/q149 take the registry to 149.
-# See WINDOW.md "steady state" — no further queries register, ever.)
+# q147 — Iceberg v2 snapshot reader (registered in round 9)
 # --------------------------------------------------------------------------
 Q147_ORACLE = f"""
     WITH b AS (
@@ -628,8 +625,7 @@ def q147_iceberg_snapshot_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q148 — Iceberg merge-on-read reader (registered round 9; see the q147
-# header — q147/q148/q149 are the final registrations, registry capped)
+# q148 — Iceberg merge-on-read reader (registered round 9)
 # --------------------------------------------------------------------------
 _EQ_DEL_MOD = 100
 _EQ_DEL_REM = 7
@@ -892,8 +888,7 @@ register(
 
 
 # --------------------------------------------------------------------------
-# q149 — Delta deletion-vector reader (registered round 9; see the q147
-# header — q147/q148/q149 are the final registrations, registry capped)
+# q149 — Delta deletion-vector reader (registered round 9)
 # --------------------------------------------------------------------------
 _DV_FIRST_K = 7
 _DV_MOD = 97

@@ -70,7 +70,6 @@ _SQL_CHARGE6 = f"({_SQL_REVENUE4}) * (100 + {sql_scaled('l_tax')})"
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    bench=True,
     tags=("agg", "filter", "flagship"),
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,7 +165,6 @@ def q02_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
-    bench=True,
     tags=("join", "agg", "topk"),
 )
 def q03_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,7 +794,6 @@ def q20_brand_stats_having(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o_orderdate <  TIMESTAMP '1999-01-01 00:00:00'
     GROUP BY n_name
     """,
-    bench=True,
     tags=("join", "multijoin", "agg"),
 )
 def q21_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,7 +45,6 @@ _SQL_NORM = (
         FROM scored
     ) WHERE rank <= 10
     """,
-    bench=True,
     tags=("vectors", "ann", "topk"),
 )
 def q70_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

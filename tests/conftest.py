@@ -31,9 +31,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 #: shipped with an inconclusive tests_ok bit despite zero failures).
 #: The deep interaction tiers — seeded DML/model-checking fuzz sweeps,
 #: multi-seed parity fuzz, 10x scale studies — are marked
-#: ``@pytest.mark.slow`` and SKIPPED by default; every skipped area
-#: keeps smoke coverage in the default run (unmarked seeds/tests), and
-#: the full tiers run with ``SPARK_GRAFT_FULL_TESTS=1``.
+#: ``@pytest.mark.slow`` and SKIPPED by default; the full tiers run with
+#: ``SPARK_GRAFT_FULL_TESTS=1``.  Smoke coverage is NOT universal.  The
+#: DML-fuzz flavours with a default-tier seed are the plain, mapped,
+#: partitioned, rollback, stream-append DDL/maintenance and both
+#: executor-tier (cap 0) sequences.  These flavours are slow-only:
+#: long, rollback-partitioned-mapped, CDF-written feed, partitioned
+#: merge, bucket-partitioned Iceberg, stream-append rollback and
+#: partitioned, with-maintenance, mapped DDL triple, Iceberg DDL
+#: triple, renamed DML, spec evolution and evolve-rollback, plus the
+#: >1M-row scale runs in test_dml_scale.py.
 RUN_SLOW = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
 

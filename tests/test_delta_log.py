@@ -479,8 +479,8 @@ def test_deletion_vector_offset_field_is_optional(spark, tmp_path):
 
 def test_q149_oracle_parity_unregistered(spark):
     """Round-9 registration prep #3: the deletion-vector reader query
-    passes the exact driver-style parity gate, unregistered (the
-    round-8 window has zero free slots — WINDOW.md)."""
+    passes the exact driver-style parity gate when called directly,
+    outside the registry."""
     import duckdb
 
     from hadoop_sync_spark.io import TABLES, table_path

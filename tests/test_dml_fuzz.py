@@ -806,10 +806,12 @@ def _run_sequence(spark, tmp_path, seed: int, n_ops: int,
 
 
 def _slow(*vals):
-    """Extra fuzz seeds beyond the first of each sequence flavor ride
-    the slow tier (round 14 — conftest.pytest_collection_modifyitems):
-    the default run keeps ONE seed per flavor as smoke coverage, the
-    full sweep runs under SPARK_GRAFT_FULL_TESTS=1."""
+    """Extra fuzz seeds beyond the first of a default-tier sequence
+    flavor ride the slow tier (round 14 —
+    conftest.pytest_collection_modifyitems): the default run keeps ONE
+    seed of such a flavor, the full sweep runs under
+    SPARK_GRAFT_FULL_TESTS=1.  A flavor that is slow as a whole carries
+    the outer ``@pytest.mark.slow`` instead and lists plain seeds."""
     return [pytest.param(v, marks=pytest.mark.slow) for v in vals]
 
 @pytest.mark.parametrize("seed", [11, *_slow(12, 13)])
@@ -850,7 +852,7 @@ def test_dml_sequence_with_rollback(spark, tmp_path, seed):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed", [815, *_slow(829)])
+@pytest.mark.parametrize("seed", [815, 829])
 def test_dml_sequence_rollback_partitioned_mapped(spark, tmp_path,
                                                   seed):
     # partitioned twins + mapped Delta: seed 815 rolls back
@@ -869,7 +871,7 @@ def test_dml_sequence_rollback_partitioned_mapped(spark, tmp_path,
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed", [11, *_slow(41)])
+@pytest.mark.parametrize("seed", [11, 41])
 def test_dml_sequence_cdf_written_feed(spark, tmp_path, seed):
     # round 12: delta.enableChangeDataFeed makes the Delta faces WRITE
     # _change_data files (update_pre/postimage included) and the
@@ -883,7 +885,7 @@ def test_dml_sequence_cdf_written_feed(spark, tmp_path, seed):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed", [1401, *_slow(1431)])
+@pytest.mark.parametrize("seed", [1401, 1431])
 def test_dml_sequence_partitioned_merge(spark, tmp_path, seed):
     # round 12 lifted the partitioned-merge refusal on BOTH formats:
     # merges land in partitioned sequences (per-tuple source split,
@@ -896,7 +898,6 @@ def test_dml_sequence_partitioned_merge(spark, tmp_path, seed):
                   partitioned=True, partitioned_merge=True)
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("seed", [1201, *_slow(1217)])
 def test_dml_sequence_delta_executor_tier(spark, tmp_path, seed,
                                           monkeypatch):
@@ -910,7 +911,6 @@ def test_dml_sequence_delta_executor_tier(spark, tmp_path, seed,
     _run_sequence(spark, tmp_path, seed, n_ops=9, mapped=False)
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("seed", [1303, *_slow(1306)])
 def test_dml_sequence_iceberg_executor_tier(spark, tmp_path, seed,
                                             monkeypatch):
@@ -925,7 +925,7 @@ def test_dml_sequence_iceberg_executor_tier(spark, tmp_path, seed,
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed", [2119, *_slow(2137)])
+@pytest.mark.parametrize("seed", [2119, 2137])
 def test_dml_sequence_bucket_partitioned_iceberg(spark, tmp_path, seed):
     """Round 13: the Iceberg twin runs under a bucket[2](p) DEFAULT
     spec (p stays a data column; the Delta twin keeps its identity
@@ -1157,7 +1157,7 @@ def _run_delta_ddl_sequence(spark, tmp_path, seed: int, n_ops: int):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("seed", [51, *_slow(52)])
+@pytest.mark.parametrize("seed", [51, 52])
 def test_dml_sequence_mapped_ddl_triple(spark, tmp_path, seed):
     _run_delta_ddl_sequence(spark, tmp_path, seed, n_ops=12)
 
@@ -1414,7 +1414,7 @@ def _run_iceberg_ddl_sequence(spark, tmp_path, seed: int, n_ops: int,
 # seeds chosen for op richness: 709 = add, merge, drop, rename, three
 # more merges ON the renamed history, compact after the rename; 713 =
 # update before the rename, two adds, maintenance, merges after it
-@pytest.mark.parametrize("seed", [709, *_slow(713)])
+@pytest.mark.parametrize("seed", [709, 713])
 def test_dml_sequence_iceberg_ddl_triple(spark, tmp_path, seed):
     _run_iceberg_ddl_sequence(spark, tmp_path, seed, n_ops=12)
 
@@ -1426,7 +1426,7 @@ def test_dml_sequence_iceberg_ddl_triple(spark, tmp_path, seed):
 # and deletes across a compact and an add_column; 1554 deletes on both
 # sides of the rename and updates through two compacts (rewritten
 # copies re-entering under current names, then scanned again)
-@pytest.mark.parametrize("seed", [1507, *_slow(1554)])
+@pytest.mark.parametrize("seed", [1507, 1554])
 def test_dml_sequence_iceberg_renamed_dml(spark, tmp_path, seed):
     _run_iceberg_ddl_sequence(spark, tmp_path, seed, n_ops=12,
                               renamed_dml=True)
@@ -1441,7 +1441,7 @@ def test_dml_sequence_iceberg_renamed_dml(spark, tmp_path, seed):
 # add_columns and a rename (multi-schema × multi-spec reads); 911 =
 # update before the evolve, maintenance after (expire+vacuum over
 # mixed specs), then drop_column
-@pytest.mark.parametrize("seed", [947, *_slow(964, 926, 911)])
+@pytest.mark.parametrize("seed", [947, 964, 926, 911])
 def test_dml_sequence_iceberg_spec_evolution(spark, tmp_path, seed):
     _run_iceberg_ddl_sequence(spark, tmp_path, seed, n_ops=12,
                               with_evolve=True)
@@ -1598,7 +1598,7 @@ def test_commit_race_loses_cleanly_and_retry_wins(spark, tmp_path):
 # rolls back mid-sequence then lands DDL and MORE deletes on the
 # restored state; 1393 merges (live equality deletes) before the
 # evolve, rolls back right after it, then runs the full DDL triple
-@pytest.mark.parametrize("seed", [1286, *_slow(1348, 1393)])
+@pytest.mark.parametrize("seed", [1286, 1348, 1393])
 def test_dml_sequence_iceberg_evolve_rollback(spark, tmp_path, seed):
     res = _run_iceberg_ddl_sequence(spark, tmp_path, seed, n_ops=13,
                                     with_evolve=True,

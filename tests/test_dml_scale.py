@@ -23,8 +23,10 @@ from hadoop_sync_spark.iceberg_meta import DataFile, IcebergTable
 
 #: slow tier (round 14): >1M-row executor-tier scale studies — the
 #: executor-tier code paths themselves stay default-covered at cap 0 by
-#: test_dml_fuzz's executor-tier seeds; these runs prove them at the
-#: REAL cap and ride SPARK_GRAFT_FULL_TESTS=1
+#: test_dml_fuzz's executor-tier seeds 1201 (Delta delete and merge)
+#: and 1303 (Delta and Iceberg delete and update); the Iceberg merge
+#: executor tier runs only in the slow seed 1306.  These runs prove the
+#: paths at the REAL cap and ride SPARK_GRAFT_FULL_TESTS=1
 pytestmark = pytest.mark.slow
 
 N = 1_200_000  # > DELETE_WHERE_ROW_LIMIT / DELETE_ROWS_LIMIT = 1M

@@ -52,13 +52,3 @@ def test_survey_references_no_phantom_queries():
         f"{phantoms}"
     )
 
-
-def test_window_ledger_doc_matches_driver_order_size():
-    """WINDOW.md's plan and the pinned _DRIVER_ORDER must agree on the
-    window size (the detailed membership is enforced by
-    test_window_ledger; this guards the doc's top-line claim)."""
-    from hadoop_sync_spark.queries import _DRIVER_ORDER
-
-    assert len(_DRIVER_ORDER) == 50
-    text = (REPO / "WINDOW.md").read_text()
-    assert "FIRST 50 entries" in text

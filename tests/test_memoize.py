@@ -45,12 +45,12 @@ def test_closure_fingerprint_distinguishes_captured_constants():
 
 
 def test_cache_clears_when_spark_context_changes(monkeypatch):
-    ctx = ["ctx1"]
-    monkeypatch.setattr(memoize, "_active_ctx_id", lambda: id(ctx[0]))
+    ctx = [object()]
+    monkeypatch.setattr(memoize, "_active_ctx", lambda: ctx[0])
     build = lambda: object()  # noqa: E731 — one call site on purpose
     first = expr_memo("tests.ctx", "k", build)
     assert expr_memo("tests.ctx", "k", build) is first
-    ctx[0] = "ctx2"  # a stopped-and-recreated SparkContext
+    ctx[0] = object()  # a stopped-and-recreated SparkContext
     second = expr_memo("tests.ctx", "k", build)
     assert second is not first
 
