@@ -977,7 +977,11 @@ class _IceIncStreamReader(DataSourceStreamReader):
         each key column over the union of both sides (null → code
         -1, so null-safe by construction) and matches the code rows
         as numpy structured records via ``np.isin`` — per-file cost
-        is O(rows·keys) vectorized ops, no Python per-row work."""
+        is O(rows·keys) vectorized ops, no Python per-row work.  A
+        delete key that does not cast to its data column's type (a
+        string key against a long column) is a malformed delete file
+        and raises ``ValueError`` naming the file, the key and both
+        types."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -1024,7 +1028,16 @@ class _IceIncStreamReader(DataSourceStreamReader):
                         # a conforming delete file carries the key at
                         # the schema's (possibly pre-promotion) type;
                         # unify on the data side, as read() casts
-                        da = da.cast(ca.type)
+                        try:
+                            da = da.cast(ca.type)
+                        except (pa.ArrowInvalid,
+                                pa.ArrowNotImplementedError) as e:
+                            raise ValueError(
+                                f"equality delete {dpath!r} key column "
+                                f"{kn!r} has type {da.type}, which does "
+                                f"not cast to the data column's type "
+                                f"{ca.type}"
+                            ) from e
                     del_arrs.append(da)
                     data_arrs.append(ca)
                 if not del_arrs:

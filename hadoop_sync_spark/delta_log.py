@@ -223,7 +223,7 @@ _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 
 
-from hadoop_sync_spark.io import BROADCAST_DELETE_ROW_LIMIT
+from hadoop_sync_spark.io import BROADCAST_DELETE_ROW_LIMIT, local_frame
 
 #: broadcast ceiling for row-level delete sets (shared with the Iceberg
 #: reader; rationale at io.BROADCAST_DELETE_ROW_LIMIT)
@@ -747,7 +747,7 @@ class DeltaLog:
             schema = snap.schema()
             if schema is None:
                 raise ValueError("empty table with no metaData action")
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         if snap.column_mapping_mode != "none":
             return self._read_column_mapped(spark, snap, sel, files)
         schema = snap.schema()
@@ -1709,20 +1709,30 @@ class DeltaLog:
         """(file, pos) delete frame for the DV anti-join, or None when
         every descriptor decodes to zero positions.  THREE regimes,
         decided from METADATA (the descriptors' summed ``cardinality``)
-        before any payload decodes — all boundaries measured (round-10
-        A/B at 200k DV rows: driver decode + broadcast 4.6 s, executor
-        decode + broadcast 2.1 s, executor decode + shuffle 1.7 s;
-        RDD-path fixed overhead ≈ 0.3 s):
+        before any payload decodes.  Measured as the median
+        ``read().count()`` on ``local[2]``, 4-vCPU host:
+
+        - 30 positions over 2,970 rows: driver decode into a
+          :func:`io.local_frame` 0.38–0.39 s, executor decode
+          0.72–0.76 s.  The executor regime's Python-worker job costs a
+          fixed ~0.35 s.
+        - 210k positions in 14 files: driver decode into a local frame
+          2.50–2.52 s, executor decode 3.34–3.55 s.  Before local
+          frames, when the driver list was a Python-worker RDD scan
+          too, the driver decode took 5.61 s and the executor decode
+          2.93 s.  So ``_DRIVER_DECODE_ROW_LIMIT`` (20k) now sits below
+          the crossover, which is not re-measured yet; the executor
+          regime still keeps the position list off the driver.
+
+        The regimes:
 
         - at or under ``_DRIVER_DECODE_ROW_LIMIT`` rows, positions
-          expand driver-side and the frame broadcasts — the RDD path's
-          fixed job overhead dominates tiny (fixture-scale) sets;
+          expand driver-side into a local frame that broadcasts — no
+          Spark job at all before the read's own scan;
         - up to ``_BROADCAST_DELETE_ROW_LIMIT``, the descriptors
           (metadata-scale) parallelize and each decodes ITS positions
-          executor-side, then the result broadcasts — Python-side
-          driver expansion is O(cardinality) serialization and loses
-          to executor decode well before the broadcast itself is in
-          any trouble;
+          executor-side, then the result broadcasts — the driver never
+          holds an O(cardinality) position list;
         - ABOVE the ceiling (a pathological delete set at 100 TB —
           e.g. a GDPR purge touching most rows), the broadcast itself
           would blow up: same executor decode, plain shuffle join, and
@@ -1739,7 +1749,7 @@ class DeltaLog:
             if not del_rows:
                 return None
             return F.broadcast(
-                spark.createDataFrame(del_rows, ["_d_file", "_d_pos"])
+                local_frame(spark, del_rows, "_d_file string, _d_pos long")
             )
         table_dir = self.table_dir
         items = sorted(dv_map.items())
@@ -2342,9 +2352,8 @@ class DeltaLog:
                     for r in rels
                     for p in sorted(fresh_sets[r])
                 ]
-                return F.broadcast(
-                    spark_.createDataFrame(sel_rows, ["_afp", "_pos"])
-                )
+                return F.broadcast(local_frame(
+                    spark_, sel_rows, "_afp string, _pos long"))
 
             actions.extend(self._write_cdc_files(
                 spark, version,
@@ -2390,13 +2399,14 @@ class DeltaLog:
         :meth:`_dv_delete_frame` (its three decode regimes included).
         Shared by the executor tiers of update_where and the
         CDC-enabled delete_where."""
-        rel_map = spark.createDataFrame(
+        rel_map = local_frame(
+            spark,
             [
                 (os.path.abspath(os.path.join(self.table_dir, rel)),
                  rel)
                 for rel in snap.live
             ],
-            ["_afp", "_rel"],
+            "_afp string, _rel string",
         )
         m = frame.withColumn("_afp", self._decoded_fp()).join(
             F.broadcast(rel_map), "_afp"
@@ -2719,9 +2729,8 @@ class DeltaLog:
                 for r in rels
                 for p in sorted(fresh[r])
             ]
-            return F.broadcast(
-                spark_.createDataFrame(sel_rows, ["_afp", "_pos"])
-            )
+            return F.broadcast(local_frame(
+                spark_, sel_rows, "_afp string, _pos long"))
 
         adds, cdc_pieces = self._updated_copies(
             spark, snap, phys, set_values, version, groups, select_pairs
@@ -3015,8 +3024,8 @@ class DeltaLog:
                         for r in rels
                         for p in sorted(fresh_sets[r])
                     ]
-                    return F.broadcast(spark_.createDataFrame(
-                        sel_rows, ["_afp", "_pos"]))
+                    return F.broadcast(local_frame(
+                        spark_, sel_rows, "_afp string, _pos long"))
 
             groups = self._partition_groups(snap, affected)
             pieces = self._cdc_capture_matched(
@@ -3409,7 +3418,7 @@ class DeltaLog:
             {r[0] for r in ev_rows} | {r[0] for r in pos_rows}
         )
         if not touched and not cdc_versions:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         missing = [
             rel
             for rel in (touched
@@ -3513,13 +3522,15 @@ class DeltaLog:
         )
         pieces = []
         if ev_rows:
-            ev_df = spark.createDataFrame(
-                ev_rows, ["_rel", "_commit_version", "_change_type"]
+            ev_df = local_frame(
+                spark, ev_rows,
+                "_rel string, _commit_version long, _change_type string",
             )
             whole = df.join(F.broadcast(ev_df), "_rel")
             if exc_rows:
-                exc_df = spark.createDataFrame(
-                    exc_rows, ["_rel", "_commit_version", "_pos"]
+                exc_df = local_frame(
+                    spark, exc_rows,
+                    "_rel string, _commit_version long, _pos long",
                 )
                 whole = whole.join(
                     F.broadcast(exc_df),
@@ -3528,9 +3539,10 @@ class DeltaLog:
                 )
             pieces.append(whole)
         if pos_rows:
-            pos_df = spark.createDataFrame(
-                pos_rows,
-                ["_rel", "_commit_version", "_change_type", "_pos"],
+            pos_df = local_frame(
+                spark, pos_rows,
+                "_rel string, _commit_version long, _change_type string, "
+                "_pos long",
             )
             pieces.append(
                 df.join(F.broadcast(pos_df), ["_rel", "_pos"])

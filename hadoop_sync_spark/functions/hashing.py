@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from hadoop_sync_spark.io import local_frame
+
 # deterministic odd multipliers/offsets for the permutation family
 # h_i(x) = a_i * x + b_i  (mod 2^64, wrapping) — standard multiply-shift family
 _MASK = (1 << 63) - 1
@@ -656,7 +658,7 @@ def minhash_lsh_pairs(
             )
         return pairs
     # max_bucket is None: nothing can be capped
-    capped = df.sparkSession.createDataFrame([], "id_a long")
+    capped = local_frame(df.sparkSession, [], "id_a long")
     if with_persist_handle:
         return pairs, capped, None
     return pairs, capped

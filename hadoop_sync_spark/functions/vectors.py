@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from hadoop_sync_spark.io import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Exact-order dot product of two float arrays in DOUBLE."""
@@ -215,8 +217,8 @@ def kmeans_centroids(
         C = newC
 
     centers = [(i, [float(x) for x in C[i]]) for i in range(k)]
-    return vectors.sparkSession.createDataFrame(
-        centers, "centroid_id int, cvec array<double>"
+    return local_frame(
+        vectors.sparkSession, centers, "centroid_id int, cvec array<double>"
     )
 
 
@@ -574,7 +576,7 @@ def rp_band_pairs(
             )
         return pairs
     if max_bucket is None:
-        capped = vectors.sparkSession.createDataFrame([], f"{id_col} long")
+        capped = local_frame(vectors.sparkSession, [], f"{id_col} long")
     else:
         # an id is "fully capped" when every ≥2-member bucket it belongs
         # to was dropped by the cap — no band can surface it in a pair

@@ -65,6 +65,7 @@ from dataclasses import dataclass, field as dataclasses_field
 from hadoop_sync_spark.avro_codec import read_ocf, write_ocf
 from hadoop_sync_spark.io import (
     BROADCAST_DELETE_ROW_LIMIT as _BROADCAST_DELETE_ROW_LIMIT,
+    local_frame,
 )
 
 _STATUS_EXISTING, _STATUS_ADDED, _STATUS_DELETED = 0, 1, 2
@@ -1207,7 +1208,7 @@ class IcebergTable:
                         for n in part_names
                     ]
                 )
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             raise ValueError("snapshot selects no data files")
         part_cols = sorted({k for f in files for k in f.partition})
         reader = spark.read
@@ -1711,7 +1712,7 @@ class IcebergTable:
                 f"unknown metadata table {kind!r}: snapshots, history, "
                 "refs, files, delete_files, partitions, manifests"
             )
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     def history(self) -> list[dict]:
         """Operation log in DESCRIBE HISTORY shape, newest first."""
@@ -2568,9 +2569,10 @@ class IcebergTable:
 
         meta = self.metadata()
         seq = meta["last-sequence-number"] + 1
-        raw_map = spark.createDataFrame(
+        raw_map = local_frame(
+            spark,
             [(_norm_path(f.path), f.raw_path) for f in cand],
-            ["_np", "file_path"],
+            "_np string, file_path string",
         )
         decoded = F.url_decode(
             F.regexp_replace(
@@ -2804,12 +2806,13 @@ class IcebergTable:
             # group, and the position-delete parquets write straight
             # from the frame.  The driver materializes only the
             # affected file list (metadata scale).
-            raw_map = spark.createDataFrame(
+            raw_map = local_frame(
+                spark,
                 [
                     (_norm_path(f.path), f.raw_path, f.sequence)
                     for f in cand
                 ],
-                ["_np", "_raw", "_fseq"],
+                "_np string, _raw string, _fseq long",
             )
             decoded = F.url_decode(
                 F.regexp_replace(
@@ -2907,9 +2910,8 @@ class IcebergTable:
                     for r in raws
                     for p in sorted(fresh[r])
                 ]
-                return F.broadcast(
-                    spark.createDataFrame(sel_rows, ["_afp", "_pos"])
-                )
+                return F.broadcast(local_frame(
+                    spark, sel_rows, "_afp string, _pos long"))
         groups: dict[tuple, list[str]] = {}
         for raw in affected:
             pv = cand_by_raw[raw].partition
@@ -3437,7 +3439,7 @@ class IcebergTable:
             + [T.StructField("_snapshot_id", T.LongType(), False)]
         )
         if not added:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         infos = sorted(added.items())
         schema_names = {
             f["name"] for f in self._schema_by_id(sid)["fields"]
@@ -3485,6 +3487,13 @@ class IcebergTable:
 
         return attach_file_columns(
             scan, rows, ["_snapshot_id", *part_cols],
+            # the spec types out_schema's partition section uses; date
+            # parts stay epoch-day longs until the conversion below
+            types={"_snapshot_id": T.LongType()} | {
+                c: inferred.get(part_types.get(c, "string"),
+                                T.StringType())
+                for c in part_cols
+            },
             what="iceberg incremental scan",
         ).select(
             *[_lcol(f.name).alias(f.name)

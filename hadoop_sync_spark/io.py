@@ -13,7 +13,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import (
+    BooleanType,
+    DataType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 #: Every fixture table (TESTDATA.md).  Order: dims → facts → L3 tables.
 TABLES: tuple[str, ...] = (
@@ -58,13 +67,14 @@ def table_path(sf_dir: str, name: str) -> str:
 #: ``filesourcePartitionFileCacheSize`` (optimization guide §6) and the
 #: bench protocol's warm-up pass ("file-listing caches").
 #:
-#: Bounded LRU keyed by (id(session), sf_dir, name, stamp): a cached
-#: DataFrame strongly references its session, so id() cannot be reused
-#: while the entry lives, and the FIFO bound is what retires a stopped
-#: session's plans (a weak-keyed dict could never evict them — the values
-#: pin their keys).  ``stamp`` is the table path's ``(st_size,
-#: st_mtime_ns)``, so a table regenerated in place misses the cache
-#: instead of serving the old file listing.
+#: Bounded LRU keyed by (session, sf_dir, name, stamp): the session
+#: object itself sits in the key (SparkSession hashes and compares by
+#: identity), so a dead session's address can never alias a live one,
+#: and the FIFO bound is what retires a stopped session's plans (a
+#: weak-keyed dict could never evict them — the values pin their keys).
+#: ``stamp`` is the table path's ``(st_size, st_mtime_ns)``, so a table
+#: regenerated in place misses the cache instead of serving the old
+#: file listing.
 from collections import OrderedDict
 
 _PLAN_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
@@ -77,7 +87,7 @@ def _plan_cache_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
         stamp = (st.st_size, st.st_mtime_ns)
     except OSError:  # not a local path; spark.read reports a missing one
         stamp = None
-    return (id(spark), sf_dir, name, stamp)
+    return (spark, sf_dir, name, stamp)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -148,6 +158,44 @@ def decode_file_uri(fp: str) -> str:
     return _unquote(_re.sub("^file:(//)?", "", fp).replace("+", "%2B"))
 
 
+def local_frame(
+    spark: SparkSession, rows: list, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s
+    field order; ``schema`` a StructType or a DDL string) — the one way
+    this engine turns a Python list into a frame.
+
+    The rows go to the JVM as a ``pyarrow.Table`` typed from the Spark
+    schema, so the plan is a ``LocalRelation`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.  A plain
+    ``spark.createDataFrame(<list>)`` is a ``LogicalRDD`` instead: every
+    collect or broadcast of it runs a Python-worker job (a one-row frame
+    collects in ~450 ms against ~40 ms as a LocalRelation, 4-vCPU
+    host).  Naive datetimes in a TimestampType column read as
+    process-local time, the same rule ``createDataFrame(<list>)``
+    applies."""
+    from datetime import timezone
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for values, field, afield in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            values = [
+                v.astimezone(timezone.utc)
+                if v is not None and v.tzinfo is None else v
+                for v in values
+            ]
+        arrays.append(pa.array(values, type=afield.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> None:
     """Materialize ``df`` as EXACTLY the file ``dest`` (coalesce(1)
     through a staging dir, then an atomic rename) — the write idiom the
@@ -170,44 +218,41 @@ def attach_file_columns(
     scan: DataFrame,
     file_rows: list[tuple],
     columns: list[str],
+    types: dict,
     what: str = "file metadata",
-    types: dict | None = None,
 ) -> DataFrame:
     """Attach per-file metadata columns (e.g. an open table format's
     partition values) to a multi-file scan via a broadcast join on the
     DECODED file path — the lakehouse readers' shared idiom.
 
     ``file_rows`` is ``[(abs_path, v1, v2, ...), ...]`` keyed by the
-    plain absolute path (no URI encoding).  Spark's
-    ``input_file_name()`` yields a percent-encoded ``file:`` URI whose
-    exact encoding Hadoop owns, so the Spark side strips the scheme,
-    protects literal ``+`` (url_decode speaks x-www-form-urlencoded
-    where ``+`` means space), and decodes the percent-escapes.  The
-    join is LEFT with a per-row ``raise_error`` guard: any residual
-    mismatch (foreign scheme, exotic encoding) fails the read loudly
-    instead of silently dropping the file's rows — a partition VALUE
-    may legitimately be null, so the guard keys on an explicit match
-    marker, never the value.  (ADVICE r7: the first Iceberg cut
-    inner-joined on a re-encoded URI.)
+    plain absolute path (no URI encoding); ``types`` maps every name in
+    ``columns`` to its Spark type (the caller knows it from its
+    metadata — a value can be None for EVERY scanned file, e.g. only
+    pre-evolution files survive a filter, so it is never inferred).
+    The path map is a :func:`local_frame`, so the broadcast costs no
+    Python-worker job.  Spark's ``input_file_name()`` yields a
+    percent-encoded ``file:`` URI whose exact encoding Hadoop owns, so
+    the Spark side strips the scheme, protects literal ``+``
+    (url_decode speaks x-www-form-urlencoded where ``+`` means space),
+    and decodes the percent-escapes.  The join is LEFT with a per-row
+    ``raise_error`` guard: any residual mismatch (foreign scheme,
+    exotic encoding) fails the read loudly instead of silently dropping
+    the file's rows — a partition VALUE may legitimately be null, so
+    the guard keys on an explicit match marker, never the value.
+    (ADVICE r7: the first Iceberg cut inner-joined on a re-encoded
+    URI.)
     """
-    rows = [(r[0], True) + tuple(r[1:]) for r in file_rows]
-    if types is not None and all(c in types for c in columns):
-        # explicit column types (spec evolution: a metadata value can
-        # be None for EVERY scanned file — e.g. only pre-evolution
-        # files survive a filter — and type inference would refuse an
-        # all-null column; the caller knows the type from its metadata)
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [T.StructField("_file", T.StringType(), False),
-             T.StructField("_matched", T.BooleanType(), False)]
-            + [T.StructField(c, types[c], True) for c in columns]
-        )
-        part_map = scan.sparkSession.createDataFrame(rows, schema)
-    else:
-        part_map = scan.sparkSession.createDataFrame(
-            rows, ["_file", "_matched", *columns]
-        )
+    schema = StructType(
+        [StructField("_file", StringType(), False),
+         StructField("_matched", BooleanType(), False)]
+        + [StructField(c, types[c], True) for c in columns]
+    )
+    part_map = local_frame(
+        scan.sparkSession,
+        [(r[0], True) + tuple(r[1:]) for r in file_rows],
+        schema,
+    )
     decoded = F.url_decode(
         F.regexp_replace(
             F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
@@ -225,7 +270,6 @@ def attach_file_columns(
             F.col("_file"),
         )
     )
-    types = dict(part_map.dtypes)
     return joined.select(
         *[F.col(c) for c in scan.columns if c != "_file"],
         *[

@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hadoop_sync_spark.io import local_frame
+
 #: Canonical multimodal table schema.
 ASSET_SCHEMA = StructType(
     [
@@ -584,7 +586,7 @@ def synthetic_assets(spark: SparkSession, n: int = 64) -> DataFrame:
     n assets cycling image/audio/video with varied dims — every payload a
     real decodable BMP/WAV/RVID."""
     rows = [_make_asset(i, i) for i in range(n)]
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return local_frame(spark, rows, ASSET_SCHEMA)
 
 
 def assets_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

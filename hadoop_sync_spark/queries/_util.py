@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from hadoop_sync_spark.io import load_table
+from hadoop_sync_spark.io import load_table, local_frame
 
 #: Exact-aggregation discipline: every fixture money/rate column carries
 #: exactly 2 fraction digits, so ``ROUND(x*100)`` recovers the exact scaled
@@ -106,12 +106,13 @@ def sql_md5_prefix60_long(expr: str) -> str:
 def materialize_and_free(assembled: DataFrame, free) -> DataFrame:
     """Contract-row epilogue shared by the ANN/pair/component contracts:
     materialize the (one-row) assembled frame, unpersist the listed
-    cached inputs, and return the row as a LocalRelation — a lazily
-    returned plan would either pin the caches for the session lifetime
-    or recompute the whole pipeline at collect time.  ``free`` may hold
-    DataFrames (``.unpersist()``) or raw persisted-RDD handles
-    (``.unpersist(bool)`` from the checkpoint trackers); Nones are
-    skipped.  With no ``free`` list the assembled plan returns lazily
+    cached inputs, and return the row as a LocalRelation (built by
+    :func:`io.local_frame`, so collecting it runs no Spark job) — a
+    lazily returned plan would either pin the caches for the session
+    lifetime or recompute the whole pipeline at collect time.
+    ``free`` may hold DataFrames (``.unpersist()``) or raw
+    persisted-RDD handles (``.unpersist(bool)`` from the checkpoint
+    trackers); Nones are skipped.  With no ``free`` list the assembled plan returns lazily
     unchanged."""
     if not free:
         return assembled
@@ -129,4 +130,4 @@ def materialize_and_free(assembled: DataFrame, free) -> DataFrame:
             frame.unpersist()
         except TypeError:
             frame.unpersist(False)
-    return assembled.sparkSession.createDataFrame(rows, schema)
+    return local_frame(assembled.sparkSession, rows, schema)

@@ -15,6 +15,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from hadoop_sync_spark.io import local_frame
 from hadoop_sync_spark.queries import register
 from hadoop_sync_spark.queries._util import t
 
@@ -172,7 +173,8 @@ def q82_registry_sync_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(len(reg.shards(name)) == first.added),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, first_removed long, "
         "rerun_noop boolean, catalog_matches_fs boolean",
@@ -229,7 +231,8 @@ def q95_compaction_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_after = reg.read("docs").count()
     resync = reg.sync("docs")
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "docs",
@@ -453,7 +456,8 @@ def q101_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:  # noqa: BLE001 — any failure to read = dropped
         vacuumed = True
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("docs", rows_v1, rows_v2, bool(v1_stable), bool(vacuumed))],
         "table_name string, rows_v1 long, rows_v2 long, "
         "v1_stable_after_v2 boolean, vacuum_enforces_retention boolean",
@@ -518,7 +522,8 @@ def q102_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_old_scored"),
     ).first()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "docs",
@@ -634,7 +639,8 @@ def q103_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     z_total = sum(hit_one_col(z_stats, c) for c in cols)
     l_total = sum(hit_one_col(l_stats, c) for c in cols)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "lineitem",
@@ -714,7 +720,8 @@ def q104_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (fmt, agg["n"], agg["cents"], int(agg["flags"]), bool(lossless))
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "fmt string, n_rows long, price_cents long, n_flags long, "
         "roundtrip_ok boolean",

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from hadoop_sync_spark.functions.text import normalize, tokens
+from hadoop_sync_spark.io import local_frame
 from hadoop_sync_spark.queries import register
 from hadoop_sync_spark.queries._util import t
 from hadoop_sync_spark.queries.text import _SQL_NORM_TOKENS
@@ -131,7 +132,8 @@ def _bm25_pipeline(spark: SparkSession, sf_dir: str):
     ).collect()[0]
     al_q = int(total_len) // int(n_docs)
 
-    qrows = spark.createDataFrame(
+    qrows = local_frame(
+        spark,
         [(qid, term) for qid, terms in _BM25_QUERIES for term in terms],
         "query_id string, term string",
     )

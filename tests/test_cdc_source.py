@@ -1066,3 +1066,31 @@ def test_visibility_mask_vectorized_matches_tuple_reference(tmp_path):
     # dels=None (file removed at that side): nothing visible
     assert not _IceIncStreamReader._visibility_mask(
         tbl, part, None).any()
+
+
+def test_visibility_mask_refuses_nonconforming_delete_key_type(tmp_path):
+    """A string-keyed equality delete against a long data column is a
+    malformed delete file: a ValueError naming the file, the key column
+    and both types (it was a bare ArrowInvalid from the cast)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_sync_spark.cdc_source import (
+        _ICE_EQ,
+        _IceChangePart,
+        _IceIncStreamReader,
+    )
+
+    tbl = pa.table({"k": pa.array([1, 2, 3], pa.int64())})
+    eq = str(tmp_path / "eq_str.parquet")
+    pq.write_table(pa.table({"k": pa.array(["x", "2"])}), eq)
+    part = _IceChangePart(
+        abs_path="", raw_path="data.parquet", seq=1, snapshot_id=1,
+        role="insert", dels_before=(), dels_after=(), pv={},
+        out_cols=("k",))
+    with pytest.raises(ValueError) as err:
+        _IceIncStreamReader._visibility_mask(
+            tbl, part, ((eq, _ICE_EQ, 9, ((1, "k"),)),))
+    msg = str(err.value)
+    assert "eq_str.parquet" in msg and "'k'" in msg
+    assert "string" in msg and "int64" in msg

@@ -3050,3 +3050,29 @@ def test_rollback_by_timestamp_to_current_is_noop(table):
     # an EXPLICIT id keeps the refusal (the user named a target)
     with pytest.raises(ValueError, match="already current"):
         t.rollback_to(s3)
+
+
+@pytest.mark.parametrize("executor_tier", [True, False],
+                         ids=["executor", "driver"])
+def test_merge_upsert_executor_and_driver_tiers(spark, tmp_path,
+                                                monkeypatch,
+                                                executor_tier):
+    """merge_upsert at cap 0 (the executor tier writes the equality
+    delete straight from the distributed key frame) and at the default
+    cap (driver-collected keys) read back the same driver-side model:
+    5 keys updated, 5 inserted, 45 untouched."""
+    if executor_tier:
+        monkeypatch.setattr(IcebergTable, "DELETE_ROWS_LIMIT", 0)
+    t, write_pq = _mor_table(tmp_path)
+    ids = list(range(50))
+    t.append([write_pq("f1.parquet", ids[:25]),
+              write_pq("f2.parquet", ids[25:])], now_ms=2000)
+    model = {i: f"v{i}" for i in ids}
+    upserts = [(i, f"u{i}") for i in (3, 17, 25, 31, 49)]
+    upserts += [(i, f"n{i}") for i in range(100, 105)]
+    src = spark.createDataFrame(upserts, "id long, val string")
+    res = t.merge_upsert(spark, src, "id", now_ms=3000)
+    assert res["rows"] == 10 and res["keys"] == 10
+    model.update(upserts)
+    got = sorted((r.id, r.val) for r in t.read(spark).collect())
+    assert got == sorted(model.items())
