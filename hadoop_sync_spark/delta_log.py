@@ -50,6 +50,8 @@ instead of silently mis-reading.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 from dataclasses import dataclass, field
@@ -231,8 +233,9 @@ _BROADCAST_DELETE_ROW_LIMIT = BROADCAST_DELETE_ROW_LIMIT
 
 #: below this, DV positions expand DRIVER-side (the executor-decode
 #: RDD path's ~0.3 s fixed job overhead dominates tiny sets); above,
-#: descriptors decode executor-side (driver expansion is O(cardinality)
-#: Python serialization — measured 2.2x slower already at 200k rows)
+#: descriptors decode executor-side, keeping the O(cardinality)
+#: position list off the driver (measurements at
+#: DeltaLog._dv_delete_frame)
 _DRIVER_DECODE_ROW_LIMIT = 20_000
 
 
@@ -292,6 +295,21 @@ def _dv_blob_write(
     ) as fh:
         fh.write(blob)
     return len(data)
+
+
+def _dv_u_descriptor(
+    rel_path: str, version: int, size: int, cardinality: int
+) -> dict:
+    """Descriptor of the ``u``-stored vector :func:`_dv_blob_write`
+    wrote for ``rel_path`` at ``version`` (the uuid re-derives from the
+    pair, so the committing driver needs only the size and count)."""
+    return {
+        "storageType": "u",
+        "pathOrInlineDv": _b85_encode(_dv_uuid(rel_path, version).bytes),
+        "offset": 1,
+        "sizeInBytes": size,
+        "cardinality": cardinality,
+    }
 
 
 def _resolve_dv_positions(table_dir: str, desc: dict) -> list[int]:
@@ -525,6 +543,32 @@ class Snapshot:
         return StructType.fromJson(
             _normalize_delta_types(json.loads(self.schema_json))
         )
+
+
+class _FreshPositions:
+    """The fresh matched positions of one Delta DML commit, in the one
+    shape every step after the tier decision consumes: ``dvs`` lists
+    ``(rel, fresh_rows, descriptor)`` per affected file, sorted by
+    path, for deletion vectors already written; :meth:`pairs` gives
+    some files' fresh ``(_afp, _pos)`` rows as a frame to join."""
+
+    def __init__(self, dvs: list, frame):
+        self.dvs = dvs
+        #: zero-argument callable -> the ``(_afp, _pos, _rel)`` frame
+        self._frame = frame
+
+    @property
+    def rels(self) -> list[str]:
+        return [rel for rel, _, _ in self.dvs]
+
+    @property
+    def rows(self) -> int:
+        return sum(n for _, n, _ in self.dvs)
+
+    def pairs(self, rels) -> DataFrame:
+        return self._frame().where(
+            F.col("_rel").isin(list(rels))
+        ).select("_afp", "_pos")
 
 
 class DeltaLog:
@@ -1709,20 +1753,25 @@ class DeltaLog:
         """(file, pos) delete frame for the DV anti-join, or None when
         every descriptor decodes to zero positions.  THREE regimes,
         decided from METADATA (the descriptors' summed ``cardinality``)
-        before any payload decodes.  Measured as the median
-        ``read().count()`` on ``local[2]``, 4-vCPU host:
+        before any payload decodes.  Medians of 4 ``read().count()``
+        runs per regime (after a warm-up) on ``local[2]``, 4-vCPU host,
+        14 files with every other row deleted:
 
-        - 30 positions over 2,970 rows: driver decode into a
-          :func:`io.local_frame` 0.38–0.39 s, executor decode
-          0.72–0.76 s.  The executor regime's Python-worker job costs a
-          fixed ~0.35 s.
-        - 210k positions in 14 files: driver decode into a local frame
-          2.50–2.52 s, executor decode 3.34–3.55 s.  Before local
-          frames, when the driver list was a Python-worker RDD scan
-          too, the driver decode took 5.61 s and the executor decode
-          2.93 s.  So ``_DRIVER_DECODE_ROW_LIMIT`` (20k) now sits below
-          the crossover, which is not re-measured yet; the executor
-          regime still keeps the position list off the driver.
+        ============  =============  ===============
+        positions     driver decode  executor decode
+        ============  =============  ===============
+        210k          2.72 s         3.90 s
+        1M            11.49 s        8.13 s
+        5M            24.27 s        27.04 s
+        ============  =============  ===============
+
+        The driver regime wins at 210k and loses at 1M, so the
+        crossover lies between them; at 5M the two are within 11%,
+        and the executor regime keeps the position list off the
+        driver.  ``_DRIVER_DECODE_ROW_LIMIT`` (20k) sits below the
+        crossover.  At 30 positions over 2,970 rows the driver regime
+        took 0.38 s against 0.74 s: the executor regime's
+        Python-worker job costs a fixed ~0.35 s.
 
         The regimes:
 
@@ -1787,27 +1836,22 @@ class DeltaLog:
         portable Roaring, deterministic uuid per the
         no-ambient-randomness rule), ``i`` inlines the Base85 payload.
         Shared by :meth:`add_deletion_vector` (one file per commit) and
-        :meth:`delete_where` (every affected file in ONE commit)."""
-        data = _dv_serialize(sorted(set(positions)))
+        the DML faces' driver tier (every affected file in ONE
+        commit)."""
+        positions = sorted(set(positions))
+        if storage == "u":
+            size = _dv_blob_write(
+                self.table_dir, rel_path, version, positions
+            )
+            return _dv_u_descriptor(rel_path, version, size, len(positions))
         if storage == "i":
+            data = _dv_serialize(positions)
             pad = (-len(data)) % 4
             return {
                 "storageType": "i",
                 "pathOrInlineDv": _b85_encode(data + b"\x00" * pad),
                 "sizeInBytes": len(data),
-                "cardinality": len(set(positions)),
-            }
-        if storage == "u":
-            uid = _dv_uuid(rel_path, version)
-            size = _dv_blob_write(
-                self.table_dir, rel_path, version, sorted(set(positions))
-            )
-            return {
-                "storageType": "u",
-                "pathOrInlineDv": _b85_encode(uid.bytes),
-                "offset": 1,
-                "sizeInBytes": size,
-                "cardinality": len(set(positions)),
+                "cardinality": len(positions),
             }
         raise NotImplementedError(f"DV storage type {storage!r}")
 
@@ -1850,16 +1894,13 @@ class DeltaLog:
         )
         return desc
 
-    #: driver-tier materialization bound for the DML write faces'
-    #: matched (file, position) pairs — the WRITE-side analogue of the
-    #: read path's decode tiers.  At or under it, positions collect and
-    #: the bitmaps build driver-side (cheapest at fixture scale: no
-    #: extra Spark job).  ABOVE it (round 12) the faces switch to the
-    #: EXECUTOR tier: the matched frame stays distributed, per-file
-    #: Roaring bitmaps serialize and write from the workers
-    #: (:meth:`_dv_build_distributed`), and the driver handles one
-    #: descriptor row per affected file — metadata scale at any
-    #: predicate selectivity.
+    #: the DML write faces' one size decision (:meth:`_fresh_positions`):
+    #: up to this many matched (file, position) pairs collect into a
+    #: driver list — deletion vectors build on the driver and the later
+    #: joins take a broadcast local frame, no extra Spark job; above it
+    #: the pairs stay a distributed frame and each file's vector builds
+    #: and writes on the executors, so the driver holds one row per
+    #: affected file.  Every step after the decision is shared.
     DELETE_WHERE_ROW_LIMIT = 1_000_000
 
     #: separate driver cap for read_changes' DV position diffs — the
@@ -1990,7 +2031,7 @@ class DeltaLog:
             for n in names
         ]
 
-    def _matched_per_file(
+    def _match_pairs(
         self,
         spark: SparkSession,
         snap: Snapshot,
@@ -2002,18 +2043,8 @@ class DeltaLog:
         """Shared DML matcher: scan ONLY the predicate columns with
         per-file row lineage (pinned physical schema, so pre-DDL files
         null-fill — NULL fails every range predicate, SQL semantics)
-        and return ``(phys, per_file, frame)``:
-
-        - ``(phys, {rel_path: {positions}}, None)`` when the matched
-          set fits :data:`DELETE_WHERE_ROW_LIMIT` — the driver tier,
-          cheapest at fixture scale;
-        - ``(phys, None, matched_df)`` when it does NOT — the EXECUTOR
-          tier (round 12): the ``(_fp, _pos)`` frame stays distributed
-          and the caller builds the per-file deletion vectors with
-          :meth:`_dv_build_distributed`, never materializing positions
-          on the driver;
-        - ``(phys, None, None)`` when the table is empty or nothing
-          matches.
+        and return ``(phys, pairs)``: the lazy ``(_fp, _pos)`` frame of
+        matched rows, or None when the table has no files.
 
         ``column_filter`` is the ``{col: (lo, hi)}`` range form;
         ``in_filter`` is an optional ``(col, values)`` membership
@@ -2022,9 +2053,6 @@ class DeltaLog:
         one-column DataFrame semi-joined against the scan when the key
         set itself is too large for an IN list.  Guards:
         unknown/partition predicate columns."""
-
-        from hadoop_sync_spark.io import decode_file_uri
-
         if not column_filter and in_filter is None and in_frame is None:
             raise ValueError(f"{face} needs a predicate")
         pred_cols = dict(column_filter)
@@ -2045,12 +2073,12 @@ class DeltaLog:
                 )
         sel = list(snap.files)
         if not sel:
-            return phys, None, None
+            return phys, None
         if snap.partition_columns:
             # partitionValues keys are PHYSICAL names under column
             # mapping (the spec; tolerate logical for lax writers) —
             # comparing logical names alone would falsely refuse every
-            # conforming mapped partitioned table (round-11 review)
+            # conforming mapped partitioned table
             logical = set(snap.partition_columns)
             physical = {phys.get(c, c) for c in snap.partition_columns}
             if not all(
@@ -2089,138 +2117,183 @@ class DeltaLog:
             scan = scan.join(
                 keys_df.toDF(kc), on=kc, how="leftsemi"
             )
-        # limit(cap+1) so the CAP bounds what the driver materializes —
-        # a collect-then-check would have built the whole oversized
-        # list before deciding the tier (round-11 review)
-        cap = self.DELETE_WHERE_ROW_LIMIT
-        pairs = scan.select("_fp", "_pos")
-        matched = pairs.limit(cap + 1).collect()
-        if not matched:
-            return phys, None, None
-        if len(matched) > cap:
-            # EXECUTOR tier (round 12): hand the distributed frame back
-            # — the caller builds per-file bitmaps executor-side
-            # instead of refusing (the round-11 behavior)
-            return phys, None, pairs
+        return phys, scan.select("_fp", "_pos")
 
-        _decode = decode_file_uri
-        rel_of = {
-            os.path.abspath(os.path.join(self.table_dir, p)): p
-            for p in sel
-        }
-        per_file: dict[str, set[int]] = {}
-        for r in matched:
-            rel = rel_of.get(_decode(r._fp))
-            if rel is None:
-                raise ValueError(
-                    f"scanned file missing from the snapshot map "
-                    f"(URI normalization mismatch): {r._fp}"
-                )
-            per_file.setdefault(rel, set()).add(r._pos)
-        return phys, per_file, None
-
-    def _dv_build_distributed(
+    @contextlib.contextmanager
+    def _fresh_positions(
         self,
+        spark: SparkSession,
         snap: Snapshot,
-        frame: DataFrame,
+        pairs: DataFrame | None,
         version: int,
         storage: str,
         face: str,
-    ) -> list:
-        """EXECUTOR-side deletion-vector build (round 12 — the scale
-        path the round-11 cap refusal named): group the matched
-        ``(_fp, _pos)`` frame by file and, per file, decode the
-        existing DV, union, serialize the portable Roaring payload and
-        write the framed ``.bin`` FROM THE EXECUTOR (shared storage on
-        a real cluster; the uuid is deterministic per (file, version)
-        so the committing driver re-derives the descriptor path without
-        shipping payloads back).  The driver materializes ONE row per
-        affected file — metadata scale, same as the log commit itself —
-        so a predicate matching 100M rows costs the driver nothing
-        beyond the actions it must write anyway.  Returns the non-noop
-        rows ``(rel, fresh, cardinality, size)`` sorted by path.
-        Files whose matches are all already deleted write nothing.
-        Only ``u`` storage: an inline (``i``) vector of over-cap size
-        inside a JSON log line is pathological, so it refuses."""
-        if storage != "u":
-            raise NotImplementedError(
-                f"{face}: matched set exceeds the driver tier and "
-                f"storage {storage!r} was requested — over-cap "
-                "deletion vectors are file-backed ('u') only"
-            )
+    ):
+        """The DML faces' one size decision: materialize the matched
+        ``pairs``, subtract the positions existing deletion vectors
+        already delete, and write each affected file's new vector
+        (existing ∪ fresh) where the positions live.  Yields a
+        :class:`_FreshPositions`, the one shape every later step
+        consumes.
+
+        - At most :data:`DELETE_WHERE_ROW_LIMIT` matches collect into a
+          driver list (the ``limit(cap + 1)`` bounds what the driver
+          takes before deciding); vectors build on the driver and the
+          fresh pairs become a broadcast :func:`io.local_frame`.
+        - Above it the pairs stay distributed: existing vectors
+          anti-join away (:meth:`_fresh_frame`), the fresh frame
+          persists for the later joins, and each file's vector
+          serializes and writes on the executors — the driver takes
+          one row per affected file.  Inline (``i``) storage refuses
+          here, before any file is written: a vector of that size has
+          no place inside a JSON log line.
+
+        The context owns the persisted frame."""
+        if storage not in ("u", "i"):
+            raise NotImplementedError(f"DV storage type {storage!r}")
         from hadoop_sync_spark.io import decode_file_uri
 
+        cap = self.DELETE_WHERE_ROW_LIMIT
+        matched = [] if pairs is None else pairs.limit(cap + 1).collect()
+        abs_of = {
+            rel: os.path.abspath(os.path.join(self.table_dir, rel))
+            for rel in snap.live
+        }
+        persisted = None
+        try:
+            if len(matched) <= cap:
+                rel_of = {a: rel for rel, a in abs_of.items()}
+                per_file: dict[str, set[int]] = {}
+                for r in matched:
+                    rel = rel_of.get(decode_file_uri(r._fp))
+                    if rel is None:
+                        raise ValueError(
+                            f"scanned file missing from the snapshot map "
+                            f"(URI normalization mismatch): {r._fp}"
+                        )
+                    per_file.setdefault(rel, set()).add(r._pos)
+                dvs, rows = [], []
+                for rel in sorted(per_file):
+                    desc = snap.live[rel].get("deletionVector")
+                    existing = set(self._dv_positions(desc)) if desc else set()
+                    fresh = per_file[rel] - existing
+                    if not fresh:
+                        continue  # every match was already deleted
+                    dvs.append((rel, len(fresh), self._dv_descriptor(
+                        rel, existing | fresh, version, storage
+                    )))
+                    rows += [(abs_of[rel], p, rel) for p in sorted(fresh)]
+                fresh_positions = _FreshPositions(
+                    dvs,
+                    functools.cache(lambda: F.broadcast(local_frame(
+                        spark, rows, "_afp string, _pos long, _rel string"
+                    ))),
+                )
+            else:
+                if storage != "u":
+                    raise NotImplementedError(
+                        f"{face}: matched set exceeds the driver tier and "
+                        f"storage {storage!r} was requested — over-cap "
+                        "deletion vectors are file-backed ('u') only"
+                    )
+                persisted = self._fresh_frame(spark, snap, pairs).persist()
+                fresh_positions = _FreshPositions(
+                    self._dv_build_distributed(snap, persisted, version),
+                    lambda: persisted,
+                )
+            yield fresh_positions
+        finally:
+            if persisted is not None:
+                persisted.unpersist()
+
+    def _dv_build_distributed(
+        self, snap: Snapshot, fresh: DataFrame, version: int
+    ) -> list:
+        """Executor-side deletion-vector build over the distributed
+        fresh ``(_fp, _pos, _rel)`` frame: per file, decode the existing
+        vector, union, serialize the portable Roaring payload and write
+        the framed ``.bin`` from the executor (shared storage on a real
+        cluster; the uuid is deterministic per (file, version), so the
+        committing driver re-derives the descriptor path without
+        shipping payloads back).  Returns ``[(rel, fresh_rows,
+        descriptor)]`` sorted by path."""
         table_dir = self.table_dir
-        live_info = {
-            os.path.abspath(os.path.join(table_dir, rel)): (
-                rel,
-                add.get("deletionVector"),
-            )
+        dv_of = {
+            rel: add.get("deletionVector")
             for rel, add in snap.live.items()
         }
 
         def build(pdf):
             import pandas as pd
 
-            key = os.path.abspath(decode_file_uri(pdf["_fp"].iloc[0]))
-            info = live_info.get(key)
-            if info is None:
+            rel = pdf["_rel"].iloc[0]
+            if rel is None:
                 raise ValueError(
                     f"scanned file missing from the snapshot map "
-                    f"(URI normalization mismatch): {key}"
+                    f"(URI normalization mismatch): {pdf['_fp'].iloc[0]}"
                 )
-            rel, desc = info
-            existing: set[int] = (
+            desc = dv_of[rel]
+            existing = (
                 set(_resolve_dv_positions(table_dir, desc))
-                if desc
-                else set()
+                if desc else set()
             )
-            poss = {int(p) for p in pdf["_pos"]}
-            fresh = len(poss - existing)
-            if fresh == 0:
-                return pd.DataFrame(
-                    {"rel": [], "fresh": [], "cardinality": [],
-                     "size": []}
-                )
-            allpos = sorted(existing | poss)
+            fresh = {int(p) for p in pdf["_pos"]} - existing
+            allpos = sorted(existing | fresh)
             size = _dv_blob_write(table_dir, rel, version, allpos)
             return pd.DataFrame(
-                {"rel": [rel], "fresh": [fresh],
+                {"rel": [rel], "fresh": [len(fresh)],
                  "cardinality": [len(allpos)], "size": [size]}
             )
 
         rows = (
-            frame.groupBy("_fp")
+            fresh.groupBy("_rel")
             .applyInPandas(
                 build,
                 "rel string, fresh long, cardinality long, size long",
             )
             .collect()
         )
-        return sorted(rows, key=lambda r: r.rel)
+        return [
+            (r.rel, r.fresh,
+             _dv_u_descriptor(r.rel, version, r.size, r.cardinality))
+            for r in sorted(rows, key=lambda r: r.rel)
+        ]
 
-    def _dv_actions_for(self, snap: Snapshot, rows: list,
-                        version: int) -> list[dict]:
-        """remove/add action pairs for :meth:`_dv_build_distributed`'s
-        result rows — the descriptor re-derives the deterministic
-        executor-written path from (rel, version)."""
-        actions: list[dict] = []
-        for r in rows:
-            prev = dict(snap.live[r.rel])
-            prev["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": _b85_encode(
-                    _dv_uuid(r.rel, version).bytes
-                ),
-                "offset": 1,
-                "sizeInBytes": r.size,
-                "cardinality": r.cardinality,
-            }
-            actions.append(
-                {"remove": {"path": r.rel, "dataChange": True}}
+    def _commit_dml(
+        self,
+        snap: Snapshot,
+        version: int,
+        operation: str,
+        now_ms: int,
+        fresh: "_FreshPositions",
+        adds: list[dict],
+        cdc: list[dict],
+    ) -> None:
+        """ONE commit for a DML face: commitInfo, the protocol upgrade,
+        one remove/add pair per new deletion vector, the face's new
+        files and its change-data files.  The upgrade rides only a
+        commit that writes a vector — an all-new-keys merge stays
+        readable by engines without the deletionVectors feature."""
+        actions: list[dict] = [
+            {"commitInfo": {"timestamp": now_ms, "operation": operation}}
+        ]
+        if fresh.dvs:
+            proto = _protocol_with_feature(
+                snap.protocol
+                or {"minReaderVersion": 1, "minWriterVersion": 2},
+                "deletionVectors",
             )
-            actions.append({"add": prev})
-        return actions
+            if self._cdf_enabled(snap):
+                proto = _protocol_with_writer_feature(
+                    proto, "changeDataFeed"
+                )
+            actions.append({"protocol": proto})
+        for rel, _, desc in fresh.dvs:
+            add = dict(snap.live[rel])
+            add["deletionVector"] = desc
+            actions.append({"remove": {"path": rel, "dataChange": True}})
+            actions.append({"add": add})
+        self.commit(version, actions + adds + cdc)
 
     def delete_where(
         self,
@@ -2239,146 +2312,38 @@ class DeltaLog:
         across columns, and reaches the parquet scan as a pushed
         filter.  Positions an existing DV already covers are subtracted
         before counting, so ``rows_deleted`` counts NEW deletions only
-        and a no-op predicate commits nothing.  Supports unmapped and
-        column-mapped tables: name-mode predicates resolve through the
-        metadata physicalName, id-mode (round 13) per-footer like the
-        read path.
-        Matched rows above :data:`DELETE_WHERE_ROW_LIMIT` switch to the
-        EXECUTOR tier (round 12): the matched frame stays distributed,
-        each affected file's bitmap unions, serializes and writes from
-        the executors (:meth:`_dv_build_distributed`), and the driver
-        handles only per-file descriptor rows — so a 100 TB-scale
-        purge predicate commits instead of refusing."""
+        and a no-op predicate commits nothing.  A change-data-feed
+        table also gets the deleted rows as ``delete`` change data.
+        Supports unmapped and column-mapped tables: name-mode
+        predicates resolve through the metadata physicalName, id-mode
+        per-footer like the read path.  How the matched positions
+        materialize is decided once by their count
+        (:meth:`_fresh_positions`); every later step is shared."""
         snap = self.snapshot()
-        phys, per_file, frame = self._matched_per_file(
+        phys, pairs = self._match_pairs(
             spark, snap, column_filter, "delete_where"
         )
-        noop = {"version": None, "files": 0, "rows_deleted": 0}
-        if per_file is None and frame is None:
-            return noop
         version = self.latest_version() + 1
-        cdf = self._cdf_enabled(snap)
-        proto = _protocol_with_feature(
-            snap.protocol
-            or {"minReaderVersion": 1, "minWriterVersion": 2},
-            "deletionVectors",
-        )
-        if cdf:
-            proto = _protocol_with_writer_feature(
-                proto, "changeDataFeed"
-            )
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "DELETE"}},
-            {"protocol": proto},
-        ]
-        if frame is not None:
-            fresh_df = None
-            if cdf:
-                # CDC needs the FRESH set as a frame (matched minus
-                # already-deleted) so the capture never re-reports
-                # rows an earlier delete already covered
-                fresh_df = self._fresh_frame(spark, snap, frame)
-                fresh_df.persist()
-                frame = fresh_df.select("_fp", "_pos")
-            try:
-                rows = self._dv_build_distributed(
-                    snap, frame, version, storage, "delete_where"
-                )
-                if not rows:
-                    return noop
-                actions.extend(
-                    self._dv_actions_for(snap, rows, version)
-                )
-                if cdf:
-                    groups = self._partition_groups(
-                        snap, [r.rel for r in rows]
+        with self._fresh_positions(
+            spark, snap, pairs, version, storage, "delete_where"
+        ) as fresh:
+            if not fresh.dvs:
+                return {"version": None, "files": 0, "rows_deleted": 0}
+            cdc: list[dict] = []
+            if self._cdf_enabled(snap):
+                cdc = self._write_cdc_files(
+                    spark, version, self._cdc_capture_matched(
+                        spark, snap, phys, fresh, "delete"
                     )
-
-                    def select_pairs(spark_, rels):
-                        abs_paths = [
-                            os.path.abspath(
-                                os.path.join(self.table_dir, r)
-                            )
-                            for r in rels
-                        ]
-                        return fresh_df.where(
-                            F.col("_afp").isin(abs_paths)
-                        ).select("_afp", "_pos")
-
-                    actions.extend(self._write_cdc_files(
-                        spark, version,
-                        self._cdc_capture_matched(
-                            spark, snap, phys, groups, select_pairs,
-                            "delete",
-                        ),
-                    ))
-                self.commit(version, actions)
-                return {
-                    "version": version,
-                    "files": len(rows),
-                    "rows_deleted": sum(r.fresh for r in rows),
-                }
-            finally:
-                if fresh_df is not None:
-                    fresh_df.unpersist()
-        new_rows = 0
-        fresh_sets: dict[str, set[int]] = {}
-        for rel in sorted(per_file):
-            prev = dict(snap.live[rel])
-            existing: set[int] = set()
-            if prev.get("deletionVector"):
-                existing = set(self._dv_positions(prev["deletionVector"]))
-            fresh = per_file[rel] - existing
-            if not fresh:
-                continue  # every match was already deleted
-            fresh_sets[rel] = fresh
-            new_rows += len(fresh)
-            desc = self._dv_descriptor(
-                rel, sorted(existing | per_file[rel]), version, storage
+                )
+            self._commit_dml(
+                snap, version, "DELETE", now_ms, fresh, [], cdc
             )
-            prev["deletionVector"] = desc
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        if new_rows == 0:
-            return {"version": None, "files": 0, "rows_deleted": 0}
-        n_dv = (len(actions) - 2) // 2
-        if cdf:
-            groups = self._partition_groups(snap, fresh_sets)
-
-            def select_pairs(spark_, rels):
-                sel_rows = [
-                    (os.path.abspath(
-                        os.path.join(self.table_dir, r)), p)
-                    for r in rels
-                    for p in sorted(fresh_sets[r])
-                ]
-                return F.broadcast(local_frame(
-                    spark_, sel_rows, "_afp string, _pos long"))
-
-            actions.extend(self._write_cdc_files(
-                spark, version,
-                self._cdc_capture_matched(
-                    spark, snap, phys, groups, select_pairs, "delete"
-                ),
-            ))
-        self.commit(version, actions)
-        return {
-            "version": version,
-            "files": n_dv,
-            "rows_deleted": new_rows,
-        }
-
-    @staticmethod
-    def _decoded_fp():
-        """Spark-side ``_fp`` (file URI) -> absolute-path column, the
-        executor twin of :func:`hadoop_sync_spark.io.decode_file_uri`."""
-        return F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                r"\+",
-                "%2B",
-            )
-        )
+            return {
+                "version": version,
+                "files": len(fresh.dvs),
+                "rows_deleted": fresh.rows,
+            }
 
     @staticmethod
     def _partition_groups(snap: Snapshot, rels) -> dict[tuple, list]:
@@ -2396,9 +2361,11 @@ class DeltaLog:
         (``_fp``, ``_pos``, ``_afp``, ``_rel``): positions the
         snapshot's existing deletion vectors already delete are
         anti-joined away through the read path's
-        :meth:`_dv_delete_frame` (its three decode regimes included).
-        Shared by the executor tiers of update_where and the
-        CDC-enabled delete_where."""
+        :meth:`_dv_delete_frame` (its decode regimes included).  A
+        scanned file missing from the snapshot keeps a null ``_rel``,
+        which the vector build refuses."""
+        from hadoop_sync_spark.io import decode_file_uri_col
+
         rel_map = local_frame(
             spark,
             [
@@ -2408,8 +2375,8 @@ class DeltaLog:
             ],
             "_afp string, _rel string",
         )
-        m = frame.withColumn("_afp", self._decoded_fp()).join(
-            F.broadcast(rel_map), "_afp"
+        m = frame.withColumn("_afp", decode_file_uri_col("_fp")).join(
+            F.broadcast(rel_map), "_afp", "left"
         )
         dv_map = {
             rel: add["deletionVector"]
@@ -2444,6 +2411,8 @@ class DeltaLog:
         matched-row materialization the UPDATE rewrite and the CDC
         captures build on.  Returns ``(joined_df, data_fields)`` with
         LOGICAL column names."""
+        from hadoop_sync_spark.io import decode_file_uri_col
+
         schema = snap.schema()
         part_cols = list(snap.partition_columns)
         data_fields = [f for f in schema.fields
@@ -2460,7 +2429,7 @@ class DeltaLog:
             *[F.col(phys[f.name]).alias(f.name)
               for f in data_fields],
         )
-        joined = scan.withColumn("_afp", self._decoded_fp()).join(
+        joined = scan.withColumn("_afp", decode_file_uri_col("_fp")).join(
             sel, ["_afp", "_pos"], "inner"
         )
         return joined, data_fields
@@ -2493,16 +2462,18 @@ class DeltaLog:
         return actions
 
     def _cdc_capture_matched(
-        self, spark, snap, phys, groups, select_pairs, change_type
+        self, spark, snap, phys, fresh: "_FreshPositions", change_type
     ) -> list:
         """CDC pieces for matched EXISTING rows (delete preimages /
         update preimages / merge preimages): per partition tuple, the
-        matched rows under physical names tagged ``change_type``."""
+        fresh matched rows under physical names tagged
+        ``change_type``."""
         pieces = []
+        groups = self._partition_groups(snap, fresh.rels)
         for pv_t in sorted(groups):
             rels = groups[pv_t]
             joined, data_fields = self._join_matched(
-                spark, snap, phys, rels, select_pairs(spark, rels)
+                spark, snap, phys, rels, fresh.pairs(rels)
             )
             pieces.append((dict(pv_t), joined.select(
                 *self._phys_cols(snap, phys,
@@ -2518,17 +2489,14 @@ class DeltaLog:
         phys: dict,
         set_values: dict,
         version: int,
-        groups: dict,
-        select_pairs,
+        fresh: "_FreshPositions",
     ) -> tuple[list[dict], list]:
-        """Shared UPDATE rewrite (both tiers): per affected partition
-        tuple, scan the affected files, inner-join the matched fresh
-        ``(_afp, _pos)`` pairs from ``select_pairs(spark, rels)`` (a
-        tiny broadcast list on the driver tier, a filtered distributed
-        frame on the executor tier), apply the SET expressions and
-        write ONE updated-copy file.  Returns ``(add_actions,
-        cdc_pieces)`` — the pieces (pre+postimage rows per tuple) are
-        non-empty only when the table enables the change data feed."""
+        """The UPDATE rewrite: per affected partition tuple, scan the
+        affected files, inner-join their fresh ``(_afp, _pos)`` pairs,
+        apply the SET expressions and write ONE updated-copy file.
+        Returns ``(add_actions, cdc_pieces)`` — the pieces (pre+
+        postimage rows per tuple) are non-empty only when the table
+        enables the change data feed."""
         from pyspark.sql import Column
 
         from hadoop_sync_spark.io import write_single_parquet
@@ -2537,10 +2505,11 @@ class DeltaLog:
         cdf = self._cdf_enabled(snap)
         adds: list[dict] = []
         cdc_pieces: list = []
+        groups = self._partition_groups(snap, fresh.rels)
         for gi, pv_t in enumerate(sorted(groups)):
             rels = groups[pv_t]
             upd, data_fields = self._join_matched(
-                spark, snap, phys, rels, select_pairs(spark, rels)
+                spark, snap, phys, rels, fresh.pairs(rels)
             )
             # ONE select: every SET expression evaluates against the
             # ORIGINAL row (simultaneous-assignment UPDATE semantics —
@@ -2580,79 +2549,6 @@ class DeltaLog:
                 )
         return adds, cdc_pieces
 
-    def _update_where_distributed(
-        self,
-        spark: SparkSession,
-        snap: Snapshot,
-        frame: DataFrame,
-        set_values: dict,
-        now_ms: int,
-        storage: str,
-        phys: dict,
-    ) -> dict:
-        """EXECUTOR tier of :meth:`update_where` (round 12): the
-        matched ``(_fp, _pos)`` frame stays distributed — existing-DV
-        subtraction is an anti-join against the read path's
-        :meth:`_dv_delete_frame` (its three decode regimes included),
-        the per-file bitmaps build and write executor-side, and the
-        updated copies join the distributed fresh frame.  The driver
-        touches one row per affected file."""
-        noop = {"version": None, "files": 0, "new_files": 0,
-                "rows_updated": 0}
-        version = self.latest_version() + 1
-        fresh_df = self._fresh_frame(spark, snap, frame).persist()
-        try:
-            rows = self._dv_build_distributed(
-                snap, fresh_df.select("_fp", "_pos"), version, storage,
-                "update_where",
-            )
-            if not rows:
-                return noop
-            n_updated = sum(r.fresh for r in rows)
-            groups = self._partition_groups(snap, [r.rel for r in rows])
-
-            def select_pairs(spark_, rels):
-                abs_paths = [
-                    os.path.abspath(os.path.join(self.table_dir, r))
-                    for r in rels
-                ]
-                return fresh_df.where(
-                    F.col("_afp").isin(abs_paths)
-                ).select("_afp", "_pos")
-
-            adds, cdc_pieces = self._updated_copies(
-                spark, snap, phys, set_values, version, groups,
-                select_pairs,
-            )
-            proto = _protocol_with_feature(
-                snap.protocol
-                or {"minReaderVersion": 1, "minWriterVersion": 2},
-                "deletionVectors",
-            )
-            if cdc_pieces:
-                proto = _protocol_with_writer_feature(
-                    proto, "changeDataFeed"
-                )
-            actions: list[dict] = [
-                {"commitInfo": {"timestamp": now_ms,
-                                "operation": "UPDATE"}},
-                {"protocol": proto},
-            ]
-            actions.extend(self._dv_actions_for(snap, rows, version))
-            actions.extend(adds)
-            actions.extend(
-                self._write_cdc_files(spark, version, cdc_pieces)
-            )
-            self.commit(version, actions)
-            return {
-                "version": version,
-                "files": len(rows),
-                "new_files": len(adds),
-                "rows_updated": n_updated,
-            }
-        finally:
-            fresh_df.unpersist()
-
     def update_where(
         self,
         spark: SparkSession,
@@ -2662,10 +2558,10 @@ class DeltaLog:
         storage: str = "u",
     ) -> dict:
         """Row-level ``UPDATE t SET ... WHERE ...`` the merge-on-read
-        way (round 11): the matched rows' positions union into each
-        affected file's deletion vector AND their updated copies append
-        as new data files — one file per affected partition tuple, all
-        in ONE commit, exactly production Delta's DV-backed UPDATE.
+        way: the matched rows' positions union into each affected
+        file's deletion vector AND their updated copies append as new
+        data files — one file per affected partition tuple, all in ONE
+        commit, exactly production Delta's DV-backed UPDATE.
         ``column_filter`` is the ``{col: (lo, hi)}`` range form;
         ``set_values`` maps column -> literal or pyspark Column
         expression (evaluated against the matched rows' LOGICAL
@@ -2673,19 +2569,17 @@ class DeltaLog:
         DV already deletes are excluded — updating them would resurrect
         deleted data.  Partition columns refuse in both the predicate
         and the SET list (a partition move is a rewrite, not an
-        update); id-mode mapping resolves per-footer (round 13) and
-        the rewritten copies stamp footer field ids.
-        Matches above :data:`DELETE_WHERE_ROW_LIMIT` switch to the
-        EXECUTOR tier (round 12): positions stay distributed end to
-        end — DV bitmaps build executor-side and the updated copies
-        join against the distributed matched frame instead of a
-        driver-built broadcast list."""
+        update); id-mode mapping resolves per-footer and the rewritten
+        copies stamp footer field ids.  A change-data-feed table also
+        gets pre- and postimages.  How the matched positions
+        materialize is decided once by their count
+        (:meth:`_fresh_positions`); every later step is shared."""
         if not set_values:
             raise ValueError("update_where needs at least one SET")
         snap = self.snapshot()
         schema = snap.schema()
-        # cheap guards BEFORE the scan (round-11 review: a typo'd SET
-        # column should not cost a full predicate scan first)
+        # cheap guards BEFORE the scan: a typo'd SET column should not
+        # cost a full predicate scan first
         names = {f.name for f in schema.fields} if schema else set()
         for c in set_values:
             if c not in names:
@@ -2695,78 +2589,29 @@ class DeltaLog:
                     f"update_where SET on partition column {c!r}: a "
                     "partition move is a rewrite, not an update"
                 )
-        phys, per_file, frame = self._matched_per_file(
+        phys, pairs = self._match_pairs(
             spark, snap, column_filter, "update_where"
         )
-        noop = {"version": None, "files": 0, "new_files": 0,
-                "rows_updated": 0}
-        if per_file is None and frame is None:
-            return noop
-        if frame is not None:
-            return self._update_where_distributed(
-                spark, snap, frame, set_values, now_ms, storage, phys
-            )
-        fresh: dict[str, set[int]] = {}
-        existing: dict[str, set[int]] = {}
-        for rel, poss in per_file.items():
-            prev = snap.live[rel]
-            ex: set[int] = set()
-            if prev.get("deletionVector"):
-                ex = set(self._dv_positions(prev["deletionVector"]))
-            fr = poss - ex
-            if fr:
-                fresh[rel] = fr
-                existing[rel] = ex
-        if not fresh:
-            return noop
-        n_updated = sum(len(v) for v in fresh.values())
         version = self.latest_version() + 1
-        groups = self._partition_groups(snap, fresh)
-
-        def select_pairs(spark_, rels):
-            sel_rows = [
-                (os.path.abspath(os.path.join(self.table_dir, r)), p)
-                for r in rels
-                for p in sorted(fresh[r])
-            ]
-            return F.broadcast(local_frame(
-                spark_, sel_rows, "_afp string, _pos long"))
-
-        adds, cdc_pieces = self._updated_copies(
-            spark, snap, phys, set_values, version, groups, select_pairs
-        )
-        proto = _protocol_with_feature(
-            snap.protocol
-            or {"minReaderVersion": 1, "minWriterVersion": 2},
-            "deletionVectors",
-        )
-        if cdc_pieces:
-            proto = _protocol_with_writer_feature(
-                proto, "changeDataFeed"
+        with self._fresh_positions(
+            spark, snap, pairs, version, storage, "update_where"
+        ) as fresh:
+            if not fresh.dvs:
+                return {"version": None, "files": 0, "new_files": 0,
+                        "rows_updated": 0}
+            adds, cdc_pieces = self._updated_copies(
+                spark, snap, phys, set_values, version, fresh
             )
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "UPDATE"}},
-            {"protocol": proto},
-        ]
-        for rel in sorted(fresh):
-            prev = dict(snap.live[rel])
-            desc = self._dv_descriptor(
-                rel, sorted(existing[rel] | fresh[rel]), version, storage
+            self._commit_dml(
+                snap, version, "UPDATE", now_ms, fresh, adds,
+                self._write_cdc_files(spark, version, cdc_pieces),
             )
-            prev["deletionVector"] = desc
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        actions.extend(adds)
-        actions.extend(
-            self._write_cdc_files(spark, version, cdc_pieces)
-        )
-        self.commit(version, actions)
-        return {
-            "version": version,
-            "files": len(fresh),
-            "new_files": len(adds),
-            "rows_updated": n_updated,
-        }
+            return {
+                "version": version,
+                "files": len(fresh.dvs),
+                "new_files": len(adds),
+                "rows_updated": fresh.rows,
+            }
 
     def merge_upsert(
         self,
@@ -2776,35 +2621,35 @@ class DeltaLog:
         now_ms: int = 0,
         storage: str = "u",
     ) -> dict:
-        """MERGE/upsert (round 11; the Delta twin of
+        """MERGE/upsert (the Delta twin of
         :meth:`IcebergTable.merge_upsert`): matched target rows DV out
         of their files and the full source batch appends as one new
         file, ONE commit.  Delta has no equality deletes, so the match
         needs a target scan — but only of the KEY column (column-pruned,
         with the distinct source keys pushed as an IN filter, so
         row-group stats prune on the scan side), never the full rows.
-        Work is O(target-key-scan + source).  Either side outgrowing
-        :data:`DELETE_WHERE_ROW_LIMIT` switches to the EXECUTOR tier
-        (round 12): an over-cap key set semi-joins the scan instead of
-        materializing an IN list, and over-cap matches build their DV
-        bitmaps executor-side — the driver handles per-file descriptor
-        rows only.  ``source`` must carry exactly the table's logical
-        columns (INCLUDING partition columns — on a partitioned table
-        the source rows decide their own tuples); unmapped and
-        name-mode tables supported.  Partitioned tables (round 12)
-        split the source per partition tuple and land one upsert file
-        per tuple IN THE SAME single commit — the upsert key may not be
-        a partition column (its values never reach the data files, so
-        the key scan could not match), and partition column types are
-        limited to the string-round-trippable scalars
-        (long/int/string/boolean, the types the read path's
-        ``CAST(partitionValue AS type)`` inverts exactly)."""
+        Work is O(target-key-scan + source).  A key set over
+        :data:`DELETE_WHERE_ROW_LIMIT` semi-joins the scan instead of
+        materializing an IN list; the matched positions then take the
+        DML faces' one size decision (:meth:`_fresh_positions`).
+        ``source`` must carry exactly the table's logical columns
+        (INCLUDING partition columns — on a partitioned table the
+        source rows decide their own tuples); unmapped and name-mode
+        tables supported.  Partitioned tables split the source per
+        partition tuple and land one upsert file per tuple IN THE SAME
+        single commit — the upsert key may not be a partition column
+        (its values never reach the data files, so the key scan could
+        not match), and partition column types are limited to the
+        string-round-trippable scalars (long/int/string/boolean, the
+        types the read path's ``CAST(partitionValue AS type)`` inverts
+        exactly).  A change-data-feed table also gets the matched
+        preimages and the source rows as ``update_postimage`` or
+        ``insert``."""
         snap = self.snapshot()
         schema = snap.schema()
         if schema is None:
             raise ValueError("no metaData action in the log")
         part_cols = list(snap.partition_columns)
-        phys = self._resolve_physical(snap, "merge_upsert")
         names = [f.name for f in schema.fields]
         if key_col not in names:
             raise ValueError(f"no such column {key_col!r}")
@@ -2842,51 +2687,41 @@ class DeltaLog:
             return {"version": None, "files": 0, "rows_matched": 0,
                     "rows_inserted": 0}
         over_cap_keys = len(keys) > cap
-        if over_cap_keys:
-            # EXECUTOR tier for the key set: never an IN list — the
-            # null check becomes an aggregate and the match a semi-join
-            if keys_df.where(
-                F.col(key_col).isNull()
-            ).limit(1).count():
-                raise ValueError(
-                    "merge_upsert source contains NULL keys — upsert "
-                    "keys must be non-null"
-                )
-        elif any(k is None for k in keys):
-            # `=` does not match NULL in SQL MERGE (and Iceberg's
-            # eqNullSafe WOULD) — a null-keyed upsert is ambiguous
-            # across the format twins, so both refuse (round-11 review)
+        # `=` does not match NULL in SQL MERGE (and Iceberg's eqNullSafe
+        # WOULD) — a null-keyed upsert is ambiguous across the format
+        # twins, so both refuse; an over-cap key set checks by aggregate
+        if (
+            keys_df.where(F.col(key_col).isNull()).limit(1).count()
+            if over_cap_keys
+            else any(k is None for k in keys)
+        ):
             raise ValueError(
                 "merge_upsert source contains NULL keys — upsert keys "
                 "must be non-null"
             )
         version = self.latest_version() + 1
-        per_file: dict[str, set[int]] = {}
-        frame = None
         # IN-list pushdown only for SMALL key sets (independent of the
         # 1M position cap): Catalyst planning of a large literal IN
         # list dominates the scan well before the cap — measured 4x at
         # 10k keys (see MERGE_IN_PUSHDOWN_KEY_LIMIT)
         use_in = (not over_cap_keys
                   and len(keys) <= self.MERGE_IN_PUSHDOWN_KEY_LIMIT)
-        if snap.files:
-            _, per_file, frame = self._matched_per_file(
-                spark, snap, {}, "merge_upsert",
-                in_filter=((key_col, keys) if use_in else None),
-                in_frame=(None if use_in else (key_col, keys_df)),
-            )
-            per_file = per_file or {}
-        # the new file(s): full source batch under physical names —
-        # one file per affected partition tuple on a partitioned table
-        # (tuples are metadata scale: they become one add action each
-        # in this same commit regardless), a single file otherwise
+        phys, pairs = self._match_pairs(
+            spark, snap, {}, "merge_upsert",
+            in_filter=((key_col, keys) if use_in else None),
+            in_frame=(None if use_in else (key_col, keys_df)),
+        )
         from hadoop_sync_spark.io import write_single_parquet
+
+        import pyarrow.parquet as _pq
 
         cast_src = source.select(*[
             F.col(n).cast(schema[n].dataType) for n in names
         ])
         data_names = [n for n in names if n not in part_cols]
-
+        # one (partitionValues, row filter, file suffix) per tuple of a
+        # partitioned table — metadata scale: each becomes one add
+        # action in this same commit — or one table-wide group
         def _pv_str(v):
             if v is None:
                 return None
@@ -2894,193 +2729,78 @@ class DeltaLog:
                 return "true" if v else "false"
             return str(v)
 
-        new_adds: list[dict] = []
-        rows_inserted = 0
-        import pyarrow.parquet as _pq
-
+        groups: list[tuple[dict, object, str]] = [({}, None, "")]
         if part_cols:
-            tuples = cast_src.select(*part_cols).distinct().collect()
-            for gi, t in enumerate(sorted(
-                tuples, key=lambda r: tuple(
-                    (v is None, v) for v in r
-                )
-            )):
+            tuples = sorted(
+                cast_src.select(*part_cols).distinct().collect(),
+                key=lambda r: tuple((v is None, v) for v in r),
+            )
+            groups = []
+            for gi, t in enumerate(tuples):
                 cond = None
                 for c in part_cols:
                     term = F.col(c).eqNullSafe(F.lit(t[c]))
                     cond = term if cond is None else cond & term
-                out = cast_src.where(cond).select(
-                    *self._phys_cols(snap, phys, data_names)
-                )
-                rel_new = f"part-upsert-{version:010d}-{gi}.parquet"
+                pv = {phys.get(c, c): _pv_str(t[c]) for c in part_cols}
+                groups.append((pv, cond, f"-{gi}"))
+        with self._fresh_positions(
+            spark, snap, pairs, version, storage, "merge_upsert"
+        ) as fresh:
+            new_adds: list[dict] = []
+            rows_inserted = 0
+            for pv, cond, suffix in groups:
+                out = cast_src if cond is None else cast_src.where(cond)
+                rel_new = f"part-upsert-{version:010d}{suffix}.parquet"
+                dest = os.path.join(self.table_dir, rel_new)
                 write_single_parquet(
-                    out, os.path.join(self.table_dir, rel_new),
-                    "delta_upsert_",
+                    out.select(*self._phys_cols(snap, phys, data_names)),
+                    dest, "delta_upsert_",
                 )
-                rows_inserted += _pq.read_metadata(
-                    os.path.join(self.table_dir, rel_new)
-                ).num_rows
-                new_adds.append(self.add_action_for(
-                    rel_new,
-                    partitionValues={
-                        phys.get(c, c): _pv_str(t[c])
-                        for c in part_cols
-                    },
-                ))
-        else:
-            out = cast_src.select(
-                *self._phys_cols(snap, phys, names)
-            )
-            rel_new = f"part-upsert-{version:010d}.parquet"
-            write_single_parquet(
-                out, os.path.join(self.table_dir, rel_new),
-                "delta_upsert_",
-            )
-            rows_inserted = _pq.read_metadata(
-                os.path.join(self.table_dir, rel_new)
-            ).num_rows
-            new_adds.append(self.add_action_for(rel_new))
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "MERGE"}},
-        ]
-        cdf = self._cdf_enabled(snap)
-        rows_matched = 0
-        n_dv_files = 0
-        fresh_sets: dict[str, set[int]] = {}
-        fresh_df = None
-        if frame is not None:
-            if cdf:
-                fresh_df = self._fresh_frame(
-                    spark, snap, frame
-                ).persist()
-                frame = fresh_df.select("_fp", "_pos")
-            # EXECUTOR tier for the matched positions (round 12)
-            dv_rows = self._dv_build_distributed(
-                snap, frame, version, storage, "merge_upsert"
-            )
-            rows_matched = sum(r.fresh for r in dv_rows)
-            n_dv_files = len(dv_rows)
-            actions.extend(
-                self._dv_actions_for(snap, dv_rows, version)
-            )
-            affected = [r.rel for r in dv_rows]
-        for rel in sorted(per_file):
-            prev = dict(snap.live[rel])
-            existing: set[int] = set()
-            if prev.get("deletionVector"):
-                existing = set(
-                    self._dv_positions(prev["deletionVector"])
+                rows_inserted += _pq.read_metadata(dest).num_rows
+                new_adds.append(
+                    self.add_action_for(rel_new, partitionValues=pv)
                 )
-            fresh = per_file[rel] - existing
-            if not fresh:
-                continue
-            fresh_sets[rel] = fresh
-            rows_matched += len(fresh)
-            n_dv_files += 1
-            prev["deletionVector"] = self._dv_descriptor(
-                rel, sorted(existing | per_file[rel]), version, storage
-            )
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        if rows_matched:
-            # the protocol upgrade rides ONLY a commit that actually
-            # writes a DV — an all-new-keys batch must stay readable by
-            # engines without the deletionVectors feature (r11 review)
-            proto = _protocol_with_feature(
-                snap.protocol
-                or {"minReaderVersion": 1, "minWriterVersion": 2},
-                "deletionVectors",
-            )
-            if cdf:
-                proto = _protocol_with_writer_feature(
-                    proto, "changeDataFeed"
+            cdc: list[dict] = []
+            if self._cdf_enabled(snap) and fresh.dvs:
+                # CDC capture (spec: a commit carrying cdc actions must
+                # capture ALL its changes, inserts included; an all-new-
+                # keys merge writes none — readers derive pure inserts
+                # from the add actions).  Preimages are the matched old
+                # rows; source rows tag update_postimage when their key
+                # matched, insert otherwise.
+                pieces = self._cdc_capture_matched(
+                    spark, snap, phys, fresh, "update_preimage"
                 )
-            actions.insert(1, {"protocol": proto})
-        actions.extend(new_adds)
-        if cdf and rows_matched:
-            # CDC capture (spec: a commit carrying cdc actions must
-            # capture ALL its changes, inserts included; an all-new-
-            # keys merge writes none — readers derive pure inserts
-            # from the add actions).  Preimages are the matched old
-            # rows; source rows tag update_postimage when their key
-            # matched, insert otherwise.
-            if fresh_df is not None:
-                def select_pairs(spark_, rels):
-                    abs_paths = [
-                        os.path.abspath(
-                            os.path.join(self.table_dir, r))
-                        for r in rels
-                    ]
-                    return fresh_df.where(
-                        F.col("_afp").isin(abs_paths)
-                    ).select("_afp", "_pos")
-            else:
-                affected = sorted(fresh_sets)
-
-                def select_pairs(spark_, rels):
-                    sel_rows = [
-                        (os.path.abspath(
-                            os.path.join(self.table_dir, r)), p)
-                        for r in rels
-                        for p in sorted(fresh_sets[r])
-                    ]
-                    return F.broadcast(local_frame(
-                        spark_, sel_rows, "_afp string, _pos long"))
-
-            groups = self._partition_groups(snap, affected)
-            pieces = self._cdc_capture_matched(
-                spark, snap, phys, groups, select_pairs,
-                "update_preimage",
-            )
-            # matched-key set for source-row classification (the
-            # preimage rows' key values, one more pruned scan)
-            pre_all, _ = self._join_matched(
-                spark, snap, phys, affected,
-                select_pairs(spark, affected),
-            )
-            pre_keys = pre_all.select(
-                F.col(key_col).alias("_mk")
-            ).distinct()
-            tagged = cast_src.join(
-                pre_keys, cast_src[key_col] == pre_keys["_mk"], "left"
-            ).withColumn(
-                "_change_type",
-                F.when(F.col("_mk").isNotNull(),
-                       F.lit("update_postimage"))
-                .otherwise(F.lit("insert")),
-            ).drop("_mk")
-            if part_cols:
-                for t in sorted(
-                    tuples,
-                    key=lambda r: tuple((v is None, v) for v in r),
-                ):
-                    cond = None
-                    for c in part_cols:
-                        term = F.col(c).eqNullSafe(F.lit(t[c]))
-                        cond = term if cond is None else cond & term
-                    pieces.append((
-                        {phys.get(c, c): _pv_str(t[c])
-                         for c in part_cols},
-                        tagged.where(cond).select(
-                            *self._phys_cols(snap, phys, data_names),
-                            "_change_type",
-                        ),
-                    ))
-            else:
-                pieces.append(({}, tagged.select(
-                    *self._phys_cols(snap, phys, names),
+                # matched-key set for source-row classification (the
+                # preimage rows' key values, one more pruned scan)
+                pre_all, _ = self._join_matched(
+                    spark, snap, phys, fresh.rels, fresh.pairs(fresh.rels)
+                )
+                pre_keys = pre_all.select(
+                    F.col(key_col).alias("_mk")
+                ).distinct()
+                tagged = cast_src.join(
+                    pre_keys, cast_src[key_col] == pre_keys["_mk"], "left"
+                ).withColumn(
                     "_change_type",
-                )))
-            actions.extend(
-                self._write_cdc_files(spark, version, pieces)
+                    F.when(F.col("_mk").isNotNull(),
+                           F.lit("update_postimage"))
+                    .otherwise(F.lit("insert")),
+                ).drop("_mk")
+                for pv, cond, _ in groups:
+                    out = tagged if cond is None else tagged.where(cond)
+                    pieces.append((pv, out.select(
+                        *self._phys_cols(snap, phys, data_names),
+                        "_change_type",
+                    )))
+                cdc = self._write_cdc_files(spark, version, pieces)
+            self._commit_dml(
+                snap, version, "MERGE", now_ms, fresh, new_adds, cdc
             )
-        if fresh_df is not None:
-            fresh_df.unpersist()
-        self.commit(version, actions)
         return {
             "version": version,
-            "files": n_dv_files,
-            "rows_matched": rows_matched,
+            "files": len(fresh.dvs),
+            "rows_matched": fresh.rows,
             "rows_inserted": rows_inserted,
         }
 

@@ -58,6 +58,8 @@ a snapshot as FS state (the round-7 Delta integration pattern, A12-A16).
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 from dataclasses import dataclass, field as dataclasses_field
@@ -657,6 +659,139 @@ class DataFile:
     #: entries must rewrite under their ORIGINAL spec's partition
     #: struct or the metadata would lie about what the writer recorded)
     spec_id: int = 0
+
+
+def _added_entry(f: DataFile) -> dict:
+    """The v2 manifest entry of a file this snapshot ADDS: snapshot id
+    and sequence numbers stay null, so the entry inherits the commit's
+    (spec "Sequence Number Inheritance")."""
+    return {
+        "status": _STATUS_ADDED,
+        "snapshot_id": None,
+        "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": f.content,
+            "file_path": f.path,
+            "file_format": "PARQUET",
+            "partition": f.partition,
+            "record_count": f.record_count,
+            "file_size_in_bytes": f.file_size,
+            "equality_ids": list(f.equality_ids) or None,
+            "lower_bounds": [
+                {"key": k, "value": v}
+                for k, v in sorted(f.lower_bounds.items())
+            ] or None,
+            "upper_bounds": [
+                {"key": k, "value": v}
+                for k, v in sorted(f.upper_bounds.items())
+            ] or None,
+        },
+    }
+
+
+def _written_data_file(
+    table_dir: str, rel: str, partition: dict, fields: list[dict]
+) -> DataFile:
+    """DataFile for a parquet this writer just placed at ``rel``: row
+    count from the footer, column bounds for ``fields`` (so later
+    predicates keep pruning it)."""
+    import pyarrow.parquet as pq
+
+    dest = os.path.join(table_dir, rel)
+    lb, ub = parquet_column_bounds(dest, fields)
+    return DataFile(
+        path=rel,
+        partition=partition,
+        record_count=pq.read_metadata(dest).num_rows,
+        file_size=os.path.getsize(dest),
+        lower_bounds=lb,
+        upper_bounds=ub,
+    )
+
+
+#: equality-delete key types and their Arrow storage
+_EQ_DELETE_ARROW_TYPES = {
+    "long": "int64",
+    "int": "int32",
+    "string": "string",
+    "double": "float64",
+    "boolean": "bool_",
+}
+
+
+def _write_delete_parquet(
+    table_dir: str, rel: str, table
+) -> tuple[str, int, int]:
+    """Write one delete file from an Arrow ``table`` and return
+    ``(rel, rows, bytes)``.  Module-level so the executor tier calls
+    the same writer from the workers (:func:`_write_delete_parquets`)
+    that the driver tier calls directly."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(table_dir, rel)
+    pq.write_table(table, path)
+    return rel, table.num_rows, os.path.getsize(path)
+
+
+def _write_delete_parquets(frame, table_dir: str, rel_for) -> list:
+    """Write each non-empty partition of ``frame`` as one delete file
+    at ``rel_for(partition_id)``, from the executor holding it, through
+    :func:`_write_delete_parquet`; returns the ``(rel, rows, bytes)``
+    triples sorted by path.  The driver sees one row per file."""
+
+    def write(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            rel, n, size = _write_delete_parquet(
+                table_dir,
+                rel_for(TaskContext.get().partitionId()),
+                pa.Table.from_batches(batches),
+            )
+            yield pa.RecordBatch.from_pydict(
+                {"rel": [rel], "rows": [n], "size": [size]}
+            )
+
+    rows = frame.mapInArrow(
+        write, "rel string, rows long, size long"
+    ).collect()
+    return sorted((r.rel, r.rows, r.size) for r in rows)
+
+
+def _pos_delete_table(pairs: list):
+    """Arrow table of sorted ``(file_path, pos)`` position deletes."""
+    import pyarrow as pa
+
+    return pa.table({
+        "file_path": pa.array([p for p, _ in pairs], pa.string()),
+        "pos": pa.array([p for _, p in pairs], pa.int64()),
+    })
+
+
+class _FreshPositions:
+    """The fresh matched positions of one Iceberg DML commit, in the
+    one shape every step after the tier decision consumes: ``n`` rows
+    over the data files ``raws`` (manifest paths, sorted), the
+    position-delete ``entries`` already written for them, and
+    :meth:`pairs` — some files' ``(_afp, _pos)`` rows as a frame to
+    join."""
+
+    def __init__(self, n: int, raws: list, entries: list, frame):
+        self.n = n
+        self.raws = raws
+        self.entries = entries
+        #: zero-argument callable -> the ``(file_path, pos, _np)`` frame
+        self._frame = frame
+
+    def pairs(self, raws):
+        from pyspark.sql import functions as F
+
+        return self._frame().where(
+            F.col("file_path").isin(list(raws))
+        ).select(F.col("_np").alias("_afp"), F.col("pos").alias("_pos"))
 
 
 class IcebergTable:
@@ -2033,33 +2168,7 @@ class IcebergTable:
                     f"partition keys {sorted(unknown)} not in the "
                     "default partition spec"
                 )
-        prior = self._live_entries()
-        entries = prior + [
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": f.path,
-                    "file_format": "PARQUET",
-                    "partition": f.partition,
-                    "record_count": f.record_count,
-                    "file_size_in_bytes": f.file_size,
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.lower_bounds.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.upper_bounds.items())
-                    ] or None,
-                },
-            }
-            for f in files
-        ]
+        entries = self._live_entries() + [_added_entry(f) for f in files]
         return self._commit_snapshot(
             entries,
             "append",
@@ -2249,8 +2358,6 @@ class IcebergTable:
         import hashlib as _hashlib
         import shutil as _shutil
 
-        import pyarrow.parquet as _pq
-
         last = self.committed_epoch(query_id)
         if last is not None and epoch_id <= last:
             return None
@@ -2272,32 +2379,6 @@ class IcebergTable:
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
         bounds_fields = [f for f in schema_fields
                          if f["name"] not in part_cols]
-
-        def _entry(rel, dest, pv):
-            lb, ub = parquet_column_bounds(dest, bounds_fields)
-            return {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": _pq.read_metadata(dest).num_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            }
 
         entries = []
         if part_cols or derived:
@@ -2325,7 +2406,9 @@ class IcebergTable:
                 pv = {field_of[c]: pv_encode(c, t[c])
                       for c in part_cols}
                 pv.update({fn: t[h] for h, fn, _ in derived})
-                entries.append(_entry(rel, dest, pv))
+                entries.append(_added_entry(_written_data_file(
+                    self.dir, rel, pv, bounds_fields
+                )))
         else:
             staging = os.path.join(
                 self.dir, f"_txn_staging-{tag}-{epoch_id}"
@@ -2341,7 +2424,9 @@ class IcebergTable:
                 rel = f"data/txn-{tag}-{epoch_id:010d}-{i:05d}.parquet"
                 dest = os.path.join(self.dir, rel)
                 os.replace(os.path.join(staging, name), dest)
-                entries.append(_entry(rel, dest, {}))
+                entries.append(_added_entry(_written_data_file(
+                    self.dir, rel, {}, bounds_fields
+                )))
             _shutil.rmtree(staging, ignore_errors=True)
         return self._commit_snapshot(
             self._live_entries() + entries,
@@ -2388,90 +2473,61 @@ class IcebergTable:
         table-relative data file paths and 0-based row ordinals within
         each file.  Applies at read time to data files with data
         sequence ≤ this commit's sequence."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         if not deletes:
             raise ValueError("no delete positions given")
-        meta = self.metadata()
-        seq = meta["last-sequence-number"] + 1
-        rel = f"data/delete-pos-{seq}.parquet"
-        path = os.path.join(self.dir, rel)
-        ordered = sorted(deletes)
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": pa.array(
-                        [p for p, _ in ordered], pa.string()
-                    ),
-                    "pos": pa.array([p for _, p in ordered], pa.int64()),
-                }
-            ),
-            path,
+        seq = self.metadata()["last-sequence-number"] + 1
+        written = _write_delete_parquet(
+            self.dir, f"data/delete-pos-{seq}.parquet",
+            _pos_delete_table(sorted(deletes)),
         )
-        spec_fields = self._spec_fields(meta, 0)
-        entry = {
-            "status": _STATUS_ADDED,
-            "snapshot_id": None,
-            "sequence_number": None,  # inherits this commit's sequence
-            "file_sequence_number": None,
-            "data_file": {
-                "content": _CONTENT_POS_DELETES,
-                "file_path": rel,
-                "file_format": "PARQUET",
-                # not partition-scoped: all-null partition tuple
-                "partition": {f["name"]: None for f in spec_fields},
-                "record_count": len(ordered),
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": None,
-            },
-        }
         return self._commit_snapshot(
             self._live_entries(),
             "delete",
             now_ms,
-            delete_entries=self._live_delete_entries() + [entry],
+            delete_entries=self._live_delete_entries()
+            + [self._delete_entry(*written, _CONTENT_POS_DELETES)],
         )
 
-    #: driver-tier materialization bound for the DML write faces'
-    #: matched (file, position) pairs and merge key sets — the
-    #: write-side analogue of the read path's delete-broadcast
-    #: ceiling.  At or under it, matches collect driver-side
-    #: (cheapest at fixture scale).  ABOVE it (round 12) every DML
-    #: face — delete_rows, update_rows and merge_upsert — switches to
-    #: the EXECUTOR tier: position/equality delete parquets write
-    #: straight from the distributed frames and update's rewrite joins
-    #: the fresh frame, so no predicate selectivity materializes
-    #: positions on the driver.
+    def _delete_entry(
+        self, rel: str, rows: int, size: int, content: int,
+        equality_ids: tuple = (),
+    ) -> dict:
+        """Manifest entry of a table-wide delete file (all-null
+        partition tuple: it applies across every partition)."""
+        spec_fields = self._spec_fields(self.metadata(), 0)
+        return _added_entry(DataFile(
+            path=rel,
+            partition={f["name"]: None for f in spec_fields},
+            record_count=rows,
+            file_size=size,
+            content=content,
+            equality_ids=tuple(equality_ids),
+        ))
+
+    #: the DML write faces' one size decision: up to this many matched
+    #: (file, position) pairs — or merge keys — collect into a driver
+    #: list and their delete file writes on the driver; above it they
+    #: stay a distributed frame and the delete files write on the
+    #: executors, so no match size materializes on the driver.  Every
+    #: step after the decision is shared.  The same bound picks how
+    #: update_rows reads the existing position deletes it subtracts.
     DELETE_ROWS_LIMIT = 1_000_000
 
-    def _matched_per_raw(self, spark, column_filter: dict, face: str):
-        """Shared DML matcher (round-11 review: delete_rows and
-        update_rows duplicated this): bounds-prune candidate files,
-        scan ONLY the predicate columns with per-file row lineage, and
-        return ``(cand, part_cols, per_raw, frame)``:
+    def _match_pairs(self, spark, column_filter: dict, face: str):
+        """Shared DML matcher: bounds-prune candidate files, scan ONLY
+        the predicate columns with per-file row lineage, and return
+        ``(cand, part_cols, pairs)`` — ``pairs`` the lazy ``(_fp,
+        _pos)`` frame of matched rows, None when no file survives the
+        pruning.
 
-        - ``per_raw = {raw_path: {positions}}`` (``frame`` None) when
-          the matched set fits :data:`DELETE_ROWS_LIMIT` — the driver
-          tier;
-        - ``per_raw`` None with ``frame`` the distributed
-          ``(_fp, _pos)`` DataFrame when it does NOT — the EXECUTOR
-          tier (round 12), the caller writes position-delete files
-          straight from the frame;
-        - both None when nothing matches.
-
-        Guards: empty / unknown / partition predicate columns; the cap
-        check runs THROUGH a ``limit(cap+1)`` so the driver never
-        materializes an oversized match list.  Renamed histories are
-        SUPPORTED (round 12, lifting the r11 refusal): the predicate
-        scan pins one physical column per historical name of each
-        predicate field and coalesces across the variants — exactly
-        the read path's name-variant resolution, so pre-rename files
-        match instead of silently null-filling."""
+        Guards: empty / unknown / partition predicate columns.
+        Renamed histories are supported: the predicate scan pins one
+        physical column per historical name of each predicate field
+        and coalesces across the variants — exactly the read path's
+        name-variant resolution, so pre-rename files match instead of
+        silently null-filling."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
-
-        from hadoop_sync_spark.io import decode_file_uri
 
         if not column_filter:
             raise ValueError(f"{face} needs a predicate")
@@ -2492,7 +2548,7 @@ class IcebergTable:
                     "values never reach the data files"
                 )
         if not cand:
-            return cand, part_cols, None, None
+            return cand, part_cols, None
         full = self._spark_schema(
             sid, exclude=set(part_cols), name_variants=variants
         )
@@ -2518,200 +2574,192 @@ class IcebergTable:
                 scan = scan.filter(F.col(c) >= lo)
             if hi is not None:
                 scan = scan.filter(F.col(c) <= hi)
-        cap = self.DELETE_ROWS_LIMIT
-        pairs = scan.select("_fp", "_pos")
-        matched = pairs.limit(cap + 1).collect()
-        if not matched:
-            return cand, part_cols, None, None
-        if len(matched) > cap:
-            # EXECUTOR tier (round 12): hand back the distributed frame
-            # — the caller writes the position-delete parquet straight
-            # from it instead of refusing (the round-11 behavior)
-            return cand, part_cols, None, pairs
-        raw_of = {_norm_path(f.path): f.raw_path for f in cand}
-        per_raw: dict[str, set[int]] = {}
-        for r in matched:
-            raw = raw_of.get(_norm_path(decode_file_uri(r._fp)))
-            if raw is None:
-                raise ValueError(
-                    f"scanned file missing from the snapshot map "
-                    f"(URI normalization mismatch): {r._fp}"
-                )
-            per_raw.setdefault(raw, set()).add(r._pos)
-        return cand, part_cols, per_raw, None
+        return cand, part_cols, scan.select("_fp", "_pos")
 
     #: target rows per position-delete parquet on the executor tier —
     #: bounds individual delete-file size (and the read side's per-file
     #: decode) without any driver materialization
     POS_DELETE_FILE_ROWS = 2_000_000
 
-    def _add_position_deletes_distributed(
-        self, spark, cand, frame, now_ms: int
-    ) -> int:
-        """EXECUTOR tier of :meth:`delete_rows` (round 12 — the scale
-        path the round-11 cap refusal named): the matched ``(_fp,
-        _pos)`` frame maps back to manifest ``file_path`` strings via a
-        broadcast of the candidate-file list (metadata scale), range-
-        partitions on (file_path, pos) and writes the position-delete
-        parquet(s) DIRECTLY from the executors — globally sorted per
-        the spec's delete-file sort order, ~\
-        :data:`POS_DELETE_FILE_ROWS` rows each, committed as one
-        snapshot with one delete-manifest entry per file.  The driver
-        materializes nothing but file metadata; a purge matching 100M
-        rows is a distributed sort-write, not a refusal."""
-        import glob as _glob
-        import math as _math
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        import pyarrow.parquet as pq
+    def _existing_pos_deletes(self, spark, pos_dels: list, cand: list):
+        """``(_d_file, _d_pos, _dseq)`` frame of the live position
+        deletes, for the sequence-aware subtraction in
+        :meth:`_fresh_positions`.  Chosen from metadata before any
+        payload is read: when the delete files' summed
+        ``record_count`` fits :data:`DELETE_ROWS_LIMIT`, the driver
+        reads them (rows for candidate files only) into a broadcast
+        local frame; above it Spark reads them."""
         from pyspark.sql import functions as F
 
-        meta = self.metadata()
-        seq = meta["last-sequence-number"] + 1
-        raw_map = local_frame(
-            spark,
-            [(_norm_path(f.path), f.raw_path) for f in cand],
-            "_np string, file_path string",
-        )
-        decoded = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                r"\+",
-                "%2B",
-            )
-        )
-        out = (
-            frame.withColumn("_np", decoded)
-            .join(F.broadcast(raw_map), "_np", "left")
-            .select(
-                "file_path", F.col("_pos").cast("long").alias("pos")
-            )
-            .persist()
-        )
-        try:
-            # an inner join would silently DROP unmapped rows — the
-            # driver tier raises on a normalization mismatch, so must we
-            if out.where(F.col("file_path").isNull()).first():
-                raise ValueError(
-                    "scanned file missing from the snapshot map "
-                    "(URI normalization mismatch) in the executor-tier "
-                    "position-delete write"
+        if sum(d.record_count for d in pos_dels) > self.DELETE_ROWS_LIMIT:
+            frames = [
+                spark.read.parquet(d.path).select(
+                    F.col("file_path").alias("_d_file"),
+                    F.col("pos").cast("long").alias("_d_pos"),
+                    F.lit(d.sequence).cast("long").alias("_dseq"),
                 )
-            n = out.count()
-            entries = self._pos_delete_entries_from_frame(
-                out, n, meta, seq
-            )
-            self._commit_snapshot(
-                self._live_entries(),
-                "delete",
-                now_ms,
-                delete_entries=self._live_delete_entries() + entries,
-            )
-            return n
-        finally:
-            out.unpersist()
-
-    def _pos_delete_entries_from_frame(
-        self, pairs, n: int, meta: dict, seq: int
-    ) -> list[dict]:
-        """Write globally-sorted position-delete parquet(s) straight
-        from a distributed ``(file_path, pos)`` frame (~\
-        :data:`POS_DELETE_FILE_ROWS` rows each) and return their
-        manifest entries WITHOUT committing — shared by
-        :meth:`_add_position_deletes_distributed` (its own snapshot)
-        and the executor tier of :meth:`update_rows` (one snapshot
-        carrying delete + rewritten copies)."""
-        import glob as _glob
-        import math as _math
-        import shutil as _shutil
-        import tempfile as _tempfile
-
+                for d in pos_dels
+            ]
+            return functools.reduce(lambda a, b: a.unionByName(b), frames)
         import pyarrow.parquet as pq
 
-        nparts = max(1, _math.ceil(n / self.POS_DELETE_FILE_ROWS))
-        staging = _tempfile.mkdtemp(prefix="iceberg_posdel_")
-        entries: list[dict] = []
-        try:
-            (
-                pairs.repartitionByRange(nparts, "file_path", "pos")
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(staging)
+        raws = {f.raw_path for f in cand}
+        rows = []
+        for d in pos_dels:
+            tb = pq.read_table(d.path, columns=["file_path", "pos"])
+            rows += [
+                (fp, p, d.sequence)
+                for fp, p in zip(tb["file_path"].to_pylist(),
+                                 tb["pos"].to_pylist())
+                if fp in raws
+            ]
+        return F.broadcast(local_frame(
+            spark, rows, "_d_file string, _d_pos long, _dseq long"
+        ))
+
+    @contextlib.contextmanager
+    def _fresh_positions(
+        self, spark, cand: list, pairs, seq: int, pos_dels: list = ()
+    ):
+        """The DML faces' one size decision.  The matched ``pairs`` map
+        to their manifest paths (a broadcast of the candidate list;
+        an unmapped file fails loudly, never drops rows), lose the
+        rows ``pos_dels`` already delete when given (sequence-aware: a
+        delete applies only to data files of sequence ≤ its own), and
+        materialize by count:
+
+        - at most :data:`DELETE_ROWS_LIMIT` rows collect into a sorted
+          driver list, written as one ``delete-pos-<seq>`` parquet on
+          the driver; later joins take a broadcast local frame;
+        - above it the frame persists, range-partitions on
+          ``(file_path, pos)`` and writes ~:data:`POS_DELETE_FILE_ROWS`
+          rows per ``delete-pos-<seq>-<i>`` parquet from the
+          executors, in the spec's delete-file sort order.
+
+        Both call :func:`_write_delete_parquet`.  Yields a
+        :class:`_FreshPositions`; the context owns the persisted
+        frame."""
+        import math
+
+        from pyspark.sql import functions as F
+
+        from hadoop_sync_spark.io import decode_file_uri_col
+
+        raw_map = local_frame(
+            spark,
+            [(_norm_path(f.path), f.raw_path, f.sequence) for f in cand],
+            "_np string, file_path string, _fseq long",
+        )
+        m = pairs.withColumn("_np", decode_file_uri_col("_fp")).join(
+            F.broadcast(raw_map), "_np", "left"
+        )
+        if pos_dels:
+            dels = self._existing_pos_deletes(spark, list(pos_dels), cand)
+            m = m.join(
+                dels,
+                (m["file_path"] == dels["_d_file"])
+                & (m["_pos"] == dels["_d_pos"])
+                & (m["_fseq"] <= dels["_dseq"]),
+                "left_anti",
             )
-            spec_fields = self._spec_fields(meta, 0)
-            for i, pf in enumerate(
-                sorted(
-                    _glob.glob(
-                        os.path.join(staging, "part-*.parquet")
-                    )
-                )
-            ):
-                rows = pq.read_metadata(pf).num_rows
-                if rows == 0:
-                    continue
-                rel = f"data/delete-pos-{seq}-{i}.parquet"
-                os.replace(pf, os.path.join(self.dir, rel))
-                entries.append({
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": None,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": _CONTENT_POS_DELETES,
-                        "file_path": rel,
-                        "file_format": "PARQUET",
-                        "partition": {
-                            f["name"]: None for f in spec_fields
-                        },
-                        "record_count": rows,
-                        "file_size_in_bytes": os.path.getsize(
-                            os.path.join(self.dir, rel)
+        m = m.select(
+            "file_path", F.col("_pos").cast("long").alias("pos"), "_np"
+        )
+        mismatch = (
+            "scanned file missing from the snapshot map (URI "
+            "normalization mismatch)"
+        )
+        cap = self.DELETE_ROWS_LIMIT
+        matched = m.limit(cap + 1).collect()
+        persisted = None
+        try:
+            if len(matched) <= cap:
+                if any(r.file_path is None for r in matched):
+                    raise ValueError(mismatch)
+                rows = sorted(matched)
+                entries = []
+                if rows:
+                    written = _write_delete_parquet(
+                        self.dir, f"data/delete-pos-{seq}.parquet",
+                        _pos_delete_table(
+                            [(r.file_path, r.pos) for r in rows]
                         ),
-                        "equality_ids": None,
-                    },
-                })
+                    )
+                    entries = [
+                        self._delete_entry(*written, _CONTENT_POS_DELETES)
+                    ]
+                fresh = _FreshPositions(
+                    len(rows),
+                    sorted({r.file_path for r in rows}),
+                    entries,
+                    functools.cache(lambda: F.broadcast(local_frame(
+                        spark, rows, "file_path string, pos long, _np string"
+                    ))),
+                )
+            else:
+                persisted = m.persist()
+                if persisted.where(F.col("file_path").isNull()).first():
+                    raise ValueError(mismatch)
+                n = persisted.count()
+                nparts = max(1, math.ceil(n / self.POS_DELETE_FILE_ROWS))
+                written = _write_delete_parquets(
+                    persisted.select("file_path", "pos")
+                    .repartitionByRange(nparts, "file_path", "pos")
+                    .sortWithinPartitions("file_path", "pos"),
+                    self.dir,
+                    lambda i: f"data/delete-pos-{seq}-{i}.parquet",
+                )
+                fresh = _FreshPositions(
+                    n,
+                    sorted(
+                        r[0] for r in
+                        persisted.select("file_path").distinct().collect()
+                    ),
+                    [self._delete_entry(*w, _CONTENT_POS_DELETES)
+                     for w in written],
+                    lambda: persisted,
+                )
+            yield fresh
         finally:
-            _shutil.rmtree(staging, ignore_errors=True)
-        return entries
+            if persisted is not None:
+                persisted.unpersist()
 
     def delete_rows(self, spark, column_filter: dict,
                     now_ms: int = 0) -> int:
         """Row-level ``DELETE FROM t WHERE ...`` the merge-on-read way
-        (round 11; the Iceberg twin of :meth:`DeltaLog.delete_where`):
-        prune candidate files by the manifest column bounds (the same
-        two-layer metadata pruning ``read`` uses — at 100 TB a selective
-        predicate scans a handful of files, not the table), scan ONLY
-        the predicate columns with per-file row lineage, and commit ONE
-        position-delete file covering every match
-        (:meth:`add_position_deletes` — inherited sequence, applies to
-        data files with sequence ≤ the commit's).  Positions already
-        covered by existing position deletes de-duplicate harmlessly in
-        the read-side anti-join; rows an equality delete already hides
-        gain a redundant position entry, also harmless.  Returns the
-        number of (file, position) pairs committed; a no-match
-        predicate commits nothing and returns 0.  Renamed schema
-        histories are supported (round 12): the predicate scan
-        resolves by name variant like the read path, so pre-rename
-        files match too.  Matches above :data:`DELETE_ROWS_LIMIT`
-        switch to the EXECUTOR tier (round 12): the position-delete
-        parquets write straight from the distributed matched frame
-        (:meth:`_add_position_deletes_distributed`) — no driver
-        materialization at any match size."""
-        cand, _, per_raw, frame = self._matched_per_raw(
+        (the Iceberg twin of :meth:`DeltaLog.delete_where`): prune
+        candidate files by the manifest column bounds (the same
+        two-layer metadata pruning ``read`` uses — at 100 TB a
+        selective predicate scans a handful of files, not the table),
+        scan ONLY the predicate columns with per-file row lineage, and
+        commit ONE snapshot adding the position-delete file(s) covering
+        every match (inherited sequence, applies to data files with
+        sequence ≤ the commit's).  Positions already covered by
+        existing position deletes de-duplicate harmlessly in the
+        read-side anti-join; rows an equality delete already hides gain
+        a redundant position entry, also harmless.  Returns the number
+        of (file, position) pairs committed; a no-match predicate
+        commits nothing and returns 0.  Renamed schema histories are
+        supported: the predicate scan resolves by name variant like
+        the read path, so pre-rename files match too.  How the matches
+        materialize is decided once by their count
+        (:meth:`_fresh_positions`)."""
+        cand, _, pairs = self._match_pairs(
             spark, column_filter, "delete_rows"
         )
-        if per_raw is None and frame is None:
+        if pairs is None:
             return 0
-        if frame is not None:
-            return self._add_position_deletes_distributed(
-                spark, cand, frame, now_ms
-            )
-        pairs = sorted(
-            (raw, p) for raw, poss in per_raw.items() for p in poss
-        )
-        self.add_position_deletes(pairs, now_ms=now_ms)
-        return len(pairs)
+        seq = self.metadata()["last-sequence-number"] + 1
+        with self._fresh_positions(spark, cand, pairs, seq) as fresh:
+            if fresh.n:
+                self._commit_snapshot(
+                    self._live_entries(),
+                    "delete",
+                    now_ms,
+                    delete_entries=self._live_delete_entries()
+                    + fresh.entries,
+                )
+            return fresh.n
 
     def update_rows(
         self,
@@ -2721,32 +2769,30 @@ class IcebergTable:
         now_ms: int = 0,
     ) -> int:
         """Row-level ``UPDATE t SET ... WHERE ...`` the merge-on-read
-        way (round 11; the Iceberg twin of
-        :meth:`DeltaLog.update_where`): ONE snapshot commits a
-        position-delete file covering the matched rows AND their
-        updated copies as new data files (one per affected partition
-        tuple, footer bounds stamped so later predicates keep
-        pruning).  The new files share the commit's sequence number;
-        the position delete names only the OLD paths, so the spec's
-        sequence rule leaves the copies visible.  ``set_values`` maps
-        column -> literal or pyspark Column over the logical row.
-        Rows existing position deletes already hide are excluded
-        (updating them would resurrect deleted data); tables with live
-        EQUALITY deletes refuse — the scan cannot see which rows they
-        hide — as do partition(-source) columns in SET and partition
-        columns in the predicate.  Renamed histories are SUPPORTED
-        (round 12): both the predicate scan and the rewrite-copy scan
+        way (the Iceberg twin of :meth:`DeltaLog.update_where`): ONE
+        snapshot commits position-delete file(s) covering the matched
+        rows AND their updated copies as new data files (one per
+        affected partition tuple, footer bounds stamped so later
+        predicates keep pruning).  The new files share the commit's
+        sequence number; the position delete names only the OLD paths,
+        so the spec's sequence rule leaves the copies visible.
+        ``set_values`` maps column -> literal or pyspark Column over
+        the logical row.  Rows existing position deletes already hide
+        are excluded (updating them would resurrect deleted data);
+        tables with live EQUALITY deletes refuse — the scan cannot see
+        which rows they hide — as do partition(-source) columns in SET
+        and partition columns in the predicate.  Renamed histories are
+        supported: both the predicate scan and the rewrite-copy scan
         resolve by name variant, and the copies land under the CURRENT
-        names.  Matches above :data:`DELETE_ROWS_LIMIT` switch to the
-        EXECUTOR tier (round 12, the last write-face cap lifted):
-        positions stay distributed end to end — existing position
-        deletes subtract via a sequence-aware anti-join on the delete
-        parquets read through Spark, the rewrite copies join the
-        distributed fresh frame, and the position-delete parquets
-        write straight from it."""
-        import pyarrow.parquet as pq
+        names.  How the matches materialize is decided once by their
+        count (:meth:`_fresh_positions`)."""
         from pyspark.sql import Column
         from pyspark.sql import functions as F
+
+        from hadoop_sync_spark.io import (
+            decode_file_uri_col,
+            write_single_parquet,
+        )
 
         if not set_values:
             raise ValueError("update_rows needs at least one SET")
@@ -2788,140 +2834,15 @@ class IcebergTable:
                 "be stamped under the default spec while sourced from "
                 "another — use delete_rows + append to move those rows"
             )
-        cand, part_cols, per_raw, frame = self._matched_per_raw(
+        cand, part_cols, pairs = self._match_pairs(
             spark, column_filter, "update_rows"
         )
-        if per_raw is None and frame is None:
+        if pairs is None:
             return 0
         cand_by_raw = {f.raw_path: f for f in cand}
-        pos_dels = [d for d in deletes
-                    if d.content == _CONTENT_POS_DELETES]
-        fresh_frame = None
-        if frame is not None:
-            # EXECUTOR tier (round 12 — the last write-face cap
-            # lifted): the matched frame stays distributed; existing
-            # position deletes subtract via a SEQUENCE-AWARE anti-join
-            # against the delete parquets read through Spark, the
-            # rewrite-copy joins filter the fresh frame per partition
-            # group, and the position-delete parquets write straight
-            # from the frame.  The driver materializes only the
-            # affected file list (metadata scale).
-            raw_map = local_frame(
-                spark,
-                [
-                    (_norm_path(f.path), f.raw_path, f.sequence)
-                    for f in cand
-                ],
-                "_np string, _raw string, _fseq long",
-            )
-            decoded = F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("_fp"), "^file:(//)?", ""
-                    ),
-                    r"\+",
-                    "%2B",
-                )
-            )
-            m = frame.withColumn("_np", decoded).join(
-                F.broadcast(raw_map), "_np", "left"
-            )
-            if pos_dels:
-                dels = None
-                for d in pos_dels:
-                    dfd = spark.read.parquet(d.path).select(
-                        F.col("file_path").alias("_d_file"),
-                        F.col("pos").cast("long").alias("_d_pos"),
-                        F.lit(d.sequence).alias("_dseq"),
-                    )
-                    dels = (dfd if dels is None
-                            else dels.unionByName(dfd))
-                m = m.join(
-                    dels,
-                    (m["_raw"] == dels["_d_file"])
-                    & (m["_pos"] == dels["_d_pos"])
-                    & (F.col("_fseq") <= dels["_dseq"]),
-                    "left_anti",
-                )
-            fresh_frame = m.persist()
-            if fresh_frame.where(F.col("_raw").isNull()).first():
-                fresh_frame.unpersist()
-                raise ValueError(
-                    "scanned file missing from the snapshot map "
-                    "(URI normalization mismatch) in the executor-tier "
-                    "update"
-                )
-            n_updated = fresh_frame.count()
-            if n_updated == 0:
-                fresh_frame.unpersist()
-                return 0
-            affected = sorted(
-                r[0]
-                for r in fresh_frame.select("_raw")
-                .distinct().collect()
-            )
-
-            def select_pairs(raws):
-                norms = [_norm_path(cand_by_raw[r].path)
-                         for r in raws]
-                return fresh_frame.where(
-                    F.col("_np").isin(norms)
-                ).select(F.col("_np").alias("_afp"), "_pos")
-        else:
-            #: rows existing POSITION deletes already hide, per raw
-            #: path — SEQUENCE-AWARE (round-11 review): a delete
-            #: applies to a data file only when data sequence ≤ delete
-            #: sequence, so a file re-added after the delete ignores
-            #: it on read and must ignore it here too.  Metadata-gated:
-            #: the summed record_count of the applicable delete files
-            #: must fit the same cap the match list obeys before any
-            #: payload is read (executor-tier updates read them
-            #: through Spark instead).
-            total_del_rows = sum(d.record_count for d in pos_dels)
-            if total_del_rows > self.DELETE_ROWS_LIMIT:
-                raise ValueError(
-                    f"update_rows with {total_del_rows} existing "
-                    "position-delete rows, over the driver "
-                    "materialization cap — compact the table first"
-                )
-            pos_sets: dict[str, set[int]] = {}
-            for d in pos_dels:
-                tb = pq.read_table(
-                    d.path, columns=["file_path", "pos"]
-                )
-                for fp, p in zip(tb["file_path"].to_pylist(),
-                                 tb["pos"].to_pylist()):
-                    f = cand_by_raw.get(fp)
-                    if f is not None and f.sequence <= d.sequence:
-                        pos_sets.setdefault(fp, set()).add(p)
-            fresh = {
-                raw: poss - pos_sets.get(raw, set())
-                for raw, poss in per_raw.items()
-            }
-            fresh = {raw: poss for raw, poss in fresh.items() if poss}
-            if not fresh:
-                return 0
-            n_updated = sum(len(v) for v in fresh.values())
-            affected = sorted(fresh)
-
-            def select_pairs(raws):
-                sel_rows = [
-                    (_norm_path(cand_by_raw[r].path), p)
-                    for r in raws
-                    for p in sorted(fresh[r])
-                ]
-                return F.broadcast(local_frame(
-                    spark, sel_rows, "_afp string, _pos long"))
-        groups: dict[tuple, list[str]] = {}
-        for raw in affected:
-            pv = cand_by_raw[raw].partition
-            groups.setdefault(tuple(sorted(pv.items())), []).append(raw)
         seq = meta["last-sequence-number"] + 1
         variants = self._rename_history()
-        fid_of = {
-            f["name"]: f["id"]
-            for f in self._schema_by_id(sid)["fields"]
-        }
+        fid_of = {f["name"]: f["id"] for f in schema_fields}
         scan_schema = self._spark_schema(
             sid, exclude=set(part_cols), name_variants=variants
         )
@@ -2935,125 +2856,62 @@ class IcebergTable:
                   else [name])
             return F.coalesce(*[F.col(n) for n in vs])
 
-        new_entries: list[dict] = []
-        spec_fields = self._spec_fields(meta, 0)
-        for gi, pv_t in enumerate(sorted(groups)):
-            raws = groups[pv_t]
-            src = spark.read.schema(scan_schema).parquet(
-                *[cand_by_raw[r].path for r in raws]
-            ).select(
-                F.col("_metadata.file_path").alias("_fp"),
-                F.col("_metadata.row_index").alias("_pos"),
-                *[_lcol(f.name).alias(f.name) for f in full.fields],
-            )
-            decoded = F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                    r"\+",
-                    "%2B",
+        # ONE select: every SET expression evaluates against the
+        # ORIGINAL row (simultaneous-assignment UPDATE semantics)
+        exprs = {
+            c: (v if isinstance(v, Column) else F.lit(v))
+            .cast(spark_types[c])
+            for c, v in set_values.items()
+        }
+        with self._fresh_positions(
+            spark, cand, pairs, seq,
+            [d for d in deletes if d.content == _CONTENT_POS_DELETES],
+        ) as fresh:
+            if not fresh.n:
+                return 0
+            groups: dict[tuple, list[str]] = {}
+            for raw in fresh.raws:
+                pv = cand_by_raw[raw].partition
+                groups.setdefault(
+                    tuple(sorted(pv.items())), []
+                ).append(raw)
+            new_entries: list[dict] = []
+            for gi, pv_t in enumerate(sorted(groups)):
+                raws = groups[pv_t]
+                upd = spark.read.schema(scan_schema).parquet(
+                    *[cand_by_raw[r].path for r in raws]
+                ).select(
+                    decode_file_uri_col(
+                        F.col("_metadata.file_path")
+                    ).alias("_afp"),
+                    F.col("_metadata.row_index").alias("_pos"),
+                    *[_lcol(f.name).alias(f.name) for f in full.fields],
+                ).join(fresh.pairs(raws), ["_afp", "_pos"], "inner")
+                rel_new = f"data/part-update-{seq}-{gi}.parquet"
+                write_single_parquet(
+                    upd.select(*[
+                        exprs.get(f.name, F.col(f.name)).alias(f.name)
+                        for f in full.fields
+                    ]),
+                    os.path.join(self.dir, rel_new),
+                    "iceberg_update_",
                 )
+                new_entries.append(_added_entry(_written_data_file(
+                    self.dir, rel_new, dict(pv_t), schema_fields
+                )))
+            self._commit_snapshot(
+                self._live_entries() + new_entries,
+                "overwrite",
+                now_ms,
+                delete_entries=self._live_delete_entries() + fresh.entries,
             )
-            upd = src.withColumn("_afp", decoded).join(
-                select_pairs(raws), ["_afp", "_pos"], "inner"
-            )
-            # ONE select: every SET expression evaluates against the
-            # ORIGINAL row (simultaneous-assignment UPDATE semantics)
-            exprs = {
-                c: (v if isinstance(v, Column) else F.lit(v))
-                .cast(spark_types[c])
-                for c, v in set_values.items()
-            }
-            out = upd.select(*[
-                exprs.get(f.name, F.col(f.name)).alias(f.name)
-                for f in full.fields
-            ])
-            rel_new = f"data/part-update-{seq}-{gi}.parquet"
-            dest = os.path.join(self.dir, rel_new)
-            from hadoop_sync_spark.io import write_single_parquet
-
-            write_single_parquet(out, dest, "iceberg_update_")
-            lb, ub = parquet_column_bounds(dest, schema_fields)
-            n_rows = pq.read_metadata(dest).num_rows
-            new_entries.append({
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel_new,
-                    "file_format": "PARQUET",
-                    "partition": dict(pv_t),
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            })
-        # the position-delete file(s) covering the replaced rows
-        if fresh_frame is not None:
-            del_entries = self._pos_delete_entries_from_frame(
-                fresh_frame.select(
-                    F.col("_raw").alias("file_path"),
-                    F.col("_pos").cast("long").alias("pos"),
-                ),
-                n_updated, meta, seq,
-            )
-            fresh_frame.unpersist()
-        else:
-            pairs = sorted(
-                (raw, p) for raw in fresh for p in fresh[raw]
-            )
-            import pyarrow as pa
-
-            del_rel = f"data/delete-pos-{seq}.parquet"
-            del_path = os.path.join(self.dir, del_rel)
-            pq.write_table(
-                pa.table({
-                    "file_path": pa.array([p for p, _ in pairs],
-                                          pa.string()),
-                    "pos": pa.array([p for _, p in pairs],
-                                    pa.int64()),
-                }),
-                del_path,
-            )
-            del_entries = [{
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_POS_DELETES,
-                    "file_path": del_rel,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        f["name"]: None for f in spec_fields
-                    },
-                    "record_count": len(pairs),
-                    "file_size_in_bytes": os.path.getsize(del_path),
-                    "equality_ids": None,
-                },
-            }]
-        self._commit_snapshot(
-            self._live_entries() + new_entries,
-            "overwrite",
-            now_ms,
-            delete_entries=self._live_delete_entries() + del_entries,
-        )
-        return n_updated
+            return fresh.n
 
     def add_equality_deletes(
         self, rows: list[dict], equality_ids: list[int], now_ms: int = 0
     ) -> int:
         """Merge-on-read EQUALITY delete — the documented write face
-        (round 11; the Iceberg twin of the Delta DV writer
+        (the Iceberg twin of the Delta DV writer
         :meth:`DeltaLog.add_deletion_vector`, spec "Equality Delete
         Files" / "Sequence Numbers").  Writes one delete parquet holding
         the equality columns (keyed by schema FIELD IDS; the file's
@@ -3070,12 +2928,45 @@ class IcebergTable:
         renamed table's historical delete files keep resolving by field
         id on the read side (name variants).  Refuses unknown field ids
         and column types outside the supported scalar map."""
-        entry = self._equality_delete_entry(rows, equality_ids)
+        import pyarrow as pa
+
+        if not rows or not equality_ids:
+            raise ValueError("equality delete needs rows and field ids")
+        meta = self.metadata()
+        # by schema-id lookup, never list position (external metadata
+        # need not keep schema ids as list indexes)
+        schema_fields = {
+            f["id"]: f
+            for f in self._schema_by_id(
+                meta.get("current-schema-id", 0)
+            )["fields"]
+        }
+        cols = {}
+        for fid in equality_ids:
+            if fid not in schema_fields:
+                raise ValueError(f"unknown schema field id {fid}")
+            name, typ = schema_fields[fid]["name"], schema_fields[fid]["type"]
+            if typ not in _EQ_DELETE_ARROW_TYPES:
+                raise NotImplementedError(
+                    f"equality delete on {typ!r} column"
+                )
+            cols[name] = pa.array(
+                [r[name] for r in rows],
+                getattr(pa, _EQ_DELETE_ARROW_TYPES[typ])(),
+            )
+        seq = meta["last-sequence-number"] + 1
+        written = _write_delete_parquet(
+            self.dir, f"data/delete-eq-{seq}.parquet", pa.table(cols)
+        )
         return self._commit_snapshot(
             self._live_entries(),
             "delete",
             now_ms,
-            delete_entries=self._live_delete_entries() + [entry],
+            delete_entries=self._live_delete_entries() + [
+                self._delete_entry(
+                    *written, _CONTENT_EQ_DELETES, tuple(equality_ids)
+                )
+            ],
         )
 
     def merge_upsert(
@@ -3085,41 +2976,42 @@ class IcebergTable:
         key_col: str,
         now_ms: int = 0,
     ) -> dict:
-        """MERGE/upsert the Flink-CDC way (round 11): ONE snapshot
-        commits the source rows as a new data file (footer bounds
-        stamped) PLUS an equality-delete file on ``key_col`` covering
-        the source keys.  **No target scan at any size** — the work is
-        O(source), never O(table), because the spec does the matching
-        at read time: the equality delete hides old rows with those
-        keys in STRICTLY older files (sequence <), and the same-commit
-        data file is exempt by exactly that strictness, so the new
-        versions survive.  This is how production streaming writers
-        land CDC upserts on 100 TB tables without reading them.
-        ``source`` is a DataFrame carrying exactly the table's data
-        columns (extra columns refuse; missing ones null-fill is NOT
-        assumed — refuse, an upsert that silently nulls columns is a
-        data bug).  Distinct source keys under
-        :data:`DELETE_ROWS_LIMIT` materialize driver-side for the
-        delete file; above it the EXECUTOR tier (round 12) writes the
-        sorted delete parquet straight from the distributed frame.
-        Partitioned tables (round 12) split the source per partition
-        tuple and land one data file per tuple in the same snapshot,
-        each stamped with its tuple and footer bounds; the equality
-        delete stays table-wide (all-null tuple) so old rows hide
-        across every partition, exactly the Flink-CDC shape.
-        Bucket/truncate/temporal default specs are supported too
-        (round 13): the transform value derives per source row via
+        """MERGE/upsert the Flink-CDC way: ONE snapshot commits the
+        source rows as a new data file (footer bounds stamped) PLUS an
+        equality-delete file on ``key_col`` covering the source keys.
+        **No target scan at any size** — the work is O(source), never
+        O(table), because the spec does the matching at read time: the
+        equality delete hides old rows with those keys in STRICTLY
+        older files (sequence <), and the same-commit data file is
+        exempt by exactly that strictness, so the new versions survive.
+        This is how production streaming writers land CDC upserts on
+        100 TB tables without reading them.  ``source`` is a DataFrame
+        carrying exactly the table's data columns (extra columns
+        refuse; missing ones null-fill is NOT assumed — refuse, an
+        upsert that silently nulls columns is a data bug).  The
+        distinct source keys take the DML faces' one size decision:
+        up to :data:`DELETE_ROWS_LIMIT` they collect and the delete
+        file writes on the driver, above it the sorted delete file
+        writes from the distributed frame.  Partitioned tables split
+        the source per partition tuple and land one data file per
+        tuple in the same snapshot, each stamped with its tuple and
+        footer bounds; the equality delete stays table-wide (all-null
+        tuple) so old rows hide across every partition, exactly the
+        Flink-CDC shape.  Bucket/truncate/temporal default specs are
+        supported too: the transform value derives per source row via
         :func:`transform_column` — the spec-vector-verified functions
         the pruning layers use — with the source column kept in the
         data files.  Renamed histories are fine — equality deletes
         resolve by field id on the read side."""
+        import pyarrow as pa
         from pyspark.sql import functions as F
+
+        from hadoop_sync_spark.io import write_single_parquet
 
         meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]
         names = [f["name"] for f in schema_fields]
-        by_id = {f["id"]: f["name"] for f in schema_fields}
         if key_col not in names:
             raise ValueError(f"no such column {key_col!r}")
         part_cols, field_of, derived, pv_encode = (
@@ -3144,11 +3036,8 @@ class IcebergTable:
             (f["id"], f["type"]) for f in schema_fields
             if f["name"] == key_col
         )
-        if key_typ not in ("long", "int", "string", "double",
-                           "boolean"):
-            # fail BEFORE any file writes — _equality_delete_entry
-            # would refuse this type after the data file landed,
-            # leaving an orphan (r11 review)
+        if key_typ not in _EQ_DELETE_ARROW_TYPES:
+            # fail BEFORE any file writes
             raise NotImplementedError(
                 f"merge_upsert key on {key_typ!r} column: equality "
                 "deletes support scalar long/int/string/double/boolean "
@@ -3156,149 +3045,92 @@ class IcebergTable:
             )
         full = self._spark_schema(sid)
         cap = self.DELETE_ROWS_LIMIT
-        # collect the CAST key values — the delete file must carry
-        # exactly what the data file stores (r11 review)
-        from pyspark.sql import functions as _F
-
+        # the CAST key values — the delete file must carry exactly what
+        # the data file stores
         keys_df = source.select(
-            _F.col(key_col).cast(full[key_col].dataType)
+            F.col(key_col).cast(full[key_col].dataType).alias(key_col)
         ).distinct()
         keys = [r[0] for r in keys_df.limit(cap + 1).collect()]
         if not keys:
             return {"snapshot_id": None, "rows": 0, "keys": 0}
         over_cap_keys = len(keys) > cap
-        if over_cap_keys:
-            # EXECUTOR tier (round 12): the key set never materializes
-            # — the null check becomes an aggregate and the delete
-            # parquet writes from the distributed frame below
-            if keys_df.where(
-                _F.col(key_col).isNull()
-            ).limit(1).count():
-                raise ValueError(
-                    "merge_upsert source contains NULL keys — upsert "
-                    "keys must be non-null"
-                )
-        elif any(k is None for k in keys):
-            # keep the format twins consistent: Delta's `=` match can
-            # never hit NULL while our equality read is null-safe — a
-            # null-keyed upsert is ambiguous, both faces refuse
+        # keep the format twins consistent: Delta's `=` match can never
+        # hit NULL while our equality read is null-safe — a null-keyed
+        # upsert is ambiguous, both faces refuse; an over-cap key set
+        # checks by aggregate
+        if (
+            keys_df.where(F.col(key_col).isNull()).limit(1).count()
+            if over_cap_keys
+            else any(k is None for k in keys)
+        ):
             raise ValueError(
                 "merge_upsert source contains NULL keys — upsert keys "
                 "must be non-null"
             )
+        seq = meta["last-sequence-number"] + 1
+        del_rel = f"data/delete-eq-{seq}.parquet"
+        if over_cap_keys:
+            (written,) = _write_delete_parquets(
+                keys_df.repartition(1).sortWithinPartitions(key_col),
+                self.dir,
+                lambda _: del_rel,
+            )
+        else:
+            written = _write_delete_parquet(self.dir, del_rel, pa.table({
+                key_col: pa.array(
+                    sorted(keys),
+                    getattr(pa, _EQ_DELETE_ARROW_TYPES[key_typ])(),
+                )
+            }))
+        del_entry = self._delete_entry(
+            *written, _CONTENT_EQ_DELETES, (key_fid,)
+        )
         cast_src = source.select(*[
             F.col(n).cast(full[n].dataType) for n in names
         ])
-        seq = meta["last-sequence-number"] + 1
-        from hadoop_sync_spark.io import write_single_parquet
-
-        import pyarrow.parquet as _pq
-
         data_names = [n for n in names if n not in part_cols]
         data_schema_fields = [
             f for f in schema_fields if f["name"] not in part_cols
         ]
-
-        def _data_entry(rel, pv, rows, dest):
-            lb, ub = parquet_column_bounds(dest, data_schema_fields)
-            return {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            }
-
-        data_entries: list[dict] = []
-        n_rows = 0
+        # one (rel, frame, partition) per data file to write
+        outs: list[tuple[str, object, dict]] = [
+            (f"data/part-upsert-{seq}.parquet", cast_src, {})
+        ]
         if part_cols or derived:
-            # per-tuple split; transform fields (round 13) derive
-            # once per row into helper columns, identity fields split
-            # on the source — the append_stream_batch shape
+            # per-tuple split; transform fields derive once per row
+            # into helper columns, identity fields split on the source
+            # — the append_stream_batch shape
             work = cast_src
             for h, _, expr in derived:
                 work = work.withColumn(h, expr)
             key_cols = [*part_cols, *[h for h, _, _ in derived]]
             tuples, cond_for = self._split_tuples(work, key_cols)
+            outs = []
             for gi, t in enumerate(tuples):
-                out = work.where(cond_for(t)).select(*data_names)
-                rel_new = f"data/part-upsert-{seq}-{gi}.parquet"
-                dest = os.path.join(self.dir, rel_new)
-                write_single_parquet(out, dest, "iceberg_upsert_")
-                rows = _pq.read_metadata(dest).num_rows
-                n_rows += rows
-                pv = {field_of[c]: pv_encode(c, t[c])
-                      for c in part_cols}
+                pv = {field_of[c]: pv_encode(c, t[c]) for c in part_cols}
                 pv.update({fn: t[h] for h, fn, _ in derived})
-                data_entries.append(_data_entry(
-                    rel_new, pv, rows, dest,
+                outs.append((
+                    f"data/part-upsert-{seq}-{gi}.parquet",
+                    work.where(cond_for(t)).select(*data_names),
+                    pv,
                 ))
-        else:
-            rel_new = f"data/part-upsert-{seq}.parquet"
-            dest = os.path.join(self.dir, rel_new)
-            write_single_parquet(cast_src, dest, "iceberg_upsert_")
-            n_rows = _pq.read_metadata(dest).num_rows
-            data_entries.append(_data_entry(rel_new, {}, n_rows, dest))
-        if over_cap_keys:
-            # the delete parquet writes straight from the distributed
-            # distinct-keys frame, sorted — the driver sees only the
-            # footer metadata for the manifest entry
-            seq_d = meta["last-sequence-number"] + 1
-            del_rel = f"data/delete-eq-{seq_d}.parquet"
-            del_path = os.path.join(self.dir, del_rel)
+        data_files = []
+        for rel_new, out, pv in outs:
             write_single_parquet(
-                keys_df.sort(key_col), del_path, "iceberg_eqdel_"
+                out, os.path.join(self.dir, rel_new), "iceberg_upsert_"
             )
-            n_keys = _pq.read_metadata(del_path).num_rows
-            spec_fields = self._spec_fields(meta, 0)
-            del_entry = {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_EQ_DELETES,
-                    "file_path": del_rel,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        f["name"]: None for f in spec_fields
-                    },
-                    "record_count": n_keys,
-                    "file_size_in_bytes": os.path.getsize(del_path),
-                    "equality_ids": [key_fid],
-                },
-            }
-        else:
-            n_keys = len(keys)
-            del_entry = self._equality_delete_entry(
-                [{key_col: k}
-                 for k in sorted(keys)],
-                [key_fid],
-            )
+            data_files.append(_written_data_file(
+                self.dir, rel_new, pv, data_schema_fields
+            ))
         snap_id = self._commit_snapshot(
-            self._live_entries() + data_entries,
+            self._live_entries() + [_added_entry(f) for f in data_files],
             "overwrite",
             now_ms,
             delete_entries=self._live_delete_entries() + [del_entry],
         )
-        return {"snapshot_id": snap_id, "rows": n_rows,
-                "keys": n_keys}
+        return {"snapshot_id": snap_id,
+                "rows": sum(f.record_count for f in data_files),
+                "keys": written[1]}
 
     def incremental_scan(
         self,
@@ -3739,69 +3571,6 @@ class IcebergTable:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out
-
-    def _equality_delete_entry(
-        self, rows: list[dict], equality_ids: list[int]
-    ) -> dict:
-        """Write the equality-delete parquet and build its manifest
-        entry WITHOUT committing — shared by
-        :meth:`add_equality_deletes` (its own snapshot) and
-        :meth:`merge_upsert` (one snapshot carrying data + delete)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if not rows or not equality_ids:
-            raise ValueError("equality delete needs rows and field ids")
-        meta = self.metadata()
-        # by schema-id lookup, never list position (external metadata
-        # need not keep schema ids as list indexes — the same round-10
-        # defect the READ side fixed, closed here on the write side)
-        schema_fields = {
-            f["id"]: f
-            for f in self._schema_by_id(
-                meta.get("current-schema-id", 0)
-            )["fields"]
-        }
-        names = []
-        for fid in equality_ids:
-            if fid not in schema_fields:
-                raise ValueError(f"unknown schema field id {fid}")
-            names.append(schema_fields[fid]["name"])
-        seq = meta["last-sequence-number"] + 1
-        rel = f"data/delete-eq-{seq}.parquet"
-        path = os.path.join(self.dir, rel)
-        arrow_t = {
-            "long": pa.int64(),
-            "int": pa.int32(),
-            "string": pa.string(),
-            "double": pa.float64(),
-            "boolean": pa.bool_(),
-        }
-        cols = {}
-        for fid, name in zip(equality_ids, names):
-            typ = schema_fields[fid]["type"]
-            if typ not in arrow_t:
-                raise NotImplementedError(
-                    f"equality delete on {typ!r} column"
-                )
-            cols[name] = pa.array([r[name] for r in rows], arrow_t[typ])
-        pq.write_table(pa.table(cols), path)
-        spec_fields = self._spec_fields(meta, 0)
-        return {
-            "status": _STATUS_ADDED,
-            "snapshot_id": None,
-            "sequence_number": None,
-            "file_sequence_number": None,
-            "data_file": {
-                "content": _CONTENT_EQ_DELETES,
-                "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": {f["name"]: None for f in spec_fields},
-                "record_count": len(rows),
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": list(equality_ids),
-            },
-        }
 
     def _schema_by_id(self, sid: int) -> dict:
         for s in self.metadata().get("schemas", []):
@@ -4536,31 +4305,7 @@ class IcebergTable:
                 e["status"] = _STATUS_DELETED
             entries.append(e)
         entries += [
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,  # inherits the new sequence
-                "file_sequence_number": None,
-                "spec_id": f.spec_id,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": f.path,
-                    "file_format": "PARQUET",
-                    "partition": f.partition,
-                    "record_count": f.record_count,
-                    "file_size_in_bytes": f.file_size,
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.lower_bounds.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.upper_bounds.items())
-                    ] or None,
-                },
-            }
-            for f in new_files
+            {**_added_entry(f), "spec_id": f.spec_id} for f in new_files
         ]
         snap_id = self._commit_snapshot(
             entries,

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BooleanType,
     DataType,
@@ -158,6 +158,17 @@ def decode_file_uri(fp: str) -> str:
     return _unquote(_re.sub("^file:(//)?", "", fp).replace("+", "%2B"))
 
 
+def decode_file_uri_col(fp) -> Column:
+    """Spark-side twin of :func:`decode_file_uri` over a file-URI
+    column (``fp`` a Column or a column name): the same scheme strip,
+    ``+`` protection and percent-decode, evaluated by the executors."""
+    return F.url_decode(
+        F.regexp_replace(
+            F.regexp_replace(fp, "^file:(//)?", ""), r"\+", "%2B"
+        )
+    )
+
+
 def local_frame(
     spark: SparkSession, rows: list, schema: StructType | str
 ) -> DataFrame:
@@ -253,14 +264,9 @@ def attach_file_columns(
         [(r[0], True) + tuple(r[1:]) for r in file_rows],
         schema,
     )
-    decoded = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
-            r"\+",
-            "%2B",
-        )
-    )
-    joined = scan.withColumn("_file", decoded).join(
+    joined = scan.withColumn(
+        "_file", decode_file_uri_col(F.input_file_name())
+    ).join(
         F.broadcast(part_map), "_file", "left"
     )
     err = F.raise_error(

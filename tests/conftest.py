@@ -35,7 +35,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 #: ``SPARK_GRAFT_FULL_TESTS=1``.  Smoke coverage is NOT universal.  The
 #: DML-fuzz flavours with a default-tier seed are the plain, mapped,
 #: partitioned, rollback, stream-append DDL/maintenance and both
-#: executor-tier (cap 0) sequences.  These flavours are slow-only:
+#: executor-tier (cap 0) sequences; test_dml_tiers.py runs all six
+#: row-level DML faces at the default cap and at cap 0 on a
+#: partitioned table (CDF-written on Delta) and requires identical
+#: tables.  These flavours are slow-only:
 #: long, rollback-partitioned-mapped, CDF-written feed, partitioned
 #: merge, bucket-partitioned Iceberg, stream-append rollback and
 #: partitioned, with-maintenance, mapped DDL triple, Iceberg DDL
