@@ -50,9 +50,10 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
+
+from hadoop_sync_spark.commit import replace_file
 
 _MAGIC = b"Obj\x01"
 
@@ -425,11 +426,7 @@ def write_ocf(
         write_long(out, len(payload))
         out.write(payload)
         out.write(sync)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "wb") as fh:
-        fh.write(out.getvalue())
-    os.replace(tmp, path)
-    return path
+    return replace_file(path, out.getvalue())
 
 
 def read_ocf(path: str) -> tuple[dict, list[dict], dict[str, bytes]]:

@@ -225,6 +225,7 @@ _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 
 
+from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
 from hadoop_sync_spark.io import BROADCAST_DELETE_ROW_LIMIT, local_frame
 
 #: broadcast ceiling for row-level delete sets (shared with the Iceberg
@@ -392,6 +393,27 @@ def _protocol_with_writer_feature(proto: dict, feature: str) -> dict:
     out["minWriterVersion"] = 7
     out["writerFeatures"] = sorted(wf)
     return out
+
+
+def _cp_add_type():
+    """The checkpoint ``add`` struct, shared by classic checkpoints and
+    V2 sidecars — protocol-v3 deletion vectors survive checkpointing."""
+    import pyarrow as pa
+
+    return pa.struct([
+        ("path", pa.string()),
+        ("partitionValues", pa.map_(pa.string(), pa.string())),
+        ("size", pa.int64()),
+        ("modificationTime", pa.int64()),
+        ("dataChange", pa.bool_()),
+        ("deletionVector", pa.struct([
+            ("storageType", pa.string()),
+            ("pathOrInlineDv", pa.string()),
+            ("offset", pa.int32()),
+            ("sizeInBytes", pa.int32()),
+            ("cardinality", pa.int64()),
+        ])),
+    ])
 
 
 def _strip_checkpoint_nulls(row: dict) -> dict:
@@ -1105,19 +1127,27 @@ class DeltaLog:
 
     # ---- minimal committer (fixture builder + registry export) ---------
     def commit(self, version: int, actions: list[dict]) -> str:
-        """Write one commit atomically (temp file + rename, the same
-        put-if-absent discipline as the registry's pointer swap).
-        Refuses to overwrite an existing version."""
+        """Write commit ``version`` put-if-absent
+        (:func:`hadoop_sync_spark.commit.put_if_absent`, the primitive
+        every registry, Delta and Iceberg version commits through): of
+        two writers racing one version exactly one wins, and the loser
+        raises :class:`~hadoop_sync_spark.commit.CommitConflict` (a
+        ``FileExistsError``) with nothing of its commit visible.  The
+        write faces commit at the version after the snapshot they were
+        built from (:meth:`_check_free`)."""
         os.makedirs(self.log_dir, exist_ok=True)
-        path = _commit_path(self.table_dir, version)
-        if os.path.exists(path):
-            raise FileExistsError(f"Delta commit {version} already exists")
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for a in actions:
-                fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-        os.rename(tmp, path)
-        return path
+        return put_if_absent(
+            _commit_path(self.table_dir, version),
+            "".join(
+                json.dumps(a, separators=(",", ":")) + "\n" for a in actions
+            ).encode(),
+        )
+
+    def _check_free(self, version: int) -> None:
+        """Raise ``CommitConflict`` if commit ``version`` exists — called
+        just before a write face's first file write, so a face that lost
+        the race never overwrites the winner's version-named files."""
+        check_free(_commit_path(self.table_dir, version))
 
     # ---- transaction identifiers (round 12; PROTOCOL.md "Transaction
     # Identifiers" — the idempotent-writer / streaming exactly-once
@@ -1429,7 +1459,7 @@ class DeltaLog:
             schema, separators=(",", ":")
         )
         self.commit(
-            self.latest_version() + 1,
+            snap.version + 1,
             [
                 {"commitInfo": {"timestamp": now_ms,
                                 "operation": "ADD COLUMNS"}},
@@ -1481,7 +1511,7 @@ class DeltaLog:
             new_schema, separators=(",", ":")
         )
         self.commit(
-            self.latest_version() + 1,
+            snap.version + 1,
             [
                 {"commitInfo": {"timestamp": now_ms,
                                 "operation": "RENAME COLUMN"}},
@@ -1532,7 +1562,7 @@ class DeltaLog:
             schema, separators=(",", ":")
         )
         self.commit(
-            self.latest_version() + 1,
+            snap.version + 1,
             [
                 {"commitInfo": {"timestamp": now_ms,
                                 "operation": "DROP COLUMNS"}},
@@ -1657,7 +1687,8 @@ class DeltaLog:
         import shutil as _shutil
         import tempfile as _tempfile
 
-        version = self.latest_version() + 1
+        version = snap.version + 1
+        self._check_free(version)
         rewritten: set[str] = set()
         adds: list[dict] = []
         bytes_in = 0
@@ -1873,6 +1904,7 @@ class DeltaLog:
         snap = self.snapshot()
         if rel_path not in snap.live:
             raise ValueError(f"{rel_path} is not live in the snapshot")
+        self._check_free(version)
         desc = self._dv_descriptor(rel_path, positions, version, storage)
         prev = dict(snap.live[rel_path])
         new_add = dict(prev)
@@ -2155,6 +2187,7 @@ class DeltaLog:
 
         cap = self.DELETE_WHERE_ROW_LIMIT
         matched = [] if pairs is None else pairs.limit(cap + 1).collect()
+        self._check_free(version)
         abs_of = {
             rel: os.path.abspath(os.path.join(self.table_dir, rel))
             for rel in snap.live
@@ -2323,7 +2356,7 @@ class DeltaLog:
         phys, pairs = self._match_pairs(
             spark, snap, column_filter, "delete_where"
         )
-        version = self.latest_version() + 1
+        version = snap.version + 1
         with self._fresh_positions(
             spark, snap, pairs, version, storage, "delete_where"
         ) as fresh:
@@ -2592,7 +2625,7 @@ class DeltaLog:
         phys, pairs = self._match_pairs(
             spark, snap, column_filter, "update_where"
         )
-        version = self.latest_version() + 1
+        version = snap.version + 1
         with self._fresh_positions(
             spark, snap, pairs, version, storage, "update_where"
         ) as fresh:
@@ -2699,7 +2732,7 @@ class DeltaLog:
                 "merge_upsert source contains NULL keys — upsert keys "
                 "must be non-null"
             )
-        version = self.latest_version() + 1
+        version = snap.version + 1
         # IN-list pushdown only for SMALL key sets (independent of the
         # 1M position cap): Catalyst planning of a large literal IN
         # list dominates the scan well before the cap — measured 4x at
@@ -2887,12 +2920,12 @@ class DeltaLog:
             raise ValueError("give version OR timestamp_ms")
         if timestamp_ms is not None:
             version = self.version_at(timestamp_ms)
-        head = self.latest_version()
+        cur = self.snapshot()
+        head = cur.version
         if not 0 <= version <= head:
             raise ValueError(
                 f"version {version} out of range 0..{head}"
             )
-        cur = self.snapshot()
         tgt = self.snapshot(version)
         adds = [
             dict(a)
@@ -3407,33 +3440,7 @@ class DeltaLog:
                          ("lastUpdated", pa.int64())]
                     ),
                 ),
-                pa.field(
-                    "add",
-                    pa.struct(
-                        [
-                            ("path", pa.string()),
-                            ("partitionValues",
-                             pa.map_(pa.string(), pa.string())),
-                            ("size", pa.int64()),
-                            ("modificationTime", pa.int64()),
-                            ("dataChange", pa.bool_()),
-                            # protocol-v3 deletion vectors survive
-                            # checkpointing (round 8)
-                            (
-                                "deletionVector",
-                                pa.struct(
-                                    [
-                                        ("storageType", pa.string()),
-                                        ("pathOrInlineDv", pa.string()),
-                                        ("offset", pa.int32()),
-                                        ("sizeInBytes", pa.int32()),
-                                        ("cardinality", pa.int64()),
-                                    ]
-                                ),
-                            ),
-                        ]
-                    ),
-                ),
+                pa.field("add", _cp_add_type()),
                 pa.field(
                     "remove", pa.struct([("path", pa.string())])
                 ),
@@ -3444,14 +3451,20 @@ class DeltaLog:
              for c in self._CP_COLS},
             schema=schema,
         )
-        cp_path = _checkpoint_path(self.table_dir, snap.version)
-        pq.write_table(table, cp_path)
-        with open(
-            os.path.join(self.log_dir, _LAST_CHECKPOINT), "w",
-            encoding="utf-8",
-        ) as fh:
-            json.dump({"version": snap.version, "size": len(rows)}, fh)
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        cp_path = replace_file(
+            _checkpoint_path(self.table_dir, snap.version),
+            buf.getvalue().to_pybytes(),
+        )
+        self._point_last_checkpoint(snap.version, len(rows))
         return cp_path
+
+    def _point_last_checkpoint(self, version: int, size: int) -> None:
+        replace_file(
+            os.path.join(self.log_dir, _LAST_CHECKPOINT),
+            json.dumps({"version": version, "size": size}).encode(),
+        )
 
     def write_checkpoint_v2(
         self, version: int | None = None, sidecars: int = 1
@@ -3508,8 +3521,8 @@ class DeltaLog:
                     f"v2Checkpoint feature and commits are immutable — "
                     f"checkpoint the head (version {head}) instead"
                 )
-            self.commit(head + 1, [{"protocol": upgraded}])
-            snap = self.snapshot(head + 1)
+            self.commit(snap.version + 1, [{"protocol": upgraded}])
+            snap = self.snapshot(snap.version + 1)
         proto = upgraded
         uid = _uuid.UUID(
             bytes=_hashlib.md5(
@@ -3541,36 +3554,7 @@ class DeltaLog:
         if sidecars and adds:
             side_dir = os.path.join(self.log_dir, "_sidecars")
             os.makedirs(side_dir, exist_ok=True)
-            add_schema = pa.schema(
-                [
-                    pa.field(
-                        "add",
-                        pa.struct(
-                            [
-                                ("path", pa.string()),
-                                ("partitionValues",
-                                 pa.map_(pa.string(), pa.string())),
-                                ("size", pa.int64()),
-                                ("modificationTime", pa.int64()),
-                                ("dataChange", pa.bool_()),
-                                (
-                                    "deletionVector",
-                                    pa.struct(
-                                        [
-                                            ("storageType", pa.string()),
-                                            ("pathOrInlineDv",
-                                             pa.string()),
-                                            ("offset", pa.int32()),
-                                            ("sizeInBytes", pa.int32()),
-                                            ("cardinality", pa.int64()),
-                                        ]
-                                    ),
-                                ),
-                            ]
-                        ),
-                    )
-                ]
-            )
+            add_type = _cp_add_type()
             for i in range(sidecars):
                 chunk = adds[i::sidecars]
                 rows = []
@@ -3582,38 +3566,30 @@ class DeltaLog:
                     ]
                     rows.append(a)
                 name = f"{uid}-{i}.parquet"
-                side_path = os.path.join(side_dir, name)
+                buf = pa.BufferOutputStream()
                 pq.write_table(
                     pa.table(
-                        {"add": pa.array(
-                            rows, type=add_schema.field("add").type
-                        )},
-                        schema=add_schema,
+                        {"add": pa.array(rows, type=add_type)},
+                        schema=pa.schema([pa.field("add", add_type)]),
                     ),
-                    side_path,
+                    buf,
                 )
+                data = buf.getvalue().to_pybytes()
+                replace_file(os.path.join(side_dir, name), data)
                 actions.append(
-                    {
-                        "sidecar": {
-                            "path": name,
-                            "sizeInBytes": os.path.getsize(side_path),
-                        }
-                    }
+                    {"sidecar": {"path": name, "sizeInBytes": len(data)}}
                 )
         else:
             actions.extend({"add": a} for a in adds)
-        cp_path = os.path.join(
-            self.log_dir,
-            f"{snap.version:020d}.checkpoint.{uid}.json",
+        cp_path = replace_file(
+            os.path.join(
+                self.log_dir, f"{snap.version:020d}.checkpoint.{uid}.json"
+            ),
+            "".join(
+                json.dumps(a, separators=(",", ":")) + "\n" for a in actions
+            ).encode(),
         )
-        with open(cp_path, "w", encoding="utf-8") as fh:
-            for a in actions:
-                fh.write(json.dumps(a, separators=(",", ":")) + "\n")
-        with open(
-            os.path.join(self.log_dir, _LAST_CHECKPOINT), "w",
-            encoding="utf-8",
-        ) as fh:
-            json.dump({"version": snap.version, "size": n_rows}, fh)
+        self._point_last_checkpoint(snap.version, n_rows)
         return cp_path
 
     # ---- lifecycle (the registry's A23 ops on the open format) --------

@@ -24,15 +24,22 @@ The metadata tree implemented:
   count, file size).  A file is live in a snapshot iff its newest entry
   has status ≠ DELETED and ``content`` = data.
 
-Commits follow Iceberg's optimistic protocol shape: write the new
-manifest + manifest list + ``v(N+1).metadata.json`` via O_EXCL
-put-if-absent (two writers racing the same version: exactly one wins),
-then point ``version-hint.text`` at it — the swap-a-pointer discipline
-the registry's A23 publish (registry.py::_publish) and the Delta
-committer already use.  ``delete`` is copy-on-write at the metadata
-level: a replacement manifest rewrites surviving entries as EXISTING and
-removed ones as DELETED, exactly how Iceberg's ``overwrite`` snapshots
-express file-level deletes.  **Merge-on-read is implemented too**
+Commits follow Iceberg's optimistic protocol shape through the one
+commit primitive the registry and the Delta log share
+(:mod:`hadoop_sync_spark.commit`): every write face reads its base
+version once, derives the new version and every version-named file
+(sequence number, snapshot id, manifest and delete-file names) from it,
+checks that ``v(N+1).metadata.json`` is still free before its first
+file write, writes the manifests + manifest list, commits
+``v(N+1).metadata.json`` put-if-absent (two writers racing the same
+version: exactly one wins, the loser raises ``CommitConflict``), then
+points ``version-hint.text`` at it.  Readers probe past the hint, so a
+crash between the metadata and the hint loses nothing.
+
+``delete`` is copy-on-write at the metadata level: a replacement
+manifest rewrites surviving entries as EXISTING and removed ones as
+DELETED, exactly how Iceberg's ``overwrite`` snapshots express
+file-level deletes.  **Merge-on-read is implemented too**
 (round 8): position-delete files (reserved-field-id (file_path, pos)
 parquet, content=1) and equality-delete files (equality_ids columns,
 content=2) commit into separate delete manifests with spec-correct v2
@@ -65,6 +72,7 @@ import os
 from dataclasses import dataclass, field as dataclasses_field
 
 from hadoop_sync_spark.avro_codec import read_ocf, write_ocf
+from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
 from hadoop_sync_spark.io import (
     BROADCAST_DELETE_ROW_LIMIT as _BROADCAST_DELETE_ROW_LIMIT,
     local_frame,
@@ -807,10 +815,17 @@ class IcebergTable:
     def _hint_path(self) -> str:
         return os.path.join(self.meta_dir, "version-hint.text")
 
+    def _meta_path(self, version: int) -> str:
+        return os.path.join(self.meta_dir, f"v{version}.metadata.json")
+
     def current_version(self) -> int:
+        """The newest metadata version: the hint, then every
+        ``v{N+1}.metadata.json`` past it (a committer can crash between
+        its metadata file and the hint, as in Iceberg's Hadoop
+        catalog)."""
         try:
             with open(self._hint_path()) as fh:
-                return int(fh.read().strip())
+                v = int(fh.read().strip())
         except FileNotFoundError:
             versions = [
                 int(n[1:].split(".")[0])
@@ -819,7 +834,23 @@ class IcebergTable:
             ]
             if not versions:
                 raise ValueError(f"no Iceberg metadata in {self.meta_dir}")
-            return max(versions)
+            v = max(versions)
+        while os.path.exists(self._meta_path(v + 1)):
+            v += 1
+        return v
+
+    def _base(self) -> tuple[int, dict]:
+        """``(version, metadata)`` read once — the base a write face
+        builds from and commits after."""
+        v = self.current_version()
+        return v, self.metadata(v)
+
+    def _check_free(self, base: tuple[int, dict]) -> None:
+        """Raise ``CommitConflict`` if the metadata version after
+        ``base`` exists — called just before a write face's first file
+        write, so a face that lost the race never overwrites the
+        winner's version-named files."""
+        check_free(self._meta_path(base[0] + 1))
 
     def metadata(self, version: int | None = None) -> dict:
         """Parsed vN.metadata.json.  Deliberately UNCACHED: one read()
@@ -828,7 +859,7 @@ class IcebergTable:
         would have to survive external tampering/expiry of version
         files (a round-10 attempt broke exactly there)."""
         v = self.current_version() if version is None else version
-        with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as fh:
+        with open(self._meta_path(v)) as fh:
             meta = json.load(fh)
         if meta.get("format-version") not in (1, 2):
             raise NotImplementedError(
@@ -846,7 +877,12 @@ class IcebergTable:
         as_of_timestamp_ms: int | None = None,
         ref: str | None = None,
     ) -> dict:
-        meta = self.metadata()
+        return self._snapshot_in(
+            self.metadata(), snapshot_id, as_of_timestamp_ms, ref
+        )
+
+    def _snapshot_in(self, meta, snapshot_id, as_of_timestamp_ms, ref):
+        """:meth:`snapshot` resolved against the metadata ``meta``."""
         snaps = meta.get("snapshots", [])
         if not snaps:
             raise ValueError("table has no snapshots")
@@ -858,7 +894,7 @@ class IcebergTable:
             entry = (meta.get("refs") or {}).get(ref)
             if entry is None:
                 raise ValueError(f"no such ref {ref!r}")
-            return self.snapshot(snapshot_id=entry["snapshot-id"])
+            return self._snapshot_in(meta, entry["snapshot-id"], None, None)
         if snapshot_id is not None:
             for s in snaps:
                 if s["snapshot-id"] == snapshot_id:
@@ -877,14 +913,16 @@ class IcebergTable:
             # snapshot-log is append-ordered (spec): the LAST eligible
             # entry is the state at that time — max() would keep the
             # first of equal timestamps and resolve to an older snapshot
-            return self.snapshot(snapshot_id=eligible[-1]["snapshot-id"])
+            return self._snapshot_in(
+                meta, eligible[-1]["snapshot-id"], None, None
+            )
         cur = meta.get("current-snapshot-id")
         if cur is None:
             # the spec makes current-snapshot-id optional (staged /
             # rolled-back tables); recursing with the same arguments
             # would never terminate
             raise ValueError("table has no current snapshot")
-        return self.snapshot(snapshot_id=cur)
+        return self._snapshot_in(meta, cur, None, None)
 
     # ----------------------------------------------------------------- scan
     def _spec_fields(self, meta: dict, spec_id: int) -> list[dict]:
@@ -995,9 +1033,11 @@ class IcebergTable:
         partition_filter: dict | None,
         column_filter: dict | None = None,
         ref: str | None = None,
+        meta: dict | None = None,
     ) -> list[DataFile]:
-        meta = self.metadata()
-        snap = self.snapshot(snapshot_id, as_of_timestamp_ms, ref=ref)
+        if meta is None:
+            meta = self.metadata()
+        snap = self._snapshot_in(meta, snapshot_id, as_of_timestamp_ms, ref)
         col_info: dict[str, tuple[int, str]] = {}
         if column_filter:
             # filter names resolve against the schema the read's output
@@ -1947,26 +1987,25 @@ class IcebergTable:
         return t
 
     def _write_metadata(self, version: int, meta: dict) -> None:
-        path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
-        # put-if-absent: O_EXCL loses cleanly to a concurrent committer
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(meta, fh, indent=1)
-        tmp = f"{self._hint_path()}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._hint_path())
+        """Commit metadata ``version`` put-if-absent, then point the
+        hint at it."""
+        put_if_absent(
+            self._meta_path(version), json.dumps(meta, indent=1).encode()
+        )
+        replace_file(self._hint_path(), str(version).encode())
 
     def _commit_snapshot(
         self,
+        base: tuple[int, dict],
         entries: list[dict],
         operation: str,
         now_ms: int,
-        counts: tuple[int, int, int, int, int, int] | None = None,
         delete_entries: list[dict] | None = None,
         summary_extra: dict | None = None,
     ) -> int:
-        """Write manifest(s) + manifest list + next metadata version.
+        """Write manifest(s) + manifest list + the metadata version
+        after ``base`` (the ``(version, metadata)`` pair from
+        :meth:`_base` the entries were built from).
         ``entries`` fill the DATA manifest; ``delete_entries`` (v2
         merge-on-read position/equality delete files), when present,
         get their own manifest with ``content=1`` in the manifest list.
@@ -1974,9 +2013,7 @@ class IcebergTable:
         ``min_sequence_number`` is the min over explicit entry sequences
         (EXISTING carry-forwards) and the new sequence (ADDED inherit).
         The snapshot id is deterministic (sequence-derived) — same
-        no-ambient-randomness rule as the Avro sync marker.  ``counts``
-        is accepted for backward compatibility and ignored (statuses are
-        authoritative).
+        no-ambient-randomness rule as the Avro sync marker.
 
         Partition-spec evolution (spec "Partition Evolution"): a
         manifest holds entries of ONE spec (its partition struct and
@@ -1987,11 +2024,11 @@ class IcebergTable:
         CURRENT default spec — and each group writes its own manifest
         stamped with that ``partition_spec_id``.  Single-spec tables
         produce exactly the one-manifest layout they always did."""
-        meta = self.metadata()
-        version = self.current_version()
+        version, meta = base
         seq = meta["last-sequence-number"] + 1
         snap_id = 1000 + seq
         default_spec = meta.get("default-spec-id", 0)
+        self._check_free(base)
 
         def stat_counts(es):
             f = {0: 0, 1: 0, 2: 0}
@@ -2154,11 +2191,12 @@ class IcebergTable:
         default spec — a key the default spec does not define refuses,
         the writer-side half of spec evolution; missing keys are null
         partition values, which the spec allows)."""
-        meta0 = self.metadata()
+        base = self._base()
+        meta = base[1]
         spec_names = {
             f["name"]
             for f in self._spec_fields(
-                meta0, meta0.get("default-spec-id", 0)
+                meta, meta.get("default-spec-id", 0)
             )
         }
         for f in files:
@@ -2168,12 +2206,12 @@ class IcebergTable:
                     f"partition keys {sorted(unknown)} not in the "
                     "default partition spec"
                 )
-        entries = self._live_entries() + [_added_entry(f) for f in files]
         return self._commit_snapshot(
-            entries,
+            base,
+            self._live_entries(base) + [_added_entry(f) for f in files],
             "append",
             now_ms,
-            delete_entries=self._live_delete_entries(),
+            delete_entries=self._live_delete_entries(base),
         )
 
     # ---- streaming exactly-once (round 12; the Iceberg twin of
@@ -2358,10 +2396,11 @@ class IcebergTable:
         import hashlib as _hashlib
         import shutil as _shutil
 
+        base = self._base()
+        meta = base[1]
         last = self.committed_epoch(query_id)
         if last is not None and epoch_id <= last:
             return None
-        meta = self.metadata()
         schema_fields = self._schema_by_id(
             meta["current-schema-id"]
         )["fields"]
@@ -2376,6 +2415,7 @@ class IcebergTable:
             )
         batch_df = batch_df.select(*want)
         tag = _hashlib.md5(query_id.encode()).hexdigest()[:8]
+        self._check_free(base)
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
         bounds_fields = [f for f in schema_fields
                          if f["name"] not in part_cols]
@@ -2429,10 +2469,11 @@ class IcebergTable:
                 )))
             _shutil.rmtree(staging, ignore_errors=True)
         return self._commit_snapshot(
-            self._live_entries() + entries,
+            base,
+            self._live_entries(base) + entries,
             "append",
             now_ms,
-            delete_entries=self._live_delete_entries(),
+            delete_entries=self._live_delete_entries(base),
             summary_extra={
                 self._EPOCH_QUERY_KEY: query_id,
                 self._EPOCH_ID_KEY: str(epoch_id),
@@ -2443,7 +2484,8 @@ class IcebergTable:
         """Copy-on-write delete: surviving entries rewritten EXISTING,
         removed paths written DELETED (data files untouched on disk —
         time travel to older snapshots still resolves them)."""
-        prior = self._live_entries()
+        base = self._base()
+        prior = self._live_entries(base)
         entries = []
         deleted_f = deleted_r = 0
         for e in prior:
@@ -2457,10 +2499,11 @@ class IcebergTable:
         if not deleted_f:
             raise ValueError("delete matched no live data files")
         return self._commit_snapshot(
+            base,
             entries,
             "overwrite",
             now_ms,
-            delete_entries=self._live_delete_entries(),
+            delete_entries=self._live_delete_entries(base),
         )
 
     def add_position_deletes(
@@ -2475,16 +2518,19 @@ class IcebergTable:
         sequence ≤ this commit's sequence."""
         if not deletes:
             raise ValueError("no delete positions given")
-        seq = self.metadata()["last-sequence-number"] + 1
+        base = self._base()
+        seq = base[1]["last-sequence-number"] + 1
+        self._check_free(base)
         written = _write_delete_parquet(
             self.dir, f"data/delete-pos-{seq}.parquet",
             _pos_delete_table(sorted(deletes)),
         )
         return self._commit_snapshot(
-            self._live_entries(),
+            base,
+            self._live_entries(base),
             "delete",
             now_ms,
-            delete_entries=self._live_delete_entries()
+            delete_entries=self._live_delete_entries(base)
             + [self._delete_entry(*written, _CONTENT_POS_DELETES)],
         )
 
@@ -2619,7 +2665,7 @@ class IcebergTable:
 
     @contextlib.contextmanager
     def _fresh_positions(
-        self, spark, cand: list, pairs, seq: int, pos_dels: list = ()
+        self, spark, cand: list, pairs, base: tuple, pos_dels: list = ()
     ):
         """The DML faces' one size decision.  The matched ``pairs`` map
         to their manifest paths (a broadcast of the candidate list;
@@ -2636,7 +2682,8 @@ class IcebergTable:
           rows per ``delete-pos-<seq>-<i>`` parquet from the
           executors, in the spec's delete-file sort order.
 
-        Both call :func:`_write_delete_parquet`.  Yields a
+        Both call :func:`_write_delete_parquet`, after checking that
+        the version after ``base`` is still free.  Yields a
         :class:`_FreshPositions`; the context owns the persisted
         frame."""
         import math
@@ -2671,6 +2718,8 @@ class IcebergTable:
         )
         cap = self.DELETE_ROWS_LIMIT
         matched = m.limit(cap + 1).collect()
+        seq = base[1]["last-sequence-number"] + 1
+        self._check_free(base)
         persisted = None
         try:
             if len(matched) <= cap:
@@ -2744,19 +2793,20 @@ class IcebergTable:
         the read path, so pre-rename files match too.  How the matches
         materialize is decided once by their count
         (:meth:`_fresh_positions`)."""
+        base = self._base()
         cand, _, pairs = self._match_pairs(
             spark, column_filter, "delete_rows"
         )
         if pairs is None:
             return 0
-        seq = self.metadata()["last-sequence-number"] + 1
-        with self._fresh_positions(spark, cand, pairs, seq) as fresh:
+        with self._fresh_positions(spark, cand, pairs, base) as fresh:
             if fresh.n:
                 self._commit_snapshot(
-                    self._live_entries(),
+                    base,
+                    self._live_entries(base),
                     "delete",
                     now_ms,
-                    delete_entries=self._live_delete_entries()
+                    delete_entries=self._live_delete_entries(base)
                     + fresh.entries,
                 )
             return fresh.n
@@ -2796,6 +2846,8 @@ class IcebergTable:
 
         if not set_values:
             raise ValueError("update_rows needs at least one SET")
+        base = self._base()
+        meta = base[1]
         deletes = self.delete_files()
         if any(d.content == _CONTENT_EQ_DELETES for d in deletes):
             raise NotImplementedError(
@@ -2803,7 +2855,6 @@ class IcebergTable:
                 "cannot see which rows they hide and would resurrect "
                 "them — compact the table first"
             )
-        meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]
         names = {f["name"] for f in schema_fields}
@@ -2864,7 +2915,7 @@ class IcebergTable:
             for c, v in set_values.items()
         }
         with self._fresh_positions(
-            spark, cand, pairs, seq,
+            spark, cand, pairs, base,
             [d for d in deletes if d.content == _CONTENT_POS_DELETES],
         ) as fresh:
             if not fresh.n:
@@ -2900,10 +2951,12 @@ class IcebergTable:
                     self.dir, rel_new, dict(pv_t), schema_fields
                 )))
             self._commit_snapshot(
-                self._live_entries() + new_entries,
+                base,
+                self._live_entries(base) + new_entries,
                 "overwrite",
                 now_ms,
-                delete_entries=self._live_delete_entries() + fresh.entries,
+                delete_entries=self._live_delete_entries(base)
+                + fresh.entries,
             )
             return fresh.n
 
@@ -2932,7 +2985,8 @@ class IcebergTable:
 
         if not rows or not equality_ids:
             raise ValueError("equality delete needs rows and field ids")
-        meta = self.metadata()
+        base = self._base()
+        meta = base[1]
         # by schema-id lookup, never list position (external metadata
         # need not keep schema ids as list indexes)
         schema_fields = {
@@ -2955,14 +3009,16 @@ class IcebergTable:
                 getattr(pa, _EQ_DELETE_ARROW_TYPES[typ])(),
             )
         seq = meta["last-sequence-number"] + 1
+        self._check_free(base)
         written = _write_delete_parquet(
             self.dir, f"data/delete-eq-{seq}.parquet", pa.table(cols)
         )
         return self._commit_snapshot(
-            self._live_entries(),
+            base,
+            self._live_entries(base),
             "delete",
             now_ms,
-            delete_entries=self._live_delete_entries() + [
+            delete_entries=self._live_delete_entries(base) + [
                 self._delete_entry(
                     *written, _CONTENT_EQ_DELETES, tuple(equality_ids)
                 )
@@ -3008,7 +3064,8 @@ class IcebergTable:
 
         from hadoop_sync_spark.io import write_single_parquet
 
-        meta = self.metadata()
+        base = self._base()
+        meta = base[1]
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]
         names = [f["name"] for f in schema_fields]
@@ -3069,6 +3126,7 @@ class IcebergTable:
             )
         seq = meta["last-sequence-number"] + 1
         del_rel = f"data/delete-eq-{seq}.parquet"
+        self._check_free(base)
         if over_cap_keys:
             (written,) = _write_delete_parquets(
                 keys_df.repartition(1).sortWithinPartitions(key_col),
@@ -3123,10 +3181,11 @@ class IcebergTable:
                 self.dir, rel_new, pv, data_schema_fields
             ))
         snap_id = self._commit_snapshot(
-            self._live_entries() + [_added_entry(f) for f in data_files],
+            base,
+            self._live_entries(base) + [_added_entry(f) for f in data_files],
             "overwrite",
             now_ms,
-            delete_entries=self._live_delete_entries() + [del_entry],
+            delete_entries=self._live_delete_entries(base) + [del_entry],
         )
         return {"snapshot_id": snap_id,
                 "rows": sum(f.record_count for f in data_files),
@@ -3684,7 +3743,7 @@ class IcebergTable:
         points ``current-schema-id`` at it, and bumps the metadata
         version — no snapshot is committed (Iceberg's own shape: DDL is
         a metadata swap).  Returns the new field id."""
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         cur = self._schema_by_id(meta["current-schema-id"])
         if any(f["name"] == name for f in cur["fields"]):
             raise ValueError(f"column {name!r} already exists")
@@ -3693,25 +3752,24 @@ class IcebergTable:
                 f"no Iceberg mapping for Spark type {spark_type!r}"
             )
         fid = meta["last-column-id"] + 1
-        new_sid = max(
-            s.get("schema-id", 0) for s in meta["schemas"]
-        ) + 1
-        new_schema = json.loads(json.dumps(cur))
-        new_schema["schema-id"] = new_sid
-        new_schema["fields"].append(
-            {
-                "id": fid,
-                "name": name,
-                "required": False,
-                "type": _SPARK_TO_ICEBERG[spark_type],
-            }
-        )
-        meta["schemas"].append(new_schema)
-        meta["current-schema-id"] = new_sid
         meta["last-column-id"] = fid
-        meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._commit_schema(version, meta, cur, cur["fields"] + [{
+            "id": fid,
+            "name": name,
+            "required": False,
+            "type": _SPARK_TO_ICEBERG[spark_type],
+        }], now_ms)
         return fid
+
+    def _commit_schema(self, version, meta, cur, fields, now_ms) -> None:
+        """The schema-evolution faces' one step: ``cur`` with ``fields``
+        becomes a new current schema of ``meta``, committed at
+        ``version + 1``."""
+        sid = max(s.get("schema-id", 0) for s in meta["schemas"]) + 1
+        meta["schemas"].append({**cur, "schema-id": sid, "fields": fields})
+        meta["current-schema-id"] = sid
+        meta["last-updated-ms"] = now_ms
+        self._write_metadata(version + 1, meta)
 
     def rename_column(self, old: str, new: str, now_ms: int = 0) -> None:
         """Schema evolution, the rename face (round 10; metadata-only
@@ -3733,7 +3791,7 @@ class IcebergTable:
         Partition-source columns refuse here: identity spec field
         NAMES were fixed at create time, and a renamed source would
         silently diverge from the attach column."""
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         cur = self._schema_by_id(meta["current-schema-id"])
         if not any(f["name"] == old for f in cur["fields"]):
             raise ValueError(f"no such column {old!r}")
@@ -3748,16 +3806,10 @@ class IcebergTable:
                         f"(spec field {pf['name']!r}) — renaming it "
                         "would diverge from the spec field name"
                     )
-        new_sid = max(s.get("schema-id", 0) for s in meta["schemas"]) + 1
-        new_schema = json.loads(json.dumps(cur))
-        new_schema["schema-id"] = new_sid
-        for f in new_schema["fields"]:
-            if f["name"] == old:
-                f["name"] = new
-        meta["schemas"].append(new_schema)
-        meta["current-schema-id"] = new_sid
-        meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._commit_schema(version, meta, cur, [
+            {**f, "name": new} if f["name"] == old else f
+            for f in cur["fields"]
+        ], now_ms)
 
     def create_ref(
         self,
@@ -3782,7 +3834,7 @@ class IcebergTable:
             raise ValueError(f"ref type {ref_type!r}: tag or branch")
         if name == "main":
             raise ValueError("'main' is writer-maintained")
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         refs = meta.setdefault("refs", {})
         if name in refs:
             raise ValueError(f"ref {name!r} already exists")
@@ -3797,19 +3849,19 @@ class IcebergTable:
             raise ValueError(f"snapshot {sid} not found")
         refs[name] = {"snapshot-id": sid, "type": ref_type}
         meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._write_metadata(version + 1, meta)
 
     def drop_ref(self, name: str, now_ms: int = 0) -> None:
         """Remove a named ref (its snapshot becomes expirable again)."""
         if name == "main":
             raise ValueError("'main' is writer-maintained")
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         refs = meta.get("refs") or {}
         if name not in refs:
             raise ValueError(f"no such ref {name!r}")
         del refs[name]
         meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._write_metadata(version + 1, meta)
 
     def rollback_to(
         self,
@@ -3849,11 +3901,11 @@ class IcebergTable:
                 "give snapshot_id OR as_of_timestamp_ms"
             )
         by_time = as_of_timestamp_ms is not None
+        version, meta = self._base()
         if by_time:
-            snapshot_id = self.snapshot(
-                as_of_timestamp_ms=as_of_timestamp_ms
+            snapshot_id = self._snapshot_in(
+                meta, None, as_of_timestamp_ms, None
             )["snapshot-id"]
-        meta = json.loads(json.dumps(self.metadata()))
         snaps = meta.get("snapshots", [])
         if by_time and meta.get("current-snapshot-id") == snapshot_id:
             # a TIMESTAMP that resolves to the current snapshot is an
@@ -3875,7 +3927,7 @@ class IcebergTable:
             {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
         ]
         meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._write_metadata(version + 1, meta)
 
     def update_spec(
         self,
@@ -3906,7 +3958,7 @@ class IcebergTable:
         per source)."""
         import datetime as _dt
 
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         if self._rename_history():
             raise NotImplementedError(
                 "update_spec on a renamed column history"
@@ -4068,7 +4120,7 @@ class IcebergTable:
             max((f["field-id"] for f in new_fields), default=999),
         )
         meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._write_metadata(version + 1, meta)
         return new_sid
 
     def promote_column(
@@ -4081,7 +4133,7 @@ class IcebergTable:
         type and Spark's parquet reader upcasts narrower physical
         columns natively — no file rewrite, no per-file plan.  Anything
         off the lattice refuses."""
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         cur = self._schema_by_id(meta["current-schema-id"])
         field = next(
             (f for f in cur["fields"] if f["name"] == name), None
@@ -4102,16 +4154,10 @@ class IcebergTable:
                 f"promotion {field['type']!r} -> {new_t!r} is off the "
                 "spec's lattice (int->long, float->double)"
             )
-        new_sid = max(s.get("schema-id", 0) for s in meta["schemas"]) + 1
-        new_schema = json.loads(json.dumps(cur))
-        new_schema["schema-id"] = new_sid
-        for f in new_schema["fields"]:
-            if f["name"] == name:
-                f["type"] = new_t
-        meta["schemas"].append(new_schema)
-        meta["current-schema-id"] = new_sid
-        meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._commit_schema(version, meta, cur, [
+            {**f, "type": new_t} if f["name"] == name else f
+            for f in cur["fields"]
+        ], now_ms)
 
     def drop_column(self, name: str, now_ms: int = 0) -> None:
         """Schema evolution, the drop face (metadata-only like
@@ -4122,7 +4168,7 @@ class IcebergTable:
         ``last-column-id`` only grows, so a later add cannot alias a
         dropped column's id (the invariant the rename/promotion check
         relies on)."""
-        meta = json.loads(json.dumps(self.metadata()))
+        version, meta = self._base()
         cur = self._schema_by_id(meta["current-schema-id"])
         if not any(f["name"] == name for f in cur["fields"]):
             raise ValueError(f"no such column {name!r}")
@@ -4137,16 +4183,9 @@ class IcebergTable:
                         f"(spec field {pf['name']!r}) — drop the "
                         "partition field first"
                     )
-        new_sid = max(s.get("schema-id", 0) for s in meta["schemas"]) + 1
-        new_schema = json.loads(json.dumps(cur))
-        new_schema["schema-id"] = new_sid
-        new_schema["fields"] = [
-            f for f in new_schema["fields"] if f["name"] != name
-        ]
-        meta["schemas"].append(new_schema)
-        meta["current-schema-id"] = new_sid
-        meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._commit_schema(version, meta, cur, [
+            f for f in cur["fields"] if f["name"] != name
+        ], now_ms)
 
     def expire_metadata(self, keep_last: int = 5) -> list[int]:
         """Metadata-log retention (the spec's
@@ -4197,11 +4236,14 @@ class IcebergTable:
         relies on.
 
         Crash contract: data for new files stages under ``data/`` with
-        names no manifest references until the final O_EXCL metadata
-        swap in :meth:`_commit_snapshot` — a crash anywhere before that
-        leaves every existing snapshot intact and only unreferenced
-        debris, which :meth:`vacuum` reclaims.  Returns a summary dict,
-        or None when nothing qualified (a no-op makes NO commit)."""
+        names no manifest references until the final put-if-absent
+        metadata commit in :meth:`_commit_snapshot` — a crash anywhere
+        before that leaves every existing snapshot intact and only
+        unreferenced debris, which :meth:`vacuum` reclaims.  Returns a
+        summary dict, or None when nothing qualified (a no-op makes NO
+        commit)."""
+        base = self._base()
+        meta = base[1]
         live = [f for f in self.files() if f.content == _CONTENT_DATA]
         # bins never mix specs: the rewritten file re-enters under the
         # SAME spec its sources were written under (the bin's partition
@@ -4238,13 +4280,12 @@ class IcebergTable:
         import shutil as _shutil
         import tempfile as _tempfile
 
-        seq = self.metadata()["last-sequence-number"] + 1
+        seq = meta["last-sequence-number"] + 1
+        self._check_free(base)
         rewritten: set[str] = set()
         new_files: list[DataFile] = []
         rows_in = bytes_in = 0
-        cur_schema = self._schema_by_id(
-            self.metadata()["current-schema-id"]
-        )
+        cur_schema = self._schema_by_id(meta["current-schema-id"])
         for i, (bin_spec, part, fs) in enumerate(bins):
             raws = {f.raw_path for f in fs}
             # the rewrite column list comes from the snapshot's PINNED
@@ -4277,12 +4318,7 @@ class IcebergTable:
             finally:
                 _shutil.rmtree(staging, ignore_errors=True)
             n = spark.read.parquet(dest).count()
-            lb, ub = parquet_column_bounds(
-                dest,
-                self._schema_by_id(
-                    self.metadata()["current-schema-id"]
-                )["fields"],
-            )
+            lb, ub = parquet_column_bounds(dest, cur_schema["fields"])
             new_files.append(
                 DataFile(
                     path=rel,
@@ -4299,7 +4335,7 @@ class IcebergTable:
             bytes_in += sum(f.file_size for f in fs)
 
         entries = []
-        for e in self._live_entries():
+        for e in self._live_entries(base):
             if e["data_file"]["file_path"] in rewritten:
                 e = dict(e)
                 e["status"] = _STATUS_DELETED
@@ -4308,10 +4344,11 @@ class IcebergTable:
             {**_added_entry(f), "spec_id": f.spec_id} for f in new_files
         ]
         snap_id = self._commit_snapshot(
+            base,
             entries,
             "replace",
             now_ms,
-            delete_entries=self._live_delete_entries(),
+            delete_entries=self._live_delete_entries(base),
         )
         return {
             "snapshot_id": snap_id,
@@ -4343,6 +4380,7 @@ class IcebergTable:
         nothing dangling → no commit, empty list."""
         import pyarrow.parquet as _pq
 
+        base = self._base()
         data = [f for f in self.files() if f.content == _CONTENT_DATA]
         dropped: set[str] = set()
         for d in self.delete_files():
@@ -4363,13 +4401,14 @@ class IcebergTable:
         if not dropped:
             return []
         del_entries = []
-        for e in self._live_delete_entries():
+        for e in self._live_delete_entries(base):
             if e["data_file"]["file_path"] in dropped:
                 e = dict(e)
                 e["status"] = _STATUS_DELETED
             del_entries.append(e)
         self._commit_snapshot(
-            self._live_entries(),
+            base,
+            self._live_entries(base),
             "delete",
             now_ms,
             delete_entries=del_entries,
@@ -4391,7 +4430,7 @@ class IcebergTable:
         removes unreferenced ones, the same two-step split the
         registry's versioned publish uses (drop versions, then
         vacuum)."""
-        meta = self.metadata()
+        version, meta = self._base()
         snaps = meta.get("snapshots", [])
         cur = meta.get("current-snapshot-id")
         keep: set[int] = {cur} if cur is not None else set()
@@ -4444,7 +4483,7 @@ class IcebergTable:
             if e["snapshot-id"] in keep
         ]
         meta["last-updated-ms"] = now_ms
-        self._write_metadata(self.current_version() + 1, meta)
+        self._write_metadata(version + 1, meta)
         for path in sorted(dead_meta - live_meta):
             if os.path.exists(path):
                 os.remove(path)
@@ -4523,14 +4562,17 @@ class IcebergTable:
             for f in files
         ]
 
-    def _live_entries(self) -> list[dict]:
-        meta = self.metadata()
-        if meta.get("current-snapshot-id") is None:
+    def _live_entries(self, base, content=_MANIFEST_DATA) -> list[dict]:
+        """The files live in ``base``'s current snapshot — data files,
+        or delete files with ``content=_MANIFEST_DELETES`` — as
+        EXISTING entries."""
+        meta = base[1]
+        sid = meta.get("current-snapshot-id")
+        if sid is None:
             return []
-        return self._carry_entries(self.files())
+        return self._carry_entries(
+            self._scan_manifests(content, sid, None, None, meta=meta)
+        )
 
-    def _live_delete_entries(self) -> list[dict]:
-        meta = self.metadata()
-        if meta.get("current-snapshot-id") is None:
-            return []
-        return self._carry_entries(self.delete_files())
+    def _live_delete_entries(self, base) -> list[dict]:
+        return self._live_entries(base, _MANIFEST_DELETES)

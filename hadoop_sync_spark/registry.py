@@ -17,11 +17,15 @@ update).  This module is that engine for a Spark world:
 - diff = two anti-joins (`HdfsSynchronizer.java:172-188`)
 - sync = validate-then-publish with the reference's invariants
   (`HdfsSynchronizer.java:263-273,282-289`)
-- transaction = stage a full new catalog version in a scratch directory,
-  then atomically swap a pointer file (`os.replace`) — the engine-level
-  analogue of the reference's BEGIN/COMMIT/ROLLBACK
-  (`CitusMasterNode.java:108-126`); a crash mid-sync leaves the previous
-  version live and queryable (`README.md:15-19`).
+- transaction = read the base catalog version once, build the next one
+  from it, and publish it at base + 1 through the one commit primitive
+  (:mod:`hadoop_sync_spark.commit`, shared with the Delta and Iceberg
+  committers): the version's files are put-if-absent, the pointer is
+  replaced atomically, and a publish whose base is no longer current
+  raises :class:`CommitConflict` — the engine-level analogue of the
+  reference's BEGIN/COMMIT/ROLLBACK (`CitusMasterNode.java:108-126`); a
+  crash or a lost race mid-sync leaves the previous version live and
+  queryable (`README.md:15-19`).
 
 Scale posture: catalog I/O is parquet via pyarrow (columnar, O(#files) rows
 — at 100 TB / 128 MB files that's ~800k rows, megabytes of footprint).
@@ -49,6 +53,12 @@ from urllib.parse import unquote, urlparse
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from hadoop_sync_spark.commit import (
+    CommitConflict,
+    put_if_absent,
+    replace_file,
+)
 
 _POINTER = "VERSION"
 _TABLES = "tables.json"
@@ -96,6 +106,32 @@ def _shard_id(path: str) -> int:
             (1 << 64) - 1
         )
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _shard_row(name: str, f: dict, min_max: tuple) -> dict:
+    """The catalog shard row of listed file ``f`` of table ``name``."""
+    return {
+        "table_name": name,
+        "shard_id": _shard_id(f["path"]),
+        "path": f["path"],
+        "size": f["size"],
+        "mtime_ns": f["mtime_ns"],
+        "min_value": min_max[0],
+        "max_value": min_max[1],
+    }
+
+
+def _placement_row(name: str, f: dict, host: str) -> dict:
+    """The catalog placement row of listed file ``f``'s replica on
+    ``host``."""
+    return {
+        "table_name": name,
+        "shard_id": _shard_id(f["path"]),
+        "path": f["path"],
+        "size": f["size"],
+        "mtime_ns": f["mtime_ns"],
+        "hostname": host,
+    }
 
 
 class _ReadConf(NamedTuple):
@@ -289,6 +325,9 @@ class MetadataDifference:
     # placement-level diffs: identity is (path, size, mtime_ns, hostname)
     new_placements: list[dict] = field(default_factory=list)
     old_placements: list[dict] = field(default_factory=list)
+    #: the catalog version the catalog side was read from — the base a
+    #: sync built from this diff publishes after
+    catalog_version: int = 0
 
     @property
     def empty(self) -> bool:
@@ -382,51 +421,51 @@ class Registry:
 
     def _publish(
         self,
+        base: int,
         tables: dict[str, dict],
         shards: list[dict],
-        placements: list[dict] | None = None,
+        placements: list[dict],
         have_lock: bool = False,
     ) -> int:
-        """Stage version N+1 fully, then atomically swap the pointer.
-
-        The pointer write is `os.replace` of a same-directory temp file —
-        atomic on POSIX — so a reader sees either version N or N+1, never a
-        torn catalog.  Analogue of the reference's single COMMIT
-        (`HdfsSynchronizer.java:321`); any exception before the replace
-        leaves the old version live (rollback, `:323-325`).
+        """Publish the catalog built from version ``base`` as version
+        ``base + 1``: under the publish lock, raise
+        :class:`CommitConflict` unless ``base`` is still current, write
+        the version's files put-if-absent, then replace the pointer.  A
+        reader sees version ``base`` or ``base + 1``, never a torn
+        catalog.  Analogue of the reference's single COMMIT
+        (`HdfsSynchronizer.java:321`); any exception before the pointer
+        swap leaves the old version live (rollback, `:323-325`).
 
         ``have_lock`` lets a caller that already holds the publish lock
         (compaction, which must keep its journal+rename+publish sequence
         under ONE critical section) skip re-acquisition."""
         lock = None if have_lock else self._acquire_publish_lock()
         try:
-            # version counter is read UNDER the lock: without it two
-            # concurrent publishers both compute N+1 and the loser's
-            # stale-dir cleanup would rmtree the winner's LIVE version
-            new_version = self._current_version() + 1
-            vdir = self._version_dir(new_version)
+            if self._current_version() != base:
+                raise CommitConflict(
+                    f"catalog {self.meta_dir} moved past version {base}"
+                )
+            vdir = self._version_dir(base + 1)
             if os.path.exists(vdir):  # stale leftover from a crashed attempt
                 shutil.rmtree(vdir)
             os.makedirs(vdir)
-            with open(os.path.join(vdir, _TABLES), "w") as f:
-                json.dump(tables, f, indent=1, sort_keys=True)
-            pq.write_table(
-                pa.Table.from_pylist(shards, schema=_SHARD_SCHEMA),
-                os.path.join(vdir, _SHARDS),
+            put_if_absent(
+                os.path.join(vdir, _TABLES),
+                json.dumps(tables, indent=1, sort_keys=True).encode(),
             )
-            if placements is None:  # carry the live placement set forward
-                placements = self._load_placements()
-            pq.write_table(
-                pa.Table.from_pylist(placements, schema=_PLACEMENT_SCHEMA),
-                os.path.join(vdir, _PLACEMENTS),
+            for name, rows, schema in (
+                (_SHARDS, shards, _SHARD_SCHEMA),
+                (_PLACEMENTS, placements, _PLACEMENT_SCHEMA),
+            ):
+                buf = pa.BufferOutputStream()
+                pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+                put_if_absent(
+                    os.path.join(vdir, name), buf.getvalue().to_pybytes()
+                )
+            replace_file(
+                os.path.join(self.meta_dir, _POINTER), str(base + 1).encode()
             )
-            tmp = os.path.join(self.meta_dir, f".{_POINTER}.tmp")
-            with open(tmp, "w") as f:
-                f.write(str(new_version))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(self.meta_dir, _POINTER))
-            return new_version
+            return base + 1
         finally:
             if lock is not None:
                 os.unlink(lock)
@@ -435,19 +474,18 @@ class Registry:
     _LOCK_STALE_S = 300.0
 
     def _acquire_publish_lock(self) -> str:
-        """Exclusive writer lock (O_CREAT|O_EXCL lockfile) serializing
+        """Exclusive writer lock (a put-if-absent lockfile) serializing
         publishes — the engine-side analogue of the master catalog taking
         row locks inside the reference's transaction.  Readers never take
-        it (the pointer swap keeps them lock-free).  A lockfile left by a
-        crashed publisher is stolen after `_LOCK_STALE_S`."""
+        it (the pointer swap keeps them lock-free).  It does not wait: a
+        held lock raises ``RuntimeError`` and the caller retries.  A
+        lockfile left by a crashed publisher is stolen after
+        `_LOCK_STALE_S`."""
         path = os.path.join(self.meta_dir, ".publish.lock")
         for _ in range(2):
             try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                return path
-            except FileExistsError:
+                return put_if_absent(path, str(os.getpid()).encode())
+            except CommitConflict:
                 try:
                     age = time.time() - os.path.getmtime(path)
                 except OSError:
@@ -507,14 +545,23 @@ class Registry:
         `hdfs_directory_path` option, `CitusMasterNode.java:338-381`).
         Idempotent overwrite, like the reference's drop-if-exists DDL
         (`CitusWorkerNode.java:119-134`)."""
-        tables = self._load_tables()
-        shards = self._load_shards()
+        self._bind(name, dir_path, partition_column, None)
+
+    def _bind(self, name, dir_path, partition_column, fmt) -> None:
+        """Publish the base catalog with ``name`` bound to one table
+        entry — the one step behind :meth:`register`,
+        :meth:`register_delta` and :meth:`register_iceberg`."""
+        base = self._current_version()
+        tables = self._load_tables(base)
         tables[name] = {
             "dir_path": os.path.abspath(dir_path),
             "partition_column": partition_column,
+            **({"format": fmt} if fmt else {}),
             "registered_at": time.strftime("%Y-%m-%d %H:%M:%S"),
         }
-        self._publish(tables, shards)
+        self._publish(
+            base, tables, self._load_shards(base), self._load_placements(base)
+        )
 
     def tables(self) -> dict[str, dict]:
         return self._load_tables()
@@ -575,15 +622,7 @@ class Registry:
         shard adds/removes, so the reference's incremental-sync workflow
         (`HdfsSynchronizer.java:142-205`) runs verbatim against the open
         format.  Idempotent overwrite like :meth:`register`."""
-        tables = self._load_tables()
-        shards = self._load_shards()
-        tables[name] = {
-            "dir_path": os.path.abspath(table_dir),
-            "partition_column": None,
-            "format": "delta",
-            "registered_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-        }
-        self._publish(tables, shards)
+        self._bind(name, table_dir, None, "delta")
 
     @staticmethod
     def _delta_live_files(table_dir: str) -> list[dict]:
@@ -610,15 +649,7 @@ class Registry:
         so copy-on-write deletes drop shards even while the data files
         remain on disk for time travel, and everything downstream of
         diff is the unchanged A12-A16 workflow."""
-        tables = self._load_tables()
-        shards = self._load_shards()
-        tables[name] = {
-            "dir_path": os.path.abspath(table_dir),
-            "partition_column": None,
-            "format": "iceberg",
-            "registered_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-        }
-        self._publish(tables, shards)
+        self._bind(name, table_dir, None, "iceberg")
 
     @staticmethod
     def _iceberg_live_files(table_dir: str) -> list[dict]:
@@ -661,7 +692,8 @@ class Registry:
         replica moving hosts is a pure placement change — empty shard
         diff, non-empty placement diff — exactly the case the reference's
         placement walk handles separately from shard DDL."""
-        tables = self._load_tables()
+        base = self._current_version()
+        tables = self._load_tables(base)
         if name not in tables:
             raise KeyError(f"table not registered: {name}")
         # open-format tables substitute the snapshot's live list for the
@@ -681,7 +713,7 @@ class Registry:
         fs = {(f["path"], f["size"], f["mtime_ns"]): f for f in fs_files}
         cat = {
             (s["path"], s["size"], s["mtime_ns"]): s
-            for s in self.shards(name)
+            for s in self.shards(name, base)
         }
         new_keys = fs.keys() - cat.keys()
         old_keys = cat.keys() - fs.keys()
@@ -693,7 +725,7 @@ class Registry:
                 fs_place[k] = {**f, "hostname": host}
         cat_place = {
             (p["path"], p["size"], p["mtime_ns"], p["hostname"]): p
-            for p in self.placements(name)
+            for p in self.placements(name, base)
         }
         new_p = fs_place.keys() - cat_place.keys()
         old_p = cat_place.keys() - fs_place.keys()
@@ -704,6 +736,7 @@ class Registry:
             new_placements=[fs_place[k] for k in sorted(new_p)],
             old_placements=[cat_place[k] for k in sorted(old_p)],
             fs_version=fs_version,
+            catalog_version=base,
         )
 
     def _fetch_min_max(
@@ -781,18 +814,21 @@ class Registry:
         a new catalog version with the shard rows untouched.
 
         Idempotent: an immediate re-run has an empty diff and publishes
-        nothing (`README.md:10-13`)."""
-        tables = self._load_tables()
-        if name not in tables:
-            raise KeyError(f"table not registered: {name}")
+        nothing (`README.md:10-13`).  Tables, shards and placements are
+        read from the one catalog version the diff was taken at, and the
+        publish commits at that version + 1 or raises
+        :class:`CommitConflict`, so a concurrent sync of another table
+        is never silently overwritten."""
         self._recover_compaction()  # roll forward any crashed compaction
         d = self.diff(name)
+        base = d.catalog_version
+        tables = self._load_tables(base)
         fmt = tables[name].get("format")
         if d.empty and (
             fmt is None
             or tables[name].get("synced_format_version") == d.fs_version
         ):
-            return SyncResult(name, self._current_version(), 0, 0, noop=True)
+            return SyncResult(name, base, 0, 0, noop=True)
         # an open-format commit that changed only ROW-level state (a
         # deletion vector / MoR delete file) moves no shards but must
         # still publish: catalog-scoped reads apply the deletes of the
@@ -815,28 +851,18 @@ class Registry:
         }
         keep = [
             s
-            for s in self._load_shards()
+            for s in self._load_shards(base)
             if s["table_name"] != name
             or (s["path"], s["size"], s["mtime_ns"]) in unchanged_keys
         ]
-        added = []
-        for f in d.new_files:
-            # a zero-row or all-null file gets (None, None) — pruning
-            # treats missing stats as keep-always, so this stays sound.
-            # Genuine scan failures raise inside the Spark job itself
-            # (the A18 replica-fallback concern is Spark task retry).
-            mn, mx = stats.get(f["path"], (None, None))
-            added.append(
-                {
-                    "table_name": name,
-                    "shard_id": _shard_id(f["path"]),
-                    "path": f["path"],
-                    "size": f["size"],
-                    "mtime_ns": f["mtime_ns"],
-                    "min_value": mn,
-                    "max_value": mx,
-                }
-            )
+        # a zero-row or all-null file gets (None, None) — pruning
+        # treats missing stats as keep-always, so this stays sound.
+        # Genuine scan failures raise inside the Spark job itself
+        # (the A18 replica-fallback concern is Spark task retry).
+        added = [
+            _shard_row(name, f, stats.get(f["path"], (None, None)))
+            for f in d.new_files
+        ]
 
         new_shards = keep + added
         # A16 invariant: an old shard must leave no surviving row; a new
@@ -856,21 +882,13 @@ class Registry:
         }
         keep_place = [
             p
-            for p in self._load_placements()
+            for p in self._load_placements(base)
             if p["table_name"] != name
             or (p["path"], p["size"], p["mtime_ns"], p["hostname"])
             not in old_place_keys
         ]
         added_place = [
-            {
-                "table_name": name,
-                "shard_id": _shard_id(p["path"]),
-                "path": p["path"],
-                "size": p["size"],
-                "mtime_ns": p["mtime_ns"],
-                "hostname": p["hostname"],
-            }
-            for p in d.new_placements
+            _placement_row(name, p, p["hostname"]) for p in d.new_placements
         ]
         new_placements = keep_place + added_place
         seen_place = set()
@@ -889,7 +907,7 @@ class Registry:
         if removed_keys & by_key.keys():
             raise RuntimeError("old shard survived staging — aborting publish")
 
-        version = self._publish(tables, new_shards, new_placements)
+        version = self._publish(base, tables, new_shards, new_placements)
         return SyncResult(
             name,
             version,
@@ -926,7 +944,7 @@ class Registry:
         2. write each bin with Spark into a hidden ``_compact_stage`` dir
            (underscore-prefixed → invisible to listing and readers; a
            crash here leaves only debris that the next pass sweeps);
-        3. write the journal (tmp + fsync + atomic replace) — the COMMIT
+        3. write the journal (``commit.replace_file``) — the COMMIT
            POINT: it names every staged file, its final path, and every
            original to delete;
         4. rename staged → final, delete originals, publish the swapped
@@ -1063,12 +1081,8 @@ class Registry:
                 "refetch_stats": refetch_stats,
             }
             jpath = os.path.join(self.meta_dir, self._JOURNAL)
-            jtmp = jpath + ".tmp"
-            with open(jtmp, "w") as f:
-                json.dump(journal, f, indent=1)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(jtmp, jpath)  # ---- commit point ----
+            replace_file(jpath, json.dumps(journal, indent=1).encode())
+            # ---- commit point ----
 
             version = self._apply_compaction(journal, have_lock=True)
             os.unlink(jpath)
@@ -1132,7 +1146,8 @@ class Registry:
 
         old_set = set(journal["old_paths"])
         final_paths = [final for _, final in journal["renames"]]
-        shards = self._load_shards()
+        base = self._current_version()
+        shards = self._load_shards(base)
         catalog_paths = {
             s["path"] for s in shards if s["table_name"] == name
         }
@@ -1140,9 +1155,9 @@ class Registry:
             old_set & catalog_paths
         )
         if already:  # crash landed after the publish — nothing left to do
-            return self._current_version()
+            return base
 
-        tables = self._load_tables()
+        tables = self._load_tables(base)
         new_files = []
         for p in final_paths:
             st = os.stat(p)
@@ -1159,37 +1174,23 @@ class Registry:
             for s in shards
             if s["table_name"] != name or s["path"] not in old_set
         ]
-        for f in new_files:
-            mn, mx = stats.get(f["path"], (None, None))
-            keep.append(
-                {
-                    "table_name": name,
-                    "shard_id": _shard_id(f["path"]),
-                    "path": f["path"],
-                    "size": f["size"],
-                    "mtime_ns": f["mtime_ns"],
-                    "min_value": mn,
-                    "max_value": mx,
-                }
-            )
+        keep += [
+            _shard_row(name, f, stats.get(f["path"], (None, None)))
+            for f in new_files
+        ]
         placements = [
             p
-            for p in self._load_placements()
+            for p in self._load_placements(base)
             if p["table_name"] != name or p["path"] not in old_set
         ]
-        for f in new_files:
-            for host in self.placement_hosts(f):
-                placements.append(
-                    {
-                        "table_name": name,
-                        "shard_id": _shard_id(f["path"]),
-                        "path": f["path"],
-                        "size": f["size"],
-                        "mtime_ns": f["mtime_ns"],
-                        "hostname": host,
-                    }
-                )
-        return self._publish(tables, keep, placements, have_lock=have_lock)
+        placements += [
+            _placement_row(name, f, host)
+            for f in new_files
+            for host in self.placement_hosts(f)
+        ]
+        return self._publish(
+            base, tables, keep, placements, have_lock=have_lock
+        )
 
     def table_ddl_events(self, name: str) -> list[str]:
         """Ordered DDL statements that recreate the table and its per-shard

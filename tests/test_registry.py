@@ -574,10 +574,10 @@ def test_compact_crash_mid_apply_recovers_idempotently(
 
     real_publish = Registry._publish
 
-    def boom(self, tables, shards, placements=None, have_lock=False):
+    def boom(self, *args, have_lock=False):
         if have_lock:  # only the compaction-held publish
             raise OSError("injected crash before catalog swap")
-        return real_publish(self, tables, shards, placements, have_lock)
+        return real_publish(self, *args)
 
     monkeypatch.setattr(Registry, "_publish", boom)
     with pytest.raises(OSError, match="injected"):
