@@ -226,7 +226,13 @@ _LAST_CHECKPOINT = "_last_checkpoint"
 
 
 from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
-from hadoop_sync_spark.io import BROADCAST_DELETE_ROW_LIMIT, local_frame
+from hadoop_sync_spark.io import (
+    BROADCAST_DELETE_ROW_LIMIT,
+    local_frame,
+    plan_bins,
+    split_tuples,
+    write_parquet,
+)
 
 #: broadcast ceiling for row-level delete sets (shared with the Iceberg
 #: reader; rationale at io.BROADCAST_DELETE_ROW_LIMIT)
@@ -344,6 +350,32 @@ def _resolve_dv_positions(table_dir: str, desc: dict) -> list[int]:
     if _z.crc32(data) != crc:
         raise ValueError("deletion-vector checksum mismatch")
     return _dv_deserialize(data)
+
+
+#: partition column types whose values round-trip the protocol's
+#: string encoding exactly (the set the read path's CAST inverts)
+_PART_OK = {T.LongType(), T.IntegerType(), T.StringType(), T.BooleanType()}
+
+
+def _check_partition_types(schema, part_cols: list, face: str) -> None:
+    for c in part_cols:
+        if schema[c].dataType not in _PART_OK:
+            raise NotImplementedError(
+                f"{face} on a table partitioned by "
+                f"{schema[c].dataType.simpleString()} column {c!r}: only "
+                "long/int/string/boolean partition values round-trip the "
+                "protocol's string encoding exactly"
+            )
+
+
+def _pv_str(v):
+    """A partition value in the protocol's ``partitionValues`` string
+    encoding."""
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
 
 
 def _commit_path(table_dir: str, version: int) -> str:
@@ -1241,7 +1273,7 @@ class DeltaLog:
         watermark advances.
 
         Crash-safety without a rename-capable commit service: parts
-        move from a per-(app,batch) staging dir to DETERMINISTIC names
+        move from a staging dir beside them to DETERMINISTIC names
         ``txn-<app8>-<batch>-<i>`` in the table root BEFORE the commit;
         a crash between move and commit leaves orphans a retry
         OVERWRITES byte-for-byte (same batch => same contents per the
@@ -1252,7 +1284,6 @@ class DeltaLog:
         only file names and one commit JSON — metadata scale, same as
         every other write face."""
         import hashlib as _hashlib
-        import shutil as _shutil
         import uuid as _uuid
 
         tag = _hashlib.md5(app_id.encode()).hexdigest()[:8]
@@ -1309,47 +1340,20 @@ class DeltaLog:
             # one file per tuple in the SAME single txn commit,
             # partitionValues in the protocol's string encoding (the
             # set the read path's CAST inverts exactly)
-            _PART_OK = {T.LongType(), T.IntegerType(), T.StringType(),
-                        T.BooleanType()}
-            for c in part_cols:
-                if schema[c].dataType not in _PART_OK:
-                    raise NotImplementedError(
-                        f"append_stream_batch on a table partitioned "
-                        f"by {schema[c].dataType.simpleString()} "
-                        f"column {c!r}: only long/int/string/boolean "
-                        "partition values round-trip the string "
-                        "encoding exactly"
-                    )
-
-            def _pv_str(v):
-                if v is None:
-                    return None
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                return str(v)
-
-            from hadoop_sync_spark.io import write_single_parquet
-
+            _check_partition_types(schema, part_cols,
+                                   "append_stream_batch")
             data_names = [c for c in batch_df.columns
                           if c not in part_cols]
-            tuples = batch_df.select(*part_cols).distinct().collect()
+            tuples, cond_for = split_tuples(batch_df, part_cols)
             adds = []
-            for gi, t in enumerate(sorted(
-                tuples,
-                key=lambda r: tuple((v is None, v) for v in r),
-            )):
-                cond = None
-                for c in part_cols:
-                    term = F.col(c).eqNullSafe(F.lit(t[c]))
-                    cond = term if cond is None else cond & term
+            for gi, t in enumerate(tuples):
                 rel = f"txn-{tag}-{batch_id:010d}-p{gi:05d}.parquet"
-                write_single_parquet(
-                    batch_df.where(cond).select(*self._phys_cols(
+                write_parquet(
+                    batch_df.where(cond_for(t)).select(*self._phys_cols(
                         snap, phys or {n: n for n in data_names},
                         data_names,
                     )),
                     os.path.join(self.table_dir, rel),
-                    "delta_txn_",
                 )
                 adds.append(self.add_action_for(
                     rel,
@@ -1358,26 +1362,16 @@ class DeltaLog:
                                      for c in part_cols},
                 ))
         else:
-            staging = os.path.join(
-                self.table_dir, f"_txn_staging-{tag}-{batch_id}"
-            )
-            _shutil.rmtree(staging, ignore_errors=True)
             out_df = (batch_df.select(*self._phys_cols(
                 snap, phys, batch_df.columns
             )) if phys else batch_df)
-            out_df.write.mode("overwrite").parquet(staging)
-            parts = sorted(
-                n for n in os.listdir(staging)
-                if n.endswith(".parquet")
-                and not n.startswith((".", "_"))
-            )
-            adds = []
-            for i, name in enumerate(parts):
-                rel = f"txn-{tag}-{batch_id:010d}-{i:05d}.parquet"
-                os.replace(os.path.join(staging, name),
-                           os.path.join(self.table_dir, rel))
-                adds.append(self.add_action_for(rel))
-            _shutil.rmtree(staging, ignore_errors=True)
+            adds = [
+                self.add_action_for(os.path.basename(p))
+                for p in write_parquet(out_df, lambda i: os.path.join(
+                    self.table_dir,
+                    f"txn-{tag}-{batch_id:010d}-{i:05d}.parquet",
+                ))
+            ]
         actions: list[dict] = [
             {"commitInfo": {"timestamp": now_ms,
                             "operation": "STREAMING UPDATE",
@@ -1591,11 +1585,11 @@ class DeltaLog:
         target_bytes: int = 128 << 20,
         min_group: int = 2,
     ) -> dict | None:
-        """OPTIMIZE-style bin-packing compaction (round 9; the Delta twin
-        of :meth:`IcebergTable.compact` — ``Registry.compact`` delegates
-        here for delta tables).  Per partition tuple, live files under
-        ``target_bytes`` are greedily binned; each bin of ≥ ``min_group``
-        files rewrites into one file **with deletion vectors applied**
+        """OPTIMIZE-style bin-packing compaction (``Registry.compact``
+        delegates here for delta tables).  Per partition tuple, live
+        files under ``target_bytes`` are packed by
+        :func:`hadoop_sync_spark.io.plan_bins`, the one planner of every
+        compactor; each bin of ≥ ``min_group`` files rewrites into one file **with deletion vectors applied**
         (the rewrite reads through :meth:`read`'s DV path restricted to
         the bin), and one commit carries ``remove`` (old) + ``add`` (new)
         with ``dataChange: false`` — the protocol's marker that the
@@ -1636,33 +1630,22 @@ class DeltaLog:
             {pf["pn"] for pf in phys_fields if pf["name"] in part_cols}
             if mode != "none" else set(part_cols)
         )
-        by_part: dict[tuple, list[dict]] = {}
-        for rel in snap.files:
-            a = snap.live[rel]
-            pv = a.get("partitionValues") or {}
-            if part_keys and not part_keys <= set(pv):
-                raise NotImplementedError(
-                    "compaction over value-less partitioned adds is not "
-                    "supported — log partitionValues"
-                )
-            by_part.setdefault(tuple(sorted(pv.items())), []).append(a)
-        bins: list[tuple[dict, list[dict]]] = []
-        for key in sorted(by_part):
-            smalls = sorted(
-                (a for a in by_part[key] if a["size"] < target_bytes),
-                key=lambda a: -a["size"],
+        live = [snap.live[rel] for rel in snap.files]
+        if part_keys and any(
+            not part_keys <= set(a.get("partitionValues") or {})
+            for a in live
+        ):
+            raise NotImplementedError(
+                "compaction over value-less partitioned adds is not "
+                "supported — log partitionValues"
             )
-            cur: list[dict] = []
-            cur_bytes = 0
-            for a in smalls:
-                if cur and cur_bytes + a["size"] > target_bytes:
-                    if len(cur) >= min_group:
-                        bins.append((dict(key), cur))
-                    cur, cur_bytes = [], 0
-                cur.append(a)
-                cur_bytes += a["size"]
-            if len(cur) >= min_group:
-                bins.append((dict(key), cur))
+        bins = plan_bins(
+            live,
+            lambda a: a["size"],
+            lambda a: tuple(sorted((a.get("partitionValues") or {}).items())),
+            target_bytes,
+            min_group,
+        )
         if not bins:
             return None
 
@@ -1682,10 +1665,6 @@ class DeltaLog:
             for f in _json.loads(snap.schema_json)["fields"]
             if f["name"] not in part_cols
         ]
-
-        import glob as _glob
-        import shutil as _shutil
-        import tempfile as _tempfile
 
         version = snap.version + 1
         self._check_free(version)
@@ -1728,21 +1707,10 @@ class DeltaLog:
                 else:
                     out = self.read(spark, paths=rels).select(*data_cols)
                 rel = f"part-compact-{version:010d}-{i}.parquet"
-                dest = os.path.join(self.table_dir, rel)
-                staging = _tempfile.mkdtemp(prefix="delta_compact_")
-                try:
-                    out.coalesce(1).write.mode("overwrite").parquet(
-                        staging
-                    )
-                    (part_file,) = _glob.glob(
-                        os.path.join(staging, "part-*.parquet")
-                    )
-                    os.replace(part_file, dest)
-                finally:
-                    _shutil.rmtree(staging, ignore_errors=True)
+                write_parquet(out, os.path.join(self.table_dir, rel))
                 adds.append(
                     self.add_action_for(
-                        rel, partitionValues=pv, dataChange=False
+                        rel, partitionValues=dict(pv), dataChange=False
                     )
                 )
                 rewritten |= rels
@@ -2476,8 +2444,6 @@ class DeltaLog:
         where ``df`` carries the table's PHYSICAL data columns plus
         ``_change_type`` — the same physical layout as data files, so
         mapped tables read their change feed like their data."""
-        from hadoop_sync_spark.io import write_single_parquet
-
         os.makedirs(
             os.path.join(self.table_dir, "_change_data"), exist_ok=True
         )
@@ -2485,7 +2451,7 @@ class DeltaLog:
         for i, (pv, df) in enumerate(pieces):
             rel = f"_change_data/cdc-{version:010d}-{i}.parquet"
             dest = os.path.join(self.table_dir, rel)
-            write_single_parquet(df, dest, "delta_cdc_")
+            write_parquet(df, dest)
             actions.append({"cdc": {
                 "path": rel,
                 "partitionValues": dict(pv),
@@ -2532,8 +2498,6 @@ class DeltaLog:
         enables the change data feed."""
         from pyspark.sql import Column
 
-        from hadoop_sync_spark.io import write_single_parquet
-
         schema = snap.schema()
         cdf = self._cdf_enabled(snap)
         adds: list[dict] = []
@@ -2556,10 +2520,7 @@ class DeltaLog:
                 snap, phys, [f.name for f in data_fields], exprs=exprs
             ))
             rel_new = f"part-update-{version:010d}-{gi}.parquet"
-            write_single_parquet(
-                out, os.path.join(self.table_dir, rel_new),
-                "delta_update_",
-            )
+            write_parquet(out, os.path.join(self.table_dir, rel_new))
             adds.append(
                 self.add_action_for(
                     rel_new, partitionValues=dict(pv_t)
@@ -2692,17 +2653,7 @@ class DeltaLog:
                 "partition values never reach the data files, so the "
                 "key scan cannot match them — key on a data column"
             )
-        _PART_OK = {T.LongType(), T.IntegerType(), T.StringType(),
-                    T.BooleanType()}
-        for c in part_cols:
-            if schema[c].dataType not in _PART_OK:
-                raise NotImplementedError(
-                    f"merge_upsert on a table partitioned by "
-                    f"{schema[c].dataType.simpleString()} column "
-                    f"{c!r}: only long/int/string/boolean partition "
-                    "values round-trip the protocol's string encoding "
-                    "exactly"
-                )
+        _check_partition_types(schema, part_cols, "merge_upsert")
         extra = set(source.columns) - set(names)
         missing = set(names) - set(source.columns)
         if extra or missing:
@@ -2744,8 +2695,6 @@ class DeltaLog:
             in_filter=((key_col, keys) if use_in else None),
             in_frame=(None if use_in else (key_col, keys_df)),
         )
-        from hadoop_sync_spark.io import write_single_parquet
-
         import pyarrow.parquet as _pq
 
         cast_src = source.select(*[
@@ -2755,27 +2704,14 @@ class DeltaLog:
         # one (partitionValues, row filter, file suffix) per tuple of a
         # partitioned table — metadata scale: each becomes one add
         # action in this same commit — or one table-wide group
-        def _pv_str(v):
-            if v is None:
-                return None
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            return str(v)
-
         groups: list[tuple[dict, object, str]] = [({}, None, "")]
         if part_cols:
-            tuples = sorted(
-                cast_src.select(*part_cols).distinct().collect(),
-                key=lambda r: tuple((v is None, v) for v in r),
-            )
-            groups = []
-            for gi, t in enumerate(tuples):
-                cond = None
-                for c in part_cols:
-                    term = F.col(c).eqNullSafe(F.lit(t[c]))
-                    cond = term if cond is None else cond & term
-                pv = {phys.get(c, c): _pv_str(t[c]) for c in part_cols}
-                groups.append((pv, cond, f"-{gi}"))
+            tuples, cond_for = split_tuples(cast_src, part_cols)
+            groups = [
+                ({phys.get(c, c): _pv_str(t[c]) for c in part_cols},
+                 cond_for(t), f"-{gi}")
+                for gi, t in enumerate(tuples)
+            ]
         with self._fresh_positions(
             spark, snap, pairs, version, storage, "merge_upsert"
         ) as fresh:
@@ -2785,9 +2721,9 @@ class DeltaLog:
                 out = cast_src if cond is None else cast_src.where(cond)
                 rel_new = f"part-upsert-{version:010d}{suffix}.parquet"
                 dest = os.path.join(self.table_dir, rel_new)
-                write_single_parquet(
+                write_parquet(
                     out.select(*self._phys_cols(snap, phys, data_names)),
-                    dest, "delta_upsert_",
+                    dest,
                 )
                 rows_inserted += _pq.read_metadata(dest).num_rows
                 new_adds.append(

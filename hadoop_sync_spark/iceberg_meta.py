@@ -76,6 +76,9 @@ from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
 from hadoop_sync_spark.io import (
     BROADCAST_DELETE_ROW_LIMIT as _BROADCAST_DELETE_ROW_LIMIT,
     local_frame,
+    plan_bins,
+    split_tuples,
+    write_parquet,
 )
 
 _STATUS_EXISTING, _STATUS_ADDED, _STATUS_DELETED = 0, 1, 2
@@ -699,11 +702,15 @@ def _added_entry(f: DataFile) -> dict:
 
 
 def _written_data_file(
-    table_dir: str, rel: str, partition: dict, fields: list[dict]
+    table_dir: str,
+    rel: str,
+    partition: dict,
+    fields: list[dict],
+    spec_id: int = 0,
 ) -> DataFile:
-    """DataFile for a parquet this writer just placed at ``rel``: row
-    count from the footer, column bounds for ``fields`` (so later
-    predicates keep pruning it)."""
+    """DataFile for a parquet this writer just placed at ``rel`` under
+    partition spec ``spec_id``: row count from the footer, column bounds
+    for ``fields`` (so later predicates keep pruning it)."""
     import pyarrow.parquet as pq
 
     dest = os.path.join(table_dir, rel)
@@ -715,6 +722,7 @@ def _written_data_file(
         file_size=os.path.getsize(dest),
         lower_bounds=lb,
         upper_bounds=ub,
+        spec_id=spec_id,
     )
 
 
@@ -2338,28 +2346,6 @@ class IcebergTable:
 
         return id_srcs, field_of, derived, pv_encode
 
-    @staticmethod
-    def _split_tuples(frame, key_cols: list):
-        """Distinct partition tuples of ``frame`` over ``key_cols``,
-        deterministically ordered (None-first), plus a per-tuple
-        null-safe filter builder — the shared splitting idiom of the
-        partitioned write faces."""
-        from pyspark.sql import functions as F
-
-        tuples = sorted(
-            frame.select(*key_cols).distinct().collect(),
-            key=lambda r: tuple((v is None, v) for v in r),
-        )
-
-        def cond_for(t):
-            cond = None
-            for c in key_cols:
-                term = F.col(c).eqNullSafe(F.lit(t[c]))
-                cond = term if cond is None else cond & term
-            return cond
-
-        return tuples, cond_for
-
     def append_stream_batch(
         self,
         batch_df,
@@ -2384,17 +2370,16 @@ class IcebergTable:
         data; an EMPTY batch still commits so the epoch watermark
         advances.
 
-        Crash-safety mirrors the Delta twin: parts move from staging
-        to DETERMINISTIC ``data/txn-<q8>-<epoch>-<i>`` names before
-        the metadata commit, so a crash leaves orphans a retry
-        overwrites byte-for-byte and :meth:`vacuum` reclaims.
+        Crash-safety mirrors the Delta twin: parts move from a staging
+        dir beside them to DETERMINISTIC ``data/txn-<q8>-<epoch>-<i>``
+        names before the metadata commit, so a crash leaves orphans a
+        retry overwrites byte-for-byte and :meth:`vacuum` reclaims.
 
         Scale: one distributed parquet write job per batch; the driver
         reads one FOOTER per part file (record count + column bounds
         for the manifest entry — metadata scale) and writes one
         manifest + metadata version."""
         import hashlib as _hashlib
-        import shutil as _shutil
 
         base = self._base()
         meta = base[1]
@@ -2427,21 +2412,18 @@ class IcebergTable:
             # so partition filters prune streamed files too.
             # Transform fields (round 13) derive once per row into
             # helper columns; identity fields split on the source.
-            from hadoop_sync_spark.io import write_single_parquet
-
             work = batch_df
             for h, _, expr in derived:
                 work = work.withColumn(h, expr)
             key_cols = [*part_cols, *[h for h, _, _ in derived]]
             data_names = [c for c in want if c not in part_cols]
-            tuples, cond_for = self._split_tuples(work, key_cols)
+            tuples, cond_for = split_tuples(work, key_cols)
             for gi, t in enumerate(tuples):
                 rel = (f"data/txn-{tag}-{epoch_id:010d}"
                        f"-p{gi:05d}.parquet")
                 dest = os.path.join(self.dir, rel)
-                write_single_parquet(
-                    work.where(cond_for(t)).select(*data_names),
-                    dest, "iceberg_txn_",
+                write_parquet(
+                    work.where(cond_for(t)).select(*data_names), dest
                 )
                 pv = {field_of[c]: pv_encode(c, t[c])
                       for c in part_cols}
@@ -2450,24 +2432,13 @@ class IcebergTable:
                     self.dir, rel, pv, bounds_fields
                 )))
         else:
-            staging = os.path.join(
-                self.dir, f"_txn_staging-{tag}-{epoch_id}"
-            )
-            _shutil.rmtree(staging, ignore_errors=True)
-            batch_df.write.mode("overwrite").parquet(staging)
-            parts = sorted(
-                n for n in os.listdir(staging)
-                if n.endswith(".parquet")
-                and not n.startswith((".", "_"))
-            )
-            for i, name in enumerate(parts):
-                rel = f"data/txn-{tag}-{epoch_id:010d}-{i:05d}.parquet"
-                dest = os.path.join(self.dir, rel)
-                os.replace(os.path.join(staging, name), dest)
+            for dest in write_parquet(batch_df, lambda i: os.path.join(
+                self.dir, f"data/txn-{tag}-{epoch_id:010d}-{i:05d}.parquet"
+            )):
                 entries.append(_added_entry(_written_data_file(
-                    self.dir, rel, {}, bounds_fields
+                    self.dir, os.path.relpath(dest, self.dir), {},
+                    bounds_fields,
                 )))
-            _shutil.rmtree(staging, ignore_errors=True)
         return self._commit_snapshot(
             base,
             self._live_entries(base) + entries,
@@ -2839,10 +2810,7 @@ class IcebergTable:
         from pyspark.sql import Column
         from pyspark.sql import functions as F
 
-        from hadoop_sync_spark.io import (
-            decode_file_uri_col,
-            write_single_parquet,
-        )
+        from hadoop_sync_spark.io import decode_file_uri_col
 
         if not set_values:
             raise ValueError("update_rows needs at least one SET")
@@ -2939,13 +2907,12 @@ class IcebergTable:
                     *[_lcol(f.name).alias(f.name) for f in full.fields],
                 ).join(fresh.pairs(raws), ["_afp", "_pos"], "inner")
                 rel_new = f"data/part-update-{seq}-{gi}.parquet"
-                write_single_parquet(
+                write_parquet(
                     upd.select(*[
                         exprs.get(f.name, F.col(f.name)).alias(f.name)
                         for f in full.fields
                     ]),
                     os.path.join(self.dir, rel_new),
-                    "iceberg_update_",
                 )
                 new_entries.append(_added_entry(_written_data_file(
                     self.dir, rel_new, dict(pv_t), schema_fields
@@ -3062,8 +3029,6 @@ class IcebergTable:
         import pyarrow as pa
         from pyspark.sql import functions as F
 
-        from hadoop_sync_spark.io import write_single_parquet
-
         base = self._base()
         meta = base[1]
         sid = meta.get("current-schema-id", 0)
@@ -3162,7 +3127,7 @@ class IcebergTable:
             for h, _, expr in derived:
                 work = work.withColumn(h, expr)
             key_cols = [*part_cols, *[h for h, _, _ in derived]]
-            tuples, cond_for = self._split_tuples(work, key_cols)
+            tuples, cond_for = split_tuples(work, key_cols)
             outs = []
             for gi, t in enumerate(tuples):
                 pv = {field_of[c]: pv_encode(c, t[c]) for c in part_cols}
@@ -3174,9 +3139,7 @@ class IcebergTable:
                 ))
         data_files = []
         for rel_new, out, pv in outs:
-            write_single_parquet(
-                out, os.path.join(self.dir, rel_new), "iceberg_upsert_"
-            )
+            write_parquet(out, os.path.join(self.dir, rel_new))
             data_files.append(_written_data_file(
                 self.dir, rel_new, pv, data_schema_fields
             ))
@@ -4215,13 +4178,13 @@ class IcebergTable:
         target_bytes: int = 128 << 20,
         min_group: int = 2,
     ) -> dict | None:
-        """``rewrite_data_files``-style bin-packing compaction (round 9;
-        the open-format twin of ``Registry.compact``, which delegates
-        here for iceberg tables — closing the round-8 guard that refused
-        to compact format tables outside their metadata).
+        """``rewrite_data_files``-style bin-packing compaction
+        (``Registry.compact`` delegates here for iceberg tables).
 
-        Per partition tuple, live data files under ``target_bytes`` are
-        greedily binned; each bin of ≥ ``min_group`` files is REWRITTEN
+        Per (spec, partition tuple), live data files under
+        ``target_bytes`` are packed by
+        :func:`hadoop_sync_spark.io.plan_bins`, the one planner of every
+        compactor; each bin of ≥ ``min_group`` files is REWRITTEN
         into one file **with every live row-level delete applied** (the
         rewrite reads through :meth:`read`'s MoR path restricted to the
         bin's manifest paths).  The commit is a ``replace`` snapshot:
@@ -4250,35 +4213,15 @@ class IcebergTable:
         # tuple only means what its spec says it means) — compaction
         # preserves metadata truth across spec evolution rather than
         # silently migrating values it cannot derive
-        by_part: dict[tuple, list[DataFile]] = {}
-        for f in live:
-            by_part.setdefault(
-                (f.spec_id, tuple(sorted(f.partition.items()))), []
-            ).append(f)
-        bins: list[tuple[int, dict, list[DataFile]]] = []
-        for spec_id, part_key in sorted(by_part):
-            smalls = sorted(
-                (f for f in by_part[(spec_id, part_key)]
-                 if f.file_size < target_bytes),
-                key=lambda f: -f.file_size,
-            )
-            cur: list[DataFile] = []
-            cur_bytes = 0
-            for f in smalls:
-                if cur and cur_bytes + f.file_size > target_bytes:
-                    if len(cur) >= min_group:
-                        bins.append((spec_id, dict(part_key), cur))
-                    cur, cur_bytes = [], 0
-                cur.append(f)
-                cur_bytes += f.file_size
-            if len(cur) >= min_group:
-                bins.append((spec_id, dict(part_key), cur))
+        bins = plan_bins(
+            live,
+            lambda f: f.file_size,
+            lambda f: (f.spec_id, tuple(sorted(f.partition.items()))),
+            target_bytes,
+            min_group,
+        )
         if not bins:
             return None
-
-        import glob as _glob
-        import shutil as _shutil
-        import tempfile as _tempfile
 
         seq = meta["last-sequence-number"] + 1
         self._check_free(base)
@@ -4286,7 +4229,8 @@ class IcebergTable:
         new_files: list[DataFile] = []
         rows_in = bytes_in = 0
         cur_schema = self._schema_by_id(meta["current-schema-id"])
-        for i, (bin_spec, part, fs) in enumerate(bins):
+        for i, ((bin_spec, part_key), fs) in enumerate(bins):
+            part = dict(part_key)
             raws = {f.raw_path for f in fs}
             # the rewrite column list comes from the snapshot's PINNED
             # schema, not a sampled footer: a bin mixing pre- and
@@ -4307,29 +4251,10 @@ class IcebergTable:
             ]
             out = self.read(spark, paths=raws).select(*data_cols)
             rel = f"data/compact-{seq}-{i}.parquet"
-            dest = os.path.join(self.dir, rel)
-            staging = _tempfile.mkdtemp(prefix="iceberg_compact_")
-            try:
-                out.coalesce(1).write.mode("overwrite").parquet(staging)
-                (part_file,) = _glob.glob(
-                    os.path.join(staging, "part-*.parquet")
-                )
-                os.replace(part_file, dest)
-            finally:
-                _shutil.rmtree(staging, ignore_errors=True)
-            n = spark.read.parquet(dest).count()
-            lb, ub = parquet_column_bounds(dest, cur_schema["fields"])
-            new_files.append(
-                DataFile(
-                    path=rel,
-                    partition=part,
-                    record_count=n,
-                    file_size=os.path.getsize(dest),
-                    lower_bounds=lb,
-                    upper_bounds=ub,
-                    spec_id=bin_spec,
-                )
-            )
+            write_parquet(out, os.path.join(self.dir, rel))
+            new_files.append(_written_data_file(
+                self.dir, rel, part, cur_schema["fields"], spec_id=bin_spec
+            ))
             rewritten |= raws
             rows_in += sum(f.record_count for f in fs)
             bytes_in += sum(f.file_size for f in fs)

@@ -1,16 +1,24 @@
-"""Table loading: directory-per-table parquet, the reference's data model.
+"""Table loading and data-file writing: directory-per-table parquet, the
+reference's data model.
 
 The reference binds one logical table to one HDFS directory via the
 ``hdfs_directory_path`` foreign-table option (``HdfsSynchronizer.java:29-34``,
 ``CitusMasterNode.java:338-381``).  Spark's file-source model is exactly that;
 ``load_table`` is the engine's scan entry point and keeps schema fixed and
 external (no inference surprises), mirroring the master-catalog-is-truth
-design (``CitusMasterNode.java:195-215``).
+design (``CitusMasterNode.java:195-215``).  The write side is how a Spark
+frame becomes a table's named data files — :func:`write_parquet`, with
+:func:`split_tuples` for partitioned faces and :func:`plan_bins` for
+compaction — shared by the registry, Delta and Iceberg writers.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -207,22 +215,93 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> None:
-    """Materialize ``df`` as EXACTLY the file ``dest`` (coalesce(1)
-    through a staging dir, then an atomic rename) — the write idiom the
-    compaction and DML faces share.  ``prefix`` names the staging dir
-    for debuggability."""
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile as _tempfile
+def write_parquet(
+    df: DataFrame, dest: str | Callable[[int], str]
+) -> list[str]:
+    """Write ``df`` as named parquet files and return their paths — the
+    one way Spark output becomes a table's data files.  A path ``dest``
+    gets exactly that one file (``df`` coalesced to one partition); a
+    function gets one file per Spark part, the ``i``-th part (in part
+    name order) at ``dest(i)``.
 
-    staging = _tempfile.mkdtemp(prefix=prefix)
+    Spark writes into a ``_``-prefixed staging directory made in the
+    destination's own directory, so each move into place is a rename
+    within one directory, hence within one filesystem: staging under
+    ``TMPDIR`` fails with ``EXDEV`` wherever that is another filesystem
+    (a tmpfs ``/tmp``).  The ``_`` prefix hides the staging directory
+    from Spark's file index and the registry's directory walk."""
+    single = isinstance(dest, str)
+    staging = tempfile.mkdtemp(
+        prefix="_staging-", dir=os.path.dirname(dest if single else dest(0))
+    )
     try:
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        (part_file,) = _glob.glob(os.path.join(staging, "part-*.parquet"))
-        os.replace(part_file, dest)
+        (df.coalesce(1) if single else df).write.mode("overwrite").parquet(
+            staging
+        )
+        parts = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
+        if single:
+            (part,) = parts
+            names = [dest]
+        else:
+            names = [dest(i) for i in range(len(parts))]
+        for part, name in zip(parts, names):
+            os.replace(part, name)
+        return names
     finally:
-        _shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def split_tuples(frame: DataFrame, key_cols: list[str]):
+    """Distinct partition tuples of ``frame`` over ``key_cols``,
+    deterministically ordered (None first), plus a per-tuple null-safe
+    filter builder — how every partitioned write face splits its input
+    into one file per tuple."""
+    tuples = sorted(
+        frame.select(*key_cols).distinct().collect(),
+        key=lambda r: tuple((v is None, v) for v in r),
+    )
+
+    def cond_for(t) -> Column:
+        cond = None
+        for c in key_cols:
+            term = F.col(c).eqNullSafe(F.lit(t[c]))
+            cond = term if cond is None else cond & term
+        return cond
+
+    return tuples, cond_for
+
+
+def plan_bins(
+    items: list,
+    size: Callable,
+    key: Callable,
+    target_bytes: int,
+    min_group: int,
+) -> list[tuple]:
+    """The compaction plan of every table format: per ``key``, the items
+    whose ``size`` is under ``target_bytes`` packed first-fit decreasing
+    into bins of at most ``target_bytes`` (first-fit never opens more
+    bins than next-fit), keeping bins of at least ``min_group`` items.
+    Returns ``[(key, [item, ...]), ...]`` in key order, each bin's items
+    largest first."""
+    groups: dict = {}
+    for it in items:
+        if size(it) < target_bytes:
+            groups.setdefault(key(it), []).append(it)
+    out = []
+    for k in sorted(groups):
+        bins: list[list] = []  # [bytes, items]
+        for it in sorted(groups[k], key=lambda it: -size(it)):
+            for b in bins:
+                if b[0] + size(it) <= target_bytes:
+                    break
+            else:
+                b = [0, []]
+                bins.append(b)
+            b[0] += size(it)
+            b[1].append(it)
+        out += [(k, b[1]) for b in bins if len(b[1]) >= min_group]
+    return out
 
 
 def attach_file_columns(

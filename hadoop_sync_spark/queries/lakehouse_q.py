@@ -11,15 +11,16 @@ a file list that feeds the ordinary distributed parquet scan.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_sync_spark.delta_log import DeltaLog
+from hadoop_sync_spark.io import write_parquet
 from hadoop_sync_spark.queries import register
 from hadoop_sync_spark.queries._util import t
 
@@ -31,13 +32,6 @@ _REWRITE_MIN = 50000
 def _scratch_dir(key: str) -> str:
     h = hashlib.md5(key.encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"hss_delta_{h}")
-
-
-def _move_single_part(staging: str, dest: str) -> None:
-    parts = glob.glob(os.path.join(staging, "part-*.parquet"))
-    assert len(parts) == 1, parts
-    os.replace(parts[0], dest)
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def build_orders_delta_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -64,9 +58,7 @@ def build_orders_delta_fixture(spark: SparkSession, sf_dir: str) -> str:
     bucket = F.col("o_orderkey") % 4
 
     def write_file(df: DataFrame, name: str) -> None:
-        staging = os.path.join(scratch, "staging_" + name)
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        _move_single_part(staging, os.path.join(table_dir, name))
+        write_parquet(df, os.path.join(table_dir, name))
 
     write_file(src.filter(bucket == 0), "part-00000-f0.parquet")
     write_file(src.filter(bucket == 1), "part-00001-f1.parquet")
@@ -253,9 +245,7 @@ def q144_delta_registry_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.col("o_orderkey") % 4
 
     def write_file(df: DataFrame, name: str) -> None:
-        staging = os.path.join(scratch, "staging_" + name)
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        _move_single_part(staging, os.path.join(table_dir, name))
+        write_parquet(df, os.path.join(table_dir, name))
 
     write_file(src.filter(bucket == 0), "part-00000-f0.parquet")
     write_file(src.filter(bucket == 1), "part-00001-f1.parquet")
@@ -423,7 +413,7 @@ def build_orders_iceberg_fixture(spark: SparkSession, sf_dir: str):
     from hadoop_sync_spark.iceberg_meta import (
         DataFile,
         IcebergTable,
-        parquet_column_bounds,
+        _written_data_file,
     )
 
     scratch = _scratch_dir(os.path.abspath(sf_dir) + "#orders_iceberg")
@@ -447,46 +437,28 @@ def build_orders_iceberg_fixture(spark: SparkSession, sf_dir: str):
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     bucket = F.col("o_orderkey") % 4
-    counts = {
-        r["bkt"]: r["cnt"]
-        for r in src.groupBy(bucket.alias("bkt"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    n_rewrite = src.filter(
-        (bucket == 1) & (F.col("o_totalprice") >= _REWRITE_MIN)
-    ).count()
 
-    def write_file(df: DataFrame, name: str, bkt: int, n: int) -> DataFile:
-        staging = os.path.join(scratch, "staging_" + name)
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        dest = os.path.join(table_dir, "data", name)
-        _move_single_part(staging, dest)
-        # conforming-writer bounds from the CURRENT schema (f4 carries
-        # the evolved priority column; string bounds serialize fine)
-        lb, ub = parquet_column_bounds(
-            dest,
+    def write_file(df: DataFrame, name: str, bkt: int) -> DataFile:
+        write_parquet(df, os.path.join(table_dir, "data", name))
+        # conforming-writer footer record: row count and bounds from
+        # the CURRENT schema (f4 carries the evolved priority column;
+        # string bounds serialize fine)
+        return _written_data_file(
+            table_dir,
+            f"data/{name}",
+            {"bucket": bkt},
             table._schema_by_id(
                 table.metadata()["current-schema-id"]
             )["fields"],
         )
-        return DataFile(
-            path=f"data/{name}",
-            partition={"bucket": bkt},
-            record_count=n,
-            file_size=os.path.getsize(dest),
-            lower_bounds=lb,
-            upper_bounds=ub,
-        )
 
-    f0 = write_file(src.filter(bucket == 0), "f0.parquet", 0, counts.get(0, 0))
-    f1 = write_file(src.filter(bucket == 1), "f1.parquet", 1, counts.get(1, 0))
-    f2 = write_file(src.filter(bucket == 2), "f2.parquet", 2, counts.get(2, 0))
+    f0 = write_file(src.filter(bucket == 0), "f0.parquet", 0)
+    f1 = write_file(src.filter(bucket == 1), "f1.parquet", 1)
+    f2 = write_file(src.filter(bucket == 2), "f2.parquet", 2)
     f3 = write_file(
         src.filter((bucket == 1) & (F.col("o_totalprice") >= _REWRITE_MIN)),
         "f3.parquet",
         1,
-        n_rewrite,
     )
 
     s1 = table.append([f0, f1], now_ms=2000)
@@ -508,7 +480,6 @@ def build_orders_iceberg_fixture(spark: SparkSession, sf_dir: str):
         ),
         "f4.parquet",
         3,
-        counts.get(3, 0),
     )
     s5 = table.append([f4], now_ms=6000)
     return table, (s1, s2, s3, s4, s5)
@@ -729,7 +700,7 @@ def q148_iceberg_mor_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         DataFile,
         IcebergTable,
         _iceberg_schema_json,
-        parquet_column_bounds,
+        _written_data_file,
     )
 
     scratch = _scratch_dir(os.path.abspath(sf_dir) + "#orders_iceberg_mor")
@@ -750,24 +721,14 @@ def q148_iceberg_mor_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def write_file(df: DataFrame, name: str, sort: bool = False) -> DataFile:
-        staging = os.path.join(scratch, "staging_" + name)
         part = df.repartition(1)
         if sort:
             part = part.sortWithinPartitions("o_orderkey")
-        part.write.mode("overwrite").parquet(staging)
-        dest = os.path.join(table_dir, "data", name)
-        _move_single_part(staging, dest)
-        n = spark.read.parquet(dest).count()
+        write_parquet(part, os.path.join(table_dir, "data", name))
         # conforming-writer column bounds: the column_filter contract
         # legs (cnt_live_hi / n_files_beyond) prune on these
-        lb, ub = parquet_column_bounds(dest, _MOR_FIELDS)
-        return DataFile(
-            path=f"data/{name}",
-            partition={},
-            record_count=n,
-            file_size=os.path.getsize(dest),
-            lower_bounds=lb,
-            upper_bounds=ub,
+        return _written_data_file(
+            table_dir, f"data/{name}", {}, _MOR_FIELDS
         )
 
     evens = src.filter(F.col("o_orderkey") % 2 == 0)
@@ -977,19 +938,16 @@ def q149_delta_dv_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
 
     def write_sorted(df: DataFrame, name: str) -> int:
-        staging = os.path.join(scratch, "staging_" + name)
-        (
+        dest = os.path.join(table_dir, name)
+        write_parquet(
             df.repartition(1)
             .sortWithinPartitions("o_orderkey")
             .select(*[
                 F.col(c).alias(phys[c][0]) for c in df.columns
-            ])
-            .write.mode("overwrite")
-            .parquet(staging)
+            ]),
+            dest,
         )
-        dest = os.path.join(table_dir, name)
-        _move_single_part(staging, dest)
-        return spark.read.parquet(dest).count()
+        return pq.read_metadata(dest).num_rows
 
     write_sorted(src.filter(F.col("o_orderkey") % 2 == 0), "evens.parquet")
     n_odd = write_sorted(

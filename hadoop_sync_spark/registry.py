@@ -59,6 +59,7 @@ from hadoop_sync_spark.commit import (
     put_if_absent,
     replace_file,
 )
+from hadoop_sync_spark.io import plan_bins, write_parquet
 
 _POINTER = "VERSION"
 _TABLES = "tables.json"
@@ -106,6 +107,13 @@ def _shard_id(path: str) -> int:
             (1 << 64) - 1
         )
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def _file_stat(path: str) -> dict:
+    """A data file's ``(path, size, mtime_ns)`` identity as sync diffs
+    it."""
+    st = os.stat(path)
+    return {"path": path, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
 
 
 def _shard_row(name: str, f: dict, min_max: tuple) -> dict:
@@ -509,29 +517,18 @@ class Registry:
         single-file table (the fixture layout is one parquet file per
         table, not one directory per table)."""
         if os.path.isfile(dir_path):
-            st = os.stat(dir_path)
-            return [
-                {
-                    "path": dir_path,
-                    "size": st.st_size,
-                    "mtime_ns": st.st_mtime_ns,
-                }
-            ]
+            return [_file_stat(dir_path)]
         out = []
         for root, dirs, files in os.walk(dir_path):
             # prune hidden/underscore DIRECTORIES too (Spark skips any path
             # with such a segment): otherwise a crashed writer's
-            # `_temporary/.../part-*.parquet` would register as a shard and
-            # a later read() would scan partial output
+            # `_temporary/` part files would register as shards and a
+            # later read() would scan partial output
             dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
             for fname in sorted(files):
                 if fname.startswith((".", "_")):
                     continue
-                p = os.path.join(root, fname)
-                st = os.stat(p)
-                out.append(
-                    {"path": p, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
-                )
+                out.append(_file_stat(os.path.join(root, fname)))
         return out
 
     # ---------------------------------------------------------------- api
@@ -625,7 +622,7 @@ class Registry:
         self._bind(name, table_dir, None, "delta")
 
     @staticmethod
-    def _delta_live_files(table_dir: str) -> list[dict]:
+    def _delta_live_files(table_dir: str) -> tuple[list[dict], int]:
         """FS state of a Delta-format table: the latest snapshot's live
         file list (driver-side metadata replay, like production Delta),
         with (size, mtime) identity from the filesystem so a rewritten
@@ -633,14 +630,9 @@ class Registry:
         from hadoop_sync_spark.delta_log import DeltaLog
 
         snap = DeltaLog(table_dir).snapshot()
-        out = []
-        for rel in snap.files:
-            p = os.path.join(table_dir, rel)
-            st = os.stat(p)
-            out.append(
-                {"path": p, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
-            )
-        return out, snap.version
+        return [
+            _file_stat(os.path.join(table_dir, rel)) for rel in snap.files
+        ], snap.version
 
     def register_iceberg(self, name: str, table_dir: str) -> None:
         """Bind a logical table to an ICEBERG table directory — the
@@ -652,7 +644,9 @@ class Registry:
         self._bind(name, table_dir, None, "iceberg")
 
     @staticmethod
-    def _iceberg_live_files(table_dir: str) -> list[dict]:
+    def _iceberg_live_files(
+        table_dir: str,
+    ) -> tuple[list[dict], int | None]:
         """FS state of an Iceberg-format table: the current snapshot's
         live data files from the manifest walk (metadata-only planning),
         (size, mtime) identity from the filesystem like every other
@@ -666,19 +660,11 @@ class Registry:
             # so diff/sync behave like an empty directory (dir/delta
             # formats return a zero-change diff here too)
             return [], None
-        out = []
         # list from the captured snapshot id, not "current" — a racing
         # committer between the two calls must not split the identity
-        for f in table.files(snapshot_id=snap_id):
-            st = os.stat(f.path)
-            out.append(
-                {
-                    "path": f.path,
-                    "size": st.st_size,
-                    "mtime_ns": st.st_mtime_ns,
-                }
-            )
-        return out, snap_id
+        return [
+            _file_stat(f.path) for f in table.files(snapshot_id=snap_id)
+        ], snap_id
 
     def diff(self, name: str) -> MetadataDifference:
         """FS state vs catalog state — the reference's
@@ -940,8 +926,10 @@ class Registry:
         `README.md:15-19`) to data-file rewrites where pure rollback is
         impossible once originals are deleted:
 
-        1. under the publish lock, plan bins from the CATALOG (not the FS);
-        2. write each bin with Spark into a hidden ``_compact_stage`` dir
+        1. under the publish lock, plan bins from the CATALOG (not the FS)
+           with :func:`hadoop_sync_spark.io.plan_bins`, the one planner of
+           every compactor;
+        2. write each bin with Spark to ``_compact_stage/bin-<i>.parquet``
            (underscore-prefixed → invisible to listing and readers; a
            crash here leaves only debris that the next pass sweeps);
         3. write the journal (``commit.replace_file``) — the COMMIT
@@ -976,8 +964,6 @@ class Registry:
             # snapshot — old snapshots stay time-travel-readable, unlike
             # the plain-directory journaled rewrite below — and a sync
             # publishes the new file list into the catalog.
-            import time as _time
-
             dir_path = tables[name]["dir_path"]
             if fmt == "delta":
                 from hadoop_sync_spark.delta_log import DeltaLog
@@ -990,7 +976,7 @@ class Registry:
 
                 res = IcebergTable(dir_path).compact(
                     self.spark,
-                    now_ms=int(_time.time() * 1000),
+                    now_ms=int(time.time() * 1000),
                     target_bytes=target_bytes,
                     min_group=min_group,
                 )
@@ -1021,58 +1007,35 @@ class Registry:
             dir_path = tables[name]["dir_path"]
             self._sweep_stage_debris(dir_path)
 
-            shards = self.shards(name)
-            smalls = sorted(
-                (s for s in shards if s["size"] < target_bytes),
-                key=lambda s: -s["size"],
-            )
-            bins: list[list[dict]] = []
-            for s in smalls:  # first-fit decreasing
-                for b in bins:
-                    if sum(x["size"] for x in b) + s["size"] <= target_bytes:
-                        b.append(s)
-                        break
-                else:
-                    bins.append([s])
-            bins = [b for b in bins if len(b) >= min_group]
+            bins = [b for _, b in plan_bins(
+                self.shards(name), lambda s: s["size"], lambda s: None,
+                target_bytes, min_group,
+            )]
             if not bins:
                 return CompactResult(
                     name, self._current_version(), 0, 0, 0, 0, noop=True
                 )
 
             stage_root = os.path.join(dir_path, "_compact_stage")
+            os.makedirs(stage_root)
             renames: list[list[str]] = []  # [staged_tmp, final]
             old_paths: list[str] = []
             bytes_in = 0
             base_version = self._current_version()
             for i, b in enumerate(bins):
                 member_paths = [s["path"] for s in b]
-                stage_dir = os.path.join(stage_root, f"bin-{i}")
-                (
-                    self.spark.read.parquet(*member_paths)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage_dir)
-                )
-                parts = [
-                    f
-                    for f in os.listdir(stage_dir)
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                ]
-                if len(parts) != 1:
-                    raise RuntimeError(
-                        f"expected one part file in {stage_dir}, got {parts}"
-                    )
+                staged = os.path.join(stage_root, f"bin-{i}.parquet")
+                write_parquet(self.spark.read.parquet(*member_paths), staged)
                 final = os.path.join(
                     dir_path, f"compact-v{base_version}-{i:05d}.parquet"
                 )
-                renames.append([os.path.join(stage_dir, parts[0]), final])
+                renames.append([staged, final])
                 old_paths.extend(member_paths)
                 bytes_in += sum(s["size"] for s in b)
 
             part_col = tables[name]["partition_column"]
             refetch_stats = bool(part_col) and any(
-                s["min_value"] is not None for s in smalls
+                s["min_value"] is not None for b in bins for s in b
             )
             journal = {
                 "table": name,
@@ -1158,12 +1121,7 @@ class Registry:
             return base
 
         tables = self._load_tables(base)
-        new_files = []
-        for p in final_paths:
-            st = os.stat(p)
-            new_files.append(
-                {"path": p, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
-            )
+        new_files = [_file_stat(p) for p in final_paths]
         stats = (
             self._fetch_min_max(new_files, tables[name]["partition_column"])[0]
             if journal.get("refetch_stats")
@@ -1312,9 +1270,10 @@ class Registry:
     def prune_files(self, name: str, lo, hi) -> list[str]:
         """Stat-based shard pruning — the *point* of the reference's
         min/max sync (`README.md:41-46`): keep files whose [min,max]
-        interval intersects [lo,hi]; files without stats always survive
-        (sound).  Values compare in the partition column's type (stats are
-        stored stringly and cast back here — `MinMaxValue.java:6-7`).
+        interval intersects [lo,hi]; files without stats, or with a NaN
+        bound, always survive (sound).  Values compare in the partition
+        column's type (stats are stored stringly and cast back here —
+        `MinMaxValue.java:6-7`).
 
         Driver-only: the catalog is loaded once, and the column's Spark
         type comes from the first shard's footer schema
@@ -1340,7 +1299,11 @@ class Registry:
             if dtype in ("double", "float") or dtype.startswith("decimal"):
                 from decimal import Decimal
 
-                return Decimal(v)
+                # NaN orders above every value in Spark but cannot be
+                # ordered as a Decimal: a NaN bound keeps its file, like
+                # a missing one
+                d = Decimal(v)
+                return None if d.is_nan() else d
             return v
 
         numeric = ("bigint", "int", "smallint", "tinyint", "double", "float")
@@ -1353,6 +1316,8 @@ class Registry:
             return paths
 
         lo_c, hi_c = cast(str(lo)), cast(str(hi))
+        if lo_c is None or hi_c is None:  # a NaN query bound
+            return paths
         keep = []
         for s in shards:
             mn, mx = cast(s["min_value"]), cast(s["max_value"])

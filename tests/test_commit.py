@@ -394,13 +394,8 @@ def test_registry_threaded_land_and_sync_equals_serial_model(tmp_path):
 #: ``os.replace`` sites that move a Spark part file into place — data
 #: files, not version files: (file, enclosing function)
 REPLACE_ALLOWED = {
-    ("io.py", "write_single_parquet"),
-    ("delta_log.py", "append_stream_batch"),
-    ("delta_log.py", "compact"),
-    ("iceberg_meta.py", "append_stream_batch"),
-    ("iceberg_meta.py", "compact"),
+    ("io.py", "write_parquet"),
     ("registry.py", "_apply_compaction"),
-    ("lakehouse_q.py", "_move_single_part"),
 }
 _FORBIDDEN = {"rename", "O_EXCL", "link", "fsync", "replace"}
 

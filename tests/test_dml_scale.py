@@ -36,12 +36,12 @@ def _spark_write_kv(spark, path: str, lo: int, hi: int) -> int:
     """One parquet file of (k, v) rows k in [lo, hi); returns rowcount."""
     from pyspark.sql import functions as F
 
-    from hadoop_sync_spark.io import write_single_parquet
+    from hadoop_sync_spark.io import write_parquet
 
     df = spark.range(lo, hi).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    write_single_parquet(df, path, "dml_scale_")
+    write_parquet(df, path)
     return hi - lo
 
 

@@ -1476,6 +1476,39 @@ def test_compact_binpacks_and_applies_mor_deletes(spark, tmp_path):
     assert sorted(r.id for r in t.read(spark).collect()) == [1, 4, 6]
 
 
+def test_compact_records_footer_counts_without_count_jobs(spark, tmp_path):
+    """Each compacted file's ``record_count`` comes from its footer: it
+    equals the rows read back, and a two-bin compaction runs exactly the
+    Spark jobs of its two bin rewrites — no count job per bin."""
+    from tests.test_registry import _count_jobs
+
+    t, write_pq = _mor_table(tmp_path)
+    files = [write_pq(f"f{i}.parquet", [10 * i + j for j in range(10, 13)])
+             for i in range(4)]
+    assert len({f.file_size for f in files}) == 1
+    t.append(files, now_ms=2000)
+    bins = [{"data/f0.parquet", "data/f1.parquet"},
+            {"data/f2.parquet", "data/f3.parquet"}]
+
+    def rewrite_bins():
+        for i, raws in enumerate(bins):
+            out = t.read(spark, paths=raws).select("id", "val")
+            out.coalesce(1).write.mode("overwrite").parquet(
+                str(tmp_path / f"ref-{i}"))
+
+    rewrite_bins()  # warm-up: the same reads, planned once before
+    _, want_jobs = _count_jobs(spark, rewrite_bins)
+    res, jobs = _count_jobs(spark, lambda: t.compact(
+        spark, now_ms=3000, target_bytes=2 * files[0].file_size + 1))
+    assert (res["groups"], res["files_out"], res["rows_out"]) == (2, 2, 12)
+    assert jobs == want_jobs
+    new = [f for f in t.files()
+           if os.path.basename(f.path).startswith("compact-")]
+    assert len(new) == 2
+    for f in new:
+        assert f.record_count == spark.read.parquet(f.path).count() == 6
+
+
 def test_compact_bin_spanning_add_column(spark, tmp_path):
     """A bin mixing pre- and post-add_column files rewrites under the
     snapshot's PINNED schema: the added column's values survive (a

@@ -910,6 +910,36 @@ def test_footer_sync_and_prune_launch_no_spark_job(spark, tmp_path):
         "u2.parquet"]
 
 
+def test_prune_keeps_files_with_nan_bounds(spark, tmp_path):
+    """A double column's NaN bound (Spark orders NaN above every value)
+    keeps its file like a missing statistic, and a NaN query bound keeps
+    every file; plain files still prune, and the pruned read filters to
+    the filtered full read."""
+    import math
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    data = tmp_path / "t"
+    data.mkdir()
+    _write_p(str(data / "nan.parquet"), pa.array([1.0, math.nan]))
+    _write_p(str(data / "low.parquet"), pa.array([2.0, 3.0]))
+    _write_p(str(data / "mid.parquet"), pa.array([6.0, 6.5]))
+    reg = Registry(spark, str(tmp_path / "meta"))
+    reg.register("t", str(data), partition_column="p")
+    reg.sync("t", fetch_min_max=True)
+    stats = {os.path.basename(s["path"]): (s["min_value"], s["max_value"])
+             for s in reg.shards("t")}
+    assert stats["nan.parquet"][1] == "NaN"
+    kept = reg.prune_files("t", 5.5, 7)
+    assert sorted(os.path.basename(f) for f in kept) == [
+        "mid.parquet", "nan.parquet"]
+    assert len(reg.prune_files("t", math.nan, 7)) == 3
+    cond = F.col("p").between(5.5, 7)
+    assert sorted(reg.read_pruned("t", 5.5, 7).where(cond).collect()) == (
+        sorted(reg.read("t").where(cond).collect()))
+
+
 def test_prune_on_registered_table_without_shards(spark, tmp_path):
     """A registered table with no shards prunes to nothing, and a pruned
     read fails like ``read()`` does instead of Spark's schema inference."""

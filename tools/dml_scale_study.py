@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from hadoop_sync_spark.delta_log import DeltaLog
 from hadoop_sync_spark.iceberg_meta import DataFile, IcebergTable
-from hadoop_sync_spark.io import write_single_parquet
+from hadoop_sync_spark.io import write_parquet
 from hadoop_sync_spark.session import get_spark
 
 SCHEMA = json.dumps({
@@ -63,7 +63,7 @@ def _mk_delta(spark, d, n_rows, n_files):
         rel = f"f{i}.parquet"
         df = spark.range(i * per, (i + 1) * per).select(
             F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
-        write_single_parquet(df, os.path.join(d, rel), "dml_sc_")
+        write_parquet(df, os.path.join(d, rel))
         acts.append(log.add_action_for(rel))
     log.commit(0, acts)
     return log
@@ -80,7 +80,7 @@ def _mk_ice(spark, d, n_rows, n_files):
         df = spark.range(i * per, (i + 1) * per).select(
             F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
         p = os.path.join(d, rel)
-        write_single_parquet(df, p, "dml_sc_")
+        write_parquet(df, p)
         dfs.append(DataFile(rel, {}, per, os.path.getsize(p)))
     t.append(dfs, now_ms=2000)
     return t
