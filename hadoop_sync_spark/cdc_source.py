@@ -137,8 +137,9 @@ class _CDCPart(InputPartition):
     arrow_schema: object = None
     #: logical -> parquet footer field id (id-mode column mapping,
     #: round 13): the executor resolves each planned file's physical
-    #: names from ITS OWN footer — per-file resolution, exactly the
-    #: batch read path's rule; None = not id mode
+    #: names from ITS OWN footer — per-file resolution, where the batch
+    #: read resolves once (``DeltaLog._resolve_physical``); None = not
+    #: id mode
     fids: dict = None
 
 
@@ -177,32 +178,22 @@ class _CDCStreamReader(DataSourceStreamReader):
         self._pinned_schema = snap.schema_json
         fields = json.loads(snap.schema_json)["fields"]
         self._out_cols = tuple(f["name"] for f in fields)
-        # name-mode mapping is metadata-static: executors translate
-        # physical file/partitionValues names through this map.  In id
-        # mode (round 13) the SAME map carries the metadata
-        # physicalName for partitionValues keys (partition columns
-        # never appear in footers, per spec), while DATA columns
-        # resolve per planned file from its own footer field ids —
-        # each part already opens its own footer via pyarrow, so the
-        # per-file resolution the batch path does driver-side happens
-        # executor-side here for free.
-        self._phys = {}
-        self._fids = None
-        if mode in ("name", "id"):
-            if mode == "id":
-                self._fids = {}
-            for f in fields:
-                md = f.get("metadata") or {}
-                pn = md.get("delta.columnMapping.physicalName")
-                fid = md.get("delta.columnMapping.id")
-                if pn is None or (mode == "id" and fid is None):
-                    raise ValueError(
-                        f"column mapping enabled but field "
-                        f"{f['name']!r} lacks physicalName/id metadata"
-                    )
-                self._phys[f["name"]] = pn
-                if mode == "id":
-                    self._fids[f["name"]] = int(fid)
+        # the delta_log resolver's one parse of the mapping metadata
+        # (identity when unmapped).  Name mode is metadata-static:
+        # executors translate physical file/partitionValues names
+        # through this map.  In id mode (round 13) the SAME map
+        # carries the metadata physicalName for partitionValues keys
+        # (partition columns never appear in footers, per spec), while
+        # DATA columns resolve per planned file from its own footer
+        # field ids — each part already opens its own footer via
+        # pyarrow, so the per-file resolution the batch path does
+        # driver-side happens executor-side here for free.
+        from hadoop_sync_spark.delta_log import _column_mapping
+
+        mapping = _column_mapping(snap)
+        self._phys = {n: pn for n, (pn, _) in mapping.items()}
+        self._fids = ({n: fid for n, (_, fid) in mapping.items()}
+                      if mode == "id" else None)
         self._part_cols = tuple(snap.partition_columns)
         self._pv_types = {}
         for f in fields:

@@ -25,10 +25,12 @@ from it:
 Scale posture: log replay is METADATA work — KBs per commit, one driver
 pass, exactly where production Delta does it — while the data files the
 snapshot selects are read by executors through the normal parquet
-scan (predicate pushdown / column pruning intact, since the file list
-feeds a plain ``spark.read.parquet``).  Checkpointing keeps replay
-O(tail) instead of O(#commits).  Partitioned tables resolve partition
-columns from the directory layout via ``basePath``.
+scan (predicate pushdown / column pruning intact: every face reads
+data files through one pinned-schema scan, :meth:`DeltaLog._scan`).
+Checkpointing keeps replay O(tail) instead of O(#commits).  Partition
+columns attach from the logged ``add.partitionValues``; directory
+inference via ``basePath`` is only the fallback for unmapped logs whose
+adds carry no values.
 
 Protocol v3 deletion vectors are SUPPORTED (round 8): descriptors on
 ``add`` actions (inline Base85 or framed ``deletion_vector_<uuid>.bin``
@@ -599,6 +601,76 @@ class Snapshot:
         )
 
 
+def _column_mapping(snap: Snapshot) -> dict[str, tuple[str, int | None]]:
+    """logical name -> ``(physicalName, field id)`` from the schema's
+    ``delta.columnMapping`` field metadata (PROTOCOL.md "Column
+    Mapping") — the one parse of it.  Mode ``none`` is the identity
+    with no ids.  A mapped field without its physicalName, or in id
+    mode without its id, refuses."""
+    if snap.schema_json is None:
+        raise ValueError("no metaData action in the log")
+    mode = snap.column_mapping_mode
+    out: dict[str, tuple[str, int | None]] = {}
+    for f in json.loads(snap.schema_json)["fields"]:
+        if mode == "none":
+            out[f["name"]] = (f["name"], None)
+            continue
+        md = f.get("metadata") or {}
+        pn = md.get("delta.columnMapping.physicalName")
+        fid = md.get("delta.columnMapping.id")
+        if pn is None or (mode == "id" and fid is None):
+            raise ValueError(
+                f"column mapping enabled but field {f['name']!r} "
+                "lacks physicalName/id metadata"
+            )
+        out[f["name"]] = (pn, None if fid is None else int(fid))
+    return out
+
+
+def _partition_value(pv: dict | None, phys: dict, c: str) -> str | None:
+    """Partition column ``c``'s logged string: ``partitionValues`` keys
+    are PHYSICAL names under column mapping (the spec), the logical
+    name is tolerated for lax writers."""
+    pv = pv or {}
+    v = pv.get(phys.get(c, c), pv.get(c))
+    return None if v is None else str(v)
+
+
+def _hive_layout_refusal(snap: Snapshot, phys: dict, pvs,
+                         face: str) -> NotImplementedError | None:
+    """The refusal for a partitioned table whose actions do not log
+    every partition value (``pvs``: their ``partitionValues``), or None
+    when they do.  Deletion vectors, column mapping, compaction and
+    change feeds all need the logged values; only an unmapped,
+    vector-free :meth:`DeltaLog.read` falls back to inferring them from
+    a Hive-style directory layout."""
+    if all(
+        phys.get(c, c) in (pv or {}) or c in (pv or {})
+        for pv in pvs for c in snap.partition_columns
+    ):
+        return None
+    return NotImplementedError(
+        f"{face} on a partitioned table whose actions carry no "
+        "partitionValues (Hive-inferred layout): re-log the adds"
+    )
+
+
+def _logical_cols(fields, part_cols, phys: dict) -> list:
+    """The physical -> logical projection: data columns renamed (the
+    pinned scan already carries their logical types, nested field names
+    included), then the partition columns, cast from their logged
+    strings to the schema's types (a partition column the schema does
+    not list stays a string)."""
+    types = {f.name: f.dataType for f in fields}
+    return [
+        F.col(phys[f.name]).alias(f.name)
+        for f in fields if f.name not in part_cols
+    ] + [
+        F.col(c).cast(types.get(c, T.StringType())).alias(c)
+        for c in part_cols
+    ]
+
+
 class _FreshPositions:
     """The fresh matched positions of one Delta DML commit, in the one
     shape every step after the tier decision consumes: ``dvs`` lists
@@ -818,344 +890,146 @@ class DeltaLog:
     ) -> DataFrame:
         """The snapshot as a DataFrame: executors scan exactly the live
         files through the ordinary parquet source (pushdown intact).
-        Partition columns attach from the logged ``add.partitionValues``
-        (the protocol makes them authoritative — a conforming writer may
-        lay files out flat, ADVICE r7) via the shared decoded-path
-        broadcast join, cast from the logged strings to the schema's
-        types; directory inference via ``basePath`` remains only as the
-        fallback for logs whose adds never carried values.  An empty
-        snapshot yields an empty frame with the logged schema."""
-        from hadoop_sync_spark.io import attach_file_columns
+        Every mapping mode takes the one body:
 
+        - the pinned physical-schema scan (:meth:`_scan`) under the
+          names :meth:`_resolve_physical` gives (identity for ``none``,
+          the metadata physicalName for ``name``, the footers' field
+          ids for ``id``);
+        - partition values attach from the logged
+          ``add.partitionValues`` (the protocol makes them
+          authoritative — a conforming writer may lay files out flat,
+          ADVICE r7) through the shared decoded-path broadcast join,
+          together with each file's relative path when deletion
+          vectors apply;
+        - the deletion vectors' anti-join (:meth:`_minus_deleted`);
+        - the logical projection (:func:`_logical_cols`), which casts
+          partition values from the logged strings to the schema's
+          types.
+
+        Directory inference via ``basePath`` remains only as the
+        fallback for unmapped, vector-free logs whose adds never
+        carried values.  ``paths`` restricts the scan to some live
+        files (the compaction rewrite); deletes still apply per file.
+        An empty snapshot yields an empty frame with the logged
+        schema."""
         snap = self.snapshot(version)
         sel = list(snap.files)
         if paths is not None:
-            # subset scan (the compaction rewrite path): deletes still
-            # apply per file, exactly as in the full read
             missing = paths - set(sel)
             if missing:
                 raise ValueError(
                     f"paths not live in snapshot: {sorted(missing)}"
                 )
             sel = [p for p in sel if p in paths]
-        files = [
-            os.path.join(self.table_dir, p) for p in sel
-        ]
-        if not files:
+        if not sel:
             schema = snap.schema()
             if schema is None:
                 raise ValueError("empty table with no metaData action")
             return local_frame(spark, [], schema)
-        if snap.column_mapping_mode != "none":
-            return self._read_column_mapped(spark, snap, sel, files)
-        schema = snap.schema()
-        sel_set = set(sel)
+        phys = self._resolve_physical(snap, sel, "read")
+        adds = [snap.live[p] for p in sel]
         dv_map = {
             p: a["deletionVector"]
-            for p, a in snap.live.items()
-            if a.get("deletionVector") and p in sel_set
+            for p, a in zip(sel, adds) if a.get("deletionVector")
         }
-
-        def subtract_dvs(df: DataFrame, data_cols: list[str]) -> DataFrame:
-            """Anti-join the resolved DV positions against the scan's
-            (relative path, row index) lineage — broadcast under the
-            size ceiling, executor-decoded shuffle join above it (see
-            :meth:`_dv_delete_frame`)."""
-            dels = self._dv_delete_frame(spark, dv_map)
-            if dels is None:
-                # every referenced DV decoded to zero positions (a
-                # cardinality-0 descriptor another engine wrote is legal)
-                # — a no-op subtraction
-                return df.select(*data_cols)
-            out = df.join(
-                dels,
-                (F.col("_rel_path") == F.col("_d_file"))
-                & (F.col("_row_idx") == F.col("_d_pos")),
-                "left_anti",
-            )
-            return out.select(*data_cols)
-
-        if not snap.partition_columns:
-            if not dv_map:
-                reader = spark.read
-                if schema is not None:
-                    # pinning the logged schema skips footer inference
-                    # AND null-fills columns added by DDL after a file
-                    # was written (round 11)
-                    reader = reader.schema(schema)
-                return reader.parquet(*files)
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            scan = reader.parquet(*files)
-            data_cols = scan.columns
-            scan = scan.select(
-                "*", F.col("_metadata.row_index").alias("_row_idx")
-            )
-            rows = [
-                (os.path.abspath(os.path.join(self.table_dir, p)), p)
-                for p in sel
-            ]
-            df = attach_file_columns(
-                scan, rows, ["_rel_path"], what="delta snapshot file",
-                types={"_rel_path": T.StringType()},
-            )
-            return subtract_dvs(df, data_cols)
-        part_cols = list(snap.partition_columns)
-        adds = [snap.live[p] for p in sel]
-        if all(
-            set(part_cols) <= set(a.get("partitionValues") or {})
-            for a in adds
-        ):
-            reader = spark.read
-            if schema is not None:
-                # pin the logged DATA columns (partition values attach
-                # from the log): deterministic plan, and files written
-                # before an add_column null-fill natively (round 11)
-
-                reader = reader.schema(T.StructType(
-                    [f for f in schema.fields if f.name not in part_cols]
-                ))
-            scan = reader.parquet(*files)
-            data_cols = scan.columns + part_cols
-            attach_cols = list(part_cols)
-            if dv_map:
-                scan = scan.select(
-                    "*", F.col("_metadata.row_index").alias("_row_idx")
-                )
-                attach_cols = ["_rel_path", *part_cols]
-            rows = [
-                (os.path.abspath(os.path.join(self.table_dir, a["path"])),)
-                + ((a["path"],) if dv_map else ())
-                + tuple(
-                    None
-                    if a["partitionValues"][c] is None
-                    else str(a["partitionValues"][c])
-                    for c in part_cols
-                )
-                for a in adds
-            ]
-            df = attach_file_columns(
-                scan,
-                rows,
-                attach_cols,
-                what="delta snapshot partition",
-                # every delta attach value is a STRING (protocol
-                # partitionValues) — explicit types keep an all-null
-                # partition column from crashing inference
-                types={c: T.StringType() for c in attach_cols},
-            )
-            if dv_map:
-                df = subtract_dvs(df, data_cols)
-            if schema is not None:
-                # the protocol logs partition values as strings; the
-                # logged schema owns their real types
-                for f in schema.fields:
-                    if f.name in part_cols:
-                        df = df.withColumn(
-                            f.name, F.col(f.name).cast(f.dataType)
-                        )
-            return df
-        if dv_map:
-            raise NotImplementedError(
-                "deletion vectors over Hive-inferred partition layouts "
-                "(value-less adds) are not supported — log "
-                "partitionValues"
-            )
-        # fallback: Hive-style layout inference for value-less logs
-        return (
-            spark.read.option("basePath", self.table_dir).parquet(*files)
+        refusal = _hive_layout_refusal(
+            snap, phys, [a.get("partitionValues") for a in adds], "read"
         )
+        if refusal is not None:
+            if dv_map or snap.column_mapping_mode != "none":
+                raise refusal
+            return spark.read.option("basePath", self.table_dir).parquet(
+                *[os.path.join(self.table_dir, p) for p in sel]
+            )
+        schema = snap.schema()
+        part_cols = list(snap.partition_columns)
+        scan = self._scan(
+            spark, sel,
+            [f for f in schema.fields if f.name not in part_cols], phys,
+            row_index="_row_idx" if dv_map else None,
+        )
+        scan = self._attach_files(
+            scan, snap, phys, sel, [a.get("partitionValues") for a in adds],
+            rel_col="_rel_path" if dv_map else None,
+            what="delta snapshot " + ("partition" if part_cols else "file"),
+        )
+        scan = self._minus_deleted(spark, scan, dv_map, "_rel_path",
+                                   "_row_idx")
+        return scan.select(*_logical_cols(schema.fields, part_cols, phys))
 
-    def _read_column_mapped(self, spark, snap, sel, files) -> DataFrame:
-        """Column-mapping read (PROTOCOL.md "Column Mapping", round 9):
-        data files store PHYSICAL column names (``col-<uuid>`` style from
-        conforming writers); the logical schema's per-field metadata
-        carries ``delta.columnMapping.physicalName`` and ``.id``.
+    def _scan(
+        self,
+        spark: SparkSession,
+        rels,
+        fields,
+        phys: dict,
+        row_index: str | None = None,
+        file_path: str | None = None,
+    ) -> DataFrame:
+        """The one parquet scan of Delta data and change-data files:
+        ``rels`` under the PHYSICAL names ``phys`` gives ``fields``,
+        pinned to the logged (widest) types.  Pinning gives a
+        deterministic plan whatever footer Spark would sample, native
+        null-fill for files predating an ``add_column`` and native
+        upcast under typeWidening.  ``row_index`` / ``file_path`` name
+        the ``_metadata`` lineage columns a caller wants."""
+        scan = spark.read.schema(T.StructType([
+            T.StructField(phys[f.name], f.dataType, True) for f in fields
+        ])).parquet(*[os.path.join(self.table_dir, r) for r in rels])
+        lineage = []
+        if file_path is not None:
+            lineage.append(F.col("_metadata.file_path").alias(file_path))
+        if row_index is not None:
+            lineage.append(F.col("_metadata.row_index").alias(row_index))
+        return scan.select("*", *lineage) if lineage else scan
 
-        - ``name`` mode matches parquet columns by physical name;
-        - ``id`` mode matches by the parquet footer's ``field_id``
-          (resolved driver-side from footers with an early exit once
-          every schema field id is seen — conforming id-mode writers
-          stamp every file identically, so the common case reads ONE
-          footer; a footer without ids is non-conforming and refuses;
-          an id absent from every footer is a column added by DDL and
-          null-fills).
-
-        The scan pins the PHYSICAL schema with the logical (widest)
-        types (round 11): deterministic plan, native null-fill for
-        files predating an ``add_column``, native upcast under
-        typeWidening.  Nested fields inside a struct resolve by the
-        LOGICAL nested names (top-level physical mapping only — the
-        shape this writer produces; per-field nested physical renames
-        are beyond this reader).
-
-        Renaming is one ``select`` of alias+cast expressions — the
-        struct cast renames NESTED fields positionally to the logical
-        names, so nothing is rewritten row-side.  Partition values and
-        deletion vectors compose: ``partitionValues`` keys are PHYSICAL
-        names under mapping (per spec, like stats), DVs are path-keyed
-        and mode-agnostic."""
-        import json as _json
-
+    def _attach_files(self, scan: DataFrame, snap: Snapshot, phys: dict,
+                      rels, pvs, rel_col: str | None = None,
+                      what: str = "") -> DataFrame:
+        """``scan`` of ``rels`` with each file's relative path (as
+        ``rel_col``, when named) and logged partition values (``pvs``,
+        one ``partitionValues`` per file) attached through the shared
+        decoded-path broadcast join.  Every value is a STRING, as the
+        protocol logs partition values; explicit types keep an all-null
+        partition column from crashing inference."""
         from hadoop_sync_spark.io import attach_file_columns
 
-        mode = snap.column_mapping_mode
-        schema = snap.schema()
-        fields = _json.loads(snap.schema_json)["fields"]
-
-        def mapping_of(f: dict) -> tuple[str, int]:
-            md = f.get("metadata") or {}
-            pn = md.get("delta.columnMapping.physicalName")
-            fid = md.get("delta.columnMapping.id")
-            if pn is None or fid is None:
-                raise ValueError(
-                    f"column mapping enabled but field {f['name']!r} "
-                    "lacks physicalName/id metadata"
-                )
-            return pn, int(fid)
-
         part_cols = list(snap.partition_columns)
-        #: logical name -> metadata physicalName (partition-value keys
-        #: use THIS under mapping, whatever the footer resolution says)
-        meta_phys = {f["name"]: mapping_of(f)[0] for f in fields}
-        #: logical name -> physical column; None marks a field added by
-        #: DDL after every selected file was written (null-fills below)
-        phys: dict[str, str | None] = {}
-        if mode == "name":
-            for f in fields:
-                phys[f["name"]], _ = mapping_of(f)
-        else:  # id
-            import pyarrow.parquet as _pq
+        cols = ([rel_col] if rel_col else []) + part_cols
+        if not cols:
+            return scan
+        return attach_file_columns(
+            scan,
+            [
+                (os.path.abspath(os.path.join(self.table_dir, rel)),)
+                + ((rel,) if rel_col else ())
+                + tuple(_partition_value(pv, phys, c) for c in part_cols)
+                for rel, pv in zip(rels, pvs)
+            ],
+            cols,
+            what=what,
+            types={c: T.StringType() for c in cols},
+        )
 
-            # partition columns never appear in data-file footers —
-            # including their ids here would defeat the early exit on
-            # every partitioned id-mode table (full footer walk)
-            needed = {
-                mapping_of(f)[1] for f in fields
-                if f["name"] not in part_cols
-            }
-            id_to_col: dict[int, str] = {}
-            # footer walk, driver-side metadata only: conforming id-mode
-            # writers stamp every file identically, so the FIRST footer
-            # resolves everything and the loop exits after one read (the
-            # pre-round-11 cost); only a post-add_column history (older
-            # files missing the new field id) walks further, and a field
-            # id absent from EVERY walked footer is the
-            # added-never-written case — legal, null-fills.  One id
-            # carried under two different physical names WITHIN the
-            # walked prefix refuses (per-file plans are beyond the
-            # one-scan reader); a divergent file past the early exit is
-            # indistinguishable from a conforming one without an
-            # O(#files) walk on every read — best-effort by design, the
-            # same trust conforming stamps earn elsewhere.
-            for fp in files:
-                footer = _pq.read_schema(fp)
-                any_id = False
-                for i in range(len(footer.names)):
-                    fld = footer.field(i)
-                    fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-                    if fid is None:
-                        continue
-                    any_id = True
-                    fid = int(fid)
-                    prev = id_to_col.setdefault(fid, fld.name)
-                    if prev != fld.name:
-                        raise ValueError(
-                            f"id-mode column mapping: field id {fid} "
-                            f"appears as {prev!r} and {fld.name!r} "
-                            "across data files — per-file physical-name "
-                            "divergence is beyond the one-scan reader"
-                        )
-                if not any_id:
-                    raise ValueError(
-                        f"id-mode column mapping: no field ids in the "
-                        f"parquet footer of {fp!r} — non-conforming file"
-                    )
-                if needed <= set(id_to_col):
-                    break
-            for f in fields:
-                _, fid = mapping_of(f)
-                phys[f["name"]] = id_to_col.get(fid)
-
-
-        # pin the PHYSICAL data schema with the logical (widest) types:
-        # deterministic plan regardless of which footer Spark would have
-        # sampled, native null-fill for files predating an add_column,
-        # and native parquet upcast under typeWidening (round 11)
-        phys_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, True)
-            for f in schema.fields
-            if f.name not in part_cols and phys.get(f.name) is not None
-        ])
-        scan = spark.read.schema(phys_schema).parquet(*files)
-        dv_map = {
-            p: a["deletionVector"]
-            for p, a in snap.live.items()
-            if a.get("deletionVector") and p in set(sel)
-        }
-        if dv_map:
-            scan = scan.select(
-                "*", F.col("_metadata.row_index").alias("_row_idx")
-            )
-
-        # physical -> logical rename; struct cast renames nested fields.
-        # A pinned physical column a particular file lacks null-fills —
-        # production Delta's own semantics (files legitimately predate
-        # an added column), so a non-conforming file missing a mapped
-        # column reads as nulls rather than refusing; the pinned schema
-        # makes every phys name present in the scan by construction.
-        data_exprs = []
-        for f in schema.fields:
-            if f.name in part_cols:
-                continue  # partition values attach from the log
-            p = phys[f.name]
-            if p is None:
-                # added by DDL, no selected file carries it yet
-                data_exprs.append(
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                )
-                continue
-            data_exprs.append(F.col(p).cast(f.dataType).alias(f.name))
-
-        attach_cols: list[str] = []
-        if dv_map:
-            attach_cols.append("_rel_path")
-        attach_cols += part_cols
-        if attach_cols:
-            rows = []
-            for p in sel:
-                a = snap.live[p]
-                pv = a.get("partitionValues") or {}
-                row = [os.path.abspath(os.path.join(self.table_dir, p))]
-                if dv_map:
-                    row.append(p)
-                for c in part_cols:
-                    # spec: partitionValues keys use PHYSICAL names under
-                    # column mapping (the metadata's physicalName — a
-                    # partition column never appears in data-file
-                    # footers, so id-mode footer resolution cannot name
-                    # it); tolerate logical for lax writers
-                    v = pv.get(meta_phys.get(c, c), pv.get(c))
-                    row.append(None if v is None else str(v))
-                rows.append(tuple(row))
-            scan = attach_file_columns(
-                scan, rows, attach_cols, what="delta mapped snapshot",
-                types={c: T.StringType() for c in attach_cols},
-            )
-        out_cols = data_exprs + [
-            F.col(c).cast(schema[c].dataType).alias(c) for c in part_cols
-        ]
-        if dv_map:
-            dels = self._dv_delete_frame(spark, dv_map)
-            if dels is not None:
-                scan = scan.join(
-                    dels,
-                    (F.col("_rel_path") == F.col("_d_file"))
-                    & (F.col("_row_idx") == F.col("_d_pos")),
-                    "left_anti",
-                )
-        return scan.select(*out_cols)
+    def _minus_deleted(self, spark, df: DataFrame, dv_map: dict,
+                       rel_col: str, pos_col: str) -> DataFrame:
+        """``df`` without the rows the deletion vectors in ``dv_map``
+        (relative path -> descriptor) delete: an anti-join of its
+        ``(rel_col, pos_col)`` lineage against
+        :meth:`_dv_delete_frame` — broadcast under the size ceiling,
+        executor-decoded shuffle join above it.  Vectors that decode to
+        no position (a cardinality-0 descriptor another engine wrote is
+        legal) subtract nothing."""
+        dels = self._dv_delete_frame(spark, dv_map) if dv_map else None
+        if dels is None:
+            return df
+        return df.join(
+            dels,
+            (F.col(rel_col) == F.col("_d_file"))
+            & (F.col(pos_col) == F.col("_d_pos")),
+            "left_anti",
+        )
 
     # ---- minimal committer (fixture builder + registry export) ---------
     def commit(self, version: int, actions: list[dict]) -> str:
@@ -1322,7 +1196,8 @@ class DeltaLog:
         # column mapping writes under physical names (the merge
         # face's rule): name mode via metadata physicalName, id mode
         # per-footer with stamped output footers (round 13)
-        phys = (self._resolve_physical(snap, "append_stream_batch")
+        phys = (self._resolve_physical(snap, snap.files,
+                                       "append_stream_batch")
                 if snap.column_mapping_mode != "none"
                 else None)
         schema = snap.schema()
@@ -1431,11 +1306,7 @@ class DeltaLog:
         }
         fid: int | None = None
         if snap.column_mapping_mode != "none":
-            used = [
-                int((f.get("metadata") or {})
-                    .get("delta.columnMapping.id", 0))
-                for f in schema["fields"]
-            ]
+            used = [fid or 0 for _, fid in _column_mapping(snap).values()]
             max_id = int(snap.configuration.get(
                 "delta.columnMapping.maxColumnId", 0
             ))
@@ -1602,43 +1473,15 @@ class DeltaLog:
         that leaves every snapshot intact and only unreferenced debris,
         which :meth:`vacuum` reclaims.  Returns a summary dict, or None
         when nothing qualified (a no-op makes NO commit)."""
-        import json as _json
-
         snap = self.snapshot()
         part_cols = list(snap.partition_columns)
-        mode = snap.column_mapping_mode
-        # under column mapping the rewrite must emit PHYSICAL column
-        # names (and field ids, so id-mode readers resolve the new file)
-        # — read() returns LOGICAL names, and a logical-named output
-        # file would break the mapped read path (ADVICE r9 medium)
-        phys_fields: list[dict] = []
-        if mode != "none":
-            for f in _json.loads(snap.schema_json)["fields"]:
-                md = f.get("metadata") or {}
-                pn = md.get("delta.columnMapping.physicalName")
-                fid = md.get("delta.columnMapping.id")
-                if pn is None or fid is None:
-                    raise ValueError(
-                        f"column mapping enabled but field {f['name']!r} "
-                        "lacks physicalName/id metadata"
-                    )
-                phys_fields.append(
-                    {"name": f["name"], "pn": pn, "fid": int(fid)}
-                )
-        # partitionValues keys are PHYSICAL names under mapping (spec)
-        part_keys = (
-            {pf["pn"] for pf in phys_fields if pf["name"] in part_cols}
-            if mode != "none" else set(part_cols)
-        )
+        phys = self._resolve_physical(snap, snap.files, "compact")
         live = [snap.live[rel] for rel in snap.files]
-        if part_keys and any(
-            not part_keys <= set(a.get("partitionValues") or {})
-            for a in live
-        ):
-            raise NotImplementedError(
-                "compaction over value-less partitioned adds is not "
-                "supported — log partitionValues"
-            )
+        refusal = _hive_layout_refusal(
+            snap, phys, [a.get("partitionValues") for a in live], "compact"
+        )
+        if refusal is not None:
+            raise refusal
         bins = plan_bins(
             live,
             lambda a: a["size"],
@@ -1648,79 +1491,31 @@ class DeltaLog:
         )
         if not bins:
             return None
-
-        # unmapped rewrite column list from the LOGGED schema, not a
-        # sampled footer: Spark's inferred read picks ONE footer per
-        # directory, and a bin mixing pre- and post-add_column files
-        # could sample a pre-DDL footer — the select then silently
-        # DROPPED the added column's values from the rewrite (data
-        # loss; the mapped branch and the Iceberg twin were fixed in
-        # r9, this branch was caught by the DML fuzzer).  read(paths)
-        # pins the logged schema, so pre-DDL rows null-fill and
-        # post-DDL values survive; partition columns stay
-        # metadata-only.  Bin-invariant, so computed once here (the
-        # mapped twin phys_fields is hoisted the same way above).
-        data_cols = [
-            f["name"]
-            for f in _json.loads(snap.schema_json)["fields"]
-            if f["name"] not in part_cols
-        ]
-
+        # the rewrite's columns come from the LOGGED schema, never a
+        # sampled footer, so a bin mixing pre- and post-add_column files
+        # keeps the added column's values; it leaves under the names
+        # every other write face uses (_phys_cols)
+        data_names = [f.name for f in snap.schema().fields
+                      if f.name not in part_cols]
         version = snap.version + 1
         self._check_free(version)
         rewritten: set[str] = set()
         adds: list[dict] = []
         bytes_in = 0
-        fid_conf = "spark.sql.parquet.fieldId.write.enabled"
-        old_fid_conf = None
-        if mode == "id":
-            try:
-                old_fid_conf = spark.conf.get(fid_conf)
-            except Exception:
-                old_fid_conf = None
-            spark.conf.set(fid_conf, "true")
-        # try/finally: a mid-rewrite failure (disk full, analysis error)
-        # must not leak the session-wide conf — a stamped footer in a
-        # plain directory poisons inferred reads (the hazard the
-        # id-mode-only stamping exists to avoid)
-        try:
-            for i, (pv, group) in enumerate(bins):
-                rels = {a["path"] for a in group}
-                if mode != "none":
-                    # logical -> physical rename; the mapping's field id
-                    # stamps into the footer ONLY in id mode (where every
-                    # conforming file carries ids and readers match on
-                    # them) — a stamped file in a name-mode table would
-                    # poison Spark's inferred-schema read of a mixed
-                    # stamped/plain directory, which hard-fails
-                    out = self.read(spark, paths=rels).select(*[
-                        F.col(pf["name"]).alias(
-                            pf["pn"],
-                            metadata=(
-                                {"parquet.field.id": pf["fid"]}
-                                if mode == "id" else None
-                            ),
-                        )
-                        for pf in phys_fields
-                        if pf["name"] not in part_cols
-                    ])
-                else:
-                    out = self.read(spark, paths=rels).select(*data_cols)
-                rel = f"part-compact-{version:010d}-{i}.parquet"
-                write_parquet(out, os.path.join(self.table_dir, rel))
-                adds.append(
-                    self.add_action_for(
-                        rel, partitionValues=dict(pv), dataChange=False
-                    )
+        for i, (pv, group) in enumerate(bins):
+            rels = {a["path"] for a in group}
+            out = self.read(spark, paths=rels).select(
+                *self._phys_cols(snap, phys, data_names)
+            )
+            rel = f"part-compact-{version:010d}-{i}.parquet"
+            write_parquet(out, os.path.join(self.table_dir, rel))
+            adds.append(
+                self.add_action_for(
+                    rel, partitionValues=dict(pv), dataChange=False
                 )
-                rewritten |= rels
-                bytes_in += sum(a["size"] for a in group)
-        finally:
-            if mode == "id":
-                if old_fid_conf is None:
-                    spark.conf.unset(fid_conf)
-                else:
-                    spark.conf.set(fid_conf, old_fid_conf)
+            )
+            rewritten |= rels
+            bytes_in += sum(a["size"] for a in group)
         self.commit(
             version,
             [
@@ -1922,52 +1717,39 @@ class DeltaLog:
     #: size where an IN list is still plan-trivial
     MERGE_IN_PUSHDOWN_KEY_LIMIT = 128
 
-    def _resolve_physical(self, snap: Snapshot, face: str) -> dict:
-        """logical name -> physical column for the DML write faces
-        (``none`` is identity, ``name`` rides the metadata
-        physicalName).  ``id`` mode (round 13, lifting the r12
-        refusal) resolves per-FOOTER exactly like the read path: walk
-        live files' footers by field id with the same early exit —
-        the incumbent names win, so new files stay consistent with
-        what conforming external writers already stamped; field ids
-        no live footer carries (added columns, empty tables) fall
-        back to the metadata physicalName, the name this writer's own
-        stamped-footer files then establish.  Writers pair this with
-        :meth:`_phys_field_meta` so id-mode output files carry footer
-        field ids themselves (the compact path's discipline)."""
-        schema = snap.schema()
-        if schema is None:
-            raise ValueError("no metaData action in the log")
-        mode = snap.column_mapping_mode
-        phys: dict[str, str] = {f.name: f.name for f in schema.fields}
-        if mode == "none":
-            return phys
-        part_cols = set(snap.partition_columns)
-        meta_of: dict[str, tuple[str, int | None]] = {}
-        for f in json.loads(snap.schema_json)["fields"]:
-            md = f.get("metadata") or {}
-            pn = md.get("delta.columnMapping.physicalName")
-            fid = md.get("delta.columnMapping.id")
-            if pn is None or (mode == "id" and fid is None):
-                raise ValueError(
-                    f"column mapping enabled but field "
-                    f"{f['name']!r} lacks physicalName/id metadata"
-                )
-            meta_of[f["name"]] = (pn, None if fid is None else int(fid))
-        if mode == "name":
-            return {n: pn for n, (pn, _) in meta_of.items()}
-        # id mode: footer walk (partition columns never appear in data
-        # files, so their ids are excluded from the early-exit target;
-        # their physical name — the partitionValues key — is the
-        # metadata's, per spec)
+    def _resolve_physical(self, snap: Snapshot, rels, face: str) -> dict:
+        """logical name -> physical column, for every face that reads or
+        writes data files (``none`` is the identity, ``name`` the
+        metadata physicalName).  ``id`` mode resolves from the footers
+        of ``rels``: they are walked by field id with an early exit once
+        every data field's id is seen — conforming id-mode writers stamp
+        every file identically, so the common case reads ONE footer.
+        The incumbent names win, so new files stay consistent with what
+        conforming external writers already stamped.  A field id no
+        walked footer carries (a column added by DDL, an empty table)
+        takes the metadata physicalName: the pinned scan null-fills it,
+        and this writer's own stamped files then establish it.
+        Partition columns never reach data files; their physical name
+        (the ``partitionValues`` key) is the metadata's, per spec.
+
+        A footer without ids is non-conforming and refuses; so does one
+        id carried under two names within the walked prefix (per-file
+        plans are beyond the one scan).  A divergent file past the early
+        exit is indistinguishable from a conforming one without an
+        O(#files) walk on every read — best-effort by design.  Writers
+        pair this with :meth:`_phys_cols` so id-mode output files carry
+        footer field ids themselves."""
+        mapping = _column_mapping(snap)
+        if snap.column_mapping_mode != "id":
+            return {n: pn for n, (pn, _) in mapping.items()}
         import pyarrow.parquet as _pq
 
-        needed = {fid for n, (_, fid) in meta_of.items()
+        part_cols = set(snap.partition_columns)
+        needed = {fid for n, (_, fid) in mapping.items()
                   if n not in part_cols}
         id_to_col: dict[int, str] = {}
-        for rel in snap.files:
-            footer = _pq.read_schema(
-                os.path.join(self.table_dir, rel))
+        for rel in rels:
+            footer = _pq.read_schema(os.path.join(self.table_dir, rel))
             any_id = False
             for i in range(len(footer.names)):
                 fld = footer.field(i)
@@ -1979,11 +1761,10 @@ class DeltaLog:
                 prev = id_to_col.setdefault(fid, fld.name)
                 if prev != fld.name:
                     raise ValueError(
-                        f"id-mode column mapping: field id {fid} "
+                        f"{face}: id-mode column mapping: field id {fid} "
                         f"appears as {prev!r} and {fld.name!r} across "
                         "data files — per-file physical-name "
-                        "divergence is beyond the one-scan reader, "
-                        f"and {face} will not add to it"
+                        "divergence is beyond the one-scan reader"
                     )
             if not any_id:
                 raise ValueError(
@@ -1993,27 +1774,23 @@ class DeltaLog:
             if needed <= set(id_to_col):
                 break
         return {
-            n: (pn if n in part_cols
-                else id_to_col.get(fid, pn))
-            for n, (pn, fid) in meta_of.items()
+            n: (pn if n in part_cols else id_to_col.get(fid, pn))
+            for n, (pn, fid) in mapping.items()
         }
 
     def _phys_field_meta(self, snap: Snapshot) -> dict:
         """logical name -> alias metadata for the write faces: in id
         mode, ``{"parquet.field.id": fid}`` so output footers carry
         the field ids id-mode readers match on (Spark's
-        ``fieldId.write`` honors the alias metadata); empty for
-        none/name mode (a stamped file in a name-mode table would
-        poison inferred reads of mixed directories — compact's
-        rule)."""
+        ``fieldId.write``, on by default, honors the alias metadata);
+        empty for none/name mode (a stamped file in a name-mode table
+        would poison inferred reads of mixed directories)."""
         if snap.column_mapping_mode != "id":
             return {}
-        out = {}
-        for f in json.loads(snap.schema_json)["fields"]:
-            fid = (f.get("metadata") or {}).get("delta.columnMapping.id")
-            if fid is not None:
-                out[f["name"]] = {"parquet.field.id": int(fid)}
-        return out
+        return {
+            n: {"parquet.field.id": fid}
+            for n, (_, fid) in _column_mapping(snap).items()
+        }
 
     def _phys_cols(self, snap: Snapshot, phys: dict, names,
                    exprs: dict | None = None) -> list:
@@ -2061,7 +1838,7 @@ class DeltaLog:
         if in_frame is not None:
             pred_cols.setdefault(in_frame[0], None)
         schema = snap.schema()
-        phys = self._resolve_physical(snap, face)
+        phys = self._resolve_physical(snap, snap.files, face)
         for c in pred_cols:
             if c not in phys:
                 raise ValueError(f"no such column {c!r}")
@@ -2074,37 +1851,18 @@ class DeltaLog:
         sel = list(snap.files)
         if not sel:
             return phys, None
-        if snap.partition_columns:
-            # partitionValues keys are PHYSICAL names under column
-            # mapping (the spec; tolerate logical for lax writers) —
-            # comparing logical names alone would falsely refuse every
-            # conforming mapped partitioned table
-            logical = set(snap.partition_columns)
-            physical = {phys.get(c, c) for c in snap.partition_columns}
-            if not all(
-                physical <= set(a.get("partitionValues") or {})
-                or logical <= set(a.get("partitionValues") or {})
-                for a in snap.live.values()
-            ):
-                # a DV written here would make the table UNREADABLE:
-                # the read path refuses deletion vectors over
-                # Hive-inferred (value-less) partition layouts
-                raise NotImplementedError(
-                    f"{face} on a partitioned table whose adds carry "
-                    "no partitionValues (Hive-inferred layout): "
-                    "deletion vectors need the logged values — re-log "
-                    "the adds"
-                )
-        files = [os.path.join(self.table_dir, p) for p in sel]
-        pred_schema = T.StructType([
-            T.StructField(phys[c], schema[c].dataType, True)
-            for c in pred_cols
-        ])
-        scan = spark.read.schema(pred_schema).parquet(*files).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.col(phys[c]).alias(c) for c in pred_cols],
+        # a vector written over a Hive-inferred layout would make the
+        # table unreadable: read() refuses vectors there
+        refusal = _hive_layout_refusal(
+            snap, phys,
+            [a.get("partitionValues") for a in snap.live.values()], face,
         )
+        if refusal is not None:
+            raise refusal
+        pred_fields = [schema[c] for c in pred_cols]
+        scan = self._scan(
+            spark, sel, pred_fields, phys, row_index="_pos", file_path="_fp"
+        ).select("_fp", "_pos", *_logical_cols(pred_fields, (), phys))
         for c, (lo, hi) in column_filter.items():
             if lo is not None:
                 scan = scan.filter(F.col(c) >= lo)
@@ -2315,10 +2073,9 @@ class DeltaLog:
         before counting, so ``rows_deleted`` counts NEW deletions only
         and a no-op predicate commits nothing.  A change-data-feed
         table also gets the deleted rows as ``delete`` change data.
-        Supports unmapped and column-mapped tables: name-mode
-        predicates resolve through the metadata physicalName, id-mode
-        per-footer like the read path.  How the matched positions
-        materialize is decided once by their count
+        Supports unmapped and column-mapped tables: predicates resolve
+        through :meth:`_resolve_physical`, like every read.  How the
+        matched positions materialize is decided once by their count
         (:meth:`_fresh_positions`); every later step is shared."""
         snap = self.snapshot()
         phys, pairs = self._match_pairs(
@@ -2361,8 +2118,8 @@ class DeltaLog:
         """Distributed matched ``(_fp, _pos)`` frame → the FRESH rows
         (``_fp``, ``_pos``, ``_afp``, ``_rel``): positions the
         snapshot's existing deletion vectors already delete are
-        anti-joined away through the read path's
-        :meth:`_dv_delete_frame` (its decode regimes included).  A
+        anti-joined away by the read path's :meth:`_minus_deleted`
+        (its decode regimes included).  A
         scanned file missing from the snapshot keeps a null ``_rel``,
         which the vector build refuses."""
         from hadoop_sync_spark.io import decode_file_uri_col
@@ -2384,15 +2141,7 @@ class DeltaLog:
             for rel, add in snap.live.items()
             if add.get("deletionVector")
         }
-        dels = self._dv_delete_frame(spark, dv_map) if dv_map else None
-        if dels is not None:
-            m = m.join(
-                dels,
-                (m["_rel"] == dels["_d_file"])
-                & (m["_pos"] == dels["_d_pos"]),
-                "left_anti",
-            )
-        return m
+        return self._minus_deleted(spark, m, dv_map, "_rel", "_pos")
 
     @staticmethod
     def _cdf_enabled(snap: Snapshot) -> bool:
@@ -2414,22 +2163,13 @@ class DeltaLog:
         LOGICAL column names."""
         from hadoop_sync_spark.io import decode_file_uri_col
 
-        schema = snap.schema()
         part_cols = list(snap.partition_columns)
-        data_fields = [f for f in schema.fields
+        data_fields = [f for f in snap.schema().fields
                        if f.name not in part_cols]
-        full_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, True)
-            for f in data_fields
-        ])
-        scan = spark.read.schema(full_schema).parquet(
-            *[os.path.join(self.table_dir, r) for r in rels]
-        ).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.col(phys[f.name]).alias(f.name)
-              for f in data_fields],
-        )
+        scan = self._scan(
+            spark, rels, data_fields, phys,
+            row_index="_pos", file_path="_fp",
+        ).select("_fp", "_pos", *_logical_cols(data_fields, (), phys))
         joined = scan.withColumn("_afp", decode_file_uri_col("_fp")).join(
             sel, ["_afp", "_pos"], "inner"
         )
@@ -2953,10 +2693,8 @@ class DeltaLog:
         delete+insert pairs, documented honestly.  Referenced data and
         cdc files must still exist (pre-vacuum) or the read refuses by
         name; DV diffs decode driver-side under the summed-cardinality
-        cap.  Mapped tables resolve like :meth:`read` (id mode
-        refuses)."""
-        from hadoop_sync_spark.io import attach_file_columns
-
+        cap.  Mapped tables of both modes resolve through
+        :meth:`_resolve_physical`, like :meth:`read`."""
         if to_version is None:
             to_version = self.latest_version()
         if from_version > to_version:
@@ -2967,7 +2705,8 @@ class DeltaLog:
         schema = end_snap.schema()
         if schema is None:
             raise ValueError("no metaData action in the log")
-        phys = self._resolve_physical(end_snap, "read_changes")
+        phys = self._resolve_physical(end_snap, end_snap.files,
+                                      "read_changes")
         part_cols = list(end_snap.partition_columns)
         #: path -> its add action as of the cursor (DV + partition state)
         state: dict[str, dict] = {}
@@ -3120,72 +2859,33 @@ class DeltaLog:
                 f"read_changes needs data files the log references but "
                 f"disk no longer has (vacuumed?): {missing}"
             )
-        if part_cols and any(
-            not part_vals.get(rel) for rel in touched
-        ):
-            # read() infers Hive-layout partitions from paths; a change
-            # feed silently emitting NULL partition columns instead
-            # would be wrong data (r11 review) — refuse loudly
-            raise NotImplementedError(
-                "read_changes on a partitioned table whose actions "
-                "carry no partitionValues (Hive-inferred layout): "
-                "re-log the adds"
-            )
-        #: partition values come from the actions, keyed per path;
-        #: tolerate physical keys under mapping like read() does
-        meta_phys = {c: phys.get(c, c) for c in part_cols}
-
-        def pv_of(rel: str, c: str):
-            pv = part_vals.get(rel) or {}
-            v = pv.get(meta_phys[c], pv.get(c))
-            return None if v is None else str(v)
-
-        phys_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, True)
-            for f in data_fields
-        ])
-        data_exprs = [
-            F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-            for f in data_fields
-        ] + [
-            F.col(c).cast(schema[c].dataType).alias(c)
-            for c in part_cols
-        ]
+        # a change feed silently emitting NULL partition columns would
+        # be wrong data (r11 review) — refuse loudly
+        refusal = _hive_layout_refusal(
+            end_snap, phys, [part_vals.get(rel) for rel in touched],
+            "read_changes",
+        )
+        if refusal is not None:
+            raise refusal
+        logical = _logical_cols(schema.fields, part_cols, phys)
         #: cdc-versioned frames in FINAL shape (built first so a
         #: cdc-only range never constructs the derivation scan)
         final_frames: list[DataFrame] = []
-        cdc_schema = T.StructType(
-            list(phys_schema.fields)
-            + [T.StructField("_change_type", T.StringType(), True)]
-        )
         for v, cdcs in cdc_versions:
-            cscan = spark.read.schema(cdc_schema).parquet(*[
-                os.path.join(self.table_dir, c["path"]) for c in cdcs
-            ])
-            if part_cols:
-                crows = []
-                for c in cdcs:
-                    pv = c.get("partitionValues") or {}
-                    crows.append(
-                        (os.path.abspath(os.path.join(
-                            self.table_dir, c["path"])),)
-                        + tuple(
-                            None
-                            if pv.get(meta_phys[pc], pv.get(pc)) is None
-                            else str(pv.get(meta_phys[pc],
-                                            pv.get(pc)))
-                            for pc in part_cols
-                        )
-                    )
-                cdf_df = attach_file_columns(
-                    cscan, crows, list(part_cols),
-                    what="delta cdc partition",
-                    types={pc: T.StringType() for pc in part_cols},
-                )
-            else:
-                cdf_df = cscan
-            final_frames.append(cdf_df.select(
-                *data_exprs,
+            paths = [c["path"] for c in cdcs]
+            cscan = self._attach_files(
+                self._scan(
+                    spark, paths,
+                    data_fields
+                    + [T.StructField("_change_type", T.StringType())],
+                    {**phys, "_change_type": "_change_type"},
+                ),
+                end_snap, phys, paths,
+                [c.get("partitionValues") for c in cdcs],
+                what="delta cdc partition",
+            )
+            final_frames.append(cscan.select(
+                *logical,
                 F.col("_change_type").cast("string")
                 .alias("_change_type"),
                 F.lit(v).cast("long").alias("_commit_version"),
@@ -3195,19 +2895,10 @@ class DeltaLog:
             for p in final_frames[1:]:
                 out = out.unionByName(p, allowMissingColumns=False)
             return out
-        scan = spark.read.schema(phys_schema).parquet(
-            *[os.path.join(self.table_dir, rel) for rel in touched]
-        ).select(
-            "*", F.col("_metadata.row_index").alias("_pos")
-        )
-        rows = [
-            (os.path.abspath(os.path.join(self.table_dir, rel)), rel)
-            + tuple(pv_of(rel, c) for c in part_cols)
-            for rel in touched
-        ]
-        df = attach_file_columns(
-            scan, rows, ["_rel", *part_cols], what="delta change feed",
-            types={c: T.StringType() for c in ["_rel", *part_cols]},
+        df = self._attach_files(
+            self._scan(spark, touched, data_fields, phys, row_index="_pos"),
+            end_snap, phys, touched, [part_vals.get(r) for r in touched],
+            rel_col="_rel", what="delta change feed",
         )
         pieces = []
         if ev_rows:
@@ -3240,7 +2931,7 @@ class DeltaLog:
         for p in pieces[1:]:
             out = out.unionByName(p, allowMissingColumns=False)
         out = out.select(
-            *data_exprs,
+            *logical,
             F.col("_change_type").cast("string").alias("_change_type"),
             F.col("_commit_version").cast("long")
             .alias("_commit_version"),

@@ -2821,7 +2821,8 @@ class IcebergTable:
             raise NotImplementedError(
                 "update_rows with live equality-delete files: the scan "
                 "cannot see which rows they hide and would resurrect "
-                "them — compact the table first"
+                "them — compact every data file older than the "
+                "equality deletes, then run remove_dangling_deletes"
             )
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]

@@ -5,8 +5,11 @@ PROTOCOL.md)."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+from collections import Counter
+from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
@@ -2801,3 +2804,167 @@ def test_version_at_clamps_clock_skew(tmp_path):
                    log.add_action_for("c.parquet")])
     assert log.version_at(3000) == 0  # NOT 2 — v1's state is newer
     assert log.version_at(5000) == 2  # clamp makes v2 resolve at 5000
+
+
+# ------------------------------------------ one resolver, one read path
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_compact_id_mode_keeps_incumbent_footer_names(spark, tmp_path):
+    """id-mode compaction writes under the names the footers already
+    carry (col-zzz/col-qqq here, while the metadata says
+    col-aaa/col-bbb), like every other write face.  A rewrite under the
+    metadata names read back as nulls: the reader resolves the names
+    from the first footer."""
+    d, log = _mk_table(tmp_path, "cm_id_compact")
+    names = {"col_k": "col-zzz", "col_v": "col-qqq", "ids": (1, 2)}
+    n = 5000
+    _write_phys(d, "a_big.parquet", list(range(n)),
+                [f"r{i}" for i in range(n)], **names)
+    _write_phys(d, "b.parquet", [n], ["b"], **names)
+    _write_phys(d, "c.parquet", [n + 1], ["c"], **names)
+    log.commit(0, [{"protocol": {"minReaderVersion": 2,
+                                 "minWriterVersion": 5}},
+                   _mapped_meta("id"),
+                   *[log.add_action_for(f)
+                     for f in ("a_big.parquet", "b.parquet", "c.parquet")]])
+    before = _rows(log.read(spark))
+    assert sum(before.values()) == n + 2
+    res = log.compact(
+        spark, target_bytes=os.path.getsize(os.path.join(d, "a_big.parquet"))
+    )
+    assert res["files_in"] == 2
+    assert _rows(log.read(spark)) == before
+
+
+@pytest.mark.parametrize("dv", [False, True], ids=["no_dv", "dv"])
+@pytest.mark.parametrize("partitioned", [False, True],
+                         ids=["flat", "partitioned"])
+@pytest.mark.parametrize("mode", ["none", "name", "id"])
+def test_read_path_parity(spark, tmp_path, mode, partitioned, dv):
+    """read(), read_changes(0) and read() after compact equal a pyarrow
+    model of the live rows under every mapping mode, with and without
+    partition columns and deletion vectors: every shape takes the one
+    read body (pinned scan, partition attach, vector anti-join, logical
+    projection)."""
+    d, log = _mk_table(tmp_path, f"parity_{mode}")
+    if mode == "none":
+        proto = {"minReaderVersion": 1, "minWriterVersion": 2}
+        names = {"col_k": "k", "col_v": "v"}
+        pkey = "p"
+    else:
+        proto = {"minReaderVersion": 2, "minWriterVersion": 5}
+        names = {"ids": (1, 2) if mode == "id" else None}
+        pkey = "col-ccc"
+    files = {"a.parquet": ([1, 2, 3], 0), "b.parquet": ([4, 5], 0),
+             "c.parquet": ([6], 1), "d.parquet": ([7, 8], 1)}
+    actions = [{"protocol": proto}, _mapped_meta(mode, part=partitioned)]
+    model = {}
+    for rel, (ks, p) in files.items():
+        _write_phys(d, rel, ks, [f"v{k}" for k in ks], **names)
+        actions.append(log.add_action_for(
+            rel, partitionValues={pkey: str(p)} if partitioned else {}
+        ))
+        for pos, k in enumerate(ks):
+            model[(rel, pos)] = (k, f"v{k}") + ((p,) if partitioned else ())
+    log.commit(0, actions)
+    changes = Counter(row + ("insert", 0) for row in model.values())
+    if dv:
+        log.add_deletion_vector(1, "a.parquet", [0, 2])
+        for pos in (0, 2):
+            changes[model.pop(("a.parquet", pos)) + ("delete", 1)] += 1
+    live = Counter(model.values())
+    assert _rows(log.read(spark)) == live
+    assert _rows(log.read_changes(spark, 0)) == changes
+    assert log.compact(spark)["files_out"] == (2 if partitioned else 1)
+    assert _rows(log.read(spark)) == live
+    # compaction is dataChange=false: the feed does not move
+    assert _rows(log.read_changes(spark, 0)) == changes
+
+
+@pytest.mark.parametrize("mode", ["none", "name"])
+def test_non_null_nested_types_read_and_feed(spark, tmp_path, mode):
+    """A logged ``array<long>`` with ``containsNull: false`` reads and
+    feeds: the pinned scan already carries the logical types, so the
+    logical projection renames data columns without a cast (Spark
+    cannot cast a nullable element type to a non-nullable one)."""
+    d, log = _mk_table(tmp_path, f"nested_{mode}")
+    col = "a" if mode == "none" else "col-arr"
+    pq.write_table(pa.table({col: pa.array([[1], [2, 3]],
+                                           pa.list_(pa.int64()))}),
+                   os.path.join(d, "x.parquet"))
+    arr = {"type": "array", "elementType": "long", "containsNull": False}
+    meta = {"metaData": {
+        "id": "t", "format": {"provider": "parquet", "options": {}},
+        "schemaString": json.dumps({"type": "struct", "fields": [
+            {"name": "a", "type": arr, "nullable": True, "metadata": (
+                {} if mode == "none" else
+                {"delta.columnMapping.id": 1,
+                 "delta.columnMapping.physicalName": col})}]}),
+        "partitionColumns": [],
+        "configuration": {"delta.columnMapping.mode": mode},
+    }}
+    log.commit(0, [{"protocol": {"minReaderVersion": 2,
+                                 "minWriterVersion": 5}},
+                   meta, log.add_action_for("x.parquet")])
+    assert sorted(r.a for r in log.read(spark).collect()) == [[1], [2, 3]]
+    assert sorted((r.a, r._change_type)
+                  for r in log.read_changes(spark, 0).collect()) == [
+        ([1], "insert"), ([2, 3], "insert")]
+
+
+# -------------------------------------------------------------- CI guard
+_PACKAGE = Path(__file__).resolve().parent.parent / "hadoop_sync_spark"
+_MAPPING_KEYS = {"delta.columnMapping.physicalName", "delta.columnMapping.id"}
+_FIELD_ID_READERS = {("delta_log.py", "DeltaLog._resolve_physical"),
+                     ("cdc_source.py", "_CDCStreamReader.read")}
+
+
+def _nodes(node, scope=""):
+    """Every node under ``node`` with its enclosing ``Class.function``
+    and whether it is a dict-literal key (a write, not a read)."""
+    for child in ast.iter_child_nodes(node):
+        inner = scope
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.ClassDef)):
+            inner = f"{scope}.{child.name}" if scope else child.name
+        is_key = isinstance(node, ast.Dict) and any(
+            child is k for k in node.keys)
+        yield child, scope, is_key
+        yield from _nodes(child, inner)
+
+
+def test_delta_mapping_and_scan_have_one_home():
+    """Column-mapping metadata is read only by ``_column_mapping``
+    (``add_column`` may still write it), footer field ids only by
+    ``_resolve_physical`` and the change-feed source's executor-side
+    read, ``delta_log.py`` builds a pinned scan only in ``_scan``, and
+    no module sets Spark's field-id write switch (on by default, and
+    the write faces rely on it)."""
+    bad = []
+    for path in sorted(_PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node, scope, is_key in _nodes(tree):
+            where = (path.name, scope)
+            site = (f"{path.relative_to(_PACKAGE.parent)}:"
+                    f"{getattr(node, 'lineno', '?')} in {scope or 'module'}")
+            if isinstance(node, ast.Constant):
+                v = node.value
+                if (v in _MAPPING_KEYS and not is_key
+                        and where != ("delta_log.py", "_column_mapping")):
+                    bad.append(f"{site}: reads {v}")
+                if (v in ("PARQUET:field_id", b"PARQUET:field_id")
+                        and where not in _FIELD_ID_READERS):
+                    bad.append(f"{site}: reads footer field ids")
+                if v == "spark.sql.parquet.fieldId.write.enabled":
+                    bad.append(f"{site}: names the field-id write conf")
+            if (path.name == "delta_log.py"
+                    and isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "schema"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "read"
+                    and scope != "DeltaLog._scan"):
+                bad.append(f"{site}: spark.read.schema outside _scan")
+    assert not bad, bad

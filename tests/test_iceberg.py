@@ -1626,6 +1626,33 @@ def test_remove_dangling_equality_deletes(spark, tmp_path):
     assert sorted(r.id for r in t.read(spark).collect()) == [1, 3]
 
 
+def test_update_rows_refusal_names_the_sequence_that_unblocks_it(
+        spark, tmp_path):
+    """A merge leaves a live equality delete, so update_rows refuses.
+    Compaction alone carries the delete forward, so the message names
+    what works: compact the older data files, then
+    remove_dangling_deletes."""
+    t, write_pq = _mor_table(tmp_path)
+    t.append([write_pq("f1.parquet", [1, 2]),
+              write_pq("f2.parquet", [3])], now_ms=2000)
+    src = spark.createDataFrame([(2, "new2"), (4, "v4")],
+                                "id long, val string")
+    t.merge_upsert(spark, src, "id", now_ms=3000)
+    model = {1: "v1", 2: "new2", 3: "v3", 4: "v4"}
+    with pytest.raises(NotImplementedError,
+                       match="remove_dangling_deletes"):
+        t.update_rows(spark, {"id": (3, 3)}, {"val": "x"}, now_ms=4000)
+    assert t.compact(spark, now_ms=4000)["files_in"] == 3
+    with pytest.raises(NotImplementedError, match="equality-delete"):
+        t.update_rows(spark, {"id": (3, 3)}, {"val": "x"}, now_ms=5000)
+    assert t.remove_dangling_deletes(now_ms=5000)
+    assert t.update_rows(spark, {"id": (3, 3)}, {"val": "x"},
+                         now_ms=6000) == 1
+    model[3] = "x"
+    assert sorted((r.id, r.val) for r in t.read(spark).collect()) == \
+        sorted(model.items())
+
+
 def test_compact_noop_and_crash_injection(spark, tmp_path, monkeypatch):
     """No qualifying bin -> None and NO commit.  A crash before the
     metadata swap leaves every snapshot intact and only unreferenced
