@@ -437,6 +437,33 @@ class _IceChangePart(InputPartition):
     variants: dict = None
 
 
+def _ice_out(tbl, p, tail: tuple):
+    """``tbl`` (rows of part ``p``'s data file) in the part's output
+    schema: each output column from the file's one historical name of
+    it (round 13: a conforming file carries exactly one), cast to the
+    output type; absent from the file, the identity-partition value
+    recorded in metadata only (or a pre-DDL null fill); then the
+    constant ``tail`` columns."""
+    import pyarrow as pa
+
+    n = tbl.num_rows
+    names = set(tbl.schema.names)
+    sch = p.arrow_schema
+    arrays = []
+    for i, c in enumerate(p.out_cols):
+        typ = sch.field(i).type
+        fc = next((v for v in (p.variants or {}).get(c, (c,))
+                   if v in names), None)
+        if fc is None:
+            arrays.append(_const_array(p.pv.get(c), n, typ))
+        else:
+            col = tbl.column(fc)
+            arrays.append(col if col.type == typ else col.cast(typ))
+    for j, v in enumerate(tail, len(p.out_cols)):
+        arrays.append(_const_array(v, n, sch.field(j).type))
+    return pa.table(arrays, schema=sch)
+
+
 class _IceIncStreamReader(DataSourceStreamReader):
     """Streaming half of :meth:`IcebergTable.incremental_scan`:
     offsets are SEQUENCE NUMBERS ({"sequence": N} = every ancestry
@@ -450,11 +477,9 @@ class _IceIncStreamReader(DataSourceStreamReader):
     tagged insert/delete rows derived per data file from visibility
     masks (see :class:`_IceChangePart`), matching
     :meth:`IcebergTable.changelog_scan` over the same range as a
-    multiset.  Planning stays metadata-scale: files/delete lists per
-    snapshot plus one columnar ``file_path`` read per NEW
-    position-delete parquet and one FOOTER-stats read per new
-    equality-delete parquet (for bounds pruning of the targeted
-    candidates); ``replace`` snapshots (compaction) are silent."""
+    multiset: both plan through
+    :meth:`IcebergTable._changelog_targets`, which stays
+    metadata-scale; ``replace`` snapshots (compaction) are silent."""
 
     def __init__(self, options):
         lower = {k.lower(): v for k, v in dict(options).items()}
@@ -584,13 +609,6 @@ class _IceIncStreamReader(DataSourceStreamReader):
         self._pos = max(self._pos, end["sequence"])  # re-teach clamp
 
     def partitions(self, start: dict, end: dict):
-        from hadoop_sync_spark.avro_codec import read_ocf
-        from hadoop_sync_spark.iceberg_meta import (
-            _CONTENT_DATA,
-            _MANIFEST_DATA,
-            _STATUS_ADDED,
-        )
-
         self._pos = max(self._pos, end["sequence"])  # clamp position
         t = self._table()
         chain = self._ancestry(t)
@@ -630,36 +648,16 @@ class _IceIncStreamReader(DataSourceStreamReader):
                     "batch face"
                 )
             self._check_schema(s)
-            snap_id = s["snapshot-id"]
-            _, manifests, _ = read_ocf(t._resolve(s["manifest-list"]))
             meta = t.metadata()
-            id_maps: dict[int, tuple[dict, set]] = {}
-            for mf in manifests:
-                if (mf["content"] != _MANIFEST_DATA
-                        or mf.get("added_snapshot_id") != snap_id):
-                    continue
-                spec_id = mf["partition_spec_id"]
-                if spec_id not in id_maps:
-                    id_maps[spec_id] = self._identity_map(t, meta,
-                                                          spec_id)
-                src_of, date_src = id_maps[spec_id]
-                _, entries, _ = read_ocf(
-                    t._resolve(mf["manifest_path"]))
-                for e in entries:
-                    if e["status"] != _STATUS_ADDED:
-                        continue
-                    df = e["data_file"]
-                    if df["content"] != _CONTENT_DATA:
-                        continue
-                    parts.append(_IcePart(
-                        abs_path=t._resolve(df["file_path"]),
-                        snapshot_id=snap_id,
-                        pv=self._remap_pv(df["partition"], src_of,
-                                          date_src),
-                        out_cols=self._out_cols,
-                        arrow_schema=self._arrow_schema,
-                        variants=self._variants,
-                    ))
+            for f in t._added_files(s)[0]:
+                parts.append(_IcePart(
+                    abs_path=f.path,
+                    snapshot_id=s["snapshot-id"],
+                    pv=self._pv(t, meta, f),
+                    out_cols=self._out_cols,
+                    arrow_schema=self._arrow_schema,
+                    variants=self._variants,
+                ))
         if not parts:
             parts.append(_IcePart(abs_path="", snapshot_id=-1, pv={},
                                   out_cols=self._out_cols,
@@ -680,22 +678,18 @@ class _IceIncStreamReader(DataSourceStreamReader):
             )
 
     def _changelog_partitions(self, t, chain, start, end):
-        """Changelog-mode planning (round 13): per range snapshot,
-        inserts = its ADDED data files (visibility at the snapshot),
-        deletes = the per-file visibility DIFF over the files that
-        could have changed — removed files, files the snapshot's NEW
-        position deletes name, and (for new equality deletes) the
-        strictly-older live files bounds-pruned by the delete
-        parquet's FOOTER stats against the manifest column bounds.
-        Metadata-scale driver work: files/delete lists per snapshot +
-        one columnar ``file_path`` read per new position-delete file;
-        all row reads happen on executors."""
-        import pyarrow.parquet as _pq
-
+        """Changelog-mode planning (round 13): per range snapshot, the
+        batch face's planner (:meth:`IcebergTable._changelog_targets`)
+        names the files — inserts are its ``added`` files (visibility
+        at the snapshot), deletes the per-file visibility DIFF over
+        its ``targeted`` files — and each part carries the delete
+        specs that apply to its file on either side.  Metadata-scale
+        driver work; all row reads happen on executors
+        (:meth:`_visibility_mask`)."""
         from hadoop_sync_spark.iceberg_meta import (
-            _CONTENT_DATA,
             _CONTENT_EQ_DELETES,
             _CONTENT_POS_DELETES,
+            _applies,
         )
 
         # executor-side content codes (kept import-free there)
@@ -707,7 +701,6 @@ class _IceIncStreamReader(DataSourceStreamReader):
             for f in t._schema_by_id(self._pinned_schema_id)["fields"]
         }
         parts: list[_IceChangePart] = []
-        id_maps: dict[int, tuple[dict, set]] = {}
 
         def spec_of(d):
             keys = ()
@@ -726,24 +719,14 @@ class _IceIncStreamReader(DataSourceStreamReader):
             return (d.path, d.content, d.sequence, keys)
 
         def applicable(dels, f):
-            return tuple(
-                spec_of(d) for d in dels
-                if (d.content == _CONTENT_POS_DELETES
-                    and f.sequence <= d.sequence)
-                or (d.content == _CONTENT_EQ_DELETES
-                    and f.sequence < d.sequence)
-            )
+            return tuple(spec_of(d) for d in dels if _applies(d, f))
 
         def mk(f, snap_id, role, before, after):
-            if f.spec_id not in id_maps:
-                id_maps[f.spec_id] = self._identity_map(
-                    t, meta, f.spec_id)
-            src_of, date_src = id_maps[f.spec_id]
             return _IceChangePart(
                 abs_path=f.path, raw_path=f.raw_path, seq=f.sequence,
                 snapshot_id=snap_id, role=role,
                 dels_before=before, dels_after=after,
-                pv=self._remap_pv(f.partition, src_of, date_src),
+                pv=self._pv(t, meta, f),
                 out_cols=self._out_cols,
                 arrow_schema=self._arrow_schema,
                 variants=self._variants,
@@ -763,58 +746,16 @@ class _IceIncStreamReader(DataSourceStreamReader):
                 )
             self._check_schema(s)
             snap_id = s["snapshot-id"]
-            parent_id = s.get("parent-snapshot-id")
-            live_p = {} if parent_id is None else {
-                f.raw_path: f
-                for f in t.files(snapshot_id=parent_id)
-                if f.content == _CONTENT_DATA
-            }
-            live_s = {
-                f.raw_path: f
-                for f in t.files(snapshot_id=snap_id)
-                if f.content == _CONTENT_DATA
-            }
-            dels_p = ([] if parent_id is None
-                      else t.delete_files(snapshot_id=parent_id))
-            dels_s = t.delete_files(snapshot_id=snap_id)
-
-            for raw in sorted(set(live_s) - set(live_p)):
-                f = live_s[raw]
+            tg = t._changelog_targets(s.get("parent-snapshot-id"), snap_id)
+            for f in tg.added:
                 parts.append(mk(f, snap_id, "insert", (),
-                                applicable(dels_s, f)))
-            targeted = set(live_p) - set(live_s)  # removed files
-            dels_p_raw = {d.raw_path for d in dels_p}
-            for d in dels_s:
-                if d.raw_path in dels_p_raw:
-                    continue
-                if d.content == _CONTENT_POS_DELETES:
-                    named = set(
-                        _pq.read_table(d.path, columns=["file_path"])
-                        .column("file_path").to_pylist()
-                    )
-                    targeted |= {
-                        raw for raw in named
-                        if raw in live_p
-                        and live_p[raw].sequence <= d.sequence
-                    }
-                elif d.content == _CONTENT_EQ_DELETES:
-                    older = {
-                        raw for raw, f in live_p.items()
-                        if f.sequence < d.sequence
-                    }
-                    if older and len(d.equality_ids) == 1:
-                        kn = name_of.get(d.equality_ids[0])
-                        pruned = self._eq_footer_prune(
-                            t, d, kn, parent_id)
-                        if pruned is not None:
-                            older &= pruned
-                    targeted |= older
-            for raw in sorted(targeted):
-                f = live_p[raw]
-                after = (None if raw not in live_s
-                         else applicable(dels_s, live_s[raw]))
-                parts.append(mk(f, snap_id, "delete",
-                                applicable(dels_p, f), after))
+                                applicable(tg.dels_after, f)))
+            for f in tg.targeted:
+                now = tg.live.get(f.raw_path)
+                parts.append(mk(
+                    f, snap_id, "delete", applicable(tg.dels_before, f),
+                    None if now is None else applicable(tg.dels_after, now),
+                ))
         if not parts:
             parts.append(_IceChangePart(
                 abs_path="", raw_path="", seq=-1, snapshot_id=-1,
@@ -825,85 +766,26 @@ class _IceIncStreamReader(DataSourceStreamReader):
             ))
         return parts
 
-    def _eq_footer_prune(self, t, d, kn, parent_id):
-        """Targeted-candidate pruning for a new single-key equality
-        delete, entirely metadata-side: the delete parquet's FOOTER
-        stats give the key's [min, max] (and null count), and the
-        manifest column bounds prune the parent's live files by that
-        range — no data pages read anywhere.  Returns the surviving
-        raw paths, or None when pruning cannot apply soundly (no
-        stats, unknown/nonzero nulls, unresolvable key column)."""
-        import pyarrow.parquet as _pq
-
-        if kn is None:
-            return None
-        sch = _pq.read_schema(d.path)
-        cands = [v for v in (self._variants.get(kn) or (kn,))
-                 if v in sch.names]
-        if not cands:
-            return None
-        col = cands[0]
-        md = _pq.read_metadata(d.path)
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                if c.path_in_schema != col:
-                    continue
-                st = c.statistics
-                if (st is None or not st.has_min_max
-                        or st.null_count is None or st.null_count):
-                    return None
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                lo = mn if lo is None else min(lo, mn)
-                hi = mx if hi is None else max(hi, mx)
-        if lo is None:
-            return None
-        try:
-            return {
-                f.raw_path
-                for f in t.files(snapshot_id=parent_id,
-                                 column_filter={kn: (lo, hi)})
-            }
-        except (ValueError, NotImplementedError):
-            return None  # unprunable key type/column: keep superset
-
-    def _identity_map(self, t, meta, spec_id):
-        """spec-field name -> SOURCE COLUMN name for the spec's identity
-        fields (via source-id, the same resolution append_stream_batch
-        uses), plus which source columns are DATE-typed (their manifest
-        values ride as epoch-day ints and need converting).  Non-
-        identity transform fields are excluded on purpose: their source
-        values live in the data files, and a transform field can never
-        name an output column (the create/update_spec collision guard).
-        ADVICE r12: attaching by spec-field name silently null-filled a
+    def _pv(self, t, meta, f) -> dict:
+        """Data file ``f``'s identity partition values keyed by SOURCE
+        COLUMN name (via source-id, the same resolution
+        append_stream_batch uses).  Non-identity transform fields are
+        excluded on purpose: their source values live in the data
+        files, and a transform field can never name an output column
+        (the create/update_spec collision guard).  ADVICE r12:
+        attaching by spec-field name silently null-filled a
         custom-named identity field's source column."""
-        src_of: dict = {}
-        date_src: set = set()
-        for pf in t._spec_fields(meta, spec_id):
-            if pf.get("transform", "identity") != "identity":
-                continue
-            src = self._field_by_id.get(pf.get("source-id"))
-            if src is None:
-                continue  # source column dropped from pinned schema
-            src_of[pf["name"]] = src
-            if self._sch_type.get(src) == "date":
-                date_src.add(src)
-        return src_of, date_src
-
-    @staticmethod
-    def _remap_pv(raw: dict | None, src_of: dict, date_src: set) -> dict:
         import datetime as _dt
 
         pv = {}
-        for k, v in (raw or {}).items():
-            src = src_of.get(k)
-            if src is None:
+        for pf in t._spec_fields(meta, f.spec_id):
+            src = self._field_by_id.get(pf.get("source-id"))
+            if (pf.get("transform", "identity") != "identity"
+                    or src is None  # dropped from the pinned schema
+                    or pf["name"] not in f.partition):
                 continue
-            if src in date_src and isinstance(v, int):
+            v = f.partition[pf["name"]]
+            if self._sch_type.get(src) == "date" and isinstance(v, int):
                 # manifests carry identity DATE values as epoch-day
                 # ints (Avro int, spec Appendix A/D)
                 v = _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
@@ -917,7 +799,6 @@ class _IceIncStreamReader(DataSourceStreamReader):
         constant arrays keyed by SOURCE column name — RecordBatches
         out, no per-row Python loop (ADVICE r12).  Changelog-mode
         parts route to the per-file visibility-mask diff."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if isinstance(partition, _IceChangePart):
@@ -925,32 +806,8 @@ class _IceIncStreamReader(DataSourceStreamReader):
             return
         if not partition.abs_path:
             return
-        tbl = pq.read_table(partition.abs_path)
-        names = set(tbl.schema.names)
-        n = tbl.num_rows
-        sch = partition.arrow_schema
-        variants = partition.variants or {}
-        arrays = []
-        for i, c in enumerate(partition.out_cols):
-            typ = sch.field(i).type
-            # renamed-history resolution (round 13): a conforming
-            # file carries exactly one historical name of the field
-            fc = next(
-                (v for v in variants.get(c, (c,)) if v in names),
-                None,
-            )
-            if fc is not None:
-                col = tbl.column(fc)
-                arrays.append(col if col.type == typ else col.cast(typ))
-            else:
-                # identity partition value recorded in metadata only
-                # (or a pre-DDL file): attach the manifest value;
-                # absent there too -> null-fill
-                arrays.append(_const_array(partition.pv.get(c), n, typ))
-        arrays.append(_const_array(
-            partition.snapshot_id, n,
-            sch.field(len(partition.out_cols)).type))
-        yield from pa.table(arrays, schema=sch).to_batches()
+        yield from _ice_out(pq.read_table(partition.abs_path), partition,
+                            (partition.snapshot_id,)).to_batches()
 
     @staticmethod
     def _visibility_mask(tbl, p: "_IceChangePart", dels):
@@ -1097,28 +954,10 @@ class _IceIncStreamReader(DataSourceStreamReader):
             after = self._visibility_mask(tbl, p, p.dels_after)
             emit = before & ~after
             tag = "delete"
-        k = int(emit.sum())
-        if not k:
+        if not emit.any():
             return
-        base = tbl.filter(pa.array(emit))
-        names = set(base.schema.names)
-        sch = p.arrow_schema
-        arrays = []
-        for i, c in enumerate(p.out_cols):
-            typ = sch.field(i).type
-            fc = next(
-                (v for v in (p.variants or {}).get(c, (c,))
-                 if v in names), None)
-            if fc is not None:
-                col = base.column(fc)
-                arrays.append(col if col.type == typ else col.cast(typ))
-            else:
-                arrays.append(_const_array(p.pv.get(c), k, typ))
-        j = len(p.out_cols)
-        arrays.append(_const_array(tag, k, sch.field(j).type))
-        arrays.append(_const_array(p.snapshot_id, k,
-                                   sch.field(j + 1).type))
-        yield from pa.table(arrays, schema=sch).to_batches()
+        yield from _ice_out(tbl.filter(pa.array(emit)), p,
+                            (tag, p.snapshot_id)).to_batches()
 
 
 class IcebergIncrementalStreamSource(DataSource):

@@ -44,9 +44,11 @@ file-level deletes.  **Merge-on-read is implemented too**
 parquet, content=1) and equality-delete files (equality_ids columns,
 content=2) commit into separate delete manifests with spec-correct v2
 sequence-number inheritance and carry-forward, and ``read`` subtracts
-them with broadcast anti-joins keyed on ``_metadata.row_index`` /
-null-safe column equality, honoring the sequence rules (position: data
-seq ≤ delete seq; equality: strictly older — upsert semantics).
+them in one delete-apply (``_minus_deletes``): one broadcast anti-join
+keyed on ``_metadata.row_index`` for every position delete and one
+null-safe column-equality anti-join per equality-id set, honoring the
+sequence rules (position: data seq ≤ delete seq; equality: strictly
+older — upsert semantics).
 
 Scale posture: identical to the Delta reader — the metadata walk is
 KB-scale driver work (exactly where production Iceberg plans scans: the
@@ -70,6 +72,7 @@ import functools
 import json
 import os
 from dataclasses import dataclass, field as dataclasses_field
+from typing import NamedTuple
 
 from hadoop_sync_spark.avro_codec import read_ocf, write_ocf
 from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
@@ -792,8 +795,8 @@ class _FreshPositions:
     one shape every step after the tier decision consumes: ``n`` rows
     over the data files ``raws`` (manifest paths, sorted), the
     position-delete ``entries`` already written for them, and
-    :meth:`pairs` — some files' ``(_afp, _pos)`` rows as a frame to
-    join."""
+    :meth:`pairs` — some files' ``(_afp, _row_idx)`` rows as a frame
+    to join."""
 
     def __init__(self, n: int, raws: list, entries: list, frame):
         self.n = n
@@ -807,7 +810,28 @@ class _FreshPositions:
 
         return self._frame().where(
             F.col("file_path").isin(list(raws))
-        ).select(F.col("_np").alias("_afp"), F.col("pos").alias("_pos"))
+        ).select(F.col("_np").alias("_afp"),
+                 F.col("pos").alias("_row_idx"))
+
+
+def _applies(d: DataFile, f: DataFile) -> bool:
+    """Whether delete file ``d`` can hide rows of data file ``f`` (spec
+    "Scan Planning"): a position delete applies to data sequence ≤ its
+    own, an equality delete only to STRICTLY older data."""
+    if d.content == _CONTENT_POS_DELETES:
+        return f.sequence <= d.sequence
+    return d.content == _CONTENT_EQ_DELETES and f.sequence < d.sequence
+
+
+class _ChangeTargets(NamedTuple):
+    """One snapshot's changelog plan
+    (:meth:`IcebergTable._changelog_targets`)."""
+
+    added: list
+    targeted: list
+    live: dict
+    dels_before: list
+    dels_after: list
 
 
 class IcebergTable:
@@ -1246,16 +1270,19 @@ class IcebergTable:
         raw ``file_path`` string via the same attach join — the exact
         string position-delete files use per spec, so external
         absolute-URI tables match; row ordinal via
-        ``_metadata.row_index``; data sequence number) and each delete
-        file subtracts rows through a broadcast LEFT ANTI join —
-        position deletes match (file, pos) on data files with sequence
-        ≤ the delete's, equality deletes match the ``equality_ids``
-        columns null-safely on STRICTLY older data files (the spec's
-        upsert semantics).  Delete files are metadata-scale next to the
-        data they prune, so broadcasting them is production Iceberg's
-        own plan shape; with no applicable deletes the plan is exactly
-        the plain scan (zero overhead for CoW-only tables)."""
+        ``_metadata.row_index``; data sequence number) and
+        :meth:`_minus_deletes` subtracts the rows: ONE broadcast LEFT
+        ANTI join for every position delete — (file, pos) on data files
+        with sequence ≤ the delete's — and one per ``equality_ids`` set
+        of the equality deletes, matching those columns null-safely on
+        STRICTLY older data files (the spec's upsert semantics).  So
+        the plan's joins do not grow with the number of delete files.
+        Delete files are metadata-scale next to the data they prune,
+        so broadcasting them is production Iceberg's own plan shape;
+        with no applicable deletes the plan is exactly the plain scan
+        (zero overhead for CoW-only tables)."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         from hadoop_sync_spark.io import attach_file_columns
 
@@ -1295,10 +1322,7 @@ class IcebergTable:
                 # the spec partition fields appended — positional
                 # consumers and unions-by-position see one ordering
                 # whether or not anything survived.  Partition columns
-                # type as the attach path's python-value inference does
-                # (Avro int/long/date -> LongType, string -> StringType).
-                from pyspark.sql import types as T
-
+                # type as the attach path does (_partition_types).
                 m = self.metadata()
                 sid0 = self._read_schema_id(
                     snapshot_id, as_of_timestamp_ms, ref
@@ -1317,21 +1341,12 @@ class IcebergTable:
                 # a LIVE-but-keyless set means "no partition columns"
                 # (consistent with the non-empty path); only a snapshot
                 # with no live files at all falls back to every spec
-                live_keys = (
+                part_types, part_dates = self._partition_types(
+                    m, sid0,
                     {k for f in live_unf for k in f.partition}
-                    if live_unf
-                    else None
+                    if live_unf else None,
                 )
-                part_fields: dict[str, str] = {}
-                for spec in m.get("partition-specs", []):
-                    for pf in spec.get("fields", []):
-                        if (live_keys is not None
-                                and pf["name"] not in live_keys):
-                            continue
-                        part_fields.setdefault(
-                            pf["name"], pf.get("result-type", "string")
-                        )
-                part_names = sorted(part_fields)
+                part_names = sorted(part_types)
                 try:
                     data_schema = self._spark_schema(
                         sid0, exclude=set(part_names)
@@ -1365,28 +1380,13 @@ class IcebergTable:
                         f for f in inferred_all.fields
                         if f.name not in set(part_names)
                     ])
-                inferred = {
-                    "int": T.LongType(), "long": T.LongType(),
-                    "date": T.LongType(), "string": T.StringType(),
-                }
-                #: identity DATE fields type as DateType — the
-                #: non-empty path converts epoch-day ints for them
-                #: (transform fields like d_day keep ordinal longs)
-                sch_types = {
-                    f["name"]: f["type"]
-                    for f in self._schema_by_id(sid0)["fields"]
-                    if isinstance(f["type"], str)
-                }
                 schema = T.StructType(
                     list(data_schema.fields)
                     + [
                         T.StructField(
                             n,
-                            T.DateType()
-                            if (part_fields[n] == "date"
-                                and sch_types.get(n) == "date")
-                            else inferred.get(part_fields[n],
-                                              T.StringType()),
+                            T.DateType() if n in part_dates
+                            else part_types[n],
                         )
                         for n in part_names
                     ]
@@ -1394,7 +1394,6 @@ class IcebergTable:
                 return local_frame(spark, [], schema)
             raise ValueError("snapshot selects no data files")
         part_cols = sorted({k for f in files for k in f.partition})
-        reader = spark.read
         meta_doc = self.metadata()
         if (len(meta_doc.get("partition-specs", [])) > 1
                 and (partition_filter or column_filter
@@ -1503,18 +1502,11 @@ class IcebergTable:
                         "files do not record it: the file-level value "
                         "does not exist for those files"
                     )
-        #: rename support (round 10): when the history renamed fields,
-        #: per-field coalesce exprs over the historical name variants
-        #: form the LOGICAL projection applied as each return path's
-        #: final select (after lineage/attach selections, which need the
-        #: raw scan's metadata columns)
-        logical_exprs = None
-        variants: dict[int, list[str]] | None = None
-        variant_expr: dict[int, "F.Column"] = {}
         #: the scan KEEPS mixed identity columns (pre-evolution files
         #: carry them in data); fully-recorded partition columns stay
         #: metadata-only as always
         scan_excl = set(part_cols) - set(mixed_identity)
+        variants = pinned = None
         if len(meta_doc.get("schemas", [])) > 1:
             # schema evolution (round 9): pin the snapshot's schema so
             # files written before an added column null-fill it and
@@ -1525,82 +1517,77 @@ class IcebergTable:
             # promotions and drop+re-add-same-name still refuse.
             # Single-schema tables keep the exact inferred-schema plan.
             variants = self._rename_history()
-            reader = reader.schema(
-                self._spark_schema(
-                    read_sid, exclude=scan_excl,
-                    name_variants=variants,
-                )
+            pinned = self._spark_schema(
+                read_sid, exclude=scan_excl, name_variants=variants
             )
-            if variants:
-                logical_exprs = []
-                for f in read_fields:
-                    if f["name"] in set(part_cols):
-                        continue
-                    names = variants.get(f["id"], [f["name"]])
-                    e = (
-                        F.col(names[0]) if len(names) == 1
-                        else F.coalesce(*[F.col(n) for n in names])
-                    )
-                    variant_expr[f["id"]] = e
-                    logical_exprs.append(e.alias(f["name"]))
         elif mixed_identity:
             # a mixed-spec scan cannot rely on Spark's one-footer
             # inference — pre- and post-evolution files disagree on the
             # identity column's presence — so pin the metadata schema
             # (the evolved-table rule, applied to the single-schema
             # case; exotic external types refuse like the evolved path)
-            reader = reader.schema(
-                self._spark_schema(read_sid, exclude=scan_excl)
-            )
-        deletes = self.delete_files(snapshot_id, as_of_timestamp_ms,
-                                    ref=ref)
-        pos_dels = [
-            d for d in deletes
-            if d.content == _CONTENT_POS_DELETES
-            and any(f.sequence <= d.sequence for f in files)
+            pinned = self._spark_schema(read_sid, exclude=scan_excl)
+        deletes = [
+            d for d in self.delete_files(snapshot_id, as_of_timestamp_ms,
+                                         ref=ref)
+            if any(_applies(d, f) for f in files)
         ]
-        eq_dels = [
-            d for d in deletes
-            if d.content == _CONTENT_EQ_DELETES
-            and any(f.sequence < d.sequence for f in files)
-        ]
-        scan = reader.parquet(*[f.path for f in files])
+        scan = self._scan(spark, files, pinned,
+                          row_index="_row_idx" if deletes else None)
+        #: the LOGICAL projection: renamed fields coalesce across their
+        #: historical names (after the lineage/attach steps, which need
+        #: the raw scan's columns)
+        logical = (
+            [self._logical_col(variants, f["id"], f["name"])
+             .alias(f["name"])
+             for f in read_fields if f["name"] not in set(part_cols)]
+            if variants else
+            [F.col(c) for c in scan.columns
+             if c not in {"_row_idx", *mixed_identity}]
+        )
         #: mixed identity columns attach under a temp name and the
         #: output takes COALESCE(metadata value, scanned value) — the
         #: metadata wins where the spec recorded it, the data supplies
-        #: it for pre-evolution files
-        attach_names = [
-            "__meta_" + c if c in mixed_identity else c
+        #: it for pre-evolution files.  Attach types come from the
+        #: specs' result types — a mixed column can be None for EVERY
+        #: survivor (only pre-evolution files left a filter), where
+        #: inference refuses.
+        part_types, part_dates = self._partition_types(
+            meta_doc, read_sid, set(part_cols)
+        )
+        attach = {
+            ("__meta_" + c if c in mixed_identity else c): part_types[c]
             for c in part_cols
-        ]
-        #: explicit attach types from the specs' result types — a
-        #: mixed column can be None for EVERY survivor (only
-        #: pre-evolution files left a filter), where inference refuses
-        from pyspark.sql import types as T
-
-        _t_of = {"int": T.LongType(), "long": T.LongType(),
-                 "date": T.LongType(), "string": T.StringType()}
-        attach_types: dict = {"_raw_path": T.StringType(),
-                              "_seq": T.LongType()}
-        for spec in meta_doc.get("partition-specs", []):
-            for pf in spec.get("fields", []):
-                if pf["name"] in part_cols:
-                    n = ("__meta_" + pf["name"]
-                         if pf["name"] in mixed_identity
-                         else pf["name"])
-                    attach_types.setdefault(
-                        n,
-                        _t_of.get(pf.get("result-type", "string"),
-                                  T.StringType()),
-                    )
-
-        _ice_type = {
-            f["name"]: f["type"]
-            for f in read_fields
-            if isinstance(f["type"], str)
         }
+        if deletes:
+            # Lineage carries the manifest's file_path string VERBATIM
+            # (raw_path): position-delete files name data files by that
+            # exact string per the spec, so relativizing it here would
+            # break every externally written table whose manifests
+            # store full URIs.
+            attach = {"_raw_path": T.StringType(),
+                      "_seq": T.LongType()} | attach
+        if attach:
+            # abspath, not resolve() — Hadoop qualifies paths but does
+            # not chase symlinks, so neither may we
+            scan = attach_file_columns(
+                scan,
+                [
+                    (_norm_path(f.path),)
+                    + ((f.raw_path, f.sequence) if deletes else ())
+                    + tuple(f.partition.get(c) for c in part_cols)
+                    for f in files
+                ],
+                list(attach),
+                what="iceberg snapshot partition",
+                types=attach,
+            )
+        scan = self._minus_deletes(
+            spark, scan, files, deletes, read_fields, variants,
+            part_cols, mixed_identity,
+        )
 
-        def _part_exprs():
+        def _part_expr(c):
             # identity DATE values ride the manifests as epoch-day
             # ints (Avro int, Appendix A) while the data column is a
             # real DateType: convert in EVERY branch — mixed or not —
@@ -1610,167 +1597,202 @@ class IcebergTable:
             # dates, breaking union compatibility).  Transform-named
             # fields (``d_day``) are not schema columns and keep
             # their ordinal ints.
-            out = []
-            for c in part_cols:
-                is_date = (_ice_type.get(c) == "date"
-                           and c in schema_names)
-                if c not in mixed_identity:
-                    e = F.col(c)
-                    if is_date:
-                        e = F.date_from_unix_date(
-                            e.cast("int")).alias(c)
-                    out.append(e)
+            e = F.col("__meta_" + c if c in mixed_identity else c)
+            if c in part_dates:
+                e = F.date_from_unix_date(e.cast("int"))
+            if c in mixed_identity:
+                e = F.coalesce(e, F.col(c))
+            return e.alias(c)
+
+        out = scan.select(*logical, *[_part_expr(c) for c in part_cols])
+        for k in residue_keys:
+            out = out.filter(F.col(k) == F.lit(partition_filter[k]))
+        return _apply_cf(out)
+
+    def _scan(self, spark, files, schema=None, row_index=None,
+              file_path=None):
+        """The one parquet scan of Iceberg data files: ``files`` read
+        under the pinned ``schema`` (None keeps Spark's footer
+        inference — single-schema tables' exact plan), with the
+        ``_metadata`` lineage columns a caller names: ``row_index``
+        (the position a position delete names) and ``file_path``."""
+        from pyspark.sql import functions as F
+
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        scan = reader.parquet(*[f.path for f in files])
+        lineage = []
+        if file_path is not None:
+            lineage.append(F.col("_metadata.file_path").alias(file_path))
+        if row_index is not None:
+            lineage.append(F.col("_metadata.row_index").alias(row_index))
+        return scan.select("*", *lineage) if lineage else scan
+
+    @staticmethod
+    def _logical_col(variants, fid: int, name: str):
+        """The one rename resolver: field ``fid``'s logical column over
+        a scan pinned with every historical name of it (see
+        :meth:`_spark_schema`) — the one name, or COALESCE across the
+        variants, since a conforming file carries exactly one."""
+        from pyspark.sql import functions as F
+
+        names = (variants or {}).get(fid, [name])
+        if len(names) == 1:
+            return F.col(names[0])
+        return F.coalesce(*[F.col(n) for n in names])
+
+    def _partition_types(self, meta: dict, sid: int, names=None,
+                         spec_ids=None) -> tuple[dict, set]:
+        """The one typing of an output frame's partition section:
+        ``{name: Spark type}`` over the fields of the specs ``spec_ids``
+        (default: every spec), restricted to ``names`` when given, the
+        first spec naming a field deciding — ``int``/``long``/``date``
+        attach as LongType, anything else as StringType — and the
+        identity DATE fields (a ``date`` result over a ``date`` column
+        of schema ``sid``), whose epoch-day values the output converts
+        to DateType.  Transform fields such as ``d_day`` keep their
+        ordinal longs."""
+        from pyspark.sql import types as T
+
+        col_type = {f["name"]: f["type"]
+                    for f in self._schema_by_id(sid)["fields"]}
+        types: dict = {}
+        dates: set = set()
+        for spec in meta.get("partition-specs", []):
+            if spec_ids is not None and spec["spec-id"] not in spec_ids:
+                continue
+            for pf in spec.get("fields", []):
+                n = pf["name"]
+                if n in types or (names is not None and n not in names):
                     continue
-                meta_e = F.col("__meta_" + c)
-                if is_date:
-                    meta_e = F.date_from_unix_date(
-                        meta_e.cast("int")
-                    )
-                out.append(F.coalesce(meta_e, F.col(c)).alias(c))
-            return out
+                rt = pf.get("result-type", "string")
+                types[n] = (T.LongType() if rt in ("int", "long", "date")
+                            else T.StringType())
+                if rt == "date" and col_type.get(n) == "date":
+                    dates.add(n)
+        return types, dates
 
-        def _apply_residue(df):
-            for k in residue_keys:
-                df = df.filter(F.col(k) == F.lit(partition_filter[k]))
-            return df
+    def _pos_delete_frame(self, spark, pos_dels: list, files: list):
+        """The one ``(_d_file, _d_pos, _dseq)`` frame of the position
+        deletes ``pos_dels``.  Chosen from metadata before any payload
+        is read: when their summed ``record_count`` fits
+        :data:`DELETE_ROWS_LIMIT`, the driver reads them (rows naming
+        ``files`` only) into a local frame; above it Spark reads
+        them."""
+        from pyspark.sql import functions as F
 
-        if not (pos_dels or eq_dels):
-            if not part_cols:
-                return _apply_cf(_apply_residue(
-                    scan if logical_exprs is None
-                    else scan.select(*logical_exprs)
-                ))
-            # abspath, not resolve() — Hadoop qualifies paths but does
-            # not chase symlinks, so neither may we
-            rows = [
-                (_norm_path(f.path),)
-                + tuple(f.partition.get(c) for c in part_cols)
-                for f in files
+        if sum(d.record_count for d in pos_dels) > self.DELETE_ROWS_LIMIT:
+            return functools.reduce(lambda a, b: a.unionByName(b), [
+                spark.read.parquet(d.path).select(
+                    F.col("file_path").alias("_d_file"),
+                    F.col("pos").cast("long").alias("_d_pos"),
+                    F.lit(d.sequence).cast("long").alias("_dseq"),
+                )
+                for d in pos_dels
+            ])
+        import pyarrow.parquet as pq
+
+        raws = {f.raw_path for f in files}
+        rows = []
+        for d in pos_dels:
+            tb = pq.read_table(d.path, columns=["file_path", "pos"])
+            rows += [
+                (fp, p, d.sequence)
+                for fp, p in zip(tb["file_path"].to_pylist(),
+                                 tb["pos"].to_pylist())
+                if fp in raws
             ]
-            out = attach_file_columns(
-                scan, rows, attach_names,
-                what="iceberg snapshot partition",
-                types=attach_types,
-            )
-            out = out.select(
-                *(logical_exprs if logical_exprs is not None
-                  else [F.col(c) for c in scan.columns
-                        if c not in set(mixed_identity)]),
-                *_part_exprs(),
-            )
-            return _apply_cf(_apply_residue(out))
-        data_cols = scan.columns
-        scan = scan.select(
-            "*", F.col("_metadata.row_index").alias("_row_idx")
-        )
-        # Lineage carries the manifest's file_path string VERBATIM
-        # (raw_path): position-delete files name data files by that exact
-        # string per the spec, so relativizing it here would break every
-        # externally written table whose manifests store full URIs.
-        rows = [
-            (
-                _norm_path(f.path),
-                f.raw_path,
-                f.sequence,
-            )
-            + tuple(f.partition.get(c) for c in part_cols)
-            for f in files
-        ]
-        df = attach_file_columns(
-            scan,
-            rows,
-            ["_raw_path", "_seq", *attach_names],
-            what="iceberg snapshot partition",
-            types=attach_types,
-        )
-        # id -> name map in the READ schema (by schema-id lookup, not
-        # list position — external metadata need not keep ids as list
-        # indexes, and the output frame speaks the snapshot's names)
-        meta_schema = {f["id"]: f["name"] for f in read_fields}
-        # the gate sums record_count across ALL applicable delete files
-        # (metadata-only): per-file gating would let 50 files of 4.9M
-        # rows each broadcast simultaneously — the aggregate is what
-        # lives on the driver and every executor at once
-        total_delete_rows = sum(
-            d.record_count for d in (*pos_dels, *eq_dels)
+        return local_frame(
+            spark, rows, "_d_file string, _d_pos long, _dseq long"
         )
 
-        def _sized(dels, d):
-            """Broadcast a delete-file frame only while the SUMMED
-            applicable delete rows sit under the size ceiling.  A
-            pathological delete set (most of a 100 TB table deleted
-            merge-on-read) would blow the broadcast; above the limit
-            every delete anti-join runs as a plain shuffle join with a
-            loud log line (VERDICT r9 item 7)."""
-            if total_delete_rows <= _BROADCAST_DELETE_ROW_LIMIT:
-                return F.broadcast(dels)
+    def _minus_deletes(self, spark, df, files: list, deletes: list,
+                       fields=(), variants=None, part_cols=(),
+                       mixed_identity=()):
+        """The one delete-apply: ``df`` — a scan of ``files`` carrying
+        the ``_raw_path``, ``_seq`` and ``_row_idx`` lineage — without
+        the rows ``deletes`` hide (spec "Scan Planning"):
+
+        - every position delete in ONE ``(file, pos)`` anti-join over
+          :meth:`_pos_delete_frame`, applying to data files of
+          sequence ≤ the delete's;
+        - the equality deletes in one anti-join per ``equality_ids``
+          set, null-safe on the key columns of ``fields`` (the read
+          schema; renamed keys resolve through :meth:`_logical_col`,
+          ``part_cols`` are attached from metadata) over STRICTLY
+          older data files — the spec's upsert semantics.
+
+        The delete sides broadcast while the summed ``record_count`` of
+        ``deletes`` sits under the size ceiling; above it every
+        anti-join shuffles, with one loud log line (VERDICT r9 item 7):
+        a pathological delete set (most of a 100 TB table deleted
+        merge-on-read) would blow the broadcast on the driver and
+        every executor at once."""
+        from pyspark.sql import functions as F
+
+        pos = [d for d in deletes if d.content == _CONTENT_POS_DELETES]
+        groups: dict[tuple, list] = {}
+        for d in deletes:
+            if d.content == _CONTENT_EQ_DELETES:
+                groups.setdefault(d.equality_ids, []).append(d)
+        total = sum(d.record_count for d in deletes)
+        small = total <= _BROADCAST_DELETE_ROW_LIMIT
+        if deletes and not small:
             import logging
 
             logging.getLogger(__name__).warning(
-                "applicable delete files hold %d rows total (this "
-                "file: %s, %d rows), over the broadcast ceiling (%d); "
-                "anti-join falls back to shuffle",
-                total_delete_rows,
-                d.raw_path,
-                d.record_count,
-                _BROADCAST_DELETE_ROW_LIMIT,
+                "%d applicable delete files hold %d rows total, over the "
+                "broadcast ceiling (%d); the anti-joins fall back to "
+                "shuffle",
+                len(deletes), total, _BROADCAST_DELETE_ROW_LIMIT,
             )
-            return dels
-
-        for d in pos_dels:
-            dels = spark.read.parquet(d.path).select(
-                F.col("file_path").alias("_d_file"),
-                F.col("pos").alias("_d_pos"),
-            )
+        if pos:
+            dels = self._pos_delete_frame(spark, pos, files)
             df = df.join(
-                _sized(dels, d),
+                F.broadcast(dels) if small else dels,
                 (F.col("_raw_path") == F.col("_d_file"))
                 & (F.col("_row_idx") == F.col("_d_pos"))
-                & (F.col("_seq") <= F.lit(d.sequence)),
+                & (F.col("_seq") <= F.col("_dseq")),
                 "left_anti",
             )
-        for d in eq_dels:
-            missing = [fid for fid in d.equality_ids
-                       if fid not in meta_schema]
+        name_of = {f["id"]: f["name"] for f in fields}
+        for ids, group in sorted(groups.items()):
+            missing = [fid for fid in ids if fid not in name_of]
             if missing:
                 raise ValueError(
-                    f"equality delete {d.raw_path!r} references field "
-                    f"ids {missing} absent from the read schema"
+                    f"equality delete {group[0].raw_path!r} references "
+                    f"field ids {missing} absent from the read schema"
                 )
-            names = [meta_schema[fid] for fid in d.equality_ids]
+            names = [name_of[fid] for fid in ids]
             clash = sorted(set(names) & set(mixed_identity))
             if clash:
                 raise NotImplementedError(
-                    f"equality delete {d.raw_path!r} matches on "
+                    f"equality delete {group[0].raw_path!r} matches on "
                     f"{clash}, identity partition columns some live "
                     "files record only in data — the anti-join cannot "
                     "compare one expression for both eras"
                 )
-            dels_raw = spark.read.parquet(d.path)
-            # a delete file written pre-rename stores its equality
-            # column under the write-time name — pick the variant the
-            # file actually carries
-            sel_exprs = []
-            for fid, n in zip(d.equality_ids, names):
-                cands = [
-                    v for v in (variants or {}).get(fid, [n])
-                    if v in dels_raw.columns
-                ] or [n]
-                sel_exprs.append(F.col(cands[0]).alias(f"_d_{n}"))
-            dels = dels_raw.select(*sel_exprs)
-            cond = F.col("_seq") < F.lit(d.sequence)
-            for fid, n in zip(d.equality_ids, names):
-                scan_val = variant_expr.get(fid, F.col(n))
-                cond = cond & scan_val.eqNullSafe(F.col(f"_d_{n}"))
-            df = df.join(_sized(dels, d), cond, "left_anti")
-        return _apply_cf(_apply_residue(
-            df.select(
-                *(logical_exprs if logical_exprs is not None
-                  else [F.col(c) for c in data_cols
-                        if c not in set(mixed_identity)]),
-                *_part_exprs(),
-            )
-        ))
+            frames = []
+            for d in group:
+                raw = spark.read.parquet(d.path)
+                # a delete file written pre-rename stores its equality
+                # column under the write-time name — pick the variant
+                # the file actually carries
+                frames.append(raw.select(
+                    *[F.col(next(
+                        (v for v in (variants or {}).get(fid, [n])
+                         if v in raw.columns), n,
+                    )).alias(f"_d_{n}") for fid, n in zip(ids, names)],
+                    F.lit(d.sequence).cast("long").alias("_dseq"),
+                ))
+            dels = functools.reduce(lambda a, b: a.unionByName(b), frames)
+            cond = F.col("_seq") < F.col("_dseq")
+            for fid, n in zip(ids, names):
+                key = (F.col(n) if n in part_cols
+                       else self._logical_col(variants, fid, n))
+                cond = cond & key.eqNullSafe(F.col(f"_d_{n}"))
+            df = df.join(F.broadcast(dels) if small else dels, cond,
+                         "left_anti")
+        return df
 
     def metadata_table(self, spark, kind: str, ref: str | None = None):
         """Inspection DataFrames in production Iceberg's metadata-table
@@ -2534,8 +2556,8 @@ class IcebergTable:
         """Shared DML matcher: bounds-prune candidate files, scan ONLY
         the predicate columns with per-file row lineage, and return
         ``(cand, part_cols, pairs)`` — ``pairs`` the lazy ``(_fp,
-        _pos)`` frame of matched rows, None when no file survives the
-        pruning.
+        _row_idx)`` frame of matched rows, None when no file survives
+        the pruning.
 
         Guards: empty / unknown / partition predicate columns.
         Renamed histories are supported: the predicate scan pins one
@@ -2569,21 +2591,17 @@ class IcebergTable:
         full = self._spark_schema(
             sid, exclude=set(part_cols), name_variants=variants
         )
-
-        def _var_names(c):
-            return (variants.get(fid_of[c], [c]) if variants
-                    else [c])
-
-        pred_names = {n for c in column_filter for n in _var_names(c)}
-        pred_schema = T.StructType(
-            [f for f in full.fields if f.name in pred_names]
-        )
-        scan = spark.read.schema(pred_schema).parquet(
-            *[f.path for f in cand]
+        pred_names = {
+            n for c in column_filter
+            for n in (variants or {}).get(fid_of[c], [c])
+        }
+        scan = self._scan(
+            spark, cand,
+            T.StructType([f for f in full.fields if f.name in pred_names]),
+            row_index="_row_idx", file_path="_fp",
         ).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.coalesce(*[F.col(n) for n in _var_names(c)]).alias(c)
+            "_fp", "_row_idx",
+            *[self._logical_col(variants, fid_of[c], c).alias(c)
               for c in column_filter],
         )
         for c, (lo, hi) in column_filter.items():
@@ -2591,48 +2609,12 @@ class IcebergTable:
                 scan = scan.filter(F.col(c) >= lo)
             if hi is not None:
                 scan = scan.filter(F.col(c) <= hi)
-        return cand, part_cols, scan.select("_fp", "_pos")
+        return cand, part_cols, scan.select("_fp", "_row_idx")
 
     #: target rows per position-delete parquet on the executor tier —
     #: bounds individual delete-file size (and the read side's per-file
     #: decode) without any driver materialization
     POS_DELETE_FILE_ROWS = 2_000_000
-
-    def _existing_pos_deletes(self, spark, pos_dels: list, cand: list):
-        """``(_d_file, _d_pos, _dseq)`` frame of the live position
-        deletes, for the sequence-aware subtraction in
-        :meth:`_fresh_positions`.  Chosen from metadata before any
-        payload is read: when the delete files' summed
-        ``record_count`` fits :data:`DELETE_ROWS_LIMIT`, the driver
-        reads them (rows for candidate files only) into a broadcast
-        local frame; above it Spark reads them."""
-        from pyspark.sql import functions as F
-
-        if sum(d.record_count for d in pos_dels) > self.DELETE_ROWS_LIMIT:
-            frames = [
-                spark.read.parquet(d.path).select(
-                    F.col("file_path").alias("_d_file"),
-                    F.col("pos").cast("long").alias("_d_pos"),
-                    F.lit(d.sequence).cast("long").alias("_dseq"),
-                )
-                for d in pos_dels
-            ]
-            return functools.reduce(lambda a, b: a.unionByName(b), frames)
-        import pyarrow.parquet as pq
-
-        raws = {f.raw_path for f in cand}
-        rows = []
-        for d in pos_dels:
-            tb = pq.read_table(d.path, columns=["file_path", "pos"])
-            rows += [
-                (fp, p, d.sequence)
-                for fp, p in zip(tb["file_path"].to_pylist(),
-                                 tb["pos"].to_pylist())
-                if fp in raws
-            ]
-        return F.broadcast(local_frame(
-            spark, rows, "_d_file string, _d_pos long, _dseq long"
-        ))
 
     @contextlib.contextmanager
     def _fresh_positions(
@@ -2641,9 +2623,8 @@ class IcebergTable:
         """The DML faces' one size decision.  The matched ``pairs`` map
         to their manifest paths (a broadcast of the candidate list;
         an unmapped file fails loudly, never drops rows), lose the
-        rows ``pos_dels`` already delete when given (sequence-aware: a
-        delete applies only to data files of sequence ≤ its own), and
-        materialize by count:
+        rows ``pos_dels`` already delete when given (the read path's
+        :meth:`_minus_deletes`), and materialize by count:
 
         - at most :data:`DELETE_ROWS_LIMIT` rows collect into a sorted
           driver list, written as one ``delete-pos-<seq>`` parquet on
@@ -2666,22 +2647,17 @@ class IcebergTable:
         raw_map = local_frame(
             spark,
             [(_norm_path(f.path), f.raw_path, f.sequence) for f in cand],
-            "_np string, file_path string, _fseq long",
+            "_np string, _raw_path string, _seq long",
         )
-        m = pairs.withColumn("_np", decode_file_uri_col("_fp")).join(
-            F.broadcast(raw_map), "_np", "left"
-        )
-        if pos_dels:
-            dels = self._existing_pos_deletes(spark, list(pos_dels), cand)
-            m = m.join(
-                dels,
-                (m["file_path"] == dels["_d_file"])
-                & (m["_pos"] == dels["_d_pos"])
-                & (m["_fseq"] <= dels["_dseq"]),
-                "left_anti",
-            )
-        m = m.select(
-            "file_path", F.col("_pos").cast("long").alias("pos"), "_np"
+        m = self._minus_deletes(
+            spark,
+            pairs.withColumn("_np", decode_file_uri_col("_fp")).join(
+                F.broadcast(raw_map), "_np", "left"
+            ),
+            cand, list(pos_dels),
+        ).select(
+            F.col("_raw_path").alias("file_path"),
+            F.col("_row_idx").cast("long").alias("pos"), "_np",
         )
         mismatch = (
             "scanned file missing from the snapshot map (URI "
@@ -2756,8 +2732,9 @@ class IcebergTable:
         every match (inherited sequence, applies to data files with
         sequence ≤ the commit's).  Positions already covered by
         existing position deletes de-duplicate harmlessly in the
-        read-side anti-join; rows an equality delete already hides gain
-        a redundant position entry, also harmless.  Returns the number
+        read side's one position anti-join (:meth:`_minus_deletes`);
+        rows an equality delete already hides gain a redundant
+        position entry, also harmless.  Returns the number
         of (file, position) pairs committed; a no-match predicate
         commits nothing and returns 0.  Renamed schema histories are
         supported: the predicate scan resolves by name variant like
@@ -2869,13 +2846,6 @@ class IcebergTable:
         full = self._spark_schema(sid, exclude=set(part_cols))
         spark_types = {f.name: f.dataType for f in full.fields}
 
-        def _lcol(name):
-            # logical column across rename variants (read-path rule):
-            # a conforming file carries exactly one historical name
-            vs = (variants.get(fid_of[name], [name]) if variants
-                  else [name])
-            return F.coalesce(*[F.col(n) for n in vs])
-
         # ONE select: every SET expression evaluates against the
         # ORIGINAL row (simultaneous-assignment UPDATE semantics)
         exprs = {
@@ -2898,15 +2868,15 @@ class IcebergTable:
             new_entries: list[dict] = []
             for gi, pv_t in enumerate(sorted(groups)):
                 raws = groups[pv_t]
-                upd = spark.read.schema(scan_schema).parquet(
-                    *[cand_by_raw[r].path for r in raws]
+                upd = self._scan(
+                    spark, [cand_by_raw[r] for r in raws], scan_schema,
+                    row_index="_row_idx", file_path="_fp",
                 ).select(
-                    decode_file_uri_col(
-                        F.col("_metadata.file_path")
-                    ).alias("_afp"),
-                    F.col("_metadata.row_index").alias("_pos"),
-                    *[_lcol(f.name).alias(f.name) for f in full.fields],
-                ).join(fresh.pairs(raws), ["_afp", "_pos"], "inner")
+                    decode_file_uri_col("_fp").alias("_afp"),
+                    "_row_idx",
+                    *[self._logical_col(variants, fid_of[f.name], f.name)
+                      .alias(f.name) for f in full.fields],
+                ).join(fresh.pairs(raws), ["_afp", "_row_idx"], "inner")
                 rel_new = f"data/part-update-{seq}-{gi}.parquet"
                 write_parquet(
                     upd.select(*[
@@ -3221,31 +3191,10 @@ class IcebergTable:
         added: dict[str, tuple] = {}  # raw_path -> (sid, DataFile)
         range_specs: set[int] = set()
         for s in rng:
-            snap_id = s["snapshot-id"]
-            _, manifests, _ = read_ocf(
-                self._resolve(s["manifest-list"])
-            )
-            for mf in manifests:
-                if (mf["content"] != _MANIFEST_DATA
-                        or mf.get("added_snapshot_id") != snap_id):
-                    continue
-                range_specs.add(mf["partition_spec_id"])
-                _, entries, _ = read_ocf(
-                    self._resolve(mf["manifest_path"])
-                )
-                for e in entries:
-                    if e["status"] != _STATUS_ADDED:
-                        continue
-                    df = e["data_file"]
-                    if df["content"] != _CONTENT_DATA:
-                        continue
-                    added[df["file_path"]] = (snap_id, DataFile(
-                        path=self._resolve(df["file_path"]),
-                        partition=dict(df["partition"]),
-                        record_count=df["record_count"],
-                        file_size=df["file_size_in_bytes"],
-                        raw_path=df["file_path"],
-                    ))
+            files, specs = self._added_files(s)
+            range_specs |= specs
+            added.update((f.raw_path, (s["snapshot-id"], f))
+                         for f in files)
         meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
         # partition columns come from the SPEC names (stable whether or
@@ -3257,39 +3206,17 @@ class IcebergTable:
         # by the default spec) so a wholly pre-evolution range keeps
         # its identity columns in the DATA section where its files
         # carry them.
-        if not range_specs:
-            range_specs = {meta.get("default-spec-id", 0)}
-        part_types: dict[str, str] = {}
-        for spec in meta.get("partition-specs", []):
-            if spec["spec-id"] not in range_specs:
-                continue
-            for pf in spec.get("fields", []):
-                part_types.setdefault(
-                    pf["name"], pf.get("result-type", "string")
-                )
+        part_types, date_parts = self._partition_types(
+            meta, sid,
+            spec_ids=range_specs or {meta.get("default-spec-id", 0)},
+        )
         part_cols = sorted(part_types)
         data_schema = self._spark_schema(sid, exclude=set(part_cols))
-        inferred = {"int": T.LongType(), "long": T.LongType(),
-                    "date": T.LongType(), "string": T.StringType()}
-        sch_types = {
-            f["name"]: f["type"]
-            for f in self._schema_by_id(sid)["fields"]
-            if isinstance(f["type"], str)
-        }
-        #: identity DATE partition columns type as DateType, matching
-        #: read()'s epoch-day conversion (transform fields keep longs)
-        date_parts = {
-            c for c in part_cols
-            if part_types.get(c) == "date"
-            and sch_types.get(c) == "date"
-        }
         out_schema = T.StructType(
             list(data_schema.fields)
             + [T.StructField(
-                c,
-                T.DateType() if c in date_parts
-                else inferred.get(part_types.get(c, "string"),
-                                  T.StringType()), True)
+                c, T.DateType() if c in date_parts else part_types[c],
+                True)
                for c in part_cols]
             + [T.StructField("_snapshot_id", T.LongType(), False)]
         )
@@ -3315,15 +3242,15 @@ class IcebergTable:
                 f"identity fields {cross}: scan the eras separately "
                 "or use read()"
             )
-        reader = spark.read
-        if len(meta.get("schemas", [])) > 1 or variants:
-            # pin the scan schema: one physical column per historical
-            # name of each field (a conforming file carries exactly
-            # one; the rest null-fill)
-            reader = reader.schema(self._spark_schema(
+        # pin the scan schema on evolved tables: one physical column
+        # per historical name of each field (a conforming file carries
+        # exactly one; the rest null-fill)
+        scan = self._scan(
+            spark, [f for _, (_, f) in infos],
+            self._spark_schema(
                 sid, exclude=set(part_cols), name_variants=variants
-            ))
-        scan = reader.parquet(*[f.path for _, (_, f) in infos])
+            ) if len(meta.get("schemas", [])) > 1 or variants else None,
+        )
         rows = [
             (_norm_path(f.path), snap_id)
             + tuple(f.partition.get(c) for c in part_cols)
@@ -3333,31 +3260,49 @@ class IcebergTable:
             f["name"]: f["id"]
             for f in self._schema_by_id(sid)["fields"]
         }
-
-        def _lcol(n):
-            vs = (variants.get(fid_of[n], [n]) if variants else [n])
-            if len(vs) == 1:
-                return F.col(vs[0])
-            return F.coalesce(*[F.col(v) for v in vs])
-
         return attach_file_columns(
             scan, rows, ["_snapshot_id", *part_cols],
-            # the spec types out_schema's partition section uses; date
-            # parts stay epoch-day longs until the conversion below
-            types={"_snapshot_id": T.LongType()} | {
-                c: inferred.get(part_types.get(c, "string"),
-                                T.StringType())
-                for c in part_cols
-            },
+            # date parts stay epoch-day longs until the conversion below
+            types={"_snapshot_id": T.LongType()} | part_types,
             what="iceberg incremental scan",
         ).select(
-            *[_lcol(f.name).alias(f.name)
-              for f in data_schema.fields],
+            *[self._logical_col(variants, fid_of[f.name], f.name)
+              .alias(f.name) for f in data_schema.fields],
             *[F.date_from_unix_date(F.col(c).cast("int")).alias(c)
               if c in date_parts else F.col(c)
               for c in part_cols],
             "_snapshot_id",
         )
+
+    def _added_files(self, s: dict) -> tuple[list[DataFile], set[int]]:
+        """The data files snapshot ``s`` ADDED, and the partition specs
+        of the data manifests it wrote — read from only those
+        manifests (``added_snapshot_id``), so the work is O(new files),
+        not O(table).  :meth:`incremental_scan` and its streaming half
+        plan through it."""
+        files: list[DataFile] = []
+        specs: set[int] = set()
+        _, manifests, _ = read_ocf(self._resolve(s["manifest-list"]))
+        for mf in manifests:
+            if (mf["content"] != _MANIFEST_DATA
+                    or mf.get("added_snapshot_id") != s["snapshot-id"]):
+                continue
+            specs.add(mf["partition_spec_id"])
+            _, entries, _ = read_ocf(self._resolve(mf["manifest_path"]))
+            files += [
+                DataFile(
+                    path=self._resolve(e["data_file"]["file_path"]),
+                    partition=dict(e["data_file"]["partition"] or {}),
+                    record_count=e["data_file"]["record_count"],
+                    file_size=e["data_file"]["file_size_in_bytes"],
+                    raw_path=e["data_file"]["file_path"],
+                    spec_id=mf["partition_spec_id"],
+                )
+                for e in entries
+                if e["status"] == _STATUS_ADDED
+                and e["data_file"]["content"] == _CONTENT_DATA
+            ]
+        return files, specs
 
     def changelog_scan(
         self,
@@ -3374,33 +3319,27 @@ class IcebergTable:
         DELETE/UPDATE/MERGE history, not just appends.
 
         Derivation is a per-snapshot VISIBILITY DIFF restricted to the
-        files that could have changed, never a table diff:
+        files that could have changed, never a table diff.  The files
+        come from :meth:`_changelog_targets`, the planner the
+        ``iceberg_incremental`` stream's changelog mode shares:
 
         - inserts are the snapshot's ADDED data files read at that
           snapshot (so a same-commit delete file already subtracts);
         - deletes come from ``read(parent, paths=targeted) EXCEPT ALL
-          read(snapshot, paths=targeted)``, where ``targeted`` is
-          metadata-derived: files REMOVED by the snapshot, plus the
-          files its NEW position-delete files name (sequence-checked),
-          plus — for new equality-delete files — the strictly-older
-          live files bounds-pruned by the delete keys' min/max (one
-          Spark aggregate over the metadata-scale delete parquet; the
-          pruning skips when keys carry NULLs or multiple columns,
-          staying a conservative superset).  Both sides are SUBSET
-          scans with the full merge-on-read machinery, so prior
+          read(snapshot, paths=targeted)``.  Both sides are SUBSET
+          scans through :meth:`read`'s one delete-apply, so prior
           deletes, sequence rules and null-safe equality semantics are
           exactly :meth:`read`'s.
 
-        Work is O(added + targeted files), never O(range × table).
+        Data reads are O(added + targeted files), never O(range ×
+        table); the planner's metadata walk still lists the parent's
+        and the snapshot's live files for each range snapshot.
         ``replace`` snapshots (compaction) are skipped — the spec
         defines them as logical no-ops, the same trust production
         changelog readers extend.  Renamed histories are SUPPORTED
         (round 13): every frame comes from :meth:`read`, whose
-        name-variant coalesce already emits CURRENT names; the
-        equality-key bounds pruning resolves the key's historical
-        name against each delete parquet's own columns (skipping the
-        pruning — a conservative superset — when none matches).  Note
-        a range CROSSING the rename itself still refuses via the
+        name-variant coalesce already emits CURRENT names.  Note a
+        range CROSSING the rename itself still refuses via the
         schema-change check below (a rename mints a new schema id).
         Refusals (honest seams): ranges crossing a schema change (the
         diff would union frames of different widths; Delta's twin
@@ -3410,7 +3349,6 @@ class IcebergTable:
         inside the range."""
         from pyspark.sql import functions as F
 
-        variants = self._rename_history()
         snaps = self.snapshots()
         ids = [s["snapshot-id"] for s in snaps]
         if from_snapshot_id not in ids:
@@ -3459,10 +3397,6 @@ class IcebergTable:
                     f"range end reads {end_schema}): scan the eras "
                     "separately"
                 )
-        name_of = {
-            f["id"]: f["name"]
-            for f in self._schema_by_id(end_schema)["fields"]
-        }
         frames = []
         cols_ref: list[str] | None = None
 
@@ -3495,82 +3429,19 @@ class IcebergTable:
                     f"changelog_scan over a {op!r} snapshot "
                     f"({snap_id})"
                 )
-            live_p = {f.raw_path: f
-                      for f in self.files(snapshot_id=parent_id)}
-            live_s = {f.raw_path: f
-                      for f in self.files(snapshot_id=snap_id)}
-            added = sorted(set(live_s) - set(live_p))
-            if added:
+            tg = self._changelog_targets(parent_id, snap_id)
+            if tg.added:
                 frames.append(_tag(
                     self.read(spark, snapshot_id=snap_id,
-                              paths=set(added)),
+                              paths={f.raw_path for f in tg.added}),
                     "insert", snap_id,
                 ))
-            targeted = set(live_p) - set(live_s)  # removed files
-            dels_p = {d.raw_path
-                      for d in self.delete_files(
-                          snapshot_id=parent_id)}
-            for d in self.delete_files(snapshot_id=snap_id):
-                if d.raw_path in dels_p:
-                    continue
-                if d.content == _CONTENT_POS_DELETES:
-                    named = {
-                        r[0] for r in spark.read.parquet(d.path)
-                        .select("file_path").distinct().collect()
-                    }
-                    targeted |= {
-                        raw for raw in named
-                        if raw in live_p
-                        and live_p[raw].sequence <= d.sequence
-                    }
-                elif d.content == _CONTENT_EQ_DELETES:
-                    older = {
-                        raw for raw, f in live_p.items()
-                        if f.sequence < d.sequence
-                        and f.content == _CONTENT_DATA
-                    }
-                    if len(d.equality_ids) == 1:
-                        kc = name_of.get(d.equality_ids[0])
-                        if kc is not None and older:
-                            ddf = spark.read.parquet(d.path)
-                            # a pre-rename delete parquet carries the
-                            # key under a historical name — resolve
-                            # against the file's own columns; no
-                            # match skips the pruning (sound: the
-                            # targeted set stays a superset)
-                            vs = (variants.get(d.equality_ids[0],
-                                               [kc])
-                                  if variants else [kc])
-                            kf = next(
-                                (n for n in vs if n in ddf.columns),
-                                None,
-                            )
-                            if kf is None:
-                                targeted |= older
-                                continue
-                            agg = ddf.agg(
-                                F.min(kf).alias("lo"),
-                                F.max(kf).alias("hi"),
-                                F.count(F.when(
-                                    F.col(kf).isNull(), 1
-                                )).alias("nulls"),
-                            ).first()
-                            if not agg.nulls and agg.lo is not None:
-                                pruned = {
-                                    f.raw_path for f in self.files(
-                                        snapshot_id=parent_id,
-                                        column_filter={
-                                            kc: (agg.lo, agg.hi)
-                                        },
-                                    )
-                                }
-                                older &= pruned
-                    targeted |= older
-            if targeted:
+            if tg.targeted:
                 before = self.read(
-                    spark, snapshot_id=parent_id, paths=targeted
+                    spark, snapshot_id=parent_id,
+                    paths={f.raw_path for f in tg.targeted},
                 )
-                alive = targeted & set(live_s)
+                alive = {f.raw_path for f in tg.targeted} & set(tg.live)
                 if alive:
                     after = self.read(
                         spark, snapshot_id=snap_id, paths=alive
@@ -3594,6 +3465,129 @@ class IcebergTable:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out
+
+    def _changelog_targets(self, parent_id: int | None,
+                           snapshot_id: int) -> "_ChangeTargets":
+        """The one changelog planner (:meth:`changelog_scan` and the
+        ``iceberg_incremental`` stream's changelog mode): what snapshot
+        ``snapshot_id`` changed against ``parent_id`` (None: nothing
+        before it), from metadata and delete-file footers only.
+
+        - ``added``: data files live at the snapshot and not at the
+          parent;
+        - ``targeted``: the parent's data files whose visible rows may
+          differ at the snapshot — files the snapshot REMOVED, files
+          its NEW position deletes name (:meth:`_named_data_files`,
+          sequence-checked) and, for each NEW equality delete, the
+          strictly older files :meth:`_eq_footer_prune` cannot rule
+          out.  A superset is sound: an untouched file diffs to
+          nothing;
+        - ``live``: the snapshot's data files by manifest path;
+        - ``dels_before`` / ``dels_after``: the live delete files at
+          the parent and at the snapshot."""
+        def data(sid):
+            return {} if sid is None else {
+                f.raw_path: f for f in self.files(snapshot_id=sid)
+                if f.content == _CONTENT_DATA
+            }
+
+        live_p, live_s = data(parent_id), data(snapshot_id)
+        dels_p = ([] if parent_id is None
+                  else self.delete_files(snapshot_id=parent_id))
+        dels_s = self.delete_files(snapshot_id=snapshot_id)
+        targeted = set(live_p) - set(live_s)  # removed files
+        old = {d.raw_path for d in dels_p}
+        for d in dels_s:
+            if d.raw_path in old:
+                continue
+            if d.content == _CONTENT_POS_DELETES:
+                targeted |= {
+                    raw for raw in self._named_data_files(d)
+                    if raw in live_p and _applies(d, live_p[raw])
+                }
+            elif d.content == _CONTENT_EQ_DELETES:
+                older = {raw for raw, f in live_p.items() if _applies(d, f)}
+                if older:
+                    targeted |= self._eq_footer_prune(d, parent_id, older)
+        return _ChangeTargets(
+            added=[live_s[r] for r in sorted(set(live_s) - set(live_p))],
+            targeted=[live_p[r] for r in sorted(targeted)],
+            live=live_s,
+            dels_before=dels_p,
+            dels_after=dels_s,
+        )
+
+    @staticmethod
+    def _named_data_files(d: DataFile) -> set[str]:
+        """The manifest paths position-delete file ``d`` names: its
+        ``file_path`` column, read with pyarrow (delete files are
+        metadata-scale next to the data they prune)."""
+        import pyarrow.parquet as pq
+
+        return set(
+            pq.read_table(d.path, columns=["file_path"])
+            .column("file_path").to_pylist()
+        )
+
+    def _eq_footer_prune(self, d: DataFile, parent_id: int,
+                         older: set) -> set:
+        """The files of ``older`` (the parent's data files strictly
+        older than equality delete ``d``) that may hold a row ``d``
+        matches, entirely metadata-side: the delete parquet's FOOTER
+        stats give the key's [min, max], and the manifest column bounds
+        prune the parent's live files by that range — no data pages
+        read anywhere.  ``older`` comes back whole when the range
+        cannot prune soundly: several key columns, a float/double key
+        (NaN sits in no [min, max] — manifest bounds and footer stats
+        both leave it out, yet the null-safe match hides it), missing
+        stats, any null key, or a key column the file or the parent's
+        schema does not resolve."""
+        import pyarrow.parquet as pq
+
+        if len(d.equality_ids) != 1:
+            return older
+        field = next((
+            f for f in self._schema_by_id(
+                self._read_schema_id(parent_id))["fields"]
+            if f["id"] == d.equality_ids[0]
+        ), None)
+        if field is None or field["type"] in ("float", "double"):
+            return older
+        col = next((
+            n for n in (self._rename_history() or {}).get(
+                field["id"], [field["name"]])
+            if n in pq.read_schema(d.path).names
+        ), None)
+        if col is None:
+            return older
+        md = pq.read_metadata(d.path)
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                c = g.column(ci)
+                if c.path_in_schema != col:
+                    continue
+                st = c.statistics
+                if (st is None or not st.has_min_max
+                        or st.null_count is None or st.null_count):
+                    return older
+                mn, mx = st.min, st.max
+                if isinstance(mn, bytes):
+                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
+                lo = mn if lo is None else min(lo, mn)
+                hi = mx if hi is None else max(hi, mx)
+        if lo is None:
+            return older
+        try:
+            return older & {
+                f.raw_path for f in self.files(
+                    snapshot_id=parent_id,
+                    column_filter={field["name"]: (lo, hi)},
+                )
+            }
+        except (ValueError, NotImplementedError):
+            return older  # unprunable key type/column: keep superset
 
     def _schema_by_id(self, sid: int) -> dict:
         for s in self.metadata().get("schemas", []):
@@ -4294,8 +4288,7 @@ class IcebergTable:
 
         - a POSITION delete is dangling when no live data file with data
           sequence ≤ the delete's has its manifest path in the delete
-          parquet's ``file_path`` column (read driver-side; delete files
-          are metadata-scale by design);
+          parquet's ``file_path`` column (:meth:`_named_data_files`);
         - an EQUALITY delete is dangling when no live data file is
           STRICTLY older than it.
 
@@ -4304,25 +4297,14 @@ class IcebergTable:
         snapshots still reference it; :meth:`expire_snapshots` +
         :meth:`vacuum` reclaim it).  Returns the dropped manifest paths;
         nothing dangling → no commit, empty list."""
-        import pyarrow.parquet as _pq
-
         base = self._base()
         data = [f for f in self.files() if f.content == _CONTENT_DATA]
         dropped: set[str] = set()
         for d in self.delete_files():
-            if d.content == _CONTENT_POS_DELETES:
-                refs = set(
-                    _pq.read_table(d.path, columns=["file_path"])
-                    .column("file_path")
-                    .to_pylist()
-                )
-                applicable = any(
-                    f.sequence <= d.sequence and f.raw_path in refs
-                    for f in data
-                )
-            else:
-                applicable = any(f.sequence < d.sequence for f in data)
-            if not applicable:
+            refs = (self._named_data_files(d)
+                    if d.content == _CONTENT_POS_DELETES else None)
+            if not any(_applies(d, f) and (refs is None or f.raw_path in refs)
+                       for f in data):
                 dropped.add(d.raw_path)
         if not dropped:
             return []

@@ -527,14 +527,14 @@ def test_cross_format_replication_delta_to_iceberg(spark, tmp_path):
 # ---------------------------------------- iceberg_incremental source
 
 
-def _ice_drain(spark, table_dir, ckpt, rows_out):
+def _ice_drain(spark, table_dir, ckpt, rows_out, **options):
     from hadoop_sync_spark.cdc_source import (
         IcebergIncrementalStreamSource,
     )
 
     spark.dataSource.register(IcebergIncrementalStreamSource)
     df = (spark.readStream.format("iceberg_incremental")
-          .option("path", table_dir).load())
+          .option("path", table_dir).options(**options).load())
 
     def sink(batch_df, _bid):
         rows_out.extend(tuple(r) for r in batch_df.collect())
@@ -817,6 +817,50 @@ def test_iceberg_changelog_stream_matches_batch(spark, tmp_path):
           .trigger(availableNow=True).start())
     q2.awaitTermination()
     assert {(g[0], g[2]) for g in got2} == {(9, "delete")}
+
+
+def test_iceberg_changelog_nan_equality_delete_key(spark, tmp_path):
+    """An equality delete keyed on NaN hides the NaN row (``read()``
+    matches null-safely, and ``eqNullSafe`` matches NaN), so both
+    changelog faces must emit it.  Neither manifest bounds nor footer
+    stats record NaN: a [min, max] prune of the strictly older files
+    by the delete keys' range would drop the file holding it, so the
+    planner does not range-prune float/double keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_sync_spark.iceberg_meta import (
+        DataFile,
+        IcebergTable,
+        parquet_column_bounds,
+    )
+
+    d = str(tmp_path / "ice_nan")
+    os.makedirs(os.path.join(d, "data"))
+    t = IcebergTable.create(d, [("k", "bigint"), ("x", "double")],
+                            now_ms=1)
+    fields = t._schema_by_id(0)["fields"]
+    files = []
+    for name, ks, xs in (("f1.parquet", [1, 2], [0.5, float("nan")]),
+                         ("f2.parquet", [3], [5.0])):
+        p = os.path.join(d, "data", name)
+        pq.write_table(pa.table({"k": pa.array(ks, pa.int64()),
+                                 "x": pa.array(xs, pa.float64())}), p)
+        lb, ub = parquet_column_bounds(p, fields)
+        files.append(DataFile(f"data/{name}", {}, len(ks),
+                              os.path.getsize(p),
+                              lower_bounds=lb, upper_bounds=ub))
+    s1 = t.append(files, now_ms=2)
+    t.add_equality_deletes([{"x": float("nan")}, {"x": 1.0}], [2],
+                           now_ms=3)
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 3]
+    assert [(r.k, r._change_type)
+            for r in t.changelog_scan(spark, s1).collect()] == [
+        (2, "delete")]
+    got: list = []
+    _ice_drain(spark, d, str(tmp_path / "ck"), got, mode="changelog",
+               startingSequence=2)
+    assert [(g[0], g[2]) for g in got] == [(2, "delete")]
 
 
 @pytest.mark.slow

@@ -13,8 +13,10 @@ versions).
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -2325,32 +2327,103 @@ def test_changelog_scan_row_level_history(spark, tmp_path):
         t.changelog_scan(spark, 424242)
 
 
-@pytest.mark.slow
-def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path):
-    """Partitioned changelog: events carry the identity partition
-    column; rows a PRIOR delete already hides do not re-emit when a
-    later overlapping delete lands (the visibility diff, not the raw
-    delete-file content, drives the events)."""
-    t, write_pq = _mor_table(tmp_path, partitioned=True)
-    s1 = t.append([write_pq("f1.parquet", [1, 2, 3], bucket=0),
-                   write_pq("f2.parquet", [4], bucket=1)], now_ms=2000)
-    t.delete_rows(spark, {"id": (2, 2)}, now_ms=3000)
-    s2 = t.snapshot()["snapshot-id"]
-    # overlapping predicate: id=2 is ALREADY dead — only 3 emits
-    t.delete_rows(spark, {"id": (2, 3)}, now_ms=4000)
-    s3 = t.snapshot()["snapshot-id"]
-    ev = {(r.id, r.p_bucket, r._change_type, r._snapshot_id)
-          for r in t.changelog_scan(spark, s1).collect()}
-    assert ev == {(2, 0, "delete", s2), (3, 0, "delete", s3)}
-    # partitioned merge changelog: delete+insert pair for the matched
-    # key, tuple-stamped inserts for the rest
-    src = spark.createDataFrame([(4, "X", 1), (9, "n", 2)],
-                                ["id", "val", "p_bucket"])
-    s4 = t.merge_upsert(spark, src, "id", now_ms=5000)["snapshot_id"]
-    ev4 = {(r.id, r.val, r.p_bucket, r._change_type)
-           for r in t.changelog_scan(spark, s3).collect()}
-    assert ev4 == {(4, "v4", 1, "delete"), (4, "X", 1, "insert"),
-                   (9, "n", 2, "insert")}
+@pytest.mark.parametrize("kind", ["position", "equality", "both"])
+@pytest.mark.parametrize("shape", ["flat", "partitioned", "evolved"])
+def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
+                                                      shape, kind):
+    """Every table shape (unpartitioned, identity-partitioned, spec
+    evolved mid-history) under every delete kind reads through the one
+    delete-apply: ``read()``, ``read(paths=<subset>)`` and ``read()``
+    after ``compact`` equal a pyarrow model of the live rows, and
+    ``changelog_scan`` equals the model's events and the
+    ``mode=changelog`` stream as multisets.  Rows a PRIOR delete
+    already hides do not re-emit when a later overlapping delete lands
+    (the visibility diff, not the raw delete-file content, drives the
+    events); a merge emits a delete+insert pair for the matched key and
+    tuple-stamped inserts for the rest."""
+    from collections import Counter
+
+    from hadoop_sync_spark.cdc_source import IcebergIncrementalStreamSource
+
+    d = str(tmp_path / "grid")
+    os.makedirs(os.path.join(d, "data"))
+    t = IcebergTable.create(
+        d, [("id", "bigint"), ("val", "string"), ("p", "bigint")],
+        partition_by=[("p", "long")] if shape == "partitioned" else None,
+        now_ms=1000,
+    )
+    model = {}  # id -> (id, val, p)
+
+    def write(name, ids, p, recorded):
+        cols = {"id": pa.array(ids, pa.int64()),
+                "val": pa.array([f"v{i}" for i in ids], pa.string())}
+        if not recorded:  # the partition value lives in the data
+            cols["p"] = pa.array([p] * len(ids), pa.int64())
+        pq.write_table(pa.table(cols), os.path.join(d, "data", name))
+        model.update({i: (i, f"v{i}", p) for i in ids})
+        return DataFile(f"data/{name}", {"p": p} if recorded else {},
+                        len(ids), os.path.getsize(
+                            os.path.join(d, "data", name)))
+
+    recorded = shape == "partitioned"
+    t.append([write("f1.parquet", [1, 2, 3], 0, recorded),
+              write("f2.parquet", [4, 5], 1, recorded)], now_ms=2000)
+    if shape == "evolved":
+        t.update_spec([("p", "long")], now_ms=2500)
+    s0 = t.append([write("f3.parquet", [6], 1, shape != "flat")],
+                  now_ms=3000)
+    events = Counter()
+
+    def snap():
+        return t.snapshot()["snapshot-id"]
+
+    # id 2 dies, then an overlapping delete names 2 and 3: only 3 emits
+    if kind == "equality":
+        t.add_equality_deletes([{"id": 2}], [1], now_ms=4000)
+    else:
+        t.delete_rows(spark, {"id": (2, 2)}, now_ms=4000)
+    events[model.pop(2) + ("delete", snap())] += 1
+    if kind == "position":
+        t.delete_rows(spark, {"id": (2, 3)}, now_ms=5000)
+    else:
+        t.add_equality_deletes([{"id": 2}, {"id": 3}], [1], now_ms=5000)
+    events[model.pop(3) + ("delete", snap())] += 1
+    if kind != "position":
+        src = spark.createDataFrame([(4, "X", 1), (9, "n", 2)],
+                                    "id long, val string, p long")
+        s3 = t.merge_upsert(spark, src, "id", now_ms=6000)["snapshot_id"]
+        events[model.pop(4) + ("delete", s3)] += 1
+        for row in [(4, "X", 1), (9, "n", 2)]:
+            model[row[0]] = row
+            events[row + ("insert", s3)] += 1
+
+    def rows(df, *extra):
+        return Counter(tuple(r) for r in
+                       df.select("id", "val", "p", *extra).collect())
+
+    assert rows(t.read(spark)) == Counter(model.values())
+    assert rows(t.read(spark, paths={"data/f1.parquet"})) == Counter(
+        r for r in model.values() if r[0] in (1, 2, 3))
+    clog = rows(t.changelog_scan(spark, s0), "_change_type",
+                "_snapshot_id")
+    assert clog == events
+    spark.dataSource.register(IcebergIncrementalStreamSource)
+    streamed: list = []
+    (spark.readStream.format("iceberg_incremental")
+     .option("path", d).option("mode", "changelog")
+     .option("startingSequence",
+             t.snapshot(s0)["sequence-number"] + 1).load()
+     .writeStream.foreachBatch(lambda b, _i: streamed.extend(
+         tuple(r) for r in b.select("id", "val", "p", "_change_type",
+                                    "_snapshot_id").collect()))
+     .option("checkpointLocation", str(tmp_path / "ck"))
+     .trigger(availableNow=True).start().awaitTermination())
+    assert Counter(streamed) == clog
+    assert t.compact(spark, now_ms=7000) is not None
+    assert rows(t.read(spark)) == Counter(model.values())
+    # compaction is a replace snapshot: the changelog does not move
+    assert rows(t.changelog_scan(spark, s0), "_change_type",
+                "_snapshot_id") == events
 
 
 def test_merge_upsert_validation_before_write(spark, tmp_path):
@@ -3136,3 +3209,72 @@ def test_merge_upsert_executor_and_driver_tiers(spark, tmp_path,
     model.update(upserts)
     got = sorted((r.id, r.val) for r in t.read(spark).collect())
     assert got == sorted(model.items())
+
+
+# -------------------------------------------------------------- CI guard
+_PACKAGE = Path(__file__).resolve().parent.parent / "hadoop_sync_spark"
+#: parquet reads of a delete file's bytes, as (module, function, call):
+#: the position-delete frame builder, the delete-apply, the named-files
+#: reader, the equality footer prune and the stream's executor-side mask
+DELETE_FILE_READERS = {
+    ("iceberg_meta.py", "IcebergTable._pos_delete_frame", "parquet"),
+    ("iceberg_meta.py", "IcebergTable._pos_delete_frame", "read_table"),
+    ("iceberg_meta.py", "IcebergTable._minus_deletes", "parquet"),
+    ("iceberg_meta.py", "IcebergTable._named_data_files", "read_table"),
+    ("iceberg_meta.py", "IcebergTable._eq_footer_prune", "read_schema"),
+    ("iceberg_meta.py", "IcebergTable._eq_footer_prune", "read_metadata"),
+    ("cdc_source.py", "_IceIncStreamReader._visibility_mask", "read_table"),
+}
+#: parquet reads of DATA files: the one scan, footer stats of written
+#: files, the empty-result read's footer schema and the stream executors
+DATA_FILE_READERS = {
+    ("iceberg_meta.py", "parquet_column_bounds", "read_metadata"),
+    ("iceberg_meta.py", "_written_data_file", "read_metadata"),
+    ("iceberg_meta.py", "IcebergTable.read", "read_schema"),
+    ("iceberg_meta.py", "IcebergTable._scan", "parquet"),
+    ("cdc_source.py", "_CDCStreamReader.read", "read_table"),
+    ("cdc_source.py", "_IceIncStreamReader.read", "read_table"),
+    ("cdc_source.py", "_IceIncStreamReader._read_change", "read_table"),
+}
+#: the one rename resolver (COALESCE over a field's name variants)
+COALESCE_ALLOWED = {("iceberg_meta.py", "IcebergTable._logical_col")}
+_PARQUET_READS = {"parquet", "read_table", "read_metadata", "read_schema"}
+
+
+def _calls(node, scope="", in_func=False):
+    """Every attribute call under ``node`` with its enclosing
+    ``Class.function`` (closures count as the function defining them)."""
+    for child in ast.iter_child_nodes(node):
+        inner, inner_in = scope, in_func
+        if not in_func and isinstance(
+                child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            inner = f"{scope}.{child.name}" if scope else child.name
+            inner_in = not isinstance(child, ast.ClassDef)
+        if isinstance(child, ast.Call) and isinstance(child.func,
+                                                      ast.Attribute):
+            yield child, scope
+        yield from _calls(child, inner, inner_in)
+
+
+def test_iceberg_scan_and_delete_apply_have_one_home():
+    """In the Iceberg reader and the streaming source, parquet reads
+    (``spark.read…parquet``, ``pq.read_table`` / ``read_metadata`` /
+    ``read_schema``) happen only in the listed delete-file and
+    data-file readers, so a second delete-apply or scan cannot appear
+    unnoticed; ``F.coalesce`` over a list of name variants appears only
+    in the one rename resolver."""
+    bad = []
+    for name in ("iceberg_meta.py", "cdc_source.py"):
+        tree = ast.parse((_PACKAGE / name).read_text())
+        for call, scope in _calls(tree):
+            where = (name, scope)
+            site = f"{name}:{call.lineno} in {scope or 'module'}"
+            attr = call.func.attr
+            if (attr in _PARQUET_READS and (*where, attr)
+                    not in DELETE_FILE_READERS | DATA_FILE_READERS):
+                bad.append(f"{site}: {attr}()")
+            if (attr == "coalesce"
+                    and any(isinstance(a, ast.Starred) for a in call.args)
+                    and where not in COALESCE_ALLOWED):
+                bad.append(f"{site}: coalesce over name variants")
+    assert not bad, bad

@@ -298,18 +298,27 @@ def test_codec_roundtrip_plans_shuffle_keys_only(spark, sf_dir, name):
 
 
 # ----------------------------------------------- round-8 MoR/DV read plans
-def test_iceberg_mor_read_plans_broadcast_anti_joins(spark, sf_dir):
+@pytest.mark.parametrize("k", [1, 8])
+def test_iceberg_mor_read_plans_broadcast_anti_joins(spark, sf_dir, k):
     """q148's feeding path: merge-on-read delete application must plan
     as broadcast LEFT ANTI joins (the delete sets are metadata-scale),
     with no sort-merge join and no exchange of the data side beyond the
-    scan itself."""
+    scan itself.  The joins do not grow with the delete files: k
+    position-delete files take ONE anti-join, and two equality-delete
+    files sharing one id set take one more (1 + G, G the number of
+    distinct equality-id sets)."""
     from hadoop_sync_spark.queries.lakehouse_q import (
         build_orders_iceberg_fixture,
     )
-    from hadoop_sync_spark.iceberg_meta import IcebergTable
 
     table, _snaps = build_orders_iceberg_fixture(spark, sf_dir)
-    table.add_position_deletes([("data/f0.parquet", 0)], now_ms=7000)
+    for i in range(k):
+        table.add_position_deletes([("data/f0.parquet", i)],
+                                   now_ms=7000 + i)
+    for i, custkey in enumerate((1, 2)):
+        # field id 2 = o_custkey
+        table.add_equality_deletes([{"o_custkey": custkey}], [2],
+                                   now_ms=8000 + i)
     plan = (
         table.read(spark)
         ._jdf.queryExecution()
@@ -317,12 +326,9 @@ def test_iceberg_mor_read_plans_broadcast_anti_joins(spark, sf_dir):
         .toString()
     )
     assert "SortMergeJoin" not in plan
-    anti = [
-        ln
-        for ln in plan.splitlines()
-        if "LeftAnti" in ln and "Broadcast" in ln
-    ]
-    assert anti, plan
+    anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+    assert len(anti) == 1 + 1, plan
+    assert all("Broadcast" in ln for ln in anti), plan
     # the partition-attach join stays broadcast too
     assert "BroadcastHashJoin" in plan
 
