@@ -230,6 +230,7 @@ _LAST_CHECKPOINT = "_last_checkpoint"
 from hadoop_sync_spark.commit import check_free, put_if_absent, replace_file
 from hadoop_sync_spark.io import (
     BROADCAST_DELETE_ROW_LIMIT,
+    DRIVER_DECODE_ROW_LIMIT,
     local_frame,
     plan_bins,
     split_tuples,
@@ -243,9 +244,9 @@ _BROADCAST_DELETE_ROW_LIMIT = BROADCAST_DELETE_ROW_LIMIT
 #: below this, DV positions expand DRIVER-side (the executor-decode
 #: RDD path's ~0.3 s fixed job overhead dominates tiny sets); above,
 #: descriptors decode executor-side, keeping the O(cardinality)
-#: position list off the driver (measurements at
-#: DeltaLog._dv_delete_frame)
-_DRIVER_DECODE_ROW_LIMIT = 20_000
+#: position list off the driver (shared with the Iceberg reader;
+#: measurements at DeltaLog._dv_delete_frame)
+_DRIVER_DECODE_ROW_LIMIT = DRIVER_DECODE_ROW_LIMIT
 
 
 def _dv_file_path(table_dir: str, desc: dict) -> str:

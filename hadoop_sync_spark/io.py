@@ -57,6 +57,14 @@ TABLES: tuple[str, ...] = (
 #: delete sets at 100 TB).
 BROADCAST_DELETE_ROW_LIMIT = 5_000_000
 
+#: below this many rows a delete set (deletion-vector positions,
+#: Iceberg position deletes) decodes DRIVER-side into a local frame —
+#: the executor read's fixed job and per-file task overhead dominates
+#: tiny sets; above it the rows decode on the executors, where a
+#: Python decode on the driver loses (crossovers in SCALING.md and
+#: ``tools/iceberg_delete_probe.py --big``)
+DRIVER_DECODE_ROW_LIMIT = 20_000
+
 
 def table_path(sf_dir: str, name: str) -> str:
     """Resolve a table name to its parquet path under a scale-factor dir."""

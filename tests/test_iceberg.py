@@ -22,6 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from hadoop_sync_spark import iceberg_meta
 from hadoop_sync_spark.iceberg_meta import DataFile, IcebergTable
 
 
@@ -1211,13 +1212,22 @@ def test_rename_column_variant_read(spark, tmp_path):
     # MoR composes: a position delete, plus an equality delete whose
     # FILE stores the OLD column name (simulating a pre-rename engine's
     # delete file: rewrite the committed parquet in place — the
-    # manifest references the path, not the column names)
+    # manifest references the path, not the column names) and one
+    # under the NEW name in the same id set, read by one scan
+    p3 = os.path.join(d, "data", "f3.parquet")
+    pq.write_table(
+        pa.table({"id": pa.array([4], pa.int64()),
+                  "label": pa.array(["v4"], pa.string())}), p3)
+    t.append([DataFile("data/f3.parquet", {}, 1, os.path.getsize(p3))],
+             now_ms=4500)
     t.add_position_deletes([("data/f1.parquet", 0)], now_ms=5000)
     t.add_equality_deletes([{"label": "v3"}], equality_ids=[2],
                            now_ms=6000)
     (eq_del,) = [f for f in t.delete_files() if f.content == 2]
     pq.write_table(
         pa.table({"val": pa.array(["v3"], pa.string())}), eq_del.path)
+    t.add_equality_deletes([{"label": "v4"}], equality_ids=[2],
+                           now_ms=6500)
     assert {(r.id, r.label) for r in t.read(spark).collect()} == {
         (2, "v2")}
     # compaction rewrites under the CURRENT name; reads stay correct
@@ -1840,8 +1850,10 @@ def test_delete_rows_predicate_position_deletes(spark, tmp_path):
         # 12 lifted the last write-face refusal): rewrite + distributed
         # position-delete write in ONE snapshot, existing deletes
         # subtracted sequence-aware through Spark
-        assert t.update_rows(spark, {"id": (2, 2)},
-                             {"val": "X2"}, now_ms=7800) == 1
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(iceberg_meta, "_DRIVER_DECODE_ROW_LIMIT", 0)
+            assert t.update_rows(spark, {"id": (2, 2)},
+                                 {"val": "X2"}, now_ms=7800) == 1
         assert {(r.id, r.val) for r in t.read(spark).collect()} == {
             (2, "X2")}
     finally:
@@ -2331,8 +2343,8 @@ def test_changelog_scan_row_level_history(spark, tmp_path):
 @pytest.mark.parametrize("shape", ["flat", "partitioned", "evolved"])
 def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
                                                       shape, kind):
-    """Every table shape (unpartitioned, identity-partitioned, spec
-    evolved mid-history) under every delete kind reads through the one
+    """Every table shape (unpartitioned, identity-partitioned on an
+    ``int`` column, spec evolved mid-history on a ``long``) under every delete kind reads through the one
     delete-apply: ``read()``, ``read(paths=<subset>)`` and ``read()``
     after ``compact`` equal a pyarrow model of the live rows, and
     ``changelog_scan`` equals the model's events and the
@@ -2347,9 +2359,15 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
 
     d = str(tmp_path / "grid")
     os.makedirs(os.path.join(d, "data"))
+    # p is an int (its partition values attach as longs), except in
+    # the evolved shape: there compaction writes the pre-evolution
+    # files' p back into data as a long, which a later read pinned to
+    # int refuses
+    wide = shape == "evolved"
     t = IcebergTable.create(
-        d, [("id", "bigint"), ("val", "string"), ("p", "bigint")],
-        partition_by=[("p", "long")] if shape == "partitioned" else None,
+        d, [("id", "bigint"), ("val", "string"),
+            ("p", "bigint" if wide else "int")],
+        partition_by=[("p", "int")] if shape == "partitioned" else None,
         now_ms=1000,
     )
     model = {}  # id -> (id, val, p)
@@ -2358,7 +2376,8 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
         cols = {"id": pa.array(ids, pa.int64()),
                 "val": pa.array([f"v{i}" for i in ids], pa.string())}
         if not recorded:  # the partition value lives in the data
-            cols["p"] = pa.array([p] * len(ids), pa.int64())
+            cols["p"] = pa.array([p] * len(ids),
+                                 pa.int64() if wide else pa.int32())
         pq.write_table(pa.table(cols), os.path.join(d, "data", name))
         model.update({i: (i, f"v{i}", p) for i in ids})
         return DataFile(f"data/{name}", {"p": p} if recorded else {},
@@ -2390,7 +2409,8 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
     events[model.pop(3) + ("delete", snap())] += 1
     if kind != "position":
         src = spark.createDataFrame([(4, "X", 1), (9, "n", 2)],
-                                    "id long, val string, p long")
+                                    "id long, val string, p "
+                                    + ("long" if wide else "int"))
         s3 = t.merge_upsert(spark, src, "id", now_ms=6000)["snapshot_id"]
         events[model.pop(4) + ("delete", s3)] += 1
         for row in [(4, "X", 1), (9, "n", 2)]:
@@ -2407,6 +2427,13 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
     clog = rows(t.changelog_scan(spark, s0), "_change_type",
                 "_snapshot_id")
     assert clog == events
+    with pytest.MonkeyPatch.context() as m:
+        # the same answers with the position deletes decoded on the
+        # executors (one scan of every delete file) instead of the driver
+        m.setattr(iceberg_meta, "_DRIVER_DECODE_ROW_LIMIT", 0)
+        assert rows(t.read(spark)) == Counter(model.values())
+        assert rows(t.changelog_scan(spark, s0), "_change_type",
+                    "_snapshot_id") == events
     spark.dataSource.register(IcebergIncrementalStreamSource)
     streamed: list = []
     (spark.readStream.format("iceberg_incremental")
@@ -3214,12 +3241,12 @@ def test_merge_upsert_executor_and_driver_tiers(spark, tmp_path,
 # -------------------------------------------------------------- CI guard
 _PACKAGE = Path(__file__).resolve().parent.parent / "hadoop_sync_spark"
 #: parquet reads of a delete file's bytes, as (module, function, call):
-#: the position-delete frame builder, the delete-apply, the named-files
-#: reader, the equality footer prune and the stream's executor-side mask
+#: the delete-apply's one Spark delete scan, the position-delete frame
+#: builder's driver tier, the named-files reader, the equality footer
+#: prune and the stream's executor-side mask
 DELETE_FILE_READERS = {
-    ("iceberg_meta.py", "IcebergTable._pos_delete_frame", "parquet"),
+    ("iceberg_meta.py", "IcebergTable._delete_scan", "parquet"),
     ("iceberg_meta.py", "IcebergTable._pos_delete_frame", "read_table"),
-    ("iceberg_meta.py", "IcebergTable._minus_deletes", "parquet"),
     ("iceberg_meta.py", "IcebergTable._named_data_files", "read_table"),
     ("iceberg_meta.py", "IcebergTable._eq_footer_prune", "read_schema"),
     ("iceberg_meta.py", "IcebergTable._eq_footer_prune", "read_metadata"),
