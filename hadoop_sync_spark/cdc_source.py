@@ -18,25 +18,26 @@ process), so the stream's checkpoint records exactly the log position
 (:func:`hadoop_sync_spark.streaming.pipeline.delta_txn_sink`) gives an
 end-to-end exactly-once CDC pipeline between two Delta tables.
 
-Execution model (why this is scale-correct): micro-batch PLANNING runs
-on the driver and is pure log replay — JSON commits only, no data I/O,
-no SparkSession.  Each planned :class:`_CDCPart` is ONE file; the
-executors read cdc/add parquet directly via pyarrow, so a batch that
-touches 500 files fans out 500 parallel tasks and the driver never
-holds a row.
+Execution model: one plan, two executions.  Micro-batch PLANNING runs
+on the driver through ``DeltaLog._plan_changes``, the planner
+``read_changes`` executes too: JSON commits plus the snapshot before
+the batch (replayed from the newest checkpoint), no data I/O, no
+SparkSession.  Each planned :class:`_CDCPart` is ONE file of one
+commit; the executors read cdc/data parquet directly via pyarrow and
+select the planned rows by row index, so a batch that touches 500
+files fans out 500 parallel tasks and the driver never holds a row.
 
-Honest scope (matching production Delta, which also refuses streaming
-CDF reads of versions without recorded changes):
+Scope — the batch face's, change for change:
 
 - commits carrying ``cdc`` actions stream those files verbatim (the
   in-file ``_change_type`` rides through: delete / update_preimage /
-  update_postimage / insert);
-- PURE-APPEND commits (adds with dataChange, no deletion vectors)
-  stream as inserts per the spec's reconstructable-changes rule;
-- DML commits WITHOUT cdc files (derived deletes / DV growth /
-  dataChange removes) refuse at planning with the fix spelled out:
-  set ``delta.enableChangeDataFeed``.  ``read_changes`` (driver-side,
-  Spark available) remains the batch face for those;
+  update_postimage / insert) — PROTOCOL.md's reader rule;
+- every other commit streams its derived changes: inserts of new
+  files minus their deletion vectors, deletes of removed files'
+  then-live rows, and a re-added file's deletion-vector diff (nothing
+  at all for a re-add that changes no vector, and nothing for
+  ``dataChange: false`` compaction), so DML without a change feed
+  streams as delete+insert pairs;
 - BOTH column-mapping modes stream (round 13 adds id): name mode is
   metadata-static (executors translate physical file and
   partitionValues names through one passed dict); id mode resolves
@@ -53,7 +54,8 @@ CDF reads of versions without recorded changes):
   ``latestOffset`` REPORTS to ``min(latest, position + N)`` — bounded
   micro-batches inside the existing API, the way production sources
   bound offsets (the Spark 4.1 Python Data Source API exposes no
-  ReadLimit hook).  Planning stays O(clamped range).  The position is
+  ReadLimit hook).  Planning replays the log up to the batch start
+  (from the newest checkpoint) plus the clamped range.  The position is
   construction-start, then the monotone max of planned/committed
   batch ends — call-order facts established by tracing the runner:
   ``latestOffset`` precedes ``initialOffset`` on fresh streams, and a
@@ -118,7 +120,7 @@ class _CDCPart(InputPartition):
     finished output rows without a SparkSession."""
 
     abs_path: str
-    #: fixed change type for add-derived inserts; None = the file is a
+    #: the derived change kind (insert / delete); None = the file is a
     #: cdc file and carries its own _change_type column
     change_type: str | None
     commit_version: int
@@ -131,6 +133,11 @@ class _CDCPart(InputPartition):
     #: the partitionValues key map in BOTH mapped modes); empty =
     #: identity
     phys: dict
+    #: the planned row positions (``DeltaLog._plan_changes``): with
+    #: ``keep`` the only rows emitted (a deletion-vector diff), without
+    #: it the rows dropped (the file's own deletion vector)
+    keep: bool
+    positions: list
     #: the FULL output arrow schema (out_cols + _change_type +
     #: _commit_version), computed once on the driver from the source's
     #: declared Spark schema so executors emit typed RecordBatches
@@ -144,13 +151,23 @@ class _CDCPart(InputPartition):
 
 
 class _CDCStreamReader(DataSourceStreamReader):
+    """Streaming half of :meth:`DeltaLog.read_changes`: offsets are
+    commit versions, and each micro-batch executes the batch face's
+    plan (:meth:`DeltaLog._plan_changes`) as one part per file and
+    commit, so a drain equals ``read_changes`` over the same range as
+    a multiset.  The output schema is pinned at construction: a commit
+    that changes it refuses."""
+
     def __init__(self, options):
         # option keys arrive through a case-insensitive map; normalize
         lower = {k.lower(): v for k, v in dict(options).items()}
         self.path = lower.get("path")
         if not self.path:
             raise ValueError("delta_cdc requires .option('path', ...)")
-        log, snap = self._log_snap()
+        from hadoop_sync_spark.delta_log import DeltaLog, _column_mapping
+
+        log = DeltaLog(self.path)
+        snap = log.snapshot()
         sv = lower.get("startingversion", 0)
         # "latest" = new-changes-only consumer (production CDF's
         # startingVersion:latest): skip the whole existing backlog
@@ -188,8 +205,6 @@ class _CDCStreamReader(DataSourceStreamReader):
         # field ids — each part already opens its own footer via
         # pyarrow, so the per-file resolution the batch path does
         # driver-side happens executor-side here for free.
-        from hadoop_sync_spark.delta_log import _column_mapping
-
         mapping = _column_mapping(snap)
         self._phys = {n: pn for n, (pn, _) in mapping.items()}
         self._fids = ({n: fid for n, (_, fid) in mapping.items()}
@@ -216,12 +231,6 @@ class _CDCStreamReader(DataSourceStreamReader):
             .add(T.StructField("_commit_version", T.LongType()))
         )
 
-    def _log_snap(self):
-        from hadoop_sync_spark.delta_log import DeltaLog
-
-        log = DeltaLog(self.path)
-        return log, log.snapshot()
-
     # ---- offsets: {"version": N} = the next commit to process ------
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
@@ -239,11 +248,11 @@ class _CDCStreamReader(DataSourceStreamReader):
         # committed end also (re-)teaches the clamp's position
         self._pos = max(self._pos, end["version"])
 
-    # ---- planning: pure log replay, one part per file ---------------
+    # ---- planning: the batch face's planner, one part per file --------
     def partitions(self, start: dict, end: dict):
         from hadoop_sync_spark.delta_log import (
-            _commit_path,
-            _LOG_DIR,  # noqa: F401  (import proves the layout contract)
+            DeltaLog,
+            _hive_layout_refusal,
         )
 
         # the planned end is the stream's position for the NEXT
@@ -251,99 +260,73 @@ class _CDCStreamReader(DataSourceStreamReader):
         # its position from the checkpoint-replayed batch)
         self._pos = max(self._pos, end["version"])
         parts: list[_CDCPart] = []
-        for v in range(start["version"], end["version"]):
-            cpath = _commit_path(self.path, v)
-            if not os.path.exists(cpath):
-                raise FileNotFoundError(
-                    f"commit {v} missing (vacuumed?): the stream's "
-                    f"offset predates the log's retained history"
-                )
-            cdc, adds, dirty = [], [], []
-            with open(cpath, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    if "cdc" in a:
-                        cdc.append(a["cdc"])
-                    elif "add" in a:
-                        if a["add"].get("deletionVector"):
-                            dirty.append("add with deletion vector")
-                        elif a["add"].get("dataChange", True):
-                            adds.append(a["add"])
-                    elif "remove" in a:
-                        if a["remove"].get("dataChange", True):
-                            dirty.append("remove with dataChange")
-                    elif "metaData" in a:
-                        ms = a["metaData"].get("schemaString")
-                        if ms is not None and ms != self._pinned_schema:
-                            raise NotImplementedError(
-                                f"schema changed at version {v}: "
-                                "restart the stream to pick up the "
-                                "new schema"
-                            )
-            if cdc:
-                # the spec's reader rule: when a commit has cdc files
-                # they are the COMPLETE change set for that commit
-                for c in cdc:
-                    parts.append(self._part(c, None, v))
-            elif dirty:
+        for c in DeltaLog(self.path)._plan_changes(start["version"],
+                                                   end["version"] - 1):
+            if c.schema_json not in (None, self._pinned_schema):
                 raise NotImplementedError(
-                    f"version {v} changed rows without a change feed "
-                    f"({dirty[0]}): set delta.enableChangeDataFeed on "
-                    "the table, or consume DeltaLog.read_changes in "
-                    "batch"
+                    f"schema changed at version {c.version}: restart "
+                    "the stream to pick up the new schema"
                 )
-            else:
-                for add in adds:
-                    parts.append(self._part(add, "insert", v))
+            refusal = _hive_layout_refusal(
+                self._part_cols, self._phys, [f.pv for f in c.files],
+                "delta_cdc")
+            if refusal is not None:
+                raise refusal
+            parts += [self._part(a["path"], None, c.version,
+                                 a.get("partitionValues"))
+                      for a in c.cdc]
+            parts += [self._part(f.rel, f.kind, c.version, f.pv,
+                                 f.keep, f.positions)
+                      for f in c.files]
         if not parts:
             # a planned batch whose versions carried only row-neutral
             # actions (compaction, protocol, checkpoints): one empty
             # part keeps the engine's >=1-partition expectation
-            parts.append(_CDCPart(
-                abs_path="", change_type="insert", commit_version=-1,
-                pv={}, out_cols=self._out_cols,
-                partition_cols=self._part_cols, phys={},
-                arrow_schema=self._arrow_schema, fids=self._fids,
-            ))
+            parts.append(self._part("", "insert", -1, None))
         return parts
 
-    def _part(self, action: dict, change_type, version: int) -> _CDCPart:
-        pv_raw = action.get("partitionValues") or {}
-        # under name mapping, partitionValues keys are PHYSICAL
-        pv = {
-            c: _pv_decode(pv_raw.get(self._phys.get(c, c)),
-                          self._pv_types[c])
-            for c in self._part_cols
-        }
+    def _part(self, rel: str, change_type, version: int, pv_raw,
+              keep: bool = False, positions=()) -> _CDCPart:
+        from hadoop_sync_spark.delta_log import _partition_value
+
         return _CDCPart(
-            abs_path=os.path.join(self.path, action["path"]),
+            abs_path=rel and os.path.join(self.path, rel),
             change_type=change_type,
             commit_version=version,
-            pv=pv,
+            pv={c: _pv_decode(_partition_value(pv_raw, self._phys, c),
+                              self._pv_types[c])
+                for c in self._part_cols},
             out_cols=self._out_cols,
             partition_cols=self._part_cols,
             phys=self._phys,
+            keep=keep,
+            positions=list(positions),
             arrow_schema=self._arrow_schema,
             fids=self._fids,
         )
 
     # ---- executor-side: one pyarrow file read, no Spark -------------
     def read(self, partition: _CDCPart):
-        """One Arrow-native file read per part: parquet columns pass
-        through as arrow arrays (cast to the pinned output type when a
-        file's physical type differs), metadata-only columns (partition
-        values, add-derived change type, commit version) attach as
-        constant arrays, and the result streams back as RecordBatches —
-        no per-row Python loop on the wide-backlog path (ADVICE r12)."""
+        """One Arrow-native file read per part: the planned positions
+        select rows by row index, parquet columns pass through as arrow
+        arrays (cast to the pinned output type when a file's physical
+        type differs), metadata-only columns (partition values, derived
+        change type, commit version) attach as constant arrays, and the
+        result streams back as RecordBatches — no per-row Python loop
+        on the wide-backlog path (ADVICE r12)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if not partition.abs_path:
             return  # the row-neutral-batch placeholder part
         t = pq.read_table(partition.abs_path)
+        if partition.keep or partition.positions:
+            import numpy as np
+
+            rows = np.full(t.num_rows, not partition.keep)
+            pos = np.asarray(partition.positions, dtype=np.int64)
+            rows[pos[pos < t.num_rows]] = partition.keep
+            t = t.filter(pa.array(rows))
         names = set(t.schema.names)
         n = t.num_rows
         sch = partition.arrow_schema

@@ -57,6 +57,7 @@ import functools
 import json
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -637,17 +638,17 @@ def _partition_value(pv: dict | None, phys: dict, c: str) -> str | None:
     return None if v is None else str(v)
 
 
-def _hive_layout_refusal(snap: Snapshot, phys: dict, pvs,
+def _hive_layout_refusal(part_cols, phys: dict, pvs,
                          face: str) -> NotImplementedError | None:
-    """The refusal for a partitioned table whose actions do not log
-    every partition value (``pvs``: their ``partitionValues``), or None
-    when they do.  Deletion vectors, column mapping, compaction and
-    change feeds all need the logged values; only an unmapped,
-    vector-free :meth:`DeltaLog.read` falls back to inferring them from
-    a Hive-style directory layout."""
+    """The refusal for a table partitioned by ``part_cols`` whose
+    actions do not log every partition value (``pvs``: their
+    ``partitionValues``), or None when they do.  Deletion vectors,
+    column mapping, compaction and change feeds all need the logged
+    values; only an unmapped, vector-free :meth:`DeltaLog.read` falls
+    back to inferring them from a Hive-style directory layout."""
     if all(
         phys.get(c, c) in (pv or {}) or c in (pv or {})
-        for pv in pvs for c in snap.partition_columns
+        for pv in pvs for c in part_cols
     ):
         return None
     return NotImplementedError(
@@ -670,6 +671,32 @@ def _logical_cols(fields, part_cols, phys: dict) -> list:
         F.col(c).cast(types.get(c, T.StringType())).alias(c)
         for c in part_cols
     ]
+
+
+class _FileChange(NamedTuple):
+    """One data file's derived change at one commit: its ``kind``
+    (``insert`` / ``delete``) rows are exactly those at ``positions``
+    when ``keep`` (a deletion-vector diff), else every row except those
+    (the file's own deletion vector).  ``pv``: its logged
+    ``partitionValues``."""
+
+    rel: str
+    kind: str
+    keep: bool
+    positions: list
+    pv: dict | None
+
+
+class _CommitChanges(NamedTuple):
+    """One commit's change set as :meth:`DeltaLog._plan_changes` plans
+    it: its ``cdc`` actions when it has any, else the derived ``files``;
+    ``schema_json`` is the schemaString of its metaData action, if
+    any."""
+
+    version: int
+    cdc: list
+    files: list
+    schema_json: str | None
 
 
 class _FreshPositions:
@@ -867,20 +894,24 @@ class DeltaLog:
             self._seed_from_checkpoint(snap, cps[-1])
             start = cps[-1] + 1
         for v in range(start, version + 1):
-            path = _commit_path(self.table_dir, v)
-            if not os.path.exists(path):
-                if v == 0:
-                    raise FileNotFoundError(path)
-                raise FileNotFoundError(
-                    f"commit {v} missing (vacuumed?) while replaying to "
-                    f"{version}: {path}"
-                )
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        self._apply(snap, json.loads(line))
+            for action in self._commit_actions(v):
+                self._apply(snap, action)
         return snap
+
+    def _commit_actions(self, version: int) -> list[dict]:
+        """Commit ``version``'s actions in log order: the one reader of
+        commit files (snapshot replay, :meth:`version_at`,
+        :meth:`history` and the change planner all parse through it).
+        A commit absent from disk refuses by version, as expired or
+        vacuumed history must."""
+        path = _commit_path(self.table_dir, version)
+        try:
+            with open(path, encoding="utf-8") as fh:
+                return [json.loads(ln) for ln in fh if not ln.isspace()]
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"commit {version} missing (vacuumed?): {path}"
+            ) from None
 
     # ---- Spark read ----------------------------------------------------
     def read(
@@ -935,7 +966,8 @@ class DeltaLog:
             for p, a in zip(sel, adds) if a.get("deletionVector")
         }
         refusal = _hive_layout_refusal(
-            snap, phys, [a.get("partitionValues") for a in adds], "read"
+            snap.partition_columns, phys,
+            [a.get("partitionValues") for a in adds], "read",
         )
         if refusal is not None:
             if dv_map or snap.column_mapping_mode != "none":
@@ -1479,7 +1511,8 @@ class DeltaLog:
         phys = self._resolve_physical(snap, snap.files, "compact")
         live = [snap.live[rel] for rel in snap.files]
         refusal = _hive_layout_refusal(
-            snap, phys, [a.get("partitionValues") for a in live], "compact"
+            snap.partition_columns, phys,
+            [a.get("partitionValues") for a in live], "compact",
         )
         if refusal is not None:
             raise refusal
@@ -1699,11 +1732,11 @@ class DeltaLog:
     #: affected file.  Every step after the decision is shared.
     DELETE_WHERE_ROW_LIMIT = 1_000_000
 
-    #: separate driver cap for read_changes' DV position diffs — the
-    #: CDC face derives row-level events by decoding DV pairs
-    #: driver-side, an independent axis from the write faces' matched
-    #: sets (round 12 split: forcing the write faces onto their
-    #: executor tier must not also cripple CDC reads)
+    #: the change planner's driver cap on decoded DV positions
+    #: (:meth:`_plan_changes`, behind read_changes and the delta_cdc
+    #: stream) — an independent axis from the write faces' matched
+    #: sets, so forcing the write faces onto their executor tier does
+    #: not also cripple change-feed reads
     READ_CHANGES_ROW_LIMIT = 1_000_000
 
     #: merge key-match strategy threshold (round 12, measured): at or
@@ -1855,7 +1888,7 @@ class DeltaLog:
         # a vector written over a Hive-inferred layout would make the
         # table unreadable: read() refuses vectors there
         refusal = _hive_layout_refusal(
-            snap, phys,
+            snap.partition_columns, phys,
             [a.get("partitionValues") for a in snap.live.values()], face,
         )
         if refusal is not None:
@@ -2528,17 +2561,9 @@ class DeltaLog:
         best = None
         last_ts = None
         for v in self.versions():
-            ts = None
-            with open(_commit_path(self.table_dir, v),
-                      encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    a = json.loads(line)
-                    if "commitInfo" in a:
-                        ts = a["commitInfo"].get("timestamp")
-                        break
+            ts = next((a["commitInfo"].get("timestamp")
+                       for a in self._commit_actions(v)
+                       if "commitInfo" in a), None)
             if ts is None:
                 ts = last_ts
             elif last_ts is not None and ts < last_ts:
@@ -2660,41 +2685,117 @@ class DeltaLog:
             "metadata_restored": meta_restored,
         }
 
+    def _plan_changes(self, from_version: int,
+                      to_version: int) -> list[_CommitChanges]:
+        """The change feed of commits ``from_version..to_version``,
+        planned from the log alone: the one planner behind
+        :meth:`read_changes` and the ``delta_cdc`` stream.  Replay
+        starts at ``snapshot(from_version - 1)``, so a re-added live
+        path is told apart from a new file.  Per commit:
+
+        - its ``cdc`` actions when it has any: PROTOCOL.md "Change Data
+          Files" makes them the commit's whole change set (and the only
+          source of update pre/postimages);
+        - otherwise the derived :class:`_FileChange` list.  An ``add``
+          with ``dataChange`` of a path not live inserts the file's rows
+          minus its own deletion vector; a ``dataChange`` remove of a
+          live path not re-added deletes its then-live rows; a re-added
+          path (paired with a remove, or an unpaired ``dataChange``
+          re-add of a live path, which lax writers emit) changes only
+          by its deletion-vector diff: newly covered positions delete,
+          uncovered ones (a shrink) insert.  ``dataChange: false``
+          (compaction) and a remove of a path not live change nothing.
+
+        Deletion vectors decode on the driver, their summed cardinality
+        over the range capped at :attr:`READ_CHANGES_ROW_LIMIT`."""
+        if from_version > to_version:
+            return []
+        state = (dict(self.snapshot(from_version - 1).live)
+                 if from_version > 0 else {})
+        budget = 0
+
+        def dv_pos(*adds) -> list[set]:
+            nonlocal budget
+            descs = [(a or {}).get("deletionVector") for a in adds]
+            budget += sum((d or {}).get("cardinality", 0) for d in descs)
+            if budget > self.READ_CHANGES_ROW_LIMIT:
+                raise ValueError(
+                    "change feed DV diffs exceed the driver "
+                    "materialization cap — narrow the version range"
+                )
+            return [set(self._dv_positions(d)) if d else set()
+                    for d in descs]
+
+        def pv(rel, added, removed):
+            # a value-less remove of a file added before the range still
+            # attaches the values its add logged
+            for a in (added.get(rel), state.get(rel), removed.get(rel)):
+                if a and a.get("partitionValues"):
+                    return a["partitionValues"]
+            return None
+
+        plan = []
+        for v in range(from_version, to_version + 1):
+            actions = self._commit_actions(v)
+            added = {a["add"]["path"]: a["add"]
+                     for a in actions if "add" in a}
+            removed = {a["remove"]["path"]: a["remove"]
+                       for a in actions if "remove" in a}
+            cdc = [a["cdc"] for a in actions if "cdc" in a]
+            files: list[_FileChange] = []
+            for rel, rm in ([] if cdc else removed.items()):
+                if (rel not in added and rel in state
+                        and rm.get("dataChange", True)):
+                    (gone,) = dv_pos(state[rel])
+                    files.append(_FileChange(
+                        rel, "delete", False, sorted(gone),
+                        pv(rel, added, removed)))
+            for rel, add in ([] if cdc else added.items()):
+                if not (rel in removed or add.get("dataChange", True)):
+                    continue
+                old, new = dv_pos(state.get(rel), add)
+                if rel in state or rel in removed:
+                    files += [
+                        _FileChange(rel, kind, True, sorted(ps),
+                                    pv(rel, added, removed))
+                        for kind, ps in (("delete", new - old),
+                                         ("insert", old - new)) if ps
+                    ]
+                else:
+                    files.append(_FileChange(
+                        rel, "insert", False, sorted(new),
+                        pv(rel, added, removed)))
+            for rel in removed:
+                state.pop(rel, None)
+            state.update(added)
+            plan.append(_CommitChanges(v, cdc, files, next(
+                (a["metaData"].get("schemaString")
+                 for a in actions if "metaData" in a), None)))
+        return plan
+
     def read_changes(
         self,
         spark: SparkSession,
         from_version: int,
         to_version: int | None = None,
     ) -> DataFrame:
-        """Row-level change feed derived from the LOG ALONE (round 11;
-        Delta CDF's read shape without requiring ``_change_data``
-        files): for each commit in ``[from_version, to_version]``,
-
-        - an ``add`` with ``dataChange`` (not re-adding a removed path)
-          emits the file's rows as ``insert`` (minus its own DV);
-        - a ``remove`` with ``dataChange`` whose path is not re-added
-          in the same commit emits the file's then-live rows (minus its
-          DV at removal) as ``delete``;
-        - a DV change on a re-added path emits the newly covered
-          positions as ``delete`` and any uncovered ones as ``insert``
-          (a DV shrink un-deletes);
-        - ``dataChange: false`` (compaction, checkpoint maintenance)
-          emits nothing — the CDF contract.
+        """Row-level change feed of commits ``from_version..to_version``
+        (default latest): Delta CDF's read shape, with or without
+        ``_change_data`` files.  :meth:`_plan_changes` plans it (the
+        ``delta_cdc`` stream executes the same plan per file on its
+        executors); this face executes it as one Spark scan of the
+        touched data files plus broadcast joins, one scan per commit
+        with ``cdc`` files.
 
         Output columns: the table's data columns (pinned to the
         ``to_version`` schema, so pre-``add_column`` files null-fill) +
         partition columns + ``_change_type`` + ``_commit_version``.
-
-        **Change data files (round 12)**: a version carrying ``cdc``
-        actions is read FROM THOSE FILES instead of derived — the
-        spec's reader rule, and where ``update_preimage`` /
-        ``update_postimage`` come from (the write faces produce them
-        when the table sets ``delta.enableChangeDataFeed``).  Without
-        cdc actions, ``update_where``/``merge_upsert`` surface as
-        delete+insert pairs, documented honestly.  Referenced data and
-        cdc files must still exist (pre-vacuum) or the read refuses by
-        name; DV diffs decode driver-side under the summed-cardinality
-        cap.  Mapped tables of both modes resolve through
+        Without ``cdc`` files, ``update_where``/``merge_upsert``
+        surface as delete+insert pairs; with them (the write faces
+        write them when the table sets ``delta.enableChangeDataFeed``)
+        as ``update_preimage``/``update_postimage``.  Referenced data
+        and cdc files must still exist (pre-vacuum) or the read refuses
+        by name.  Mapped tables of both modes resolve through
         :meth:`_resolve_physical`, like :meth:`read`."""
         if to_version is None:
             to_version = self.latest_version()
@@ -2709,145 +2810,19 @@ class DeltaLog:
         phys = self._resolve_physical(end_snap, end_snap.files,
                                       "read_changes")
         part_cols = list(end_snap.partition_columns)
-        #: path -> its add action as of the cursor (DV + partition state)
-        state: dict[str, dict] = {}
-        if from_version > 0:
-            state = dict(self.snapshot(from_version - 1).live)
-
-        def dv_pos(action: dict | None) -> set[int]:
-            if not action or not action.get("deletionVector"):
-                return set()
-            return set(self._dv_positions(action["deletionVector"]))
-
-        dv_budget = 0
-
-        def charge(n: int) -> None:
-            # one accumulator for every branch that decodes DVs
-            # driver-side (paired re-add, plain remove, unpaired
-            # re-add) — the cap rule and message live HERE only
-            nonlocal dv_budget
-            dv_budget += n
-            if dv_budget > self.READ_CHANGES_ROW_LIMIT:
-                raise ValueError(
-                    "read_changes DV diffs exceed the driver "
-                    "materialization cap — narrow the version range"
-                )
-
-        ev_rows: list[tuple] = []      # (rel, version, kind)
-        pos_rows: list[tuple] = []     # (rel, version, kind, pos)
-        exc_rows: list[tuple] = []     # (rel, version, pos) exclusions
-        #: seeded from the pre-range state: a file added BEFORE the
-        #: range and removed in-range by a value-less remove action
-        #: must still attach its partition values
-        part_vals: dict[str, dict] = {
-            rel: a["partitionValues"]
-            for rel, a in state.items()
-            if a.get("partitionValues")
-        }
-        cdc_versions: list[tuple[int, list[dict]]] = []
-        for v in range(from_version, to_version + 1):
-            with open(_commit_path(self.table_dir, v),
-                      encoding="utf-8") as fh:
-                actions = [json.loads(ln) for ln in fh if ln.strip()]
-            added = {a["add"]["path"]: a["add"]
-                     for a in actions if "add" in a}
-            removed = {a["remove"]["path"]: a["remove"]
-                       for a in actions if "remove" in a}
-            cdcs = [a["cdc"] for a in actions if "cdc" in a]
-            if cdcs:
-                # PROTOCOL.md "Change Data Files": when a version
-                # carries cdc actions they capture ALL its changes —
-                # readers must use THEM and ignore add/remove for CDF
-                # purposes (this is where update_pre/postimage come
-                # from; derivation can only say delete+insert).  The
-                # live-state bookkeeping below still runs so later
-                # derived versions see the right cursor.
-                cdc_versions.append((v, cdcs))
-                for rel in removed:
-                    state.pop(rel, None)
-                for rel, add in added.items():
-                    state[rel] = add
-                    if add.get("partitionValues"):
-                        part_vals[rel] = add["partitionValues"]
-                continue
-            for rel, rm in removed.items():
-                if rel in added:
-                    old_desc = state.get(rel) or {}
-                    charge(
-                        (old_desc.get("deletionVector") or {})
-                        .get("cardinality", 0)
-                        + (added[rel].get("deletionVector") or {})
-                        .get("cardinality", 0)
-                    )
-                    old = dv_pos(state.get(rel))
-                    new = dv_pos(added[rel])
-                    for p in sorted(new - old):
-                        pos_rows.append((rel, v, "delete", p))
-                    for p in sorted(old - new):
-                        pos_rows.append((rel, v, "insert", p))
-                elif rel in state and rm.get("dataChange", True):
-                    # a dataChange remove of a NON-live path (duplicate
-                    # tombstone) is a log no-op and emits nothing — a
-                    # phantom whole-file delete would double-report rows
-                    # the real removal already covered (r11 review)
-                    charge(
-                        ((state.get(rel) or {})
-                         .get("deletionVector") or {})
-                        .get("cardinality", 0)
-                    )
-                    ev_rows.append((rel, v, "delete"))
-                    for p in sorted(dv_pos(state.get(rel))):
-                        exc_rows.append((rel, v, p))
-            for rel, add in added.items():
-                if rel not in removed and add.get("dataChange", True):
-                    charge(
-                        (add.get("deletionVector") or {})
-                        .get("cardinality", 0)
-                        + ((state.get(rel) or {})
-                           .get("deletionVector") or {})
-                        .get("cardinality", 0)
-                    )
-                    if rel in state:
-                        # last-writer-wins re-add of a LIVE path with
-                        # no paired remove (spec-legal; lax writers do
-                        # it): the rows were already reported when the
-                        # file first went live, so the change is the
-                        # DV DIFF, never a whole-file re-insert
-                        old = dv_pos(state.get(rel))
-                        new = dv_pos(add)
-                        for p in sorted(new - old):
-                            pos_rows.append((rel, v, "delete", p))
-                        for p in sorted(old - new):
-                            pos_rows.append((rel, v, "insert", p))
-                    else:
-                        ev_rows.append((rel, v, "insert"))
-                        for p in sorted(dv_pos(add)):
-                            exc_rows.append((rel, v, p))
-            for rel in removed:
-                state.pop(rel, None)
-            for rel, add in added.items():
-                state[rel] = add
-                if add.get("partitionValues"):
-                    part_vals[rel] = add["partitionValues"]
-            for rel in list(removed) + list(added):
-                pv = (removed.get(rel) or {}).get("partitionValues") \
-                    or (added.get(rel) or {}).get("partitionValues")
-                if pv:
-                    part_vals.setdefault(rel, pv)
-
-
+        plan = self._plan_changes(from_version, to_version)
+        changes = [(c.version, f) for c in plan for f in c.files]
+        cdc_versions = [(c.version, c.cdc) for c in plan if c.cdc]
+        pvs = {f.rel: f.pv for _, f in changes}
+        touched = sorted(pvs)
+        if not touched and not cdc_versions:
+            return local_frame(spark, [], T.StructType(
+                list(schema.fields)
+                + [T.StructField("_change_type", T.StringType(), False),
+                   T.StructField("_commit_version", T.LongType(), False)]
+            ))
         data_fields = [f for f in schema.fields
                        if f.name not in part_cols]
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField("_change_type", T.StringType(), False),
-               T.StructField("_commit_version", T.LongType(), False)]
-        )
-        touched = sorted(
-            {r[0] for r in ev_rows} | {r[0] for r in pos_rows}
-        )
-        if not touched and not cdc_versions:
-            return local_frame(spark, [], out_schema)
         missing = [
             rel
             for rel in (touched
@@ -2863,18 +2838,24 @@ class DeltaLog:
         # a change feed silently emitting NULL partition columns would
         # be wrong data (r11 review) — refuse loudly
         refusal = _hive_layout_refusal(
-            end_snap, phys, [part_vals.get(rel) for rel in touched],
-            "read_changes",
+            part_cols, phys, [pvs[rel] for rel in touched], "read_changes",
         )
         if refusal is not None:
             raise refusal
         logical = _logical_cols(schema.fields, part_cols, phys)
-        #: cdc-versioned frames in FINAL shape (built first so a
-        #: cdc-only range never constructs the derivation scan)
-        final_frames: list[DataFrame] = []
+
+        def final(frame):
+            return frame.select(
+                *logical,
+                F.col("_change_type").cast("string").alias("_change_type"),
+                F.col("_commit_version").cast("long")
+                .alias("_commit_version"),
+            )
+
+        frames = []
         for v, cdcs in cdc_versions:
             paths = [c["path"] for c in cdcs]
-            cscan = self._attach_files(
+            frames.append(final(self._attach_files(
                 self._scan(
                     spark, paths,
                     data_fields
@@ -2884,62 +2865,44 @@ class DeltaLog:
                 end_snap, phys, paths,
                 [c.get("partitionValues") for c in cdcs],
                 what="delta cdc partition",
+            ).withColumn("_commit_version", F.lit(v))))
+        if touched:
+            df = self._attach_files(
+                self._scan(spark, touched, data_fields, phys,
+                           row_index="_pos"),
+                end_snap, phys, touched, [pvs[r] for r in touched],
+                rel_col="_rel", what="delta change feed",
             )
-            final_frames.append(cscan.select(
-                *logical,
-                F.col("_change_type").cast("string")
-                .alias("_change_type"),
-                F.lit(v).cast("long").alias("_commit_version"),
-            ))
-        if not touched:
-            out = final_frames[0]
-            for p in final_frames[1:]:
-                out = out.unionByName(p, allowMissingColumns=False)
-            return out
-        df = self._attach_files(
-            self._scan(spark, touched, data_fields, phys, row_index="_pos"),
-            end_snap, phys, touched, [part_vals.get(r) for r in touched],
-            rel_col="_rel", what="delta change feed",
-        )
-        pieces = []
-        if ev_rows:
-            ev_df = local_frame(
-                spark, ev_rows,
-                "_rel string, _commit_version long, _change_type string",
-            )
-            whole = df.join(F.broadcast(ev_df), "_rel")
-            if exc_rows:
-                exc_df = local_frame(
-                    spark, exc_rows,
-                    "_rel string, _commit_version long, _pos long",
-                )
-                whole = whole.join(
-                    F.broadcast(exc_df),
-                    ["_rel", "_commit_version", "_pos"],
-                    "left_anti",
-                )
-            pieces.append(whole)
-        if pos_rows:
-            pos_df = local_frame(
-                spark, pos_rows,
-                "_rel string, _commit_version long, _change_type string, "
-                "_pos long",
-            )
-            pieces.append(
-                df.join(F.broadcast(pos_df), ["_rel", "_pos"])
-            )
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p, allowMissingColumns=False)
-        out = out.select(
-            *logical,
-            F.col("_change_type").cast("string").alias("_change_type"),
-            F.col("_commit_version").cast("long")
-            .alias("_commit_version"),
-        )
-        for p in final_frames:
-            out = out.unionByName(p, allowMissingColumns=False)
-        return out
+            #: whole-file events, the positions they exclude, and the
+            #: deletion-vector diffs' positions
+            ev_rows = [(f.rel, v, f.kind) for v, f in changes
+                       if not f.keep]
+            exc_rows = [(f.rel, v, p) for v, f in changes if not f.keep
+                        for p in f.positions]
+            pos_rows = [(f.rel, v, f.kind, p) for v, f in changes
+                        if f.keep for p in f.positions]
+            if ev_rows:
+                whole = df.join(F.broadcast(local_frame(
+                    spark, ev_rows,
+                    "_rel string, _commit_version long, _change_type string",
+                )), "_rel")
+                if exc_rows:
+                    whole = whole.join(
+                        F.broadcast(local_frame(
+                            spark, exc_rows,
+                            "_rel string, _commit_version long, _pos long",
+                        )),
+                        ["_rel", "_commit_version", "_pos"],
+                        "left_anti",
+                    )
+                frames.append(final(whole))
+            if pos_rows:
+                frames.append(final(df.join(F.broadcast(local_frame(
+                    spark, pos_rows,
+                    "_rel string, _commit_version long, "
+                    "_change_type string, _pos long",
+                )), ["_rel", "_pos"])))
+        return functools.reduce(DataFrame.unionByName, frames)
 
     # ---- checkpoints ---------------------------------------------------
     _CP_COLS = ("protocol", "metaData", "txn", "add", "remove")
@@ -3226,18 +3189,15 @@ class DeltaLog:
         the action mix — the DESCRIBE HISTORY shape.  Metadata-only."""
         out = []
         for v in reversed(self.versions()):
-            path = _commit_path(self.table_dir, v)
             counts: dict[str, int] = {}
-            with open(path, encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        for key in json.loads(line):
-                            counts[key] = counts.get(key, 0) + 1
+            for action in self._commit_actions(v):
+                for key in action:
+                    counts[key] = counts.get(key, 0) + 1
+            mtime = os.path.getmtime(_commit_path(self.table_dir, v))
             out.append(
                 {
                     "version": v,
-                    "timestamp_ms": int(os.path.getmtime(path) * 1000),
+                    "timestamp_ms": int(mtime * 1000),
                     "actions": counts,
                 }
             )

@@ -3692,30 +3692,37 @@ class IcebergTable:
         across the variants."""
         from pyspark.sql import types as T
 
-        inv = {
-            "long": T.LongType(), "int": T.IntegerType(),
-            "double": T.DoubleType(), "float": T.FloatType(),
-            "string": T.StringType(), "boolean": T.BooleanType(),
-            "date": T.DateType(), "binary": T.BinaryType(),
-            "timestamptz": T.TimestampType(),
-            "timestamp": T.TimestampNTZType(),
-        }
         fields = []
         for f in self._schema_by_id(sid)["fields"]:
             if exclude and f["name"] in exclude:
                 continue
-            ityp = f["type"]
-            if not isinstance(ityp, str) or ityp not in inv:
+            typ = self._spark_type(f["type"])
+            if typ is None:
                 raise NotImplementedError(
-                    f"iceberg type {ityp!r} in the read schema"
+                    f"iceberg type {f['type']!r} in the read schema"
                 )
             names = (
                 name_variants.get(f["id"], [f["name"]])
                 if name_variants else [f["name"]]
             )
             for n in names:
-                fields.append(T.StructField(n, inv[ityp], True))
+                fields.append(T.StructField(n, typ, True))
         return T.StructType(fields)
+
+    @staticmethod
+    def _spark_type(ityp):
+        """The Spark type of Iceberg primitive ``ityp``; None for a type
+        the pinned read does not map."""
+        from pyspark.sql import types as T
+
+        return {
+            "long": T.LongType(), "int": T.IntegerType(),
+            "double": T.DoubleType(), "float": T.FloatType(),
+            "string": T.StringType(), "boolean": T.BooleanType(),
+            "date": T.DateType(), "binary": T.BinaryType(),
+            "timestamptz": T.TimestampType(),
+            "timestamp": T.TimestampNTZType(),
+        }.get(ityp) if isinstance(ityp, str) else None
 
     def add_column(
         self, name: str, spark_type: str, now_ms: int = 0
@@ -4226,6 +4233,8 @@ class IcebergTable:
         unreferenced debris, which :meth:`vacuum` reclaims.  Returns a
         summary dict, or None when nothing qualified (a no-op makes NO
         commit)."""
+        from pyspark.sql import functions as F
+
         base = self._base()
         meta = base[1]
         live = [f for f in self.files() if f.content == _CONTENT_DATA]
@@ -4250,6 +4259,8 @@ class IcebergTable:
         new_files: list[DataFile] = []
         rows_in = bytes_in = 0
         cur_schema = self._schema_by_id(meta["current-schema-id"])
+        types = [(f["name"], self._spark_type(f["type"]))
+                 for f in cur_schema["fields"]]
         for i, ((bin_spec, part_key), fs) in enumerate(bins):
             part = dict(part_key)
             raws = {f.raw_path for f in fs}
@@ -4265,12 +4276,14 @@ class IcebergTable:
             # WITHOUT parquet field ids: Spark's inferred-schema read of
             # a mixed directory (one stamped footer + one plain) demands
             # ids of every file and hard-fails, and the rename read path
-            # resolves by name variant, never by footer id.
-            data_cols = [
-                f["name"] for f in cur_schema["fields"]
-                if f["name"] not in part
-            ]
-            out = self.read(spark, paths=raws).select(*data_cols)
+            # resolves by name variant, never by footer id.  Each column
+            # casts back to its schema type: read() types a column that
+            # some files carry as a partition value as a long, and an
+            # int column written as INT64 fails every later pinned read.
+            out = self.read(spark, paths=raws).select(*[
+                F.col(n).cast(t).alias(n) if t else F.col(n)
+                for n, t in types if n not in part
+            ])
             rel = f"data/compact-{seq}-{i}.parquet"
             write_parquet(out, os.path.join(self.dir, rel))
             new_files.append(_written_data_file(

@@ -355,21 +355,54 @@ def test_sources_starting_latest(spark, tmp_path):
     assert got2 == [(2, s1)]
 
 
-def test_cdc_source_refuses_dml_without_feed(spark, tmp_path):
-    """A DML commit with no cdc files (CDF off -> deletion-vector add)
-    refuses at planning, naming the table property — never a silent
-    wrong changelog."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
+def test_cdc_source_streams_dml_without_feed(spark, tmp_path):
+    """DML commits with no cdc files (CDF off: deletion-vector growth,
+    copy-on-write update, merge) stream their derived changes, planned
+    by the same planner as ``read_changes``: the drain equals the batch
+    feed as a multiset."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
 
     d, log = _mk_table(tmp_path, "nocdf")
-    _write_file(d, "a.parquet", {"k": [1, 2], "v": [10, 20]})
+    _write_file(d, "a.parquet", {"k": [1, 2, 3], "v": [10, 20, 30]})
     log.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(False),
                    log.add_action_for("a.parquet")])
     log.delete_where(spark, {"k": (1, 1)}, now_ms=1000)
+    log.update_where(spark, {"k": (2, 2)}, {"v": F.col("v") + 100},
+                     now_ms=2000)
+    log.merge_upsert(spark, spark.createDataFrame(
+        [(3, 333), (8, 80)], ["k", "v"]), "k", now_ms=3000)
     got: list = []
-    with pytest.raises(StreamingQueryException,
-                       match="enableChangeDataFeed"):
-        _drain(spark, d, str(tmp_path / "ck"), got)
+    _drain(spark, d, str(tmp_path / "ck"), got)
+    want = Counter(
+        (r.k, r.v, r._change_type, r._commit_version)
+        for r in log.read_changes(spark, 0).collect()
+    )
+    assert Counter(got) == want
+    assert (1, 10, "delete", 1) in want
+
+
+def test_cdc_source_unpaired_readd_reports_once(spark, tmp_path):
+    """A re-add of a live file with no paired remove (spec-legal; lax
+    writers emit it) changes nothing: the stream reports each row once,
+    as ``read_changes`` does, not again as a fresh insert."""
+    from collections import Counter
+
+    d, log = _mk_table(tmp_path, "readd")
+    _write_file(d, "f0.parquet", {"k": [1, 2], "v": [10, 20]})
+    log.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(False),
+                   log.add_action_for("f0.parquet")])
+    log.commit(1, [log.add_action_for("f0.parquet")])
+    got: list = []
+    _drain(spark, d, str(tmp_path / "ck"), got)
+    want = Counter(
+        (r.k, r.v, r._change_type, r._commit_version)
+        for r in log.read_changes(spark, 0).collect()
+    )
+    assert want == Counter({(1, 10, "insert", 0): 1,
+                            (2, 20, "insert", 0): 1})
+    assert Counter(got) == want
 
 
 def test_cdc_replication_pipeline_exactly_once(spark, tmp_path):

@@ -2968,3 +2968,38 @@ def test_delta_mapping_and_scan_have_one_home():
                     and scope != "DeltaLog._scan"):
                 bad.append(f"{site}: spark.read.schema outside _scan")
     assert not bad, bad
+
+
+#: the functions that may name a Delta commit file: its one reader, and
+#: the writers that create, probe or expire one
+_COMMIT_FILE_SITES = {"DeltaLog._commit_actions", "DeltaLog.commit",
+                      "DeltaLog._check_free", "DeltaLog.expire_log"}
+
+
+def test_delta_commit_files_have_one_reader():
+    """Only ``DeltaLog._commit_actions`` opens and parses commit files:
+    snapshot replay, ``version_at``, ``history``, the change planner
+    and the ``delta_cdc`` stream all read commits through it.  Any
+    other function that names a commit file (``history`` takes its
+    mtime) neither opens nor parses in its body."""
+    names, parses = {}, set()
+    for name in ("delta_log.py", "cdc_source.py"):
+        path = _PACKAGE / name
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node, scope, _ in _nodes(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            if isinstance(fn, ast.Name) and fn.id == "_commit_path":
+                names.setdefault((name, scope), node.lineno)
+            if ((isinstance(fn, ast.Name) and fn.id == "open")
+                    or (isinstance(fn, ast.Attribute)
+                        and fn.attr == "loads")):
+                parses.add((name, scope))
+    bad = [f"{name}:{line} in {scope}"
+           for (name, scope), line in sorted(names.items())
+           if scope not in _COMMIT_FILE_SITES
+           and (name, scope) in parses]
+    assert not bad, (
+        "read commit files through DeltaLog._commit_actions: "
+        + ", ".join(bad))

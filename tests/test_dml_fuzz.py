@@ -14,7 +14,9 @@ each other.  At sequence end it replays Delta's log-derived change
 feed (read_changes) from version 0 and asserts the composed
 inserts/deletes reproduce the final state with no negative multiset
 at any commit (read_changes pins the END snapshot's schema, so
-pre-DDL rows null-fill consistently on both sides of the replay), and
+pre-DDL rows null-fill consistently on both sides of the replay),
+drains the ``delta_cdc`` stream over the same log and asserts it
+equals read_changes over the same range as a multiset, and
 it time-travels both formats to sampled historical versions/snapshots
 against the model's recorded states, projected to the columns that
 existed at that point.
@@ -49,6 +51,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_sync_spark.cdc_source import DeltaCDCStreamSource
 from hadoop_sync_spark.delta_log import DeltaLog
 from hadoop_sync_spark.iceberg_meta import (
     DataFile,
@@ -766,6 +769,33 @@ def _run_sequence(spark, tmp_path, seed: int, n_ops: int,
     assert replayed == _nsort(model), (
         f"CDF replay != final state: seed={seed}"
     )
+
+    # the delta_cdc stream executes read_changes' plan: its drain must
+    # equal the batch feed as a multiset.  The stream pins the final
+    # schema, so it drains from the first version after the last
+    # commit that set another one (a DDL, or a restore rolling one
+    # back).
+    head = delta.version()
+    pinned = delta.log.snapshot().schema_json
+    stream_from = max([cdf_from] + [
+        v + 1 for v in range(cdf_from, head + 1)
+        if any(a["metaData"].get("schemaString", pinned) != pinned
+               for a in delta.log._commit_actions(v) if "metaData" in a)
+    ])
+    if stream_from <= head:
+        out = (*final_cols, "_change_type", "_commit_version")
+        spark.dataSource.register(DeltaCDCStreamSource)
+        streamed: list = []
+        (spark.readStream.format("delta_cdc").option("path", delta.d)
+         .option("startingVersion", stream_from).load()
+         .writeStream.foreachBatch(lambda b, _i: streamed.extend(
+             tuple(r) for r in b.select(*out).collect()))
+         .option("checkpointLocation", str(tmp_path / f"ck{seed}"))
+         .trigger(availableNow=True).start().awaitTermination())
+        batch = delta.log.read_changes(spark, stream_from).select(*out)
+        assert Counter(streamed) == Counter(
+            tuple(r) for r in batch.collect()
+        ), f"delta_cdc stream != read_changes: seed={seed}"
 
     # Iceberg changelog replay (round 12): composing changelog_scan's
     # insert/delete events snapshot by snapshot from the cursor state

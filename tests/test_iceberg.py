@@ -2344,7 +2344,8 @@ def test_changelog_scan_row_level_history(spark, tmp_path):
 def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
                                                       shape, kind):
     """Every table shape (unpartitioned, identity-partitioned on an
-    ``int`` column, spec evolved mid-history on a ``long``) under every delete kind reads through the one
+    ``int`` column, spec evolved mid-history on that ``int`` column)
+    under every delete kind reads through the one
     delete-apply: ``read()``, ``read(paths=<subset>)`` and ``read()``
     after ``compact`` equal a pyarrow model of the live rows, and
     ``changelog_scan`` equals the model's events and the
@@ -2359,14 +2360,10 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
 
     d = str(tmp_path / "grid")
     os.makedirs(os.path.join(d, "data"))
-    # p is an int (its partition values attach as longs), except in
-    # the evolved shape: there compaction writes the pre-evolution
-    # files' p back into data as a long, which a later read pinned to
-    # int refuses
-    wide = shape == "evolved"
+    # p is an int in every shape: its partition values attach as
+    # longs, and compaction must write it back into data as an int
     t = IcebergTable.create(
-        d, [("id", "bigint"), ("val", "string"),
-            ("p", "bigint" if wide else "int")],
+        d, [("id", "bigint"), ("val", "string"), ("p", "int")],
         partition_by=[("p", "int")] if shape == "partitioned" else None,
         now_ms=1000,
     )
@@ -2376,8 +2373,7 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
         cols = {"id": pa.array(ids, pa.int64()),
                 "val": pa.array([f"v{i}" for i in ids], pa.string())}
         if not recorded:  # the partition value lives in the data
-            cols["p"] = pa.array([p] * len(ids),
-                                 pa.int64() if wide else pa.int32())
+            cols["p"] = pa.array([p] * len(ids), pa.int32())
         pq.write_table(pa.table(cols), os.path.join(d, "data", name))
         model.update({i: (i, f"v{i}", p) for i in ids})
         return DataFile(f"data/{name}", {"p": p} if recorded else {},
@@ -2388,7 +2384,7 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
     t.append([write("f1.parquet", [1, 2, 3], 0, recorded),
               write("f2.parquet", [4, 5], 1, recorded)], now_ms=2000)
     if shape == "evolved":
-        t.update_spec([("p", "long")], now_ms=2500)
+        t.update_spec([("p", "int")], now_ms=2500)
     s0 = t.append([write("f3.parquet", [6], 1, shape != "flat")],
                   now_ms=3000)
     events = Counter()
@@ -2409,8 +2405,7 @@ def test_changelog_scan_partitioned_and_prior_deletes(spark, tmp_path,
     events[model.pop(3) + ("delete", snap())] += 1
     if kind != "position":
         src = spark.createDataFrame([(4, "X", 1), (9, "n", 2)],
-                                    "id long, val string, p "
-                                    + ("long" if wide else "int"))
+                                    "id long, val string, p int")
         s3 = t.merge_upsert(spark, src, "id", now_ms=6000)["snapshot_id"]
         events[model.pop(4) + ("delete", s3)] += 1
         for row in [(4, "X", 1), (9, "n", 2)]:
