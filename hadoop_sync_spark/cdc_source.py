@@ -20,8 +20,9 @@ end-to-end exactly-once CDC pipeline between two Delta tables.
 
 Execution model: one plan, two executions.  Micro-batch PLANNING runs
 on the driver through ``DeltaLog._plan_changes``, the planner
-``read_changes`` executes too: JSON commits plus the snapshot before
-the batch (replayed from the newest checkpoint), no data I/O, no
+``read_changes`` executes too: JSON commits plus the live files before
+the batch (replayed from the newest checkpoint; after log expiry, the
+checkpoint at the batch start with its commit undone), no data I/O, no
 SparkSession.  Each planned :class:`_CDCPart` is ONE file of one
 commit; the executors read cdc/data parquet directly via pyarrow and
 select the planned rows by row index, so a batch that touches 500

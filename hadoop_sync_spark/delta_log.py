@@ -14,7 +14,8 @@ from it:
   holding ordered commits ``%020d.json``, each line one ACTION object:
   ``protocol``, ``metaData`` (with ``schemaString`` — Spark's own
   StructType JSON), ``add {path, partitionValues, size,
-  modificationTime, dataChange}``, ``remove {path}``;
+  modificationTime, dataChange}``, ``remove {path, dataChange}`` (plus
+  the removed add's partitionValues, size and deletionVector);
 - a snapshot at version V is the last-writer-wins replay of actions
   0..V: a path is live iff its latest action ≤ V is an ``add``;
 - ``N.checkpoint.parquet`` (+ the ``_last_checkpoint`` pointer) compacts
@@ -380,6 +381,19 @@ def _pv_str(v):
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
+
+
+def _remove_action(add: dict, data_change: bool, **extra) -> dict:
+    """The ``remove`` of the live file ``add`` as PROTOCOL.md logs it:
+    with the add's ``partitionValues``, ``size`` and ``deletionVector``
+    (``extendedFileMetadata``), so a reader without the add (a change
+    feed planned from a checkpoint after log expiry) knows what left."""
+    rm = {"path": add["path"], "dataChange": data_change, **extra,
+          "extendedFileMetadata": True,
+          "partitionValues": add.get("partitionValues") or {},
+          "size": add.get("size"),
+          "deletionVector": add.get("deletionVector")}
+    return {"remove": {k: v for k, v in rm.items() if v is not None}}
 
 
 def _commit_path(table_dir: str, version: int) -> str:
@@ -1553,7 +1567,7 @@ class DeltaLog:
         self.commit(
             version,
             [
-                {"remove": {"path": r, "dataChange": False}}
+                _remove_action(snap.live[r], False)
                 for r in sorted(rewritten)
             ]
             + adds,
@@ -1717,7 +1731,7 @@ class DeltaLog:
             version,
             [
                 {"protocol": proto},
-                {"remove": {"path": rel_path, "dataChange": True}},
+                _remove_action(prev, True),
                 {"add": new_add},
             ],
         )
@@ -2084,7 +2098,7 @@ class DeltaLog:
         for rel, _, desc in fresh.dvs:
             add = dict(snap.live[rel])
             add["deletionVector"] = desc
-            actions.append({"remove": {"path": rel, "dataChange": True}})
+            actions.append(_remove_action(snap.live[rel], True))
             actions.append({"add": add})
         self.commit(version, actions + adds + cdc)
 
@@ -2667,8 +2681,7 @@ class DeltaLog:
         if meta_restored:
             actions.append({"metaData": tgt.metadata_action})
         actions += [
-            {"remove": {"path": p, "dataChange": True,
-                        "deletionTimestamp": now_ms}}
+            _remove_action(cur.live[p], True, deletionTimestamp=now_ms)
             for p in removes
         ]
         for a in adds:
@@ -2690,8 +2703,9 @@ class DeltaLog:
         """The change feed of commits ``from_version..to_version``,
         planned from the log alone: the one planner behind
         :meth:`read_changes` and the ``delta_cdc`` stream.  Replay
-        starts at ``snapshot(from_version - 1)``, so a re-added live
-        path is told apart from a new file.  Per commit:
+        starts from the live files before ``from_version``
+        (:meth:`_live_before`), so a re-added live path is told apart
+        from a new file.  Per commit:
 
         - its ``cdc`` actions when it has any: PROTOCOL.md "Change Data
           Files" makes them the commit's whole change set (and the only
@@ -2710,19 +2724,27 @@ class DeltaLog:
         over the range capped at :attr:`READ_CHANGES_ROW_LIMIT`."""
         if from_version > to_version:
             return []
-        state = (dict(self.snapshot(from_version - 1).live)
-                 if from_version > 0 else {})
-        budget = 0
+        state = self._live_before(from_version)
+        limit = self.READ_CHANGES_ROW_LIMIT
+        budget = before = 0
 
         def dv_pos(*adds) -> list[set]:
             nonlocal budget
             descs = [(a or {}).get("deletionVector") for a in adds]
             budget += sum((d or {}).get("cardinality", 0) for d in descs)
-            if budget > self.READ_CHANGES_ROW_LIMIT:
+            if budget > limit:
                 raise ValueError(
-                    "change feed DV diffs exceed the driver "
-                    "materialization cap — narrow the version range"
-                )
+                    f"change feed deletion vectors through commit {v} "
+                    f"decode over READ_CHANGES_ROW_LIMIT ({limit:,}) "
+                    "positions on the driver: " + (
+                        f"commit {v} alone exceeds it, so no read_changes "
+                        "range and no delta_cdc stream can pass it; set "
+                        "delta.enableChangeDataFeed so such commits log "
+                        "cdc files, or read the table at a version"
+                        if budget - before > limit else
+                        "read a narrower version range (a delta_cdc "
+                        "stream bounds its batches by maxVersionsPerBatch)"
+                    ))
             return [set(self._dv_positions(d)) if d else set()
                     for d in descs]
 
@@ -2736,6 +2758,7 @@ class DeltaLog:
 
         plan = []
         for v in range(from_version, to_version + 1):
+            before = budget
             actions = self._commit_actions(v)
             added = {a["add"]["path"]: a["add"]
                      for a in actions if "add" in a}
@@ -2772,6 +2795,31 @@ class DeltaLog:
                 (a["metaData"].get("schemaString")
                  for a in actions if "metaData" in a), None)))
         return plan
+
+    def _live_before(self, version: int) -> dict:
+        """The live files just before commit ``version``: the replayed
+        ``snapshot(version - 1)``, or, when log expiry removed the
+        commits below a checkpoint at ``version``, that checkpoint's
+        files with commit ``version`` undone: its adds dropped and its
+        removes put back (a remove logs the file's deletion vector and
+        partition values).  Undone so, an unpaired re-add at
+        ``version`` reads as a new file: the expired log no longer
+        tells the two apart."""
+        if version == 0:
+            return {}
+        try:
+            return dict(self.snapshot(version - 1).live)
+        except FileNotFoundError:
+            if version not in self._checkpoint_files():
+                raise
+        live = dict(self.snapshot(version).live)
+        actions = self._commit_actions(version)
+        for a in actions:
+            if "add" in a:
+                live.pop(a["add"]["path"], None)
+        live.update((a["remove"]["path"], a["remove"])
+                    for a in actions if "remove" in a)
+        return live
 
     def read_changes(
         self,

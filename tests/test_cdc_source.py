@@ -970,6 +970,88 @@ def test_cdc_source_refuses_vacuumed_prefix(spark, tmp_path):
         _drain(spark, d, str(tmp_path / "ck"), got, starting=0)
 
 
+def test_cdc_source_streams_from_checkpoint_after_expiry(spark, tmp_path):
+    """A stream whose next batch starts at the newest checkpoint still
+    plans after ``expire_log`` removed every commit below it: the live
+    files before the checkpoint's commit come from the checkpoint with
+    that commit undone (a re-added file's removed deletion vector comes
+    back), so the drain equals ``read_changes`` over the same range."""
+    from collections import Counter
+
+    d, log = _mk_table(tmp_path, "cp_src")
+    _write_file(d, "a.parquet", {"k": [1, 2, 3], "v": [10, 20, 30]})
+    log.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(False),
+                   log.add_action_for("a.parquet")])
+    _write_file(d, "b.parquet", {"k": [4], "v": [40]})
+    log.commit(1, [log.add_action_for("b.parquet")])
+    log.delete_where(spark, {"k": (1, 1)}, now_ms=1000)
+    log.delete_where(spark, {"k": (2, 2)}, now_ms=2000)
+    _write_file(d, "c.parquet", {"k": [5], "v": [50]})
+    log.commit(4, [log.add_action_for("c.parquet")])
+    log.write_checkpoint(3)
+    assert log.expire_log() == [0, 1, 2]
+    want = Counter(
+        (r.k, r.v, r._change_type, r._commit_version)
+        for r in log.read_changes(spark, 3).collect()
+    )
+    assert want == Counter({(2, 20, "delete", 3): 1,
+                            (5, 50, "insert", 4): 1})
+    from hadoop_sync_spark.cdc_source import _CDCStreamReader
+
+    parts = _CDCStreamReader({"path": d}).partitions(
+        {"version": 3}, {"version": 5})
+    assert sorted({p.commit_version for p in parts}) == [3, 4]
+    got: list = []
+    _drain(spark, d, str(tmp_path / "ck"), got, starting=3)
+    assert Counter(got) == want
+
+
+def test_cdc_source_dv_limit_names_the_commit(spark, tmp_path,
+                                              monkeypatch):
+    """The planner's one deletion-vector decode cap binds both faces.
+    Over a range it asks for a narrower one, which a one-version batch
+    stream drains; a commit over the cap on its own is refused by
+    number, saying no read or stream can pass it."""
+    from collections import Counter
+
+    from hadoop_sync_spark.cdc_source import _CDCStreamReader
+
+    d, log = _mk_table(tmp_path, "cap_src")
+    _write_file(d, "a.parquet", {"k": [1, 2, 3, 4, 5, 6],
+                                 "v": [10, 20, 30, 40, 50, 60]})
+    log.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(False),
+                   log.add_action_for("a.parquet")])
+    log.delete_where(spark, {"k": (1, 2)}, now_ms=1000)  # decodes 2
+    log.delete_where(spark, {"k": (3, 3)}, now_ms=2000)  # decodes 2 + 3
+    want = Counter(
+        (r.k, r.v, r._change_type, r._commit_version)
+        for r in log.read_changes(spark, 0).collect()
+    )
+    monkeypatch.setattr(DeltaLog, "READ_CHANGES_ROW_LIMIT", 6)
+    with pytest.raises(ValueError, match="narrower version range"):
+        log.read_changes(spark, 0)
+    with pytest.raises(ValueError, match="narrower version range"):
+        _CDCStreamReader({"path": d}).partitions({"version": 1},
+                                                 {"version": 3})
+    reader = _CDCStreamReader({"path": d, "maxVersionsPerBatch": "1"})
+    got: list = []
+    start = reader.initialOffset()
+    while (end := reader.latestOffset()) != start:
+        for part in reader.partitions(start, end):
+            for batch in reader.read(part):
+                got += [tuple(r.values()) for r in batch.to_pylist()]
+        reader.commit(end)
+        start = end
+    assert Counter(got) == want
+    monkeypatch.setattr(DeltaLog, "READ_CHANGES_ROW_LIMIT", 4)
+    for plan in (lambda: log.read_changes(spark, 2, 2),
+                 lambda: reader.partitions({"version": 2},
+                                           {"version": 3})):
+        with pytest.raises(ValueError, match=r"commit 2 alone exceeds "
+                           r"it.*no delta_cdc stream can pass it"):
+            plan()
+
+
 def test_iceberg_incremental_refuses_expired_history(spark, tmp_path):
     """Parity with delta_cdc's vacuumed-commit refusal: an offset
     predating the oldest RETAINED snapshot refuses loudly instead of

@@ -2970,36 +2970,44 @@ def test_delta_mapping_and_scan_have_one_home():
     assert not bad, bad
 
 
-#: the functions that may name a Delta commit file: its one reader, and
-#: the writers that create, probe or expire one
-_COMMIT_FILE_SITES = {"DeltaLog._commit_actions", "DeltaLog.commit",
-                      "DeltaLog._check_free", "DeltaLog.expire_log"}
+def _names_commit_file(node) -> bool:
+    """``node`` builds a commit file's path: a ``_commit_path(...)``
+    call, or the ``f"{v:020d}.json"`` name spelt out."""
+    if isinstance(node, ast.Call):
+        return (isinstance(node.func, ast.Name)
+                and node.func.id == "_commit_path")
+    if not isinstance(node, ast.JoinedStr):
+        return False
+    parts = node.values
+    return any(
+        isinstance(a, ast.FormattedValue) and a.format_spec is not None
+        and ast.unparse(a.format_spec) == "f'020d'"
+        and isinstance(b, ast.Constant) and b.value == ".json"
+        for a, b in zip(parts, parts[1:]))
 
 
 def test_delta_commit_files_have_one_reader():
     """Only ``DeltaLog._commit_actions`` opens and parses commit files:
     snapshot replay, ``version_at``, ``history``, the change planner
     and the ``delta_cdc`` stream all read commits through it.  Any
-    other function that names a commit file (``history`` takes its
-    mtime) neither opens nor parses in its body."""
+    other function that builds a commit file's path (the writers, and
+    ``history`` for its mtime) neither opens nor parses in its body."""
     names, parses = {}, set()
     for name in ("delta_log.py", "cdc_source.py"):
         path = _PACKAGE / name
         tree = ast.parse(path.read_text(), filename=str(path))
         for node, scope, _ in _nodes(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            fn = node.func
-            if isinstance(fn, ast.Name) and fn.id == "_commit_path":
+            if _names_commit_file(node):
                 names.setdefault((name, scope), node.lineno)
+            fn = getattr(node, "func", None)
             if ((isinstance(fn, ast.Name) and fn.id == "open")
                     or (isinstance(fn, ast.Attribute)
                         and fn.attr == "loads")):
                 parses.add((name, scope))
     bad = [f"{name}:{line} in {scope}"
            for (name, scope), line in sorted(names.items())
-           if scope not in _COMMIT_FILE_SITES
+           if scope != "DeltaLog._commit_actions"
            and (name, scope) in parses]
-    assert not bad, (
+    assert names and not bad, (
         "read commit files through DeltaLog._commit_actions: "
         + ", ".join(bad))
